@@ -196,9 +196,12 @@ object Bench {
     // failed queries carry the -1 sentinel per-query; they must not make the
     // headline total FASTER — sum successes only
     val total = results.values.filter(_ >= 0).sum
-    val slowest = results.toSeq.sortBy(-_._2).take(10)
+    // failed queries (the -1 sentinel) are named in "failed", never ranked
+    val slowest = results.toSeq.filter(_._2 >= 0).sortBy(-_._2).take(10)
       .map { case (k, v) => "\"" + k + "\":" + fmt(v) }
       .mkString("{", ",", "}")
+    val failed = results.collect { case (k, v) if v < 0 => k }.toSeq.sorted
+      .map(k => "\"" + k + "\"").mkString("[", ",", "]")
     // ONE machine-readable stdout line (the driver contract) — r14 VERDICT
     // item 2: printing a second `{"metric":"total",...}` slowest-10 line made
     // stdout ambiguous to parse, so that summary now goes to stderr with the
@@ -206,10 +209,10 @@ object Bench {
     // the canonical contract keys first, then (because the harness keeps only
     // a bounded TAIL of the output, which truncates the line's HEAD once the
     // per-query map outgrows the window) a duplicate of the headline fields
-    // at the END of the same object — "slowest"/"nqueries"/"total_sec" stay
-    // visible in any tail window without a second JSON line.
+    // at the END of the same object — "slowest"/"nqueries"/"total_sec" and
+    // "failed" stay visible in any tail window without a second JSON line.
     val summary =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,$calJson,"sf":"$sfDir","nqueries":${results.size},"slowest":$slowest,"total_sec":${fmt(total)}}"""
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,$calJson,"sf":"$sfDir","nqueries":${results.size},"slowest":$slowest,"total_sec":${fmt(total)},"failed":$failed}"""
     // lossless artifact regardless of stdout truncation (path overridable
     // for multi-run comparisons)
     val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")

@@ -19,6 +19,9 @@ object SpecCatalog {
     * name), the maximum declared width/start/type across all loaded surveys
     * — the warehouse schema for that record type
     * (ref: lib04_Update_Table_Data.py:161-171, doc/Data_Format.md:214-216).
+    * Rows come out ordered by (recordname, start). The merged spec is small,
+    * so it is sorted in one partition rather than by a global `orderBy`,
+    * whose range partitioner costs a sampling job and a second exchange.
     */
   def mergeColumns(
       specs: DataFrame,
@@ -29,7 +32,8 @@ object SpecCatalog {
   ): DataFrame =
     specs.groupBy(col(recordCol).as("recordname"), lower(col(nameCol)).as("name"))
       .agg(max(col(lenCol)).as("len"), max(col(startCol)).as("start"))
-      .orderBy(col("recordname"), col("start"))
+      .coalesce(1)
+      .sortWithinPartitions(col("recordname"), col("start"))
 
   /** Full-outer diff with indicator, the reference's reload trigger
     * (ref: 03_DHS_Update_Metadata.ipynb:824-838): classify every key as

@@ -13,8 +13,13 @@ import org.apache.spark.storage.StorageLevel
   * (ref: DHS_To_Database/cspro_parser/DAT_Parser.py:10-128). Lines are
   * independent, so in Spark this is an embarrassingly parallel
   * `spark.read.text` scan followed by per-record-type declarative plans:
-  * `filter(tag) → select(substring…)` — all whole-stage-codegen'd column
-  * expressions, no UDFs, no shuffle at all (narrow transformations only).
+  * `filter(tag) → select(substring…)` — built-in column expressions, no
+  * UDFs, no shuffle at all (narrow transformations only), compiled by
+  * whole-stage codegen once per record layout and cached. A wide packed
+  * record's stage compiles to one method too large for the JIT (about
+  * 38 KB of bytecode at 520 fields, over HotSpot's 8,000-byte limit), so
+  * it runs in the bytecode interpreter; see [[stripWs]] for the width
+  * ceiling.
   *
   * At 100 TB the one-pass property of the reference is recovered by caching
   * the line scan once (`persist`) and deriving every record type's DataFrame
@@ -55,14 +60,31 @@ object DatReader {
       .sortBy(f => (f.recordTypeValue, f.start))
       .groupBy(_.recordTypeValue)
 
-  /** The one trim semantic of the engine: strip ASCII whitespace (Java-regex
-    * `\s`: space, \t, \n, \x0B, \f, \r) from both ends — the reference's
-    * Python `str.strip()` for every ASCII input (ref DAT_Parser.py:102-105).
-    * Spark's `trim()` strips only ' ' and would keep a tab; the DSv2
-    * connector implements the identical set (asserted in
-    * FixedWidthSourceSpec).
+  /** The trim set of the engine: ASCII whitespace as Java-regex `\s`
+    * defines it (space, \t, \n, \x0B, \f, \r). Shared by [[stripWs]] and
+    * the fixedwidth DSv2 connector so both readers trim identically.
     */
-  def stripWs(c: Column): Column = regexp_replace(c, "^\\s+|\\s+$", "")
+  val TrimChars: String = " \t\n\u000B\f\r"
+
+  /** The one trim semantic of the engine: strip every [[TrimChars]]
+    * character from both ends — the reference's Python `str.strip()` for
+    * every ASCII input (ref DAT_Parser.py:102-105). Spark's one-argument
+    * `trim()` strips only ' ' and would keep a tab, so the set is explicit.
+    *
+    * A set trim, not `regexp_replace(c, "^\\s+|\\s+$", "")`, for two
+    * reasons. (1) Code size: each regex field inlines enough generated code
+    * that a 520-field packed record pushes one method past the JVM's 64 KB
+    * limit, whole-stage codegen fails to compile, and Janino does not cache
+    * the failure, so every load paid for it again. (2) Java's `$` also
+    * matches before a final line terminator (U+0085, U+2028, U+2029), so the
+    * regex trimmed "BJ \u2028" to "BJ\u2028" while the connector kept it;
+    * the set trim keeps it in both readers.
+    *
+    * Ceiling: with the set trim an 800-field record's projection still
+    * compiles (largest method about 59 KB); a 900-field one fails
+    * whole-stage codegen again and pays the failed compile on every load.
+    */
+  def stripWs(c: Column): Column = trim(c, TrimChars)
 
   /** The column expression for one fixed-width field of one line. */
   def fieldColumn(line: Column, f: ColumnSpec): Column = {

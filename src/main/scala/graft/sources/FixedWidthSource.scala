@@ -186,12 +186,12 @@ private class FixedWidthReaderFactory(
     hadoopConf: org.apache.spark.util.SerializableConfiguration)
     extends PartitionReaderFactory {
 
-  /** Same character set as [[DatReader.stripWs]] (Java-regex `\s`) so the
-    * connector and the composable plan trim identically — a tab-padded
-    * field must not parse differently between the two paths.
+  /** Strips the shared [[DatReader.TrimChars]] set, as [[DatReader.stripWs]]
+    * does, so the connector and the composable plan trim identically — a
+    * tab-padded field must not parse differently between the two paths.
     */
   private def stripWs(s: String): String = {
-    def ws(c: Char) = c == ' ' || c == '\t' || c == '\n' || c == '\u000B' || c == '\f' || c == '\r'
+    def ws(c: Char) = DatReader.TrimChars.indexOf(c) >= 0
     var b = 0
     var e = s.length
     while (b < e && ws(s.charAt(b))) b += 1

@@ -123,4 +123,40 @@ class DatReaderSpec extends AnyFunSuite with SparkTestBase {
     val caseids = p.select("caseid").as[String].collect().toSet
     assert(caseids == Set(hhid12 + " 2 ", hhid12 + "  2"))
   }
+
+  test("a packed wide record's projection compiles: no failed codegen, exact JSON") {
+    // a country-specific record wider than JsonPack.MaxColumnThreshold: its
+    // 520 trimmed fields must compile (a per-field regex trim pushed the
+    // generated method past 64 KB, a failure Janino re-pays on every load)
+    val n = graft.load.JsonPack.MaxColumnThreshold + 20
+    val items = (1 to n).map(i => f"HCS$i%03d")
+    val specs = spec("RecordDesciption", "*", "*", "", 16, 3) +:
+      spec("IdItem", "RECHCS", "HCS", "HHID", 1, 12) +:
+      items.zipWithIndex.map { case (name, i) =>
+        spec("Item", "RECHCS", "HCS", name, 19 + 2 * i, 2).copy(recordLabel = "cs: module")
+      }
+    // field i of row r holds (7r + i) % 100 right-aligned in 2 characters
+    val value = (r: Int, i: Int) => (7 * r + i) % 100
+    val rows = 0 until 20
+    val dir = java.nio.file.Files.createTempDirectory("datwide")
+    val dat = dir.resolve("wide.DAT")
+    java.nio.file.Files.writeString(dat, rows.map { r =>
+      f"$r%12d" + "   HCS" + items.indices.map(i => f"${value(r, i)}%2d").mkString + "\n"
+    }.mkString)
+    val scan = DatReader.readDat(spark, dat.toString, specs)
+    try {
+      val packed = graft.load.JsonPack.packAuto(scan("RECHCS"))
+      assert(packed.columns.toSeq == Seq("hhid", "data"))
+      val stats = org.apache.spark.sql.execution.debug
+        .codegenStringSeq(packed.queryExecution.executedPlan).map(_._3)
+      assert(stats.nonEmpty)
+      assert(stats.forall(_.maxMethodCodeSize != -1), s"codegen failed: $stats")
+      val expected = rows.map { r =>
+        f"$r%12d" -> items.zipWithIndex
+          .map { case (name, i) => s""""${name.toLowerCase}":"${value(r, i)}"""" }
+          .mkString("{", ",", "}")
+      }.toMap
+      assert(packed.as[(String, String)].collect().toMap == expected)
+    } finally scan.release()
+  }
 }
