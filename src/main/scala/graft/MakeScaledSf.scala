@@ -5,8 +5,8 @@ import org.apache.spark.sql.functions._
 
 /** Materialize an sf1-SHAPED benchmark dir from the sf0.1 tables: fact
   * tables replicated `SCALE_MULT`× (default 10) with consistent key
-  * remapping on both sides of each join key — `k → k·mult + rep`, the
-  * [[Stress]] expansion, so joins stay 1:N and the documents↔embeddings
+  * remapping on both sides of each join key — `k → k·mult + rep` ([[expand]],
+  * shared with [[Stress]]), so joins stay 1:N and the documents↔embeddings
   * id alignment survives — dimension tables copied as-is. Written in the
   * harness layout (`<out>/<table>.parquet`), so `graft.Bench` runs against
   * it unchanged: `SPARK_GRAFT_SF_DIR=<out> sbt "runMain graft.Bench"`.
@@ -25,7 +25,12 @@ import org.apache.spark.sql.functions._
   */
 object MakeScaledSf {
 
-  private def expand(df: DataFrame, mult: Int, keys: Seq[String]): DataFrame = {
+  /** Replicate every row `mult`× with each key column remapped
+    * `k → k·mult + rep` (rep = 0 until mult): unique keys stay unique, and
+    * a key join between two expanded sides stays 1:N — it fans out ×mult,
+    * not ×mult². Non-key columns are copied unchanged.
+    */
+  private[graft] def expand(df: DataFrame, mult: Int, keys: Seq[String]): DataFrame = {
     val rep = explode(sequence(lit(0L), lit(mult - 1L))).as("_rep")
     val out = df.select(col("*"), rep)
     keys.foldLeft(out) { case (acc, c) =>

@@ -450,7 +450,7 @@ object SparkEntry {
     val ckpt = java.nio.file.Files.createTempDirectory("sgckpt")
     Seq(idx, kept, landing, ckpt).foreach(deleteRecursivelyOnExit)
     val cents = Similarity.trainIvfCentroids(base, "embedding", "vec_id", k = 8)
-    Similarity.writeIvfIndex(base, "embedding", "vec_id", cents, idx.toString)
+    VersionedIvf.write(base, "embedding", "vec_id", cents, idx.toString)
     (0 to 1).foreach { k =>
       val tmp = java.nio.file.Files.createTempDirectory(s"sgtmp$k")
       semSubBatch(arrivals, k).coalesce(1)
@@ -478,7 +478,7 @@ object SparkEntry {
     Similarity.semanticGateBatch(semSubBatch(arrivals, 1), "embedding", "vec_id",
       idx.toString, kept.toString, cents, 1L, SemGateTau, SemGateNprobe)
     val replayOk = outputsHash() == beforeReplay
-    Similarity.deleteFromIvfIndex(s, idx.toString,
+    VersionedIvf.delete(s, idx.toString,
       base.filter(pmod(col("vec_id"), lit(20)) === 2).select(col("vec_id")),
       "vec_id")
     Similarity.semanticGateBatch(semSubBatch(arrivals, 2), "embedding", "vec_id",
@@ -491,7 +491,7 @@ object SparkEntry {
     *   2. batches 0-1 of the held-out arrival quarter landed as one file
     *      each with ASCENDING modification times (the file source's
     *      processing order) and gated through
-    *      [[operators.Dedup.streamDedupAgainstNearDupIndex]];
+    *      [[operators.VersionedNearDup.streamGate]];
     *   3. replay probe: batch 1 re-gated through the same per-batch path —
     *      kept table and index manifest must hash-identical (replayOk);
     *   4. retention: base docs with doc_id ≡ 2 mod 20 tombstoned, batch 2
@@ -517,7 +517,7 @@ object SparkEntry {
     val landing = java.nio.file.Files.createTempDirectory("ssgland")
     val ckpt = java.nio.file.Files.createTempDirectory("ssgckpt")
     Seq(idx, clean, landing, ckpt).foreach(deleteRecursivelyOnExit)
-    Dedup.writeSubstringIndex(docs.filter(col("doc_id") < 250),
+    VersionedSubstring.write(docs.filter(col("doc_id") < 250),
       "text", "doc_id", idx.toString, n = 8)
     Seq((250L, 333L), (333L, 416L)).zipWithIndex.foreach { case ((lo, hi), k) =>
       val tmp = java.nio.file.Files.createTempDirectory(s"ssgtmp$k")
@@ -532,7 +532,7 @@ object SparkEntry {
       java.nio.file.Files.setLastModifiedTime(dst,
         java.nio.file.attribute.FileTime.fromMillis(1700000000000L + k * 60000L))
     }
-    Dedup.streamSubstringGate(
+    VersionedSubstring.streamGate(
       s.readStream.schema(docs.schema).option("maxFilesPerTrigger", 1)
         .parquet(landing.toString),
       "text", "doc_id", idx.toString, clean.toString, ckpt.toString)
@@ -545,10 +545,10 @@ object SparkEntry {
     // gate batch 2 FIRST, then replay batch 1: the replay probe must hold
     // with a LATER batch's partitions already standing (the real replay
     // shape — a crash-recovered batch re-runs after its successors landed)
-    Dedup.gateBatchAgainstSubstringIndex(docs.filter(col("doc_id") >= 416),
+    VersionedSubstring.gateBatch(docs.filter(col("doc_id") >= 416),
       "text", "doc_id", idx.toString, clean.toString, 2L)
     val beforeReplay = outputsHash()
-    Dedup.gateBatchAgainstSubstringIndex(
+    VersionedSubstring.gateBatch(
       docs.filter(col("doc_id") >= 333 && col("doc_id") < 416),
       "text", "doc_id", idx.toString, clean.toString, 1L)
     val replayOk = outputsHash() == beforeReplay
@@ -628,14 +628,14 @@ object SparkEntry {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
-    val fSub = Future(Dedup.writeSubstringIndex(
+    val fSub = Future(VersionedSubstring.write(
       baseDocs, "text", "doc_id", substrIdx.toString, n = SubstrGateN))
-    val fText = Future(Dedup.writeNearDupIndex(baseDocs, "text", "doc_id",
+    val fText = Future(VersionedNearDup.write(baseDocs, "text", "doc_id",
       textIdx.toString, GateShingle, GateNumer, GateDenom, GateBands, GateRows))
     val fAnn = Future {
       val c = Similarity.trainIvfCentroids(baseEmb, "embedding", "vec_id",
         k = 8, iterations = 1)
-      Similarity.writeIvfIndex(baseEmb, "embedding", "vec_id", c, annIdx.toString)
+      VersionedIvf.write(baseEmb, "embedding", "vec_id", c, annIdx.toString)
       c
     }
     Await.result(fSub, Duration.Inf)
@@ -796,14 +796,14 @@ object SparkEntry {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
-    val fSub = Future(Dedup.writeSubstringIndex(
+    val fSub = Future(VersionedSubstring.write(
       baseDocs, "text", "doc_id", substrIdx.toString, n = SubstrGateN))
-    val fText = Future(Dedup.writeNearDupIndex(baseDocs, "text", "doc_id",
+    val fText = Future(VersionedNearDup.write(baseDocs, "text", "doc_id",
       textIdx.toString, GateShingle, GateNumer, GateDenom, GateBands, GateRows))
     val fAnn = Future {
       val c = Similarity.trainIvfCentroids(baseEmb, "embedding", "vec_id",
         k = 8, iterations = 1)
-      Similarity.writeIvfIndex(baseEmb, "embedding", "vec_id", c, annIdx.toString)
+      VersionedIvf.write(baseEmb, "embedding", "vec_id", c, annIdx.toString)
       c
     }
     val model = composed4Model(s, d)
@@ -881,7 +881,7 @@ object SparkEntry {
     val landing = java.nio.file.Files.createTempDirectory("ndgland")
     val ckpt = java.nio.file.Files.createTempDirectory("ndgckpt")
     Seq(idx, kept, landing, ckpt).foreach(deleteRecursivelyOnExit)
-    Dedup.writeNearDupIndex(base, "text", "doc_id", idx.toString,
+    VersionedNearDup.write(base, "text", "doc_id", idx.toString,
       GateShingle, GateNumer, GateDenom, GateBands, GateRows)
     (0 to 1).foreach { k =>
       val tmp = java.nio.file.Files.createTempDirectory(s"ndgtmp$k")
@@ -898,7 +898,7 @@ object SparkEntry {
       java.nio.file.Files.setLastModifiedTime(dst,
         java.nio.file.attribute.FileTime.fromMillis(1700000000000L + k * 60000L))
     }
-    Dedup.streamDedupAgainstNearDupIndex(
+    VersionedNearDup.streamGate(
       s.readStream.schema(docs.schema).option("maxFilesPerTrigger", 1)
         .parquet(landing.toString),
       "text", "doc_id", idx.toString, kept.toString, ckpt.toString)
@@ -906,19 +906,19 @@ object SparkEntry {
     def outputsHash(): ((Long, Long), (Long, Long)) = (
       contentHash(s.read.parquet(kept.toString),
         Seq("doc_id", "text", "ingest_batch")),
-      contentHash(Dedup.nearDupIndexManifest(s, idx.toString),
+      contentHash(VersionedNearDup.liveManifest(s, idx.toString),
         Seq("doc", "keys", "shh")))
     val beforeReplay = outputsHash()
-    Dedup.gateBatchAgainstNearDupIndex(gateSubBatch(arrivals, 1),
+    VersionedNearDup.gateBatch(gateSubBatch(arrivals, 1),
       "text", "doc_id", idx.toString, kept.toString, 1L)
     val replayOk = outputsHash() == beforeReplay
-    Dedup.deleteFromNearDupIndex(gateDeletedIds(docs), "doc_id", idx.toString)
-    Dedup.gateBatchAgainstNearDupIndex(gateSubBatch(arrivals, 2),
+    VersionedNearDup.delete(gateDeletedIds(docs), "doc_id", idx.toString)
+    VersionedNearDup.gateBatch(gateSubBatch(arrivals, 2),
       "text", "doc_id", idx.toString, kept.toString, 2L)
     def liveHash(): (Long, Long) = contentHash(
-      Dedup.nearDupIndexManifest(s, idx.toString), Seq("doc", "keys", "shh"))
+      VersionedNearDup.liveManifest(s, idx.toString), Seq("doc", "keys", "shh"))
     val beforeCompact = liveHash()
-    Dedup.compactNearDupIndex(s, idx.toString)
+    VersionedNearDup.consolidate(s, idx.toString)
     val fs = new org.apache.hadoop.fs.Path(idx.toString)
       .getFileSystem(s.sparkContext.hadoopConfiguration)
     val compactOk = liveHash() == beforeCompact &&
@@ -1062,10 +1062,10 @@ object SparkEntry {
     deleteRecursivelyOnExit(dir)
     val half1 = emb.filter(col("vec_id") % 2 === 0)
     val half2 = emb.filter(col("vec_id") % 2 === 1)
-    Similarity.writeIvfIndex(half1, "embedding", "vec_id",
+    VersionedIvf.write(half1, "embedding", "vec_id",
       Similarity.trainIvfCentroids(half1, "embedding", "vec_id", k = 8), dir.toString)
-    Similarity.appendToIvfIndex(half2, "embedding", "vec_id", dir.toString)
-    Similarity.retrainIvfIndex(s, dir.toString, k = Some(8))
+    VersionedIvf.append(half2, "embedding", "vec_id", dir.toString)
+    VersionedIvf.retrain(s, dir.toString, k = Some(8))
     dir.toString
   }
 
@@ -1091,7 +1091,7 @@ object SparkEntry {
     contentHash(s.read.parquet(kept), Seq("doc_id", "ingest_batch")),
     contentHash(VersionedIvf.corpusView(s, annIdx),
       Seq("vec_id", "cluster", "ingest_batch")),
-    contentHash(Dedup.nearDupIndexManifest(s, textIdx),
+    contentHash(VersionedNearDup.liveManifest(s, textIdx),
       Seq("doc", "keys", "shh")))
 
   /** Build the composed text→semantic gate fixture once per sf dir: both
@@ -1119,10 +1119,10 @@ object SparkEntry {
     val ckpt = java.nio.file.Files.createTempDirectory("cmpc")
     Seq(textIdx, annIdx, textKept, kept, landing, ckpt)
       .foreach(deleteRecursivelyOnExit)
-    Dedup.writeNearDupIndex(baseDocs, "text", "doc_id", textIdx.toString,
+    VersionedNearDup.write(baseDocs, "text", "doc_id", textIdx.toString,
       GateShingle, GateNumer, GateDenom, GateBands, GateRows)
     val cents = Similarity.trainIvfCentroids(baseEmb, "embedding", "vec_id", k = 8)
-    Similarity.writeIvfIndex(baseEmb, "embedding", "vec_id", cents, annIdx.toString)
+    VersionedIvf.write(baseEmb, "embedding", "vec_id", cents, annIdx.toString)
     (0 to 1).foreach { k =>
       val tmp = java.nio.file.Files.createTempDirectory(s"cmpb$k")
       gateSubBatch(arrivals, k).coalesce(1)
@@ -1156,7 +1156,7 @@ object SparkEntry {
       val emb = tb(s, d, "embeddings")
       val dir = java.nio.file.Files.createTempDirectory("ivfidx")
       deleteRecursivelyOnExit(dir)
-      Similarity.writeIvfIndex(emb, "embedding", "vec_id",
+      VersionedIvf.write(emb, "embedding", "vec_id",
         Similarity.trainIvfCentroids(emb, "embedding", "vec_id", k = 8), dir.toString)
       dir.toString
     })
@@ -2768,7 +2768,7 @@ object SparkEntry {
     "d_substr_gate" -> ((s, d) => fixtureSerialized("substrgate", d) {
       val (idx, clean, _) =
         substrGateCache.computeIfAbsent(d, _ => buildSubstringGateFixture(s, d))
-      Dedup.gateBatchAgainstSubstringIndex(
+      VersionedSubstring.gateBatch(
         tb(s, d, "documents").filter(col("doc_id") >= 416),
         "text", "doc_id", idx, clean, 2L)
       s.read.parquet(clean).filter(col("ingest_batch") === 2L)
@@ -2939,7 +2939,7 @@ object SparkEntry {
     "d_stream_gate" -> ((s, d) => fixtureSerialized("streamgate", d) {
       val (idx, kept, _, _) =
         nearDupGateCache.computeIfAbsent(d, _ => buildNearDupGateFixture(s, d))
-      Dedup.gateBatchAgainstNearDupIndex(
+      VersionedNearDup.gateBatch(
         gateSubBatch(tb(s, d, "documents")
           .filter(pmod(col("doc_id"), lit(4)) === 0), 2),
         "text", "doc_id", idx, kept, 2L)
@@ -3015,7 +3015,7 @@ object SparkEntry {
           col("n_tombstones") =!= 0L)
         .select(col("n_generations"), col("n_segments"), col("n_tombstones"))
     }),
-    // the LSH families' health audit (r10 verdict #5 — ivfAssignmentDrift's
+    // the LSH families' health audit (r10 verdict #5 — VersionedIvf.assignmentDrift's
     // twin): per-band bucket-occupancy stats of the persisted near-dup
     // index from ONE manifest scan, gated by SCALE-FREE healthy-shape
     // rules — a band whose biggest bucket holds over ~a tenth of all
@@ -3588,7 +3588,7 @@ object SparkEntry {
       val lex = SparseSim.bm25TopKFromIndex(s, bm25IndexPath(s, d),
         docs.filter(col("doc_id") < 5), "text", "doc_id", k = 5)
         .select(col("query_id"), col("doc_id").as("item_id"), col("rank"))
-      val dense = Similarity.ivfTopKFromIndex(s, ivfIndexPath(s, d),
+      val dense = VersionedIvf.topKFromIndex(s, ivfIndexPath(s, d),
         embs.filter(col("vec_id") < 5), "embedding", "vec_id", k = 5, nprobe = 8)
         .select(col("query_id"), col("neighbor_id").as("item_id"), col("rank"))
       Similarity.rrfFuse(Seq(lex, dense), k0 = 60, k = 5)
@@ -4030,14 +4030,14 @@ object SparkEntry {
       // nprobe = #centroids keeps it provably equal to brute force, so the
       // whole write→read→probe loop rides the hash gate
       val emb = tb(s, d, "embeddings")
-      Similarity.ivfTopKFromIndex(s, ivfIndexPath(s, d), emb.filter(col("vec_id") < 10),
+      VersionedIvf.topKFromIndex(s, ivfIndexPath(s, d), emb.filter(col("vec_id") < 10),
         "embedding", "vec_id", k = 5, nprobe = 8)
         .select(col("query_id"), col("neighbor_id"), col("rank").cast("bigint").as("rank"))
     }),
     // the incremental-ingest face of the persisted index (the 100 TB shape:
     // daily arrivals are assigned against the FROZEN centroids and appended
     // to their cluster partitions — no retrain, no rewrite). Built from
-    // HALF the corpus + appendToIvfIndex of the other half; nprobe =
+    // HALF the corpus + VersionedIvf.append of the other half; nprobe =
     // #centroids makes the probe provably equal to brute force over the
     // FULL corpus, so build + append + probe all ride the hash gate — a
     // lost or double-appended row could not hash-match
@@ -4050,12 +4050,12 @@ object SparkEntry {
         val half2 = emb.filter(col("vec_id") % 2 === 1)
         // centroids trained on the base half only — the frozen-quantizer
         // contract is exactly that later arrivals never influence them
-        Similarity.writeIvfIndex(half1, "embedding", "vec_id",
+        VersionedIvf.write(half1, "embedding", "vec_id",
           Similarity.trainIvfCentroids(half1, "embedding", "vec_id", k = 8), dir.toString)
-        Similarity.appendToIvfIndex(half2, "embedding", "vec_id", dir.toString)
+        VersionedIvf.append(half2, "embedding", "vec_id", dir.toString)
         dir.toString
       })
-      Similarity.ivfTopKFromIndex(s, path, emb.filter(col("vec_id") < 10),
+      VersionedIvf.topKFromIndex(s, path, emb.filter(col("vec_id") < 10),
         "embedding", "vec_id", k = 5, nprobe = 8)
         .select(col("query_id"), col("neighbor_id"), col("rank").cast("bigint").as("rank"))
     }),
@@ -4073,17 +4073,17 @@ object SparkEntry {
         Seq(dir, landing, ckpt).foreach(deleteRecursivelyOnExit)
         val half1 = emb.filter(col("vec_id") % 2 === 0)
         val half2 = emb.filter(col("vec_id") % 2 === 1)
-        Similarity.writeIvfIndex(half1, "embedding", "vec_id",
+        VersionedIvf.write(half1, "embedding", "vec_id",
           Similarity.trainIvfCentroids(half1, "embedding", "vec_id", k = 8), dir.toString)
         half2.repartition(4).write.mode("overwrite").parquet(landing.toString)
-        Similarity.streamAppendToIvfIndex(
+        VersionedIvf.streamAppend(
           s.readStream.schema(half2.schema).option("maxFilesPerTrigger", 1)
             .parquet(landing.toString),
           "embedding", "vec_id", dir.toString, ckpt.toString)
           .awaitTermination()
         dir.toString
       })
-      Similarity.ivfTopKFromIndex(s, path, emb.filter(col("vec_id") < 10),
+      VersionedIvf.topKFromIndex(s, path, emb.filter(col("vec_id") < 10),
         "embedding", "vec_id", k = 5, nprobe = 8)
         .select(col("query_id"), col("neighbor_id"), col("rank").cast("bigint").as("rank"))
     }),
@@ -4127,13 +4127,13 @@ object SparkEntry {
       val path = ivfDelIndexCache.computeIfAbsent(d, _ => {
         val dir = java.nio.file.Files.createTempDirectory("ivfidxdel")
         deleteRecursivelyOnExit(dir)
-        Similarity.writeIvfIndex(emb, "embedding", "vec_id",
+        VersionedIvf.write(emb, "embedding", "vec_id",
           Similarity.trainIvfCentroids(emb, "embedding", "vec_id", k = 8), dir.toString)
-        Similarity.deleteFromIvfIndex(s, dir.toString,
+        VersionedIvf.delete(s, dir.toString,
           emb.filter(col("vec_id") % 7 === 3).select(col("vec_id")), "vec_id")
         dir.toString
       })
-      Similarity.ivfTopKFromIndex(s, path,
+      VersionedIvf.topKFromIndex(s, path,
         emb.filter(col("vec_id") < 10 && col("vec_id") % 7 =!= 3),
         "embedding", "vec_id", k = 5, nprobe = 8)
         .select(col("query_id"), col("neighbor_id"), col("rank").cast("bigint").as("rank"))
@@ -4150,24 +4150,24 @@ object SparkEntry {
         val landing = java.nio.file.Files.createTempDirectory("ivfpland")
         val ckpt = java.nio.file.Files.createTempDirectory("ivfpck")
         Seq(dir, landing, ckpt).foreach(deleteRecursivelyOnExit)
-        Similarity.writeIvfIndex(emb, "embedding", "vec_id",
+        VersionedIvf.write(emb, "embedding", "vec_id",
           Similarity.trainIvfCentroids(emb, "embedding", "vec_id", k = 8), dir.toString)
         val deleted = emb.filter(col("vec_id") % 7 === 3)
           .select(col("vec_id"), col("embedding"))
-        Similarity.deleteFromIvfIndex(s, dir.toString,
+        VersionedIvf.delete(s, dir.toString,
           deleted.select(col("vec_id")), "vec_id")
-        Similarity.purgeIvfTombstones(s, dir.toString)
+        VersionedIvf.consolidate(s, dir.toString)
         deleted.coalesce(1).write.mode("overwrite").parquet(landing.toString)
-        Similarity.streamAppendToIvfIndex(
+        VersionedIvf.streamAppend(
           s.readStream.schema(deleted.schema).parquet(landing.toString),
           "embedding", "vec_id", dir.toString, ckpt.toString)
           .awaitTermination()
         // stream committed → the guarded (no-op) purge is permitted
-        Similarity.purgeIvfTombstones(s, dir.toString,
+        VersionedIvf.consolidate(s, dir.toString,
           checkpointDir = Some(ckpt.toString))
         dir.toString
       })
-      Similarity.ivfTopKFromIndex(s, path, emb.filter(col("vec_id") < 10),
+      VersionedIvf.topKFromIndex(s, path, emb.filter(col("vec_id") < 10),
         "embedding", "vec_id", k = 5, nprobe = 8)
         .select(col("query_id"), col("neighbor_id"), col("rank").cast("bigint").as("rank"))
     }),
@@ -4179,7 +4179,7 @@ object SparkEntry {
       val emb = tb(s, d, "embeddings")
       val path = ivfRetrainIndexCache.computeIfAbsent(d,
         _ => buildRetrainFixture(s, emb))
-      Similarity.ivfTopKFromIndex(s, path, emb.filter(col("vec_id") < 10),
+      VersionedIvf.topKFromIndex(s, path, emb.filter(col("vec_id") < 10),
         "embedding", "vec_id", k = 5, nprobe = 8)
         .select(col("query_id"), col("neighbor_id"), col("rank").cast("bigint").as("rank"))
     }),
@@ -4237,7 +4237,7 @@ object SparkEntry {
       val emb = tb(s, d, "embeddings")
       val path = ivfRetrainIndexCache.computeIfAbsent(d,
         _ => buildRetrainFixture(s, emb))
-      Similarity.ivfAssignmentDrift(s, path)
+      VersionedIvf.assignmentDrift(s, path)
         .filter(col("misassigned") > 0L)
         .select(col("ingest_batch"), col("n"), col("misassigned"))
     }),
@@ -4286,20 +4286,20 @@ object SparkEntry {
         val cents = Similarity.trainIvfCentroids(emb, "embedding", "vec_id", k = 8)
         val books = Similarity.trainIvfPqBooks(emb, "embedding", "vec_id",
           cents, m = 8, ksub = 32)
-        Similarity.writeIvfPqIndex(emb, "embedding", "vec_id", cents, books, dir.toString)
+        VersionedIvfPq.write(emb, "embedding", "vec_id", cents, books, dir.toString)
         dir.toString
       })
-      Similarity.ivfPqTopKFromIndex(s, path, emb.filter(col("vec_id") < 10), emb,
+      VersionedIvfPq.topKFromIndex(s, path, emb.filter(col("vec_id") < 10), emb,
         "embedding", "vec_id", k = 5, nprobe = 8, rerank = 1000000)
         .select(col("query_id"), col("neighbor_id"), col("rank").cast("bigint").as("rank"))
     }),
     // the IVF-PQ RETRAIN face (r10 verdict #3 — the retrain asymmetry
     // closed): half build, frozen-QUANTIZER append of the drifted half,
-    // then retrainIvfPqIndex over the float base table — new coarse
-    // centroids + new residual codebooks + full re-encode swapped under
-    // ONE _COMMIT marker naming the three sub-tables. Exhaustive probe +
+    // then VersionedIvfPq.retrain over the float base table — new coarse
+    // centroids + new residual codebooks + full re-encode published as
+    // the next generation by ONE marker create. Exhaustive probe +
     // exhaustive re-rank ≡ brute over the full corpus: a row lost,
-    // duplicated, or mis-encoded by the swap cannot hash-match
+    // duplicated, or mis-encoded by the retrain cannot hash-match
     "s_knn_ivfpq_retrained" -> ((s, d) => {
       val emb = tb(s, d, "embeddings")
       val path = ivfPqRetrainIndexCache.computeIfAbsent(d, _ => {
@@ -4309,13 +4309,13 @@ object SparkEntry {
         val cents = Similarity.trainIvfCentroids(half1, "embedding", "vec_id", k = 8)
         val books = Similarity.trainIvfPqBooks(half1, "embedding", "vec_id",
           cents, m = 8, ksub = 32)
-        Similarity.writeIvfPqIndex(half1, "embedding", "vec_id", cents, books, dir.toString)
-        Similarity.appendToIvfPqIndex(emb.filter(col("vec_id") % 2 === 1),
+        VersionedIvfPq.write(half1, "embedding", "vec_id", cents, books, dir.toString)
+        VersionedIvfPq.append(emb.filter(col("vec_id") % 2 === 1),
           "embedding", "vec_id", dir.toString)
-        Similarity.retrainIvfPqIndex(s, dir.toString, emb, "embedding", "vec_id")
+        VersionedIvfPq.retrain(s, dir.toString, emb, "embedding", "vec_id")
         dir.toString
       })
-      Similarity.ivfPqTopKFromIndex(s, path, emb.filter(col("vec_id") < 10), emb,
+      VersionedIvfPq.topKFromIndex(s, path, emb.filter(col("vec_id") < 10), emb,
         "embedding", "vec_id", k = 5, nprobe = 8, rerank = 1000000)
         .select(col("query_id"), col("neighbor_id"), col("rank").cast("bigint").as("rank"))
     }),
@@ -4332,12 +4332,12 @@ object SparkEntry {
         val cents = Similarity.trainIvfCentroids(emb, "embedding", "vec_id", k = 8)
         val books = Similarity.trainIvfPqBooks(emb, "embedding", "vec_id",
           cents, m = 8, ksub = 32)
-        Similarity.writeIvfPqIndex(emb, "embedding", "vec_id", cents, books, dir.toString)
-        Similarity.deleteFromIvfPqIndex(s, dir.toString,
+        VersionedIvfPq.write(emb, "embedding", "vec_id", cents, books, dir.toString)
+        VersionedIvfPq.delete(s, dir.toString,
           emb.filter(col("vec_id") % 7 === 3).select(col("vec_id")), "vec_id")
         dir.toString
       })
-      Similarity.ivfPqTopKFromIndex(s, path,
+      VersionedIvfPq.topKFromIndex(s, path,
         emb.filter(col("vec_id") < 10 && col("vec_id") % 7 =!= 3), emb,
         "embedding", "vec_id", k = 5, nprobe = 8, rerank = 1000000)
         .select(col("query_id"), col("neighbor_id"), col("rank").cast("bigint").as("rank"))

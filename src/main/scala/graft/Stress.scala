@@ -16,14 +16,8 @@ import org.apache.spark.sql.streaming.{OutputMode, Trigger}
   */
 object Stress {
 
-  private def expand(df: DataFrame, mult: Int, keyCols: Map[String, String]): DataFrame = {
-    // replicate every row `mult`× with remapped keys so joins stay 1:N, not N²
-    val rep = explode(sequence(lit(0L), lit(mult - 1L))).as("_rep")
-    val out = df.select(col("*"), rep)
-    keyCols.foldLeft(out) { case (acc, (c, _)) =>
-      acc.withColumn(c, col(c) * mult + col("_rep"))
-    }.drop("_rep")
-  }
+  // the sf1 expansion: joins on the remapped keys stay 1:N at mult×
+  import MakeScaledSf.expand
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -37,18 +31,18 @@ object Stress {
     val spark = GraftSession.localFromEnv()
     import spark.implicits._
 
-    val lineitem = expand(Tables(spark, sfDir, "lineitem"), mult, Map("l_orderkey" -> ""))
-    val orders = expand(Tables(spark, sfDir, "orders"), mult, Map("o_orderkey" -> ""))
-    val docs = expand(Tables.balanced(spark, sfDir, "documents"), mult, Map("doc_id" -> ""))
+    val lineitem = expand(Tables(spark, sfDir, "lineitem"), mult, Seq("l_orderkey"))
+    val orders = expand(Tables(spark, sfDir, "orders"), mult, Seq("o_orderkey"))
+    val docs = expand(Tables.balanced(spark, sfDir, "documents"), mult, Seq("doc_id"))
       // mutate most replicas so near-dup structure stays realistic (~keep
       // every 5th replica a true near-dup of the original)
       .withColumn("text",
         when(pmod(col("doc_id"), lit(5)) === 0, col("text"))
           .otherwise(concat(col("text"), lit(" variant "), col("doc_id"))))
-    val embs = expand(Tables.balanced(spark, sfDir, "embeddings"), mult, Map("vec_id" -> ""))
+    val embs = expand(Tables.balanced(spark, sfDir, "embeddings"), mult, Seq("vec_id"))
     // event ids remapped, user ids kept: replication deepens per-user
     // histories (the dimension funnel/retention state grows along)
-    val events = expand(Tables(spark, sfDir, "events"), mult, Map("event_id" -> ""))
+    val events = expand(Tables(spark, sfDir, "events"), mult, Seq("event_id"))
 
     // --- streaming stress input: the expanded events written ONCE as a
     // ts-range-partitioned parquet landing dir (64 files in event-time
@@ -346,7 +340,7 @@ object Stress {
           concat(lit("shared boilerplate page body number "),
             pmod(col("doc_id"), lit(2000))))
         val idx = java.nio.file.Files.createTempDirectory("stress_hidx").toString
-        operators.Dedup.writeNearDupIndex(lowent, "text", "doc_id", idx,
+        operators.VersionedNearDup.write(lowent, "text", "doc_id", idx,
           3, 1, 2, 32, 2)
         val viol = operators.Dedup.nearDupIndexBucketStats(spark, idx)
           .filter(col("max_bucket") * 10 > col("n_sigs") + 50 ||
@@ -511,9 +505,9 @@ object Stress {
           val base = embs.filter(pmod(col("vec_id"), lit(4)) =!= 0)
           val batch = embs.filter(pmod(col("vec_id"), lit(4)) === 0)
           val cents = operators.Similarity.trainIvfCentroids(base, "embedding", "vec_id", k = 16)
-          operators.Similarity.writeIvfIndex(base, "embedding", "vec_id", cents, dir.toString)
-          operators.Similarity.appendToIvfIndex(batch, "embedding", "vec_id", dir.toString)
-          operators.Similarity.ivfTopKFromIndex(spark, dir.toString,
+          operators.VersionedIvf.write(base, "embedding", "vec_id", cents, dir.toString)
+          operators.VersionedIvf.append(batch, "embedding", "vec_id", dir.toString)
+          operators.VersionedIvf.topKFromIndex(spark, dir.toString,
             embs.filter(col("vec_id") < 10), "embedding", "vec_id", k = 5, nprobe = 2).count()
         } finally {
           import scala.jdk.CollectionConverters._
@@ -531,11 +525,11 @@ object Stress {
         try {
           val cents = operators.Similarity.trainIvfCentroids(
             embs, "embedding", "vec_id", k = 16, trainSample = 8)
-          operators.Similarity.writeIvfIndex(embs, "embedding", "vec_id", cents, dir.toString)
+          operators.VersionedIvf.write(embs, "embedding", "vec_id", cents, dir.toString)
           // worst case: a uniform 1% slice hits EVERY cluster — the rewrite
           // approaches a full one
           val t0 = System.nanoTime()
-          val deleted = operators.Similarity.deleteFromIvfIndex(spark, dir.toString,
+          val deleted = operators.VersionedIvf.delete(spark, dir.toString,
             embs.filter(pmod(col("vec_id"), lit(100)) === 37).select(col("vec_id")), "vec_id")
           System.err.println(
             f"[stress] ivf_delete_x$mult uniform 1%%: ${(System.nanoTime() - t0) / 1e9}%.2f s, $deleted rows (all clusters affected)")
@@ -549,7 +543,7 @@ object Stress {
           val oneCluster = corpusIdx.filter(col("cluster") === busiest)
             .select(col("vec_id")).orderBy(col("vec_id")).limit(2000)
           val t1 = System.nanoTime()
-          val deleted1 = operators.Similarity.deleteFromIvfIndex(
+          val deleted1 = operators.VersionedIvf.delete(
             spark, dir.toString, oneCluster, "vec_id")
           System.err.println(
             f"[stress] ivf_delete_x$mult one-cluster: ${(System.nanoTime() - t1) / 1e9}%.2f s, $deleted1 rows (1 cluster affected)")
@@ -965,7 +959,7 @@ object Stress {
       // production contract — the audit query below proves work done
       // remains Σ|surviving block|²
       time(s"linkage_x$mult") {
-        val parts = expand(Tables(spark, sfDir, "part"), mult, Map("p_partkey" -> ""))
+        val parts = expand(Tables(spark, sfDir, "part"), mult, Seq("p_partkey"))
         operators.Linkage.blockedPairs(parts, "p_partkey", "p_name",
           concat(col("p_brand"), lit("|"), col("p_size").cast("string")),
           threshold = 0.9, maxBlockSize = 300).count()
@@ -1005,7 +999,7 @@ object Stress {
       // op) → alt-star components → survivorship top-1 per entity — the
       // end-to-end pairs→entities→golden chain under expanded blocks
       time(s"golden_x$mult") {
-        val parts = expand(Tables(spark, sfDir, "part"), mult, Map("p_partkey" -> ""))
+        val parts = expand(Tables(spark, sfDir, "part"), mult, Seq("p_partkey"))
         val pairs = operators.Linkage.blockedPairs(parts, "p_partkey", "p_name",
           concat(col("p_brand"), lit("|"), col("p_size").cast("string")),
           threshold = 0.9, maxBlockSize = 300)
@@ -1096,10 +1090,10 @@ object Stress {
           val arrivals = embs.filter(pmod(col("vec_id"), lit(2)) === 1)
           val cents = operators.Similarity.trainIvfCentroids(
             base, "embedding", "vec_id", k = 16, trainSample = 8)
-          operators.Similarity.writeIvfIndex(base, "embedding", "vec_id", cents, dir.toString)
+          operators.VersionedIvf.write(base, "embedding", "vec_id", cents, dir.toString)
           arrivals.repartition(8).write.mode("overwrite").parquet(landing.toString)
           val t0 = System.nanoTime()
-          operators.Similarity.streamAppendToIvfIndex(
+          operators.VersionedIvf.streamAppend(
             spark.readStream.schema(base.schema).option("maxFilesPerTrigger", 1)
               .parquet(landing.toString),
             "embedding", "vec_id", dir.toString, ckpt.toString)
@@ -1119,7 +1113,7 @@ object Stress {
             operators.VersionedIvf.corpusView(spark, dir.toString)
               .filter(col("ingest_batch") === 3L)
               .select(col("vec_id"), col("embedding")))
-          try operators.Similarity.ingestBatchToIvfIndex(
+          try operators.VersionedIvf.ingestBatch(
             replay, "embedding", "vec_id", dir.toString, 3L)
           finally graft.CacheScope.unpersistCheckpoint(replay)
           val after = corpusHash()
@@ -1199,12 +1193,12 @@ object Stress {
                 .otherwise(col("text")))
           def batchOf(k: Int) =
             arrivals.filter(pmod(col("doc_id"), lit(8)) === (2 * k + 1))
-          operators.Dedup.writeNearDupIndex(base, "text", "doc_id",
+          operators.VersionedNearDup.write(base, "text", "doc_id",
             idx.toString, shingleSize = 3, numer = 1, denom = 2,
             bands = 32, rowsPerBand = 2)
           (0 to 3).foreach { k =>
             val t0 = System.nanoTime()
-            operators.Dedup.gateBatchAgainstNearDupIndex(batchOf(k),
+            operators.VersionedNearDup.gateBatch(batchOf(k),
               "text", "doc_id", idx.toString, kept.toString, k.toLong)
             System.err.println(
               f"[stress] stream_gate_x$mult batch=$k " +
@@ -1214,13 +1208,13 @@ object Stress {
             val kr = spark.read.parquet(kept.toString)
               .agg(count(lit(1)), sum(hash(col("doc_id"), col("ingest_batch"))
                 .cast("long"))).head
-            val mr = operators.Dedup.nearDupIndexManifest(spark, idx.toString)
+            val mr = operators.VersionedNearDup.liveManifest(spark, idx.toString)
               .agg(count(lit(1)), sum(hash(col("doc"), col("keys"))
                 .cast("long"))).head
             ((kr.getLong(0), kr.getLong(1)), (mr.getLong(0), mr.getLong(1)))
           }
           val before = snap()
-          operators.Dedup.gateBatchAgainstNearDupIndex(batchOf(1),
+          operators.VersionedNearDup.gateBatch(batchOf(1),
             "text", "doc_id", idx.toString, kept.toString, 1L)
           require(snap() == before,
             s"replayed gate batch changed kept/manifest content: $before")
@@ -1259,7 +1253,7 @@ object Stress {
             arrivals.filter(pmod(col("vec_id"), lit(8)) === (2 * k + 1))
           val cents = operators.Similarity.trainIvfCentroids(
             base, "embedding", "vec_id", k = 16, trainSample = 8)
-          operators.Similarity.writeIvfIndex(base, "embedding", "vec_id",
+          operators.VersionedIvf.write(base, "embedding", "vec_id",
             cents, idx.toString)
           (0 to 3).foreach { k =>
             val t0 = System.nanoTime()
@@ -1333,12 +1327,12 @@ object Stress {
             .select(arrivalDocs("doc_id"), col("text"), col("embedding"))
           def batchOf(k: Int) =
             arrivals.filter(pmod(col("doc_id"), lit(8)) === (2 * k + 1))
-          operators.Dedup.writeNearDupIndex(baseDocs, "text", "doc_id",
+          operators.VersionedNearDup.write(baseDocs, "text", "doc_id",
             textIdx.toString, shingleSize = 3, numer = 1, denom = 2,
             bands = 32, rowsPerBand = 2)
           val cents = operators.Similarity.trainIvfCentroids(
             baseEmb, "embedding", "vec_id", k = 16, trainSample = 8)
-          operators.Similarity.writeIvfIndex(baseEmb, "embedding", "vec_id",
+          operators.VersionedIvf.write(baseEmb, "embedding", "vec_id",
             cents, annIdx.toString)
           def composed(k: Int): Unit =
             streaming.ComposedGate.ingestBatch(batchOf(k), "text", "embedding",
@@ -1357,7 +1351,7 @@ object Stress {
             (spark.read.parquet(kept.toString), Seq("doc_id", "ingest_batch")),
             (operators.VersionedIvf.corpusView(spark, annIdx.toString),
               Seq("vec_id", "cluster", "ingest_batch")),
-            (operators.Dedup.nearDupIndexManifest(spark, textIdx.toString),
+            (operators.VersionedNearDup.liveManifest(spark, textIdx.toString),
               Seq("doc", "keys")))
             .map { case (df, cols) =>
               val r = df.agg(count(lit(1)),
@@ -1435,14 +1429,14 @@ object Stress {
           val model = operators.TextClassifier.train(
             labeled, "text", "doc_id", "label",
             numBuckets = buckets, iterations = 5)
-          operators.Dedup.writeSubstringIndex(baseDocs, "text", "doc_id",
+          operators.VersionedSubstring.write(baseDocs, "text", "doc_id",
             substrIdx.toString, n = 8)
-          operators.Dedup.writeNearDupIndex(baseDocs, "text", "doc_id",
+          operators.VersionedNearDup.write(baseDocs, "text", "doc_id",
             textIdx.toString, shingleSize = 3, numer = 1, denom = 2,
             bands = 32, rowsPerBand = 2)
           val cents = operators.Similarity.trainIvfCentroids(
             baseEmb, "embedding", "vec_id", k = 16, trainSample = 8)
-          operators.Similarity.writeIvfIndex(baseEmb, "embedding", "vec_id",
+          operators.VersionedIvf.write(baseEmb, "embedding", "vec_id",
             cents, annIdx.toString)
           def composed(k: Int): Unit =
             streaming.ComposedGate.ingestBatch4(batchOf(k), "text",
@@ -1475,7 +1469,7 @@ object Stress {
             (spark.read.parquet(cleanD.toString), Seq("doc", "ingest_batch")),
             (spark.read.parquet(textKept.toString), Seq("doc_id", "ingest_batch")),
             (spark.read.parquet(kept.toString), Seq("doc_id", "ingest_batch")),
-            (operators.Dedup.nearDupIndexManifest(spark, textIdx.toString),
+            (operators.VersionedNearDup.liveManifest(spark, textIdx.toString),
               Seq("doc", "keys")))
             .map { case (df, cols) =>
               val r = df.agg(count(lit(1)),
@@ -1564,26 +1558,26 @@ object Stress {
           val base = embs.filter(pmod(col("vec_id"), lit(4)) === 0)
           val cents = operators.Similarity.trainIvfCentroids(
             base, "embedding", "vec_id", k = 16, trainSample = 8)
-          operators.Similarity.writeIvfIndex(base, "embedding", "vec_id",
+          operators.VersionedIvf.write(base, "embedding", "vec_id",
             cents, dir.toString)
           val delIds = base.filter(pmod(col("vec_id"), lit(400)) === 0)
-          val deleted = operators.Similarity.deleteFromIvfIndex(
+          val deleted = operators.VersionedIvf.delete(
             spark, dir.toString, delIds.select(col("vec_id")), "vec_id")
           def ingest(sel: Int, batchId: Long): Double = {
             val b = embs.filter(pmod(col("vec_id"), lit(4)) === sel)
               .select(col("vec_id"), col("embedding"))
             val t0 = System.nanoTime()
-            operators.Similarity.ingestBatchToIvfIndex(
+            operators.VersionedIvf.ingestBatch(
               b, "embedding", "vec_id", dir.toString, batchId)
             (System.nanoTime() - t0) / 1e9
           }
           val withTomb = ingest(1, 0L) // pays the tombstone anti-join
           val t0 = System.nanoTime()
-          operators.Similarity.purgeIvfTombstones(spark, dir.toString)
+          operators.VersionedIvf.consolidate(spark, dir.toString)
           val purgeWall = (System.nanoTime() - t0) / 1e9
           val afterPurge = ingest(2, 1L) // anti-join structurally gone
           // deleted ids may re-enter now
-          operators.Similarity.ingestBatchToIvfIndex(
+          operators.VersionedIvf.ingestBatch(
             delIds.select(col("vec_id"), col("embedding")),
             "embedding", "vec_id", dir.toString, 2L)
           val back = operators.VersionedIvf.corpusView(spark, dir.toString)
@@ -1611,11 +1605,11 @@ object Stress {
           val base = embs.filter(pmod(col("vec_id"), lit(4)) === 0)
           val cents = operators.Similarity.trainIvfCentroids(
             base, "embedding", "vec_id", k = 16, trainSample = 8)
-          operators.Similarity.writeIvfIndex(base, "embedding", "vec_id",
+          operators.VersionedIvf.write(base, "embedding", "vec_id",
             cents, dir.toString)
           val rowsBefore = operators.VersionedIvf.corpusView(spark, dir.toString).count()
           val t0 = System.nanoTime()
-          operators.Similarity.retrainIvfIndex(spark, dir.toString,
+          operators.VersionedIvf.retrain(spark, dir.toString,
             trainSample = 8)
           val wall = (System.nanoTime() - t0) / 1e9
           val rowsAfter = operators.VersionedIvf.corpusView(spark, dir.toString).count()

@@ -1174,112 +1174,13 @@ object Dedup {
     dropNearDuplicates(embs, pairs, idCol)
   }
 
-  // ----------------------------------------------- near-dup signature index
+  // ------------------------------------------------------ index health audits
 
-  /** Persisted near-dup SIGNATURE INDEX — the on-disk lifecycle face of
-    * [[nearDupManifest]], symmetric with the ANN index family
-    * ([[Similarity.writeIvfIndex]]/append/delete/stream). Layout:
-    *
-    *   `$path/params`      one-row parquet pinning (shingle_size, bands,
-    *                       rows_per_band, numer, denom): every gate/append
-    *                       reads the STORED shape, so mixing LSH parameters
-    *                       across writers is impossible by construction
-    *   `$path/manifest`    [[nearDupManifest]] rows partitioned by
-    *                       `ingest_batch` (batch build = -1; streaming gate
-    *                       batches land under their batch id)
-    *   `$path/tombstones`  doc ids whose signatures must be IGNORED
-    *                       (retention deletes — see
-    *                       [[deleteFromNearDupIndex]]); physically purged by
-    *                       [[compactNearDupIndex]]
-    *
-    * Scale shape: the manifest is ~1 KB/doc of band keys + hashed shingles —
-    * a 100 TB corpus condenses to a signature table a fraction of a percent
-    * of its size, each arriving batch is gated against it with manifest-scale
-    * IO (never corpus text), and the `ingest_batch` partitioning makes the
-    * streaming gate's "strictly earlier batches" read a partition-pruned
-    * scan.
-    */
-  def writeNearDupIndex(
-      docs: DataFrame, textCol: String, idCol: String, path: String,
-      shingleSize: Int = 3, numer: Int = 7, denom: Int = 10,
-      bands: Int = 16, rowsPerBand: Int = 4): Unit =
-    VersionedNearDup.write(docs, textCol, idCol, path,
-      shingleSize, numer, denom, bands, rowsPerBand)
-
-  private[graft] def readNearDupIndexParams(
-      spark: org.apache.spark.sql.SparkSession, path: String): (Int, Int, Int, Int, Int) = {
-    // layout-resolving: `path` may be the index root (current generation
-    // resolved via the GenerationLog) or a generation dir (internal callers)
-    val dir = GenerationLog.currentDir(spark, path).getOrElse(path)
-    // params are immutable per committed generation — memoized so a
-    // streaming gate doesn't pay a one-row Spark job per micro-batch; the
-    // raw-path fallback (no generation log) is NOT memoized (no
-    // immutability contract — r14 ADVICE)
-    IndexMeta.cachedParamsIfGeneration(spark, "neardup-params", dir) {
-      val r = spark.read.parquet(s"$dir/params").head
-      (r.getAs[Int]("shingle_size"), r.getAs[Int]("bands"),
-        r.getAs[Int]("rows_per_band"), r.getAs[Int]("numer"), r.getAs[Int]("denom"))
-    }
-  }
-
-  /** The LIVE manifest view of a persisted index: base ∪ committed gate
-    * segments, tombstoned docs removed (broadcast anti-join — delete sets
-    * are small relative to the corpus), and, for the streaming gate's
-    * replay safety, optionally restricted to stream segments STRICTLY
-    * BEFORE `beforeBatch` ([[VersionedNearDup.liveManifest]]).
-    */
-  def nearDupIndexManifest(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      beforeBatch: Option[Long] = None): DataFrame =
-    VersionedNearDup.liveManifest(spark, path, beforeBatch)
-
-  /** Retention delete ("right to be forgotten" for the dedup corpus): the
-    * given doc ids stop suppressing future arrivals IMMEDIATELY — every
-    * probe reads the manifest through the tombstone anti-join — without
-    * rewriting any manifest partition. The signature rows themselves remain
-    * on disk until [[compactNearDupIndex]] physically purges them; pipelines
-    * whose retention clock starts at the delete call run compact on their
-    * own cadence (it is a manifest-scale rewrite, not a corpus-scale one).
-    * Idempotent: re-deleting an id appends a duplicate tombstone row, which
-    * the probe-side `distinct()` collapses. Ids must be integral (the
-    * manifest's `doc` column is the corpus id; the cluster/keeper machinery
-    * downstream requires numeric ids anyway).
-    *
-    * Runs pending-compact recovery FIRST: a tombstone appended between a
-    * crashed compact and its eventual roll-forward would be deleted by
-    * that roll-forward's tombstone clear — silently un-forgetting the doc.
-    * Recovering here closes the window to concurrent writers, which the
-    * index (like the ANN index's delete path) does not support — run
-    * deletes and compaction from a single maintenance writer.
-    */
-  def deleteFromNearDupIndex(ids: DataFrame, idCol: String, path: String): Unit =
-    VersionedNearDup.delete(ids, idCol, path)
-
-  /** Physically purge tombstoned signatures and fold every gate segment
-    * into the base manifest — published as the NEXT generation with one
-    * marker create ([[VersionedNearDup.consolidate]]); the live view is
-    * invariant, only layout and the tombstone set change. The
-    * partition-count maintenance for a LONG-RUNNING gate, which otherwise
-    * accrues one segment per micro-batch forever. Run it when the gate
-    * stream has no uncommitted batches — pass its `checkpointDir` to
-    * enforce mechanically; concurrent maintenance writers are fenced by
-    * the index's [[MaintenanceLock]]. Refuses to compact an index whose
-    * every doc is tombstoned (rebuild with [[writeNearDupIndex]] instead).
-    * `consolidate` is kept for source compatibility: segment folding and
-    * the tombstone purge are one generation write on this commit model,
-    * so both values behave identically.
-    */
-  def compactNearDupIndex(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      consolidate: Boolean = false,
-      checkpointDir: Option[String] = None): Unit =
-    VersionedNearDup.consolidate(spark, path, checkpointDir)
-
-  /** Index health audit — the drift analog
-    * ([[graft.operators.Similarity.ivfAssignmentDrift]]) for the persisted
-    * near-dup signature index: per-band bucket-occupancy statistics from
-    * ONE scan of the live manifest view (tombstones applied, every
-    * ingest-batch partition). The gate's candidate generation is a
+  /** Bucket-occupancy audit of a persisted near-dup signature index
+    * ([[VersionedNearDup]]) — the drift analog
+    * ([[VersionedIvf.assignmentDrift]]) for the LSH family: per-band
+    * statistics from ONE scan of the live manifest view (tombstones
+    * applied, every segment). The gate's candidate generation is a
     * band-key equi-join, so its cost against an arrival batch is the
     * arrivals' bucket sizes and its self-join mass is Σ_bucket |bucket|²
     * per band — a low-entropy corpus (the r1 SimHash skew class: shared
@@ -1293,7 +1194,7 @@ object Dedup {
     */
   def nearDupIndexBucketStats(
       spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
-    nearDupIndexManifest(spark, path)
+    VersionedNearDup.liveManifest(spark, path)
       .select(posexplode(col("keys")).as(Seq("band", "key")))
       .groupBy(col("band"), col("key")).agg(count(lit(1)).as("b"))
       .groupBy(col("band")).agg(
@@ -1304,15 +1205,15 @@ object Dedup {
       .select(col("band").cast("bigint").as("band"), col("n_sigs"),
         col("n_buckets"), col("max_bucket"), col("sumsq"))
 
-  /** The substring-index twin: window-key multiplicity stats over the
-    * persisted manifest. Keys are unique within a batch by construction
-    * (the manifest stores distinct window content hashes per batch), so
-    * `max_key > 1` measures CROSS-BATCH recurrence — a hot window key
-    * re-recorded by many batches is pure scan weight the gate pays on
-    * every probe with no new information (the shape
-    * [[compactNearDupIndex]]-style consolidation exists to fold away).
-    * One manifest scan, all-integer output: (n_rows, n_keys, max_key,
-    * sumsq).
+  /** The substring-index twin ([[VersionedSubstring]]): window-key
+    * multiplicity stats over the persisted manifest. Keys are unique
+    * within a batch by construction (the manifest stores distinct window
+    * content hashes per batch), so `max_key > 1` measures CROSS-BATCH
+    * recurrence — a hot window key re-recorded by many batches is pure
+    * scan weight the gate pays on every probe with no new information (the
+    * shape [[VersionedNearDup.consolidate]]-style consolidation exists to
+    * fold away). One manifest scan, all-integer output: (n_rows, n_keys,
+    * max_key, sumsq).
     */
   def substringIndexKeyStats(
       spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
@@ -1322,115 +1223,4 @@ object Dedup {
         count(lit(1)).as("n_keys"),
         max(col("b")).as("max_key"),
         sum(col("b") * col("b")).cast("long").as("sumsq"))
-
-  /** The streaming DEDUP GATE — near-dup-at-ingest against a persisted,
-    * self-growing signature index (the shape a continuous crawl needs: the
-    * corpus never recomputes, each arriving micro-batch pays batch-sized
-    * work). Per batch ([[gateBatchAgainstNearDupIndex]] →
-    * [[VersionedNearDup.gateBatch]]):
-    *
-    *  1. drop arrivals with a near-dup among STRICTLY EARLIER batches'
-    *     signatures (segment-pruned manifest read through the tombstone
-    *     anti-join — a forgotten doc no longer suppresses);
-    *  2. self-dedup the survivors within the batch (LSH candidates + exact
-    *     verify + cluster keeper, the [[dropNearDuplicates]] policy);
-    *  3. land kept docs by static overwrite of the batch's own
-    *     `$keptDir/ingest_batch=<id>` dir and the batch's signature rows
-    *     as ONE marker-committed segment derived from the WRITTEN kept
-    *     partition — a replayed batch (written but not checkpoint-
-    *     committed) rewrites its own kept dir byte-identically and skips
-    *     the signature append via the marker.
-    *
-    * LSH parameters come from the index's pinned params. Batch ordering is
-    * the file source's (modification time): the kept-set is order-DEPENDENT
-    * by construction (first arrival wins), exactly like the sequential
-    * batch pipeline it replaces.
-    */
-  def streamDedupAgainstNearDupIndex(
-      stream: DataFrame, textCol: String, idCol: String,
-      indexPath: String, keptDir: String, checkpointDir: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    VersionedNearDup.streamGate(stream, textCol, idCol, indexPath, keptDir,
-      checkpointDir)
-
-  /** One gate batch of [[streamDedupAgainstNearDupIndex]], exposed for
-    * replay testing and receipts.
-    */
-  private[graft] def gateBatchAgainstNearDupIndex(
-      batch: DataFrame, textCol: String, idCol: String,
-      indexPath: String, keptDir: String, batchId: Long): Unit =
-    VersionedNearDup.gateBatch(batch, textCol, idCol, indexPath, keptDir, batchId)
-
-  // ------------------------------------------- substring window index + gate  // ------------------------------------------- substring window index + gate
-
-  /** Persisted SUBSTRING WINDOW INDEX — the on-disk lifecycle face of
-    * [[substringWindowManifest]], completing the at-ingest gate family
-    * (exact digests, near-dup signatures, semantic embeddings, and now
-    * duplicated substrings). Layout:
-    *
-    *   `$path/params`    one-row parquet pinning the window size `n` —
-    *                     every gate reads the STORED shape, so mixing
-    *                     window sizes across writers is impossible
-    *   `$path/manifest`  (h1, h2) per distinct window ever seen,
-    *                     partitioned by `ingest_batch` (batch build = -1;
-    *                     gate batches land under their batch id)
-    *
-    * 16 bytes per DISTINCT window: a boilerplate-heavy corpus (the case
-    * substring dedup exists for) collapses hard — the repeats that
-    * dominate the token count contribute one manifest row each.
-    *
-    * No tombstone face, deliberately: manifest rows are CONTENT keys, not
-    * doc rows — "forget doc X" has no per-doc rows to screen (the same
-    * window text typically also occurred in other docs), so retention
-    * deletes for substring state mean rebuilding the manifest from the
-    * retained corpus. Documented, not hidden.
-    */
-  def writeSubstringIndex(
-      docs: DataFrame, textCol: String, idCol: String, path: String,
-      n: Int = 8): Unit =
-    VersionedSubstring.write(docs, textCol, idCol, path, n)
-
-  private[graft] def readSubstringIndexN(
-      spark: org.apache.spark.sql.SparkSession, path: String): Int = {
-    val dir = GenerationLog.currentDir(spark, path).getOrElse(path)
-    IndexMeta.cachedParamsIfGeneration(spark, "substr-n", dir)(Integer.valueOf(
-      spark.read.parquet(s"$dir/params").head.getAs[Int]("n"))).intValue
-  }
-
-  /** The manifest view of a persisted substring index, optionally
-    * restricted to stream segments STRICTLY BEFORE `beforeBatch` (the base
-    * always qualifies) — the streaming gate's replay-safe read.
-    */
-  def substringIndexManifest(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      beforeBatch: Option[Long] = None): DataFrame =
-    VersionedSubstring.manifest(spark, path, beforeBatch)
-
-  /** Streaming substring dedup at ingest: each micro-batch is cut against
-    * every strictly-earlier batch's windows
-    * ([[substringSpansAgainstManifest]] — manifest-seen cuts ∪ within-batch
-    * keep-first), the cleaned text lands by static overwrite of the
-    * batch's own `$cleanDir/ingest_batch=<id>` dir, and the batch's NEW
-    * window keys join the index as one marker-committed segment
-    * ([[VersionedSubstring.gateBatch]]) — a replayed batch lands
-    * byte-identically on top of itself and skips the key append via the
-    * marker. Sequential batch semantics ≡ the one-shot pipeline over the
-    * concatenated corpus when ids order by arrival — the
-    * d_substr_gate_contract gate.
-    */
-  def streamSubstringGate(
-      stream: DataFrame, textCol: String, idCol: String,
-      indexPath: String, cleanDir: String, checkpointDir: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    VersionedSubstring.streamGate(stream, textCol, idCol, indexPath,
-      cleanDir, checkpointDir)
-
-  /** One gate batch of [[streamSubstringGate]], exposed for replay testing
-    * and receipts.
-    */
-  private[graft] def gateBatchAgainstSubstringIndex(
-      batch: DataFrame, textCol: String, idCol: String,
-      indexPath: String, cleanDir: String, batchId: Long): Unit =
-    VersionedSubstring.gateBatch(batch, textCol, idCol, indexPath, cleanDir,
-      batchId)
 }

@@ -345,132 +345,14 @@ object Similarity {
 
   // ------------------------------------------------------- persisted index
 
-  /** Persist an IVF index. FORMAT (round 12, unified lifecycle): the
-    * index lives on the [[GenerationLog]] commit model — ONE
-    * implementation per lifecycle verb, shared with the object-store-safe
-    * [[VersionedIvf]] face this delegates to (the r11 in-place/versioned
-    * twin families are retired; every verb now publishes by marker-file
-    * create, never by directory rename). Layout per generation:
-    * `centroids` (cluster → vector) and `corpus` (vec id, embedding,
-    * cluster) PARTITIONED BY (cluster, ingest_batch), so a probe reads
-    * only its probed clusters' files. Pre-r12 rename-swap layouts
-    * (`path/centroids` at the root) are a rebuild: write the index again
-    * from its base corpus.
-    */
-  def writeIvfIndex(
-      corpus: DataFrame, vecCol: String, idCol: String,
-      centroids: Seq[Seq[Float]], path: String): Unit =
-    VersionedIvf.write(corpus, vecCol, idCol, centroids, path)
-
-  /** Append a batch to an existing index WITHOUT retraining: vectors are
-    * assigned against the FROZEN stored centroids and land as one
-    * marker-committed segment of the current generation (atomic to
-    * concurrent probes) — the incremental-ingest shape.
-    */
-  def appendToIvfIndex(batch: DataFrame, vecCol: String, idCol: String, path: String): Unit =
-    VersionedIvf.append(batch, vecCol, idCol, path)
-
   private[graft] def assignToIndex(
       df: DataFrame, vecCol: String, idCol: String, centroids: Seq[Seq[Float]]): DataFrame =
     df.select(col(idCol).as("vec_id"), col(vecCol).as("embedding"),
       nearestCentroid(col(vecCol), centroids).as("cluster"))
 
-  /** Delete vectors from a persisted index — the retention/
-    * right-to-be-forgotten face of the lifecycle (build → append → delete
-    * → probe). Tombstone-only ([[VersionedIvf.delete]]): the ids stop
-    * retrieving immediately via the probe-side anti-join, and the physical
-    * purge happens at the next [[consolidateIvfIndex]]/[[retrainIvfIndex]]
-    * (which write a tombstone-free generation). Consequences: re-adding a
-    * deleted id requires a consolidation first (tombstones screen stream
-    * ingest AND probes until then), and tombstones accumulate until one
-    * runs. Returns the number of live rows newly suppressed.
-    */
-  def deleteFromIvfIndex(
-      spark: SparkSession, path: String, ids: DataFrame, idCol: String): Long =
-    VersionedIvf.delete(spark, path, ids, idCol)
-
-  /** Fold every ingest segment into the base and physically purge
-    * tombstones — as the NEXT generation ([[VersionedIvf.consolidate]]):
-    * partition-count maintenance for a long-running ingest stream or gate
-    * plus the tombstone purge, one verb. Correctness is unchanged for
-    * every consumer (probes read live membership regardless; the gates'
-    * strictly-earlier reads ride the segment markers). Run it when the
-    * ingest stream has no uncommitted batches — pass the stream's
-    * `checkpointDir` to enforce that mechanically
-    * ([[graft.streaming.CommitLog.requireAllCommitted]]); concurrent
-    * maintenance writers are fenced by the index's [[MaintenanceLock]].
-    */
-  def consolidateIvfIndex(
-      spark: SparkSession, path: String,
-      checkpointDir: Option[String] = None): Unit =
-    VersionedIvf.consolidate(spark, path, checkpointDir)
-
-  /** Purge the ANN index's delete tombstones so deleted ids may re-enter
-    * through any ingest path. On the generation-log model a purge IS a
-    * consolidation ([[VersionedIvf.consolidate]] applies tombstones to the
-    * next generation and drops them) — kept as its own verb because the
-    * lifecycle intent ("stop paying the anti-join; allow re-adds") is
-    * distinct from partition maintenance, and because the checkpoint guard
-    * contract is the same: pass the ingest stream's `checkpointDir` so a
-    * written-but-uncommitted batch cannot replay across the purge.
-    */
-  def purgeIvfTombstones(
-      spark: SparkSession, path: String,
-      checkpointDir: Option[String] = None): Unit =
-    VersionedIvf.consolidate(spark, path, checkpointDir)
-
-  /** Retrain the coarse quantizer for a drifted corpus — the third verb
-    * of the index lifecycle (build → append/ingest → RETRAIN). Every
-    * append and gate assigns against FROZEN centroids; a corpus that
-    * drifts away from them degrades recall-at-fixed-nprobe with no
-    * recourse short of a manual rebuild (the FAISS posture: coarse
-    * quantizers retrain on the operator's cadence, not per insert). This
-    * retrains on the STORED vectors (sampled via `trainSample`), reassigns
-    * every live row, and publishes the result as the NEXT generation with
-    * one marker create ([[VersionedIvf.retrain]]) — readers never see new
-    * centroids with old assignments. Tombstones are applied (the new
-    * generation starts clean) and segments fold into the base; run it only
-    * when the ingest stream is quiescent (pass `checkpointDir` to
-    * enforce). Correctness is invariant by the standing argument —
-    * exhaustive probe ≡ brute force for ANY centroid set. `k` defaults to
-    * the stored centroid count.
-    */
-  def retrainIvfIndex(
-      spark: SparkSession, path: String,
-      k: Option[Int] = None, iterations: Int = 3, trainSample: Int = 1,
-      checkpointDir: Option[String] = None): Unit =
-    VersionedIvf.retrain(spark, path, k, iterations, trainSample, checkpointDir)
-
-  /** The retrain TRIGGER metric + an index integrity invariant, one narrow
-    * pass over the corpus (k native cosines per row against broadcast
-    * centroid literals; the only shuffle is the #batches-row aggregate).
-    * Per `ingest_batch`:
-    *
-    *  - `align_ppm_sum / n` — mean cosine of each stored vector to its
-    *    ASSIGNED centroid (ppm-integerized). Every write path assigns the
-    *    argmax at write time, so assignments are never "wrong" — what
-    *    drifts is FIT: batches ingested against centroids trained on an
-    *    older population score systematically lower than the base build.
-    *    Recent batches' alignment falling materially below `-1`'s is the
-    *    "run [[retrainIvfIndex]] now" signal, priced at one scan instead
-    *    of a recall study (and retrain visibly restores it — spec-pinned);
-    *  - `misassigned` — rows whose CURRENT nearest centroid beats their
-    *    assigned one. Zero by construction on any healthy index (every
-    *    path assigns the argmax; retrain reassigns atomically with the
-    *    centroid swap), so ANY nonzero value is structural corruption —
-    *    e.g. a cluster dir renamed wrong by a buggy swap/consolidation —
-    *    which is exactly what the hash-gated `s_knn_drift_contract`
-    *    (drift scan over the full build → append → retrain fixture,
-    *    provably empty) would catch.
-    *
-    * All outputs integer, so the frame hash-replays across engines.
-    */
-  def ivfAssignmentDrift(spark: SparkSession, path: String): DataFrame =
-    VersionedIvf.assignmentDrift(spark, path)
-
-  /** The drift/integrity computation shared by the in-place and versioned
-    * ([[VersionedIvf.assignmentDrift]]) health faces: per-`ingest_batch`
-    * mean alignment to the assigned centroid (ppm) + misassigned count.
+  /** The drift/integrity computation behind
+    * [[VersionedIvf.assignmentDrift]]: per-`ingest_batch` mean alignment to
+    * the assigned centroid (ppm) + misassigned count.
     */
   private[operators] def assignmentDriftOf(
       corpus: DataFrame, centroids: Seq[Seq[Float]]): DataFrame = {
@@ -490,33 +372,9 @@ object Similarity {
         .as("misassigned"))
   }
 
-  /** Streaming face of [[appendToIvfIndex]]: a stream of embeddings (e.g. a
-    * parquet landing dir of daily arrivals) is assigned per micro-batch
-    * against the stored centroids and lands as one marker-committed
-    * segment per batch ([[VersionedIvf.streamAppend]]) — continuous ingest
-    * with no retrain, no rewrite of standing data, exactly-once under
-    * replay (the checkpoint batch id rides in the segment marker's name,
-    * so a replay is detected by listing alone and skipped).
-    */
-  def streamAppendToIvfIndex(
-      stream: DataFrame, vecCol: String, idCol: String,
-      path: String, checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    VersionedIvf.streamAppend(stream, vecCol, idCol, path, checkpointDir)
-
-  /** One ingest batch of [[streamAppendToIvfIndex]], exposed for replay
-    * testing and receipts. Replay-idempotent (marker-detected skip) and
-    * tombstone-screened: a batch written but not checkpoint-committed,
-    * replayed after a [[deleteFromIvfIndex]], cannot resurrect the deleted
-    * vectors.
-    */
-  private[graft] def ingestBatchToIvfIndex(
-      batch: DataFrame, vecCol: String, idCol: String,
-      path: String, batchId: Long): Unit =
-    VersionedIvf.ingestBatch(batch, vecCol, idCol, path, batchId)
-
   /** Streaming SEMANTIC dedup gate — SemDeDup at ingest over a persisted
     * IVF index, the embedding twin of
-    * [[Dedup.streamDedupAgainstNearDupIndex]]. Per micro-batch
+    * [[VersionedNearDup.streamGate]]. Per micro-batch
     * ([[semanticGateBatch]]):
     *
     *  1. drop arrivals with ANY cosine ≥ `threshold` neighbor among
@@ -526,17 +384,18 @@ object Similarity {
     *  2. semantic-self-dedup the survivors within the batch
     *     ([[Dedup.semanticKeepers]], hyperplane-LSH candidates + exact
     *     cosine verify + cluster keeper);
-    *  3. land kept rows under `$keptDir/ingest_batch=<id>` and append them
-    *     to the index via [[ingestBatchToIvfIndex]] — both dynamic
-    *     partition overwrites, so a replayed batch replaces its own output
-    *     and (because step 1 never reads batches ≥ its own id) cannot be
-    *     suppressed by its first attempt.
+    *  3. land kept rows by static overwrite of `$keptDir/ingest_batch=<id>`
+    *     and append them to the index via [[VersionedIvf.ingestBatch]] as a
+    *     marker-committed segment, so a replayed batch replaces its own
+    *     output, skips the append by marker name, and (because step 1
+    *     never reads batches ≥ its own id) cannot be suppressed by its
+    *     first attempt.
     *
     * Suppression recall is nprobe-bounded by design (the production
     * SemDeDup trade: at threshold ≥ 0.9 near-duplicates are near-parallel
     * and land in the same coarse cell, so small nprobe catches them;
     * nprobe = #centroids makes the gate exact). Centroids are FROZEN at
-    * stream start — the appendToIvfIndex contract. Ids must be globally
+    * stream start — the [[VersionedIvf.append]] contract. Ids must be globally
     * unique across index and arrivals.
     */
   def streamSemanticGate(
@@ -550,7 +409,7 @@ object Similarity {
     // that the index is still on the generation these centroids came
     // from — a mid-stream consolidate keeps them valid, a retrain does not
     val frozenGen = GenerationLog.currentGeneration(spark, indexPath).get
-    val centroids = readIvfCentroids(spark, indexPath)
+    val centroids = VersionedIvf.readCentroids(spark, indexPath)
     stream.writeStream
       .option("checkpointLocation", checkpointDir)
       .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
@@ -584,7 +443,7 @@ object Similarity {
       val dir = GenerationLog.generationDir(indexPath, gen)
       val centroids =
         if (frozenGen.contains(gen)) frozenCentroids
-        else graft.Trace.t("semgate.centroids")(readIvfCentroids(spark, dir))
+        else graft.Trace.t("semgate.centroids")(VersionedIvf.readCentroids(spark, dir))
       // strictly-earlier live membership: base ∪ committed segments with
       // stream ids < this batch, minus tombstones — a replay cannot be
       // suppressed by its first attempt's own vectors, and a forgotten
@@ -629,36 +488,6 @@ object Similarity {
           // still cannot assign stale clusters into the new generation
           frozenCentroids = Some((gen, centroids))))
     }
-
-  /** Read the coarse centroids of an index. Layout-resolving: `path` may
-    * be the index ROOT (the current committed generation is resolved via
-    * the [[GenerationLog]]) or a generation dir itself (the internal
-    * callers' shape).
-    */
-  def readIvfCentroids(spark: SparkSession, path: String): Seq[Seq[Float]] = {
-    val dir = GenerationLog.currentDir(spark, path).getOrElse(path)
-    def load = spark.read.parquet(s"$dir/centroids").orderBy(col("cluster"))
-      .select(col("centroid")).collect().map(_.getSeq[Float](0).toSeq).toSeq
-    // centroids are immutable per committed generation (every retrain/
-    // consolidate stages a NEW `_generations/<N>` dir) — memoized so gate
-    // batches and repeated probes don't pay a collect job per call. Paths
-    // outside the generation log (no immutability contract) read directly,
-    // and the memo is keyed on the commit marker's identity (r14 ADVICE:
-    // a wiped-and-rebuilt root reuses generation numbers).
-    IndexMeta.cachedParamsIfGeneration(spark, "ivf-centroids", dir)(load)
-  }
-
-  /** Probe a persisted index: same shape as [[ivfTopK]], but the corpus
-    * side is the stored cluster-partitioned live membership — no
-    * re-assignment, and only the probed clusters' files are read. Pure
-    * read ([[VersionedIvf.topKFromIndex]]): never repairs, never writes.
-    */
-  def ivfTopKFromIndex(
-      spark: SparkSession, path: String, queries: DataFrame,
-      vecCol: String, idCol: String, k: Int, nprobe: Int,
-      broadcastQueries: Boolean = true): DataFrame =
-    VersionedIvf.topKFromIndex(spark, path, queries, vecCol, idCol, k,
-      nprobe, broadcastQueries)
 
   /** Zero-violation recall contract for an ANN path (VERDICT r4 #2): the
     * approximate result must recover at least `floorX1000`/1000 of the brute-
@@ -985,103 +814,6 @@ object Similarity {
       corpus, vecCol, idCol, k, rerank)
   }
 
-  /** Persist an IVF-PQ index: coarse centroids + residual codebooks +
-    * cluster-PARTITIONED code rows — (1 + m) small ints per vector, the
-    * whole point of PQ at rest. The float originals are NOT duplicated into
-    * the index: they stay in the base corpus table, which the probe touches
-    * only for the short re-rank candidate list (an id equi-join). Same
-    * round-12 unified lifecycle as the IVF family: one implementation per
-    * verb, on the [[GenerationLog]] commit model ([[VersionedIvfPq]]).
-    */
-  def writeIvfPqIndex(
-      corpus: DataFrame, vecCol: String, idCol: String,
-      centroids: Seq[Seq[Float]], books: Seq[Seq[Seq[Float]]],
-      path: String): Unit =
-    VersionedIvfPq.write(corpus, vecCol, idCol, centroids, books, path)
-
-  /** Append a batch against the FROZEN stored quantizers (no retrain) —
-    * a marker-committed code segment, same incremental-ingest contract as
-    * [[appendToIvfIndex]].
-    */
-  def appendToIvfPqIndex(
-      batch: DataFrame, vecCol: String, idCol: String, path: String): Unit =
-    VersionedIvfPq.append(batch, vecCol, idCol, path)
-
-  /** Delete vectors from a persisted IVF-PQ index — tombstone-only, the
-    * [[deleteFromIvfIndex]] contract on the codes table: suppression is
-    * immediate (probe anti-join), the physical purge lands with the next
-    * [[consolidateIvfPqIndex]]/[[retrainIvfPqIndex]] generation. Returns
-    * the live code rows newly suppressed.
-    */
-  def deleteFromIvfPqIndex(
-      spark: SparkSession, path: String, ids: DataFrame, idCol: String): Long =
-    VersionedIvfPq.delete(spark, path, ids, idCol)
-
-  /** Fold code segments and physically purge tombstones as the next
-    * generation — the IVF-PQ face of [[consolidateIvfIndex]] (quantizers
-    * and codes unchanged; the codes ARE the membership).
-    */
-  def consolidateIvfPqIndex(
-      spark: SparkSession, path: String,
-      checkpointDir: Option[String] = None): Unit =
-    VersionedIvfPq.consolidate(spark, path, checkpointDir)
-
-  /** Retrain BOTH quantizer levels of a persisted IVF-PQ index. The index
-    * stores (1 + m) small ints per vector and NO floats, so a retrain
-    * needs the float originals: pass the SAME base corpus table the probe
-    * path already re-ranks against ([[ivfPqTopKFromIndex]]'s `corpus`
-    * argument). Corpus rows not live in the codes table are ignored
-    * (membership is the codes table — deletes stay deleted); a LIVE stored
-    * id missing from the corpus fails fast, because re-encoding would
-    * silently drop it. New coarse centroids, new residual codebooks, full
-    * re-encode — published as the next generation with one marker create
-    * ([[VersionedIvfPq.retrain]]). Correctness is invariant by the
-    * standing argument — exact probe (nprobe = k, rerank ≥ corpus) ≡ brute
-    * for ANY quantizer pair. `k`/`m`/`ksub` default to the stored shapes.
-    */
-  def retrainIvfPqIndex(
-      spark: SparkSession, path: String, corpus: DataFrame,
-      vecCol: String, idCol: String,
-      k: Option[Int] = None, m: Option[Int] = None, ksub: Option[Int] = None,
-      iterations: Int = 3, trainSample: Int = 1,
-      checkpointDir: Option[String] = None): Unit =
-    VersionedIvfPq.retrain(spark, path, corpus, vecCol, idCol,
-      k, m, ksub, iterations, trainSample, checkpointDir)
-
-  /** Read the residual codebooks. Layout-resolving like
-    * [[readIvfCentroids]]: `path` may be the index root or a generation
-    * dir.
-    */
-  def readIvfPqBooks(spark: SparkSession, path: String): Seq[Seq[Seq[Float]]] = {
-    val dir = GenerationLog.currentDir(spark, path).getOrElse(path)
-    def load = spark.read.parquet(s"$dir/books")
-      .orderBy(col("subspace"), col("code"))
-      .collect()
-      .groupBy(_.getInt(0)).toSeq.sortBy(_._1)
-      .map(_._2.sortBy(_.getInt(1)).map(_.getSeq[Float](2).toSeq).toSeq)
-    // immutable per committed generation — memoized like readIvfCentroids
-    IndexMeta.cachedParamsIfGeneration(spark, "ivfpq-books", dir)(load)
-  }
-
-  /** Probe a persisted IVF-PQ index: codes come from the stored
-    * cluster-partitioned live membership (only probed clusters' files are
-    * read — partition pruning on the probe join's cluster keys),
-    * quantizers from their stored frames, float originals from the
-    * caller's `corpus` for the re-rank join only.
-    */
-  def ivfPqTopKFromIndex(
-      spark: SparkSession, path: String, queries: DataFrame, corpus: DataFrame,
-      vecCol: String, idCol: String, k: Int,
-      nprobe: Int = 2, rerank: Int = 4): DataFrame =
-    VersionedIvfPq.topKFromIndex(spark, path, queries, corpus,
-      vecCol, idCol, k, nprobe, rerank)
-
-  /** Zero-violation contract for the quantize→dequantize round trip: every
-    * element must reconstruct within half a bucket width (+1 ulp slack for
-    * the float→double path). The violations frame is provably empty and
-    * the gate hash-checks the emptiness — same contract shape as the CMS
-    * and quantile-sketch bounds.
-    */
   /** Corrupt-embedding screen: ids of vectors whose worst per-dimension
     * z-score (against the corpus's own per-dimension mean/σ) exceeds
     * `zThreshold` — the cheap sanity gate that catches scaling bugs,
@@ -1134,6 +866,12 @@ object Similarity {
     fused.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
   }
 
+  /** Zero-violation contract for the quantize→dequantize round trip: every
+    * element must reconstruct within half a bucket width (+1 ulp slack for
+    * the float→double path). The violations frame is provably empty and
+    * the gate hash-checks the emptiness — same contract shape as the CMS
+    * and quantile-sketch bounds.
+    */
   def quantizationBoundViolations(
       embs: DataFrame, vecCol: String, idCol: String): DataFrame = {
     val dq = dequantizeInt8(

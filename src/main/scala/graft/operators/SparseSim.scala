@@ -225,7 +225,7 @@ object SparseSim {
     require(numBuckets >= 1)
     val spark = corpus.sparkSession
     MaintenanceLock.withLock(spark, path) {
-      // rebuild = fresh start (the writeIvfIndex/writeNearDupIndex
+      // rebuild = fresh start (the VersionedIvf.write/VersionedNearDup.write
       // contract): the previous incarnation's tombstones must not screen
       // the new build's docs
       val tombDir = new org.apache.hadoop.fs.Path(s"$path/tombstones")
@@ -474,7 +474,7 @@ object SparseSim {
             .select(col("term"), col("doc_id"), col("tf"), col("dl"), col("tbucket")))
           .reduce(_.unionByName(_))))
       // an all-tombstoned merge would commit an empty partitioned postings
-      // table (unreadable) — refuse, like compactNearDupIndex: rebuild
+      // table (unreadable) — refuse, like VersionedNearDup.consolidate: rebuild
       if (post.isEmpty) throw new IllegalStateException(
         s"consolidateBm25Index($path): every posting is tombstoned; an " +
           "empty partitioned postings table is unreadable — rebuild with " +
@@ -534,7 +534,7 @@ object SparseSim {
   }
 
   /** The BM25 index's health/staleness audit — the third of the trilogy
-    * ([[Similarity.ivfAssignmentDrift]] for the ANN index,
+    * ([[VersionedIvf.assignmentDrift]] for the ANN index,
     * [[Dedup.nearDupIndexBucketStats]] for the LSH families): one row of
     * integer stats from segment metadata + posting counts, pricing the
     * "consolidation overdue" check at a listing plus count-only scans

@@ -3,11 +3,10 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Generation log: the OBJECT-STORE-SAFE commit spine for the versioned
-  * index families. The rename-swap protocols (`deleteFromIndexTable`,
-  * `retrainIvfIndex`, `compactNearDupIndex`) publish by atomic directory
-  * rename — correct on HDFS/POSIX, non-atomic (copy + delete) on S3-like
-  * object stores. This log publishes by POINTER instead, the
+/** Generation log: the OBJECT-STORE-SAFE commit spine for the persisted
+  * index families. A directory rename is atomic on HDFS/POSIX but a
+  * non-atomic copy + delete on S3-like object stores, so this log
+  * publishes by POINTER instead, the
   * [[graft.load.Warehouse.commitSnapshot]] / BM25-segment-log pattern
   * generalized to a whole index:
   *
@@ -22,8 +21,8 @@ import org.apache.spark.sql.functions._
   * uncommitted staging tree, so a crash anywhere before the marker is
   * invisible (old generation keeps serving) and a crash after it is
   * already durable. Superseded generations stay readable for in-flight
-  * queries until [[vacuumGenerations]] — snapshot isolation, where the
-  * in-place swap gives readers a brief fail-loudly window instead.
+  * queries until [[vacuumGenerations]] — snapshot isolation, where a
+  * rename swap would give readers a brief fail-loudly window instead.
   *
   * The price of rename-freedom is write amplification: a generation swap
   * rewrites the full payload rather than renaming the affected partitions
@@ -255,11 +254,6 @@ private[operators] object SegmentLog {
     tombNewest >= markerOldest
   }
 
-  /** Committed segment dirs that exist, optionally restricted to stream
-    * segments STRICTLY BEFORE `beforeBatch` (non-stream segments — batch
-    * appends and the build base — always qualify, mirroring the in-place
-    * `ingest_batch < b` read where `-1` always qualifies).
-    */
   /** Committed (segId, streamBatchId?) pairs whose data dir exists — the
     * marker-only commits (all-screened/all-suppressed batches) filtered
     * out with ONE listing of the segments dir instead of one exists() per
@@ -282,6 +276,10 @@ private[operators] object SegmentLog {
     marked.filter(s => present.contains(s._1))
   }
 
+  /** Committed segment dirs that exist, optionally restricted to stream
+    * segments STRICTLY BEFORE `beforeBatch` (non-stream segments — batch
+    * appends and the build base — always qualify).
+    */
   def committedDirs(
       spark: SparkSession, genDir: String,
       beforeBatch: Option[Long] = None): Seq[String] =
@@ -332,28 +330,28 @@ private[operators] object SegmentLog {
   }
 }
 
-/** The IVF ANN index on the generation-log commit model — every verb of
-  * the in-place lifecycle ([[Similarity.writeIvfIndex]] family: build →
-  * append/stream-ingest → delete → consolidate → retrain → probe), with
+/** The persisted IVF ANN index on the generation-log commit model: build
+  * → append/stream-ingest → delete → consolidate → retrain → probe, with
   * ZERO index-protocol directory renames, so the whole lifecycle runs on
-  * S3-like object stores where the in-place family's staged-swap renames
-  * are non-atomic ([[VersionedIndexSpec]] drives it end-to-end on a
-  * filesystem that refuses directory renames). Semantics differences from
-  * the in-place family, all consequences of immutable generations:
+  * S3-like object stores ([[VersionedIndexSpec]] drives it end-to-end on a
+  * filesystem that refuses directory renames). Layout per generation:
+  * `centroids` (cluster → vector) and `corpus` (vec id, embedding,
+  * cluster) PARTITIONED BY (cluster, ingest_batch), so a probe reads only
+  * its probed clusters' files. Lifecycle semantics, all consequences of
+  * immutable generations:
   *
   *  - deletes are tombstone-only (the BM25/near-dup model): the id stops
   *    retrieving immediately via the probe-side anti-join; the physical
   *    purge happens at the next [[consolidate]]/[[retrain]], which write
   *    a tombstone-free generation. Re-adding a deleted id requires a
-  *    consolidation first (in-place: a tombstone purge);
+  *    consolidation first;
   *  - appends and stream batches land as marker-committed SEGMENTS
   *    ([[SegmentLog]]: `segments/ingest_batch=<segId>` +
-  *    `_batch_commits/<segId>`) inside
-  *    the current generation — pure dir-create + file-create, atomic
-  *    everywhere, and snapshot-isolated (a probe never sees a torn
-  *    batch, which the in-place append cannot promise mid-job). A stream
-  *    batch's marker records its checkpoint batch id (`<seg>.s<batch>`),
-  *    so a replay after a crash-before-checkpoint-commit is detected by
+  *    `_batch_commits/<segId>`) inside the current generation — pure
+  *    dir-create + file-create, atomic everywhere, and snapshot-isolated
+  *    (a probe never sees a torn batch). A stream batch's marker records
+  *    its checkpoint batch id (`<seg>.s<batch>`), so a replay after a
+  *    crash-before-checkpoint-commit is detected by
   *    LISTING alone and skipped — exactly-once without dynamic partition
   *    overwrite, whose job commit renames staging directories and is
   *    therefore banned here;
@@ -432,10 +430,29 @@ object VersionedIvf {
   /** The live corpus of the CURRENT generation, as a reader view —
     * (vec_id, embedding, cluster, ingest_batch), where `ingest_batch` is
     * the segment id (-1 = base build/consolidated). The audit/receipt
-    * face the in-place family's raw `$path/corpus` read used to serve.
+    * face of the stored membership.
     */
   def corpusView(spark: SparkSession, root: String): DataFrame =
     liveCorpus(spark, GenerationLog.requireCurrentDir(spark, root))
+
+  /** Read the coarse centroids of an index (IVF or IVF-PQ: same
+    * `centroids` table). Layout-resolving: `path` may be the index ROOT
+    * (the current committed generation is resolved via the
+    * [[GenerationLog]]) or a generation dir itself (the internal callers'
+    * shape).
+    */
+  def readCentroids(spark: SparkSession, path: String): Seq[Seq[Float]] = {
+    val dir = GenerationLog.currentDir(spark, path).getOrElse(path)
+    def load = spark.read.parquet(s"$dir/centroids").orderBy(col("cluster"))
+      .select(col("centroid")).collect().map(_.getSeq[Float](0).toSeq).toSeq
+    // centroids are immutable per committed generation (every retrain/
+    // consolidate stages a NEW `_generations/<N>` dir) — memoized so gate
+    // batches and repeated probes don't pay a collect job per call. Paths
+    // outside the generation log (no immutability contract) read directly,
+    // and the memo is keyed on the commit marker's identity (r14 ADVICE:
+    // a wiped-and-rebuilt root reuses generation numbers).
+    IndexMeta.cachedParamsIfGeneration(spark, "ivf-centroids", dir)(load)
+  }
 
   private def writeGeneration(
       spark: SparkSession, genDir: String,
@@ -468,15 +485,17 @@ object VersionedIvf {
     }
   }
 
-  /** Probe the current generation — [[Similarity.ivfTopKFromIndex]] shape
-    * over live membership. Read-only: never repairs, never writes.
+  /** Probe the current generation: same shape as [[Similarity.ivfTopK]],
+    * but the corpus side is the stored cluster-partitioned live membership
+    * — no re-assignment, and only the probed clusters' files are read.
+    * Read-only: never repairs, never writes.
     */
   def topKFromIndex(
       spark: SparkSession, root: String, queries: DataFrame,
       vecCol: String, idCol: String, k: Int, nprobe: Int,
       broadcastQueries: Boolean = true): DataFrame = {
     val dir = GenerationLog.requireCurrentDir(spark, root)
-    val centroids = Similarity.readIvfCentroids(spark, dir)
+    val centroids = readCentroids(spark, dir)
     val live = liveCorpus(spark, dir)
     // static partition filter on the probed clusters: DPP cannot reach
     // through the base ∪ segments Union, so without it an nprobe-pruned
@@ -496,13 +515,15 @@ object VersionedIvf {
       queries, vecCol, idCol, k, centroids, nprobe, broadcastQueries)
   }
 
-  /** Retention delete: tombstone append only (one small file). The ids
-    * stop retrieving immediately (probe anti-join) and are physically
-    * purged by the next [[consolidate]]/[[retrain]]. Idempotent. Returns
-    * the number of LIVE rows the tombstones newly suppress (the in-place
-    * family's "rows actually deleted" face); the id set is pinned once so
-    * the count and the tombstone write cannot diverge under a
-    * non-deterministic `ids` plan.
+  /** Retention delete (the right-to-be-forgotten face of the lifecycle):
+    * tombstone append only (one small file). The ids stop retrieving
+    * immediately (probe anti-join) and are physically purged by the next
+    * [[consolidate]]/[[retrain]]; until one runs, tombstones accumulate and
+    * screen stream ingest AND probes, so re-adding a deleted id needs a
+    * consolidation first. Idempotent. Returns the number of LIVE rows the
+    * tombstones newly suppress; the id set is pinned once so the count and
+    * the tombstone write cannot diverge under a non-deterministic `ids`
+    * plan.
     *
     * `checkpointDir`: pass the ingest/gate stream's checkpoint dir when
     * deleting from an index a stream is actively gating against — the
@@ -530,8 +551,10 @@ object VersionedIvf {
     }
   }
 
-  /** Batch append against the current generation's FROZEN centroids — a
-    * marker-committed segment, so concurrent probes see it atomically.
+  /** Batch append WITHOUT retraining: vectors are assigned against the
+    * current generation's FROZEN centroids and land as one
+    * marker-committed segment, so concurrent probes see it atomically —
+    * the incremental-ingest shape.
     */
   def append(batch: DataFrame, vecCol: String, idCol: String, root: String): Unit = {
     val spark = batch.sparkSession
@@ -540,13 +563,16 @@ object VersionedIvf {
       val segId = SegmentLog.nextSegId(spark, dir)
       writeSegment(spark, dir, segId,
         Similarity.assignToIndex(batch, vecCol, idCol,
-          Similarity.readIvfCentroids(spark, dir)),
+          readCentroids(spark, dir)),
         segId.toString)
     }
   }
 
-  /** One stream micro-batch: skip if a committed segment already records
-    * this checkpoint batch id (replay), else screen tombstones, assign
+  /** One stream micro-batch of [[streamAppend]], exposed for replay
+    * testing and receipts: skip if a committed segment already records
+    * this checkpoint batch id (replay), else screen tombstones (a batch
+    * written but not checkpoint-committed, replayed after a [[delete]],
+    * cannot resurrect the deleted vectors), assign
     * against the CURRENT generation's centroids (re-resolved per batch, so
     * ingest follows a mid-stream consolidation/retrain onto the new
     * generation instead of mis-assigning against stale centroids), write
@@ -573,7 +599,7 @@ object VersionedIvf {
     * are one atomic unit) instead of assigning stale clusters into the new
     * generation and violating the misassigned==0 drift invariant.
     */
-  private[operators] def ingestBatch(
+  private[graft] def ingestBatch(
       batch: DataFrame, vecCol: String, idCol: String,
       root: String, batchId: Long,
       frozenCentroids: Option[(Long, Seq[Seq[Float]])] = None): Unit =
@@ -585,7 +611,7 @@ object VersionedIvf {
     val dir = GenerationLog.generationDir(root, gen)
     val centroids = frozenCentroids match {
       case Some((g, c)) if g == gen => c
-      case _ => Similarity.readIvfCentroids(spark, dir)
+      case _ => readCentroids(spark, dir)
     }
     val fs = fsOf(spark, dir)
     val tombDir = new org.apache.hadoop.fs.Path(s"$dir/tombstones")
@@ -632,7 +658,13 @@ object VersionedIvf {
     writeSegment(spark, dir, segId, screened, s"$segId.s$batchId")
   }
 
-  /** Continuous ingest: one marker-committed segment per micro-batch. */
+  /** Continuous ingest: a stream of embeddings (e.g. a parquet landing
+    * dir of daily arrivals) is assigned per micro-batch against the stored
+    * centroids and lands as one marker-committed segment per batch — no
+    * retrain, no rewrite of standing data, exactly-once under replay (the
+    * checkpoint batch id rides in the segment marker's name, so a replay
+    * is detected by listing alone and skipped).
+    */
   def streamAppend(
       stream: DataFrame, vecCol: String, idCol: String,
       root: String, checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
@@ -644,11 +676,18 @@ object VersionedIvf {
         ingestBatch(batch.toDF(), vecCol, idCol, root, batchId))
       .start()
 
-  /** Fold segments into the base and apply tombstones — as the NEXT
-    * generation (assignments and centroids unchanged). The versioned
-    * analog of [[Similarity.consolidateIvfIndex]] + [[Similarity.purgeIvfTombstones]]
-    * in one verb. Refuses to write an empty generation (an all-tombstoned
-    * index is a rebuild, not a consolidation).
+  /** Fold every segment into the base and physically purge tombstones —
+    * as the NEXT generation (assignments and centroids unchanged). One
+    * verb for partition-count maintenance of a long-running ingest stream
+    * or gate and for the tombstone purge that lets deleted ids re-enter
+    * through any ingest path. Correctness is unchanged for every consumer
+    * (probes read live membership regardless; the gates' strictly-earlier
+    * reads ride the segment markers). Run it when the ingest stream has
+    * no uncommitted batches — pass the stream's `checkpointDir` to enforce
+    * that mechanically ([[graft.streaming.CommitLog.requireAllCommitted]]);
+    * concurrent maintenance writers are fenced by the index's
+    * [[MaintenanceLock]]. Refuses to write an empty generation (an
+    * all-tombstoned index is a rebuild, not a consolidation).
     */
   def consolidate(
       spark: SparkSession, root: String,
@@ -664,15 +703,24 @@ object VersionedIvf {
         s"consolidating $root would write an empty generation (every doc " +
           "tombstoned) — rebuild with VersionedIvf.write instead")
       val (gen, next) = GenerationLog.stageNext(spark, root)
-      writeGeneration(spark, next, Similarity.readIvfCentroids(spark, dir), live)
+      writeGeneration(spark, next, readCentroids(spark, dir), live)
       GenerationLog.commit(spark, root, gen)
     }
   }
 
-  /** Retrain the coarse quantizer over live membership and publish the
-    * re-assigned index as the next generation — the versioned
-    * [[Similarity.retrainIvfIndex]]. Tombstones are applied (the new
-    * generation starts clean); segments fold into the base.
+  /** Retrain the coarse quantizer for a drifted corpus. Every append and
+    * gate assigns against FROZEN centroids; a corpus that drifts away from
+    * them degrades recall-at-fixed-nprobe with no recourse short of a
+    * rebuild (the FAISS posture: coarse quantizers retrain on the
+    * operator's cadence, not per insert). This retrains on the STORED live
+    * vectors (sampled via `trainSample`), reassigns every live row, and
+    * publishes the result as the NEXT generation with one marker create —
+    * readers never see new centroids with old assignments. Tombstones are
+    * applied (the new generation starts clean) and segments fold into the
+    * base; run it only when the ingest stream is quiescent (pass
+    * `checkpointDir` to enforce). Correctness is invariant by the standing
+    * argument — exhaustive probe ≡ brute force for ANY centroid set. `k`
+    * defaults to the stored centroid count.
     */
   def retrain(
       spark: SparkSession, root: String,
@@ -688,7 +736,7 @@ object VersionedIvf {
         if (live.isEmpty) throw new IllegalStateException(
           s"retraining $root over an all-tombstoned corpus — rebuild with " +
             "VersionedIvf.write instead")
-        val kk = k.getOrElse(Similarity.readIvfCentroids(spark, dir).size)
+        val kk = k.getOrElse(readCentroids(spark, dir).size)
         val cents = Similarity.trainIvfCentroids(
           live, "embedding", "vec_id", kk, iterations, trainSample)
         val (gen, next) = GenerationLog.stageNext(spark, root)
@@ -727,37 +775,58 @@ object VersionedIvf {
     segIds.foreach(id => SegmentLog.commitMarker(spark, dir, id.toString))
   }
 
-  /** Retrain trigger + integrity scan over live membership — the
-    * [[Similarity.ivfAssignmentDrift]] metric on the versioned index
-    * (same shared computation): per-`ingest_batch` mean alignment to the
-    * assigned centroid and the misassigned count, which is zero by
-    * construction on any healthy index (every write path assigns the
-    * argmax; retrain reassigns atomically with its generation commit).
+  /** The retrain TRIGGER metric + an index integrity invariant, one
+    * narrow pass over live membership (k native cosines per row against
+    * broadcast centroid literals; the only shuffle is the #batches-row
+    * aggregate). Per `ingest_batch`:
+    *
+    *  - `align_ppm_sum / n` — mean cosine of each stored vector to its
+    *    ASSIGNED centroid (ppm-integerized). Every write path assigns the
+    *    argmax at write time, so assignments are never "wrong" — what
+    *    drifts is FIT: batches ingested against centroids trained on an
+    *    older population score systematically lower than the base build.
+    *    Recent batches' alignment falling materially below `-1`'s is the
+    *    "run [[retrain]] now" signal, priced at one scan instead of a
+    *    recall study (and retrain visibly restores it — spec-pinned);
+    *  - `misassigned` — rows whose CURRENT nearest centroid beats their
+    *    assigned one. Zero by construction on any healthy index (every
+    *    path assigns the argmax; retrain reassigns atomically with its
+    *    generation commit), so ANY nonzero value is structural corruption,
+    *    which the hash-gated `s_knn_drift_contract` (drift scan over the
+    *    full build → append → retrain fixture, provably empty) would catch.
+    *
+    * All outputs integer, so the frame hash-replays across engines.
     */
   def assignmentDrift(spark: SparkSession, root: String): DataFrame = {
     val dir = GenerationLog.requireCurrentDir(spark, root)
     Similarity.assignmentDriftOf(
-      liveCorpus(spark, dir), Similarity.readIvfCentroids(spark, dir))
+      liveCorpus(spark, dir), readCentroids(spark, dir))
   }
 }
 
-/** The near-dup (MinHash-LSH signature) index on the generation-log commit
-  * model — the rename-free twin of the [[Dedup.writeNearDupIndex]] family,
-  * completing the object-store story for both persisted index families.
-  * The in-place family's delete is already tombstone-only (rename-free);
-  * what this adds is a rename-free COMPACT/CONSOLIDATE (next generation
-  * instead of a staged `_COMMIT` swap) and a rename-free GATE (the
-  * in-place gate appends signatures via dynamic partition overwrite, whose
-  * job commit renames staging directories — here each gate batch lands as
-  * a [[SegmentLog]] marker-committed segment, and its replay is detected
-  * by the `.s<batchId>` marker name).
+/** The persisted near-dup (MinHash-LSH) SIGNATURE INDEX — the on-disk
+  * lifecycle of [[Dedup.nearDupManifest]] on the generation-log commit
+  * model. Layout per generation:
   *
-  * Gate semantics are IDENTICAL to [[Dedup.gateBatchAgainstNearDupIndex]]
-  * (same params table, same dropSeen → self-dedup pipeline, same
-  * strictly-earlier manifest view, same kept-partition read-back for the
-  * appended signatures) — `d_gate_versioned_contract` pins the streamed
-  * kept-set to the same sequential reference pipeline the in-place gate
-  * is pinned to.
+  *   `params`      one-row parquet pinning (shingle_size, bands,
+  *                 rows_per_band, numer, denom): every gate reads the
+  *                 STORED shape, so mixing LSH parameters across writers
+  *                 is impossible by construction
+  *   `manifest`    the base [[Dedup.nearDupManifest]] rows
+  *   `segments`    gate batches' signature rows, each a [[SegmentLog]]
+  *                 marker-committed segment whose replay is detected by
+  *                 the `.s<batchId>` marker name
+  *   `tombstones`  doc ids whose signatures must be IGNORED ([[delete]]);
+  *                 physically purged by [[consolidate]]
+  *
+  * Scale shape: the manifest is ~1 KB/doc of band keys + hashed shingles —
+  * a 100 TB corpus condenses to a signature table a fraction of a percent
+  * of its size, and each arriving batch is gated against it with
+  * manifest-scale IO (never corpus text). No verb renames a directory
+  * (consolidation publishes the next generation, gate batches publish
+  * segments by marker), so the lifecycle runs on object stores.
+  * `d_gate_versioned_contract` pins the streamed kept-set to the
+  * sequential reference pipeline.
   */
 object VersionedNearDup {
 
@@ -785,10 +854,30 @@ object VersionedNearDup {
     }
   }
 
-  /** The live manifest view: base ∪ committed gate segments − tombstones,
+  /** The pinned LSH shape (shingle_size, bands, rows_per_band, numer,
+    * denom). Layout-resolving: `path` may be the index root (current
+    * generation resolved via the [[GenerationLog]]) or a generation dir
+    * (internal callers).
+    */
+  private[graft] def readParams(
+      spark: SparkSession, path: String): (Int, Int, Int, Int, Int) = {
+    val dir = GenerationLog.currentDir(spark, path).getOrElse(path)
+    // params are immutable per committed generation — memoized so a
+    // streaming gate doesn't pay a one-row Spark job per micro-batch; the
+    // raw-path fallback (no generation log) is NOT memoized (no
+    // immutability contract — r14 ADVICE)
+    IndexMeta.cachedParamsIfGeneration(spark, "neardup-params", dir) {
+      val r = spark.read.parquet(s"$dir/params").head
+      (r.getAs[Int]("shingle_size"), r.getAs[Int]("bands"),
+        r.getAs[Int]("rows_per_band"), r.getAs[Int]("numer"), r.getAs[Int]("denom"))
+    }
+  }
+
+  /** The live manifest view: base ∪ committed gate segments − tombstones
+    * (broadcast anti-join — delete sets are small relative to the corpus),
     * optionally restricted (for gate replay safety) to segments from
     * stream batches STRICTLY BEFORE `beforeBatch` (the base and batch
-    * appends always qualify — the in-place `ingest_batch < b` contract).
+    * appends always qualify).
     */
   def liveManifest(
       spark: SparkSession, root: String,
@@ -811,9 +900,23 @@ object VersionedNearDup {
     else all
   }
 
-  /** Retention delete: tombstone-only, same semantics as
-    * [[Dedup.deleteFromNearDupIndex]] — screens immediately, purged
-    * physically by the next [[consolidate]]. Pass the gate stream's
+  /** Retention delete ("right to be forgotten" for the dedup corpus): the
+    * given doc ids stop suppressing future arrivals IMMEDIATELY — every
+    * probe reads the manifest through the tombstone anti-join — without
+    * rewriting any manifest row. The signature rows stay on disk until the
+    * next [[consolidate]] purges them; pipelines whose retention clock
+    * starts at the delete call run it on their own cadence (a
+    * manifest-scale rewrite, not a corpus-scale one). Idempotent:
+    * re-deleting an id appends a duplicate tombstone row, which the
+    * probe-side `distinct()` collapses. Ids must be integral (the
+    * manifest's `doc` column is the corpus id; the cluster/keeper
+    * machinery downstream requires numeric ids anyway).
+    *
+    * Runs under the index's [[MaintenanceLock]], serialized with
+    * [[consolidate]]: a tombstone lands either in the generation a
+    * consolidation reads or in the one it publishes, never between them.
+    * Run deletes and consolidation from a single maintenance writer. Pass
+    * the gate stream's
     * `checkpointDir` when a stream is actively gating against this index:
     * the guard refuses to tombstone while a written-but-uncommitted batch
     * is in flight (its replay would recompute the kept set against a
@@ -833,12 +936,12 @@ object VersionedNearDup {
     }
   }
 
-  /** One gate batch — [[Dedup.gateBatchAgainstNearDupIndex]] semantics,
-    * rename-free mechanics: kept rows land by static overwrite of the
-    * batch's own `$keptDir/ingest_batch=<id>` dir (replay rewrites the
-    * same dir — idempotent without dynamic overwrite), and the appended
-    * signatures land as a marker-committed segment derived from the
-    * WRITTEN kept partition (replay-identical by construction).
+  /** One gate batch of [[streamGate]], exposed for replay testing and
+    * receipts: kept rows land by static overwrite of the batch's own
+    * `$keptDir/ingest_batch=<id>` dir (replay rewrites the same dir —
+    * idempotent without dynamic overwrite), and the appended signatures
+    * land as a marker-committed segment derived from the WRITTEN kept
+    * partition (replay-identical by construction).
     *
     * Replay consistency: a replayed batch recomputes its kept set against
     * the same strictly-earlier manifest view, so absent concurrent
@@ -869,7 +972,7 @@ object VersionedNearDup {
     val spark = batch.sparkSession
     val dir = GenerationLog.requireCurrentDir(spark, root)
     val (ss, bands, rpb, numer, denom) =
-      graft.Trace.t("neardup.params")(Dedup.readNearDupIndexParams(spark, dir))
+      graft.Trace.t("neardup.params")(readParams(spark, dir))
     val manifest = liveManifest(spark, root, beforeBatch = Some(batchId))
     // ONE tokenize+shingle+minhash pass over the batch (the dominant
     // narrow-stage cost): the batch manifest feeds the seen-screen AND the
@@ -942,7 +1045,24 @@ object VersionedNearDup {
     }
    } }
 
-  /** Continuous dedup-at-ingest over the versioned index. */
+  /** The streaming DEDUP GATE — near-dup-at-ingest against the persisted,
+    * self-growing signature index (the shape a continuous crawl needs: the
+    * corpus never recomputes, each arriving micro-batch pays batch-sized
+    * work). Per batch ([[gateBatch]]):
+    *
+    *  1. drop arrivals with a near-dup among STRICTLY EARLIER batches'
+    *     signatures (segment-pruned manifest read through the tombstone
+    *     anti-join — a forgotten doc no longer suppresses);
+    *  2. self-dedup the survivors within the batch (LSH candidates + exact
+    *     verify + cluster keeper, the [[Dedup.dropNearDuplicates]] policy);
+    *  3. land kept docs under `$keptDir/ingest_batch=<id>` and the batch's
+    *     signature rows as ONE marker-committed segment.
+    *
+    * LSH parameters come from the index's pinned params. Batch ordering is
+    * the file source's (modification time): the kept-set is order-DEPENDENT
+    * by construction (first arrival wins), exactly like the sequential
+    * batch pipeline it replaces.
+    */
   def streamGate(
       stream: DataFrame, textCol: String, idCol: String,
       root: String, keptDir: String, checkpointDir: String)
@@ -955,11 +1075,16 @@ object VersionedNearDup {
         gateBatch(batch.toDF(), textCol, idCol, root, keptDir, batchId))
       .start()
 
-  /** Fold gate segments into the base manifest and apply tombstones — as
-    * the next generation (the versioned [[Dedup.compactNearDupIndex]] with
-    * `consolidate = true` semantics). The live view is invariant; only the
-    * layout and the tombstone set change. Guarded by the stream's
-    * checkpoint commit log when given.
+  /** Physically purge tombstoned signatures and fold every gate segment
+    * into the base manifest — published as the NEXT generation with one
+    * marker create. The live view is invariant; only the layout and the
+    * tombstone set change. The partition-count maintenance for a
+    * LONG-RUNNING gate, which otherwise accrues one segment per
+    * micro-batch forever. Run it when the gate stream has no uncommitted
+    * batches — pass its `checkpointDir` to enforce that mechanically;
+    * concurrent maintenance writers are fenced by the index's
+    * [[MaintenanceLock]]. Refuses to consolidate an index whose every doc
+    * is tombstoned (rebuild with [[write]] instead).
     */
   def consolidate(
       spark: SparkSession, root: String,
@@ -990,17 +1115,17 @@ object VersionedNearDup {
   }
 }
 
-/** The IVF-PQ index on the generation-log commit model — completing the
-  * object-store symmetry across all four persisted index families (BM25
-  * segments, IVF, near-dup, and now IVF-PQ). Same [[GenerationLog]] +
-  * [[SegmentLog]] spine as [[VersionedIvf]]; the payload per generation is
-  * the in-place family's three sub-tables (coarse centroids, residual
-  * codebooks, cluster-partitioned CODES — (1+m) small ints per vector, no
-  * floats), so delete is tombstone-only, appends are marker-committed code
-  * segments, and retrain — which needs the float base table the probe
-  * already re-ranks against, exactly like [[Similarity.retrainIvfPqIndex]]
-  * — publishes new quantizers + a full re-encode as the next generation
-  * with ONE marker create instead of a three-table rename swap.
+/** The persisted IVF-PQ index on the generation-log commit model — the
+  * same [[GenerationLog]] + [[SegmentLog]] spine as [[VersionedIvf]]. The
+  * payload per generation is three sub-tables: coarse `centroids`,
+  * residual codebooks (`books`), and cluster-PARTITIONED `codes` — (1 + m)
+  * small ints per vector, the whole point of PQ at rest. The float
+  * originals are NOT duplicated into the index: they stay in the base
+  * corpus table, which the probe touches only for the short re-rank
+  * candidate list (an id equi-join). Delete is tombstone-only, appends are
+  * marker-committed code segments, and [[retrain]] — which needs that
+  * float base table — publishes new quantizers + a full re-encode as the
+  * next generation with ONE marker create.
   */
 object VersionedIvfPq {
 
@@ -1051,6 +1176,22 @@ object VersionedIvfPq {
   def codesView(spark: SparkSession, root: String): DataFrame =
     liveCodes(spark, GenerationLog.requireCurrentDir(spark, root))
 
+  /** Read the residual codebooks. Layout-resolving like
+    * [[VersionedIvf.readCentroids]]: `path` may be the index root or a
+    * generation dir.
+    */
+  def readBooks(spark: SparkSession, path: String): Seq[Seq[Seq[Float]]] = {
+    val dir = GenerationLog.currentDir(spark, path).getOrElse(path)
+    def load = spark.read.parquet(s"$dir/books")
+      .orderBy(col("subspace"), col("code"))
+      .collect()
+      .groupBy(_.getInt(0)).toSeq.sortBy(_._1)
+      .map(_._2.sortBy(_.getInt(1)).map(_.getSeq[Float](2).toSeq).toSeq)
+    // immutable per committed generation — memoized like
+    // VersionedIvf.readCentroids
+    IndexMeta.cachedParamsIfGeneration(spark, "ivfpq-books", dir)(load)
+  }
+
   def write(
       corpus: DataFrame, vecCol: String, idCol: String,
       centroids: Seq[Seq[Float]], books: Seq[Seq[Seq[Float]]],
@@ -1064,15 +1205,17 @@ object VersionedIvfPq {
     }
   }
 
-  /** Probe: gated ADC over live codes + exact re-rank against the float
-    * base table ([[Similarity.ivfPqTopKFromIndex]] semantics).
+  /** Probe: gated ADC over the stored cluster-partitioned live codes
+    * (only the probed clusters' files are read), quantizers from their
+    * stored frames, and an exact re-rank against the caller's float
+    * `corpus` (the re-rank join only).
     */
   def topKFromIndex(
       spark: SparkSession, root: String, queries: DataFrame, corpus: DataFrame,
       vecCol: String, idCol: String, k: Int,
       nprobe: Int = 2, rerank: Int = 4): DataFrame = {
     val dir = GenerationLog.requireCurrentDir(spark, root)
-    val centroids = Similarity.readIvfCentroids(spark, dir)
+    val centroids = VersionedIvf.readCentroids(spark, dir)
     // same conditional static probed-cluster filter as
     // VersionedIvf.topKFromIndex: the codes Union blocks dynamic partition
     // pruning; a consolidated (single-scan) index needs no help
@@ -1084,10 +1227,13 @@ object VersionedIvfPq {
       else live
     Similarity.ivfPqProbe(
       codes, queries, corpus, vecCol, idCol, k,
-      centroids, Similarity.readIvfPqBooks(spark, dir), nprobe, rerank)
+      centroids, readBooks(spark, dir), nprobe, rerank)
   }
 
-  /** Marker-committed code segment against the FROZEN stored quantizers. */
+  /** Append a batch against the FROZEN stored quantizers (no retrain) — a
+    * marker-committed code segment, the [[VersionedIvf.append]]
+    * incremental-ingest contract.
+    */
   def append(batch: DataFrame, vecCol: String, idCol: String, root: String): Unit = {
     val spark = batch.sparkSession
     MaintenanceLock.withLock(spark, root) {
@@ -1095,8 +1241,8 @@ object VersionedIvfPq {
       val segId = SegmentLog.nextSegId(spark, dir)
       val segDir = SegmentLog.segmentDir(dir, segId)
       Similarity.ivfPqEncode(batch, vecCol, idCol,
-        Similarity.readIvfCentroids(spark, dir),
-        Similarity.readIvfPqBooks(spark, dir))
+        VersionedIvf.readCentroids(spark, dir),
+        readBooks(spark, dir))
         .select(col("vec_id"), col("codes"), col("cluster"))
         .write.mode("overwrite").option("partitionOverwriteMode", "static")
         .partitionBy("cluster")
@@ -1133,8 +1279,9 @@ object VersionedIvfPq {
     }
   }
 
-  /** Fold segments + apply tombstones → next generation; quantizers and
-    * codes unchanged (no re-encode — the codes ARE the membership).
+  /** Fold code segments and physically purge tombstones as the next
+    * generation — the [[VersionedIvf.consolidate]] contract; quantizers
+    * and codes unchanged (no re-encode — the codes ARE the membership).
     */
   def consolidate(
       spark: SparkSession, root: String,
@@ -1149,17 +1296,23 @@ object VersionedIvfPq {
           "tombstoned) — rebuild with VersionedIvfPq.write instead")
       val (gen, next) = GenerationLog.stageNext(spark, root)
       writeGeneration(spark, next,
-        Similarity.readIvfCentroids(spark, dir),
-        Similarity.readIvfPqBooks(spark, dir), live)
+        VersionedIvf.readCentroids(spark, dir),
+        readBooks(spark, dir), live)
       GenerationLog.commit(spark, root, gen)
     }
   }
 
   /** Retrain BOTH quantizer levels over live membership and publish the
-    * re-encoded index as the next generation. Needs the float base table
-    * (the codes store no vectors — [[Similarity.retrainIvfPqIndex]]'s
-    * contract): corpus rows outside the index are ignored, a live stored
-    * id missing from the corpus fails fast.
+    * re-encoded index (new coarse centroids, new residual codebooks, full
+    * re-encode) as the next generation with one marker create. The codes
+    * store no floats, so pass the SAME base corpus table the probe path
+    * re-ranks against ([[topKFromIndex]]'s `corpus`). Corpus rows not live
+    * in the codes table are ignored (membership is the codes table —
+    * deletes stay deleted); a LIVE stored id missing from the corpus fails
+    * fast, because re-encoding would silently drop it. Correctness is
+    * invariant by the standing argument — exact probe (nprobe = k,
+    * rerank ≥ corpus) ≡ brute for ANY quantizer pair. `k`/`m`/`ksub`
+    * default to the stored shapes.
     */
   def retrain(
       spark: SparkSession, root: String, corpus: DataFrame,
@@ -1183,8 +1336,8 @@ object VersionedIvfPq {
             "are absent from the supplied corpus — re-encoding would " +
             "silently drop them; pass the same base table the probe path " +
             "re-ranks against")
-        val oldBooks = Similarity.readIvfPqBooks(spark, dir)
-        val kk = k.getOrElse(Similarity.readIvfCentroids(spark, dir).size)
+        val oldBooks = readBooks(spark, dir)
+        val kk = k.getOrElse(VersionedIvf.readCentroids(spark, dir).size)
         val mm = m.getOrElse(oldBooks.size)
         val ks = ksub.getOrElse(oldBooks.head.size)
         val cents = Similarity.trainIvfCentroids(member, "embedding", "vec_id",
@@ -1208,14 +1361,30 @@ object VersionedIvfPq {
   }
 }
 
-/** The substring-window (ExactSubstr) index on the generation-log commit
-  * model — the last of the persisted index families re-expressed
-  * rename-free. Same [[SegmentLog]] gate mechanics as [[VersionedNearDup]]
-  * (the in-place gate's two dynamic-overwrite writes become a static
-  * overwrite of the batch's own clean dir plus one marker-committed window
-  * segment); no tombstone face, deliberately matching
-  * [[Dedup.writeSubstringIndex]] — manifest rows are CONTENT keys, not doc
-  * rows, so retention means rebuilding from the retained corpus.
+/** The persisted SUBSTRING WINDOW (ExactSubstr) index — the on-disk
+  * lifecycle of [[Dedup.substringWindowManifest]] on the generation-log
+  * commit model, completing the at-ingest gate family (exact digests,
+  * near-dup signatures, semantic embeddings, and duplicated substrings).
+  * Layout per generation:
+  *
+  *   `params`    one-row parquet pinning the window size `n` — every gate
+  *               reads the STORED shape, so mixing window sizes across
+  *               writers is impossible
+  *   `manifest`  (h1, h2) per distinct window of the base build; gate
+  *               batches' new windows land as [[SegmentLog]]
+  *               marker-committed segments (the [[VersionedNearDup]] gate
+  *               mechanics: a static overwrite of the batch's own clean
+  *               dir plus one marker-committed window segment)
+  *
+  * 16 bytes per DISTINCT window: a boilerplate-heavy corpus (the case
+  * substring dedup exists for) collapses hard — the repeats that dominate
+  * the token count contribute one manifest row each.
+  *
+  * No tombstone face, deliberately: manifest rows are CONTENT keys, not
+  * doc rows — "forget doc X" has no per-doc rows to screen (the same
+  * window text typically also occurred in other docs), so retention
+  * deletes for substring state mean rebuilding the manifest from the
+  * retained corpus.
   */
 object VersionedSubstring {
 
@@ -1237,8 +1406,20 @@ object VersionedSubstring {
     }
   }
 
+  /** The pinned window size `n`. Layout-resolving like
+    * [[VersionedNearDup.readParams]].
+    */
+  private[graft] def readParams(spark: SparkSession, path: String): Int = {
+    val dir = GenerationLog.currentDir(spark, path).getOrElse(path)
+    // immutable per committed generation — memoized (one-row read must not
+    // cost a Spark job per micro-batch)
+    IndexMeta.cachedParamsIfGeneration(spark, "substr-n", dir)(Integer.valueOf(
+      spark.read.parquet(s"$dir/params").head.getAs[Int]("n"))).intValue
+  }
+
   /** Manifest view (h1, h2): base ∪ committed segments, stream segments
-    * restricted to strictly before `beforeBatch`.
+    * restricted to STRICTLY BEFORE `beforeBatch` (the base always
+    * qualifies) — the streaming gate's replay-safe read.
     */
   def manifest(
       spark: SparkSession, root: String,
@@ -1252,8 +1433,8 @@ object VersionedSubstring {
         .select(col("h1"), col("h2")))
   }
 
-  /** One gate batch — [[Dedup.gateBatchAgainstSubstringIndex]] semantics,
-    * rename-free mechanics. Cleaned text lands by static overwrite of
+  /** One gate batch of [[streamGate]], exposed for replay testing and
+    * receipts. Cleaned text lands by static overwrite of
     * `$cleanDir/ingest_batch=<id>`; the batch's NEW window keys (from its
     * original text, keep-first-globally) land as a marker-committed
     * segment, skipped on replay.
@@ -1272,11 +1453,7 @@ object VersionedSubstring {
     // and new-window set are identical to the first attempt's
     val spark = batch.sparkSession
     val dir = GenerationLog.requireCurrentDir(spark, root)
-    // immutable per committed generation — memoized (one-row read must not
-    // cost a Spark job per micro-batch)
-    val n = graft.Trace.t("substr.params")(
-      IndexMeta.cachedParamsIfGeneration(spark, "substr-n", dir)(
-        Integer.valueOf(spark.read.parquet(s"$dir/params").head.getAs[Int]("n"))).intValue)
+    val n = graft.Trace.t("substr.params")(readParams(spark, dir))
     val man = manifest(spark, root, beforeBatch = Some(batchId))
     // ONE tokenize+shingle pass over the batch text, shared (persisted for
     // the scope) by the span computation AND the new-window-key append —
@@ -1311,7 +1488,17 @@ object VersionedSubstring {
     }
    } }
 
-  /** Continuous ExactSubstr-at-ingest over the versioned index. */
+  /** Streaming substring dedup at ingest: each micro-batch is cut against
+    * every strictly-earlier batch's windows
+    * ([[Dedup.substringSpansAgainstManifest]] — manifest-seen cuts ∪
+    * within-batch keep-first), the cleaned text lands by static overwrite
+    * of the batch's own `$cleanDir/ingest_batch=<id>` dir, and the batch's
+    * NEW window keys join the index as one marker-committed segment
+    * ([[gateBatch]]) — a replayed batch lands byte-identically on top of
+    * itself and skips the key append via the marker. Sequential batch
+    * semantics ≡ the one-shot pipeline over the concatenated corpus when
+    * ids order by arrival — the d_substr_gate_contract gate.
+    */
   def streamGate(
       stream: DataFrame, textCol: String, idCol: String,
       root: String, cleanDir: String, checkpointDir: String)

@@ -12,7 +12,7 @@ import org.apache.spark.sql.SparkSession
   * engine's own exactly-once bookkeeping). A batch id present in `offsets`
   * but absent from `commits` is therefore in flight or crashed-pending —
   * exactly the batch whose eventual replay a consolidation/compaction/purge
-  * must not race ([[graft.operators.Similarity.consolidateIvfIndex]] and
+  * must not race ([[graft.operators.VersionedIvf.consolidate]] and
   * friends document the failure shapes). Both logs are plain
   * batch-id-named files (HDFSMetadataLog); temp files and non-numeric
   * names are ignored.

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.operators.{Dedup, Similarity}
+import graft.operators.{Similarity, VersionedIvf, VersionedNearDup, VersionedSubstring}
 
 /** The PRODUCTION ingest composition: text near-dup gate → semantic gate,
   * stacked in ONE foreachBatch over one arrival stream (the shape a crawl
@@ -48,7 +48,7 @@ object ComposedGate {
     // stage 1: text near-dup gate. The embedding column rides along into
     // the kept partition (the gate keeps every batch column), so stage 2
     // needs no join back to the arrival source.
-    graft.Trace.t("composed.stage-text")(Dedup.gateBatchAgainstNearDupIndex(
+    graft.Trace.t("composed.stage-text")(VersionedNearDup.gateBatch(
       batch, textCol, idCol, textIndexPath, textKeptDir, batchId))
     // stage 2: semantic gate over stage 1's survivors, read back from the
     // written partition. An all-suppressed batch wrote no partition and
@@ -88,7 +88,7 @@ object ComposedGate {
       threshold: Double, nprobe: Int,
       frozenGen: Option[Long] = None): Unit = {
     val spark = batch.sparkSession
-    graft.Trace.t("composed.stage-substr")(Dedup.gateBatchAgainstSubstringIndex(
+    graft.Trace.t("composed.stage-substr")(VersionedSubstring.gateBatch(
       batch, textCol, idCol, substrIndexPath, cleanDir, batchId))
     // an all-duplicate batch wrote no partition — nothing survives stage 0.
     // Direct-partition read, same rationale as ingestBatch's survivors read
@@ -165,7 +165,7 @@ object ComposedGate {
     graft.operators.GenerationLog.requireCurrentDir(stream.sparkSession, annIndexPath)
     val gen = graft.operators.GenerationLog
       .currentGeneration(stream.sparkSession, annIndexPath)
-    val centroids = Similarity.readIvfCentroids(stream.sparkSession, annIndexPath)
+    val centroids = VersionedIvf.readCentroids(stream.sparkSession, annIndexPath)
     stream.writeStream
       .option("checkpointLocation", checkpointDir)
       .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
@@ -192,7 +192,7 @@ object ComposedGate {
     graft.operators.GenerationLog.requireCurrentDir(stream.sparkSession, annIndexPath)
     val gen = graft.operators.GenerationLog
       .currentGeneration(stream.sparkSession, annIndexPath)
-    val centroids = Similarity.readIvfCentroids(stream.sparkSession, annIndexPath)
+    val centroids = VersionedIvf.readCentroids(stream.sparkSession, annIndexPath)
     stream.writeStream
       .option("checkpointLocation", checkpointDir)
       .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
@@ -209,7 +209,7 @@ object ComposedGate {
     * one checkpoint for the whole composition — a batch either fully
     * commits both stages or replays both). LSH parameters come from the
     * text index's pinned params; centroids are FROZEN at stream start
-    * (the standing appendToIvfIndex contract). Final kept rows land under
+    * (the standing [[graft.operators.VersionedIvf.append]] contract). Final kept rows land under
     * `$keptDir/ingest_batch=<id>` as (id, vector); the text-kept dir is
     * the intermediate ledger (useful for auditing what each stage
     * dropped).
@@ -223,7 +223,7 @@ object ComposedGate {
     graft.operators.GenerationLog.requireCurrentDir(stream.sparkSession, annIndexPath)
     val gen = graft.operators.GenerationLog
       .currentGeneration(stream.sparkSession, annIndexPath)
-    val centroids = Similarity.readIvfCentroids(stream.sparkSession, annIndexPath)
+    val centroids = VersionedIvf.readCentroids(stream.sparkSession, annIndexPath)
     stream.writeStream
       .option("checkpointLocation", checkpointDir)
       .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())

@@ -124,7 +124,7 @@ class GateResilienceSpec extends AnyFunSuite with SparkTestBase {
       .unionByName(Seq((99L, axis6)).toDF("vec_id", "embedding"))
     VersionedIvf.write(base, "embedding", "vec_id",
       Similarity.trainIvfCentroids(base, "embedding", "vec_id", k = 2), root)
-    val cents = Similarity.readIvfCentroids(spark, root)
+    val cents = VersionedIvf.readCentroids(spark, root)
     // arrival 100 ≈ base vec 99 (suppressed by it ALONE); arrival 101 on a
     // fresh axis (kept)
     val near0 = axis6
@@ -158,7 +158,7 @@ class GateResilienceSpec extends AnyFunSuite with SparkTestBase {
     VersionedIvf.write(base, "embedding", "vec_id",
       Similarity.trainIvfCentroids(base, "embedding", "vec_id", k = 2), root)
     val gen1 = GenerationLog.currentGeneration(spark, root).get
-    val trueCents = Similarity.readIvfCentroids(spark, root)
+    val trueCents = VersionedIvf.readCentroids(spark, root)
     // deliberately WRONG centroids (reversed) tagged with the CURRENT gen:
     // honored, so the drift audit must catch the misassignment — proving
     // the tag is what gates the re-read

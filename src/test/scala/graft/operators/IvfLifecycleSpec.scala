@@ -36,7 +36,7 @@ class IvfLifecycleSpec extends AnyFunSuite with SparkTestBase {
   }
 
   private def probeIds(path: String, queries: DataFrame, nprobe: Int): Set[Long] =
-    Similarity.ivfTopKFromIndex(spark, path, queries, "embedding", "vec_id",
+    VersionedIvf.topKFromIndex(spark, path, queries, "embedding", "vec_id",
       k = 5, nprobe = nprobe).select("neighbor_id").as[Long].collect().toSet
 
   // ------------------------------------------------------------- purge
@@ -44,30 +44,30 @@ class IvfLifecycleSpec extends AnyFunSuite with SparkTestBase {
   test("purge: tombstones stop screening, dir drops, deleted ids re-add via ingest") {
     val idx = tmpDir("pidx")
     val corpus = axisCorpus(0L, 60, Seq(0, 1, 2, 3), seed = 1)
-    Similarity.writeIvfIndex(corpus, "embedding", "vec_id",
+    VersionedIvf.write(corpus, "embedding", "vec_id",
       Similarity.trainIvfCentroids(corpus, "embedding", "vec_id", k = 4), idx)
     val delIds = Seq(7L, 11L)
-    Similarity.deleteFromIvfIndex(spark, idx, delIds.toDF("vec_id"), "vec_id")
+    VersionedIvf.delete(spark, idx, delIds.toDF("vec_id"), "vec_id")
     val q = corpus.filter(col("vec_id") === 0L)
     assert(!probeIds(idx, q, nprobe = 4).exists(delIds.contains))
     // BEFORE purge: a stream-ingest re-add of a tombstoned id is screened
-    Similarity.ingestBatchToIvfIndex(
+    VersionedIvf.ingestBatch(
       corpus.filter(col("vec_id").isin(delIds: _*)), "embedding", "vec_id",
       idx, batchId = 0L)
     assert(!probeIds(idx, q, nprobe = 4).exists(delIds.contains))
-    Similarity.purgeIvfTombstones(spark, idx)
+    VersionedIvf.consolidate(spark, idx)
     assert(!fsOf(idx).exists(new org.apache.hadoop.fs.Path(
       s"${GenerationLog.requireCurrentDir(spark, idx)}/tombstones")))
     // AFTER purge: the same ingest lands and the vectors are probe-visible
-    Similarity.ingestBatchToIvfIndex(
+    VersionedIvf.ingestBatch(
       corpus.filter(col("vec_id").isin(delIds: _*)), "embedding", "vec_id",
       idx, batchId = 1L)
     val after = probeIds(idx, corpus.filter(col("vec_id") === 7L), nprobe = 4)
     assert(after.nonEmpty)
-    assert(Similarity.ivfTopKFromIndex(spark, idx, q, "embedding", "vec_id",
+    assert(VersionedIvf.topKFromIndex(spark, idx, q, "embedding", "vec_id",
       k = 60, nprobe = 4).filter(col("neighbor_id").isin(delIds: _*)).count() === 2)
     // purging an index with no tombstones is a no-op
-    Similarity.purgeIvfTombstones(spark, idx)
+    VersionedIvf.consolidate(spark, idx)
   }
 
   // ----------------------------------------------------------- retrain
@@ -76,22 +76,22 @@ class IvfLifecycleSpec extends AnyFunSuite with SparkTestBase {
     val idx = tmpDir("ridx")
     val a = axisCorpus(0L, 80, Seq(0, 1, 2, 3), seed = 2)
     val b = axisCorpus(1000L, 80, Seq(4, 5, 6, 7), seed = 3)
-    Similarity.writeIvfIndex(a, "embedding", "vec_id",
+    VersionedIvf.write(a, "embedding", "vec_id",
       Similarity.trainIvfCentroids(a, "embedding", "vec_id", k = 4), idx)
     // drift: a second population lands against the FROZEN centroids
-    Similarity.appendToIvfIndex(b, "embedding", "vec_id", idx)
+    VersionedIvf.append(b, "embedding", "vec_id", idx)
     val full = a.union(b)
     val queries = b.filter(col("vec_id") < 1008L)
     def recallAt1(): Double = {
       val brute = Similarity.bruteForceTopK(queries, full, "embedding", "vec_id", k = 5)
         .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
-      val approx = Similarity.ivfTopKFromIndex(spark, idx, queries,
+      val approx = VersionedIvf.topKFromIndex(spark, idx, queries,
         "embedding", "vec_id", k = 5, nprobe = 1)
         .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
       approx.intersect(brute).size.toDouble / brute.size
     }
     val before = recallAt1()
-    Similarity.retrainIvfIndex(spark, idx, k = Some(8))
+    VersionedIvf.retrain(spark, idx, k = Some(8))
     val after = recallAt1()
     assert(after > before,
       s"retrain should lift nprobe=1 recall on the drifted corpus: $before -> $after")
@@ -100,27 +100,27 @@ class IvfLifecycleSpec extends AnyFunSuite with SparkTestBase {
     // the retrain swap lost or duplicated nothing
     val brute = Similarity.bruteForceTopK(queries, full, "embedding", "vec_id", k = 5)
       .select("query_id", "neighbor_id", "rank").as[(Long, Long, Int)].collect().toSet
-    val exact = Similarity.ivfTopKFromIndex(spark, idx, queries,
+    val exact = VersionedIvf.topKFromIndex(spark, idx, queries,
       "embedding", "vec_id", k = 5, nprobe = 8)
       .select("query_id", "neighbor_id", "rank").as[(Long, Long, Int)].collect().toSet
     assert(exact === brute)
-    assert(Similarity.readIvfCentroids(spark, idx).size === 8)
+    assert(VersionedIvf.readCentroids(spark, idx).size === 8)
   }
 
-  test("ivfAssignmentDrift: drifted segments score low alignment, retrain restores it, misassigned stays 0") {
+  test("VersionedIvf.assignmentDrift: drifted segments score low alignment, retrain restores it, misassigned stays 0") {
     val idx = tmpDir("didx")
     val a = axisCorpus(0L, 60, Seq(0, 1, 2, 3), seed = 11)
-    Similarity.writeIvfIndex(a, "embedding", "vec_id",
+    VersionedIvf.write(a, "embedding", "vec_id",
       Similarity.trainIvfCentroids(a, "embedding", "vec_id", k = 4), idx)
     // a drifted population ingests against the FROZEN centroids: assigned
     // to its argmax (so never "misassigned") but FITTING poorly — the
     // per-segment alignment mean is the retrain trigger. The drift frame's
     // `ingest_batch` is the SEGMENT id (first stream segment = 0)
-    Similarity.ingestBatchToIvfIndex(
+    VersionedIvf.ingestBatch(
       axisCorpus(1000L, 60, Seq(4, 5, 6, 7), seed = 12),
       "embedding", "vec_id", idx, batchId = 5L)
     def drift(): Map[Long, (Long, Long, Long)] =
-      Similarity.ivfAssignmentDrift(spark, idx).collect()
+      VersionedIvf.assignmentDrift(spark, idx).collect()
         .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
     val before = drift()
     assert(before.keySet === Set(-1L, 0L))
@@ -133,7 +133,7 @@ class IvfLifecycleSpec extends AnyFunSuite with SparkTestBase {
       s"drifted segment should fit poorly against frozen centroids: $before")
     // retrain folds segments into the next generation's base and reassigns
     // against fresh centroids: one -1 group, alignment restored
-    Similarity.retrainIvfIndex(spark, idx, k = Some(8))
+    VersionedIvf.retrain(spark, idx, k = Some(8))
     val after = drift()
     assert(after.keySet === Set(-1L))
     assert(after.values.forall(_._3 === 0L))
@@ -144,12 +144,12 @@ class IvfLifecycleSpec extends AnyFunSuite with SparkTestBase {
   test("retrain folds segments, applies tombstones, and starts the next generation clean") {
     val idx = tmpDir("rpidx")
     val a = axisCorpus(0L, 40, Seq(0, 1), seed = 4)
-    Similarity.writeIvfIndex(a, "embedding", "vec_id",
+    VersionedIvf.write(a, "embedding", "vec_id",
       Similarity.trainIvfCentroids(a, "embedding", "vec_id", k = 2), idx)
-    Similarity.ingestBatchToIvfIndex(axisCorpus(500L, 10, Seq(0, 1), seed = 5),
+    VersionedIvf.ingestBatch(axisCorpus(500L, 10, Seq(0, 1), seed = 5),
       "embedding", "vec_id", idx, batchId = 3L)
-    assert(Similarity.deleteFromIvfIndex(spark, idx, Seq(5L).toDF("vec_id"), "vec_id") === 1L)
-    Similarity.retrainIvfIndex(spark, idx)
+    assert(VersionedIvf.delete(spark, idx, Seq(5L).toDF("vec_id"), "vec_id") === 1L)
+    VersionedIvf.retrain(spark, idx)
     val genDir = GenerationLog.requireCurrentDir(spark, idx)
     val corpus = VersionedIvf.corpusView(spark, idx)
     // segments folded to the base, tombstones applied and dropped
@@ -157,7 +157,7 @@ class IvfLifecycleSpec extends AnyFunSuite with SparkTestBase {
     assert(!fsOf(idx).exists(new org.apache.hadoop.fs.Path(s"$genDir/tombstones")))
     assert(corpus.filter(col("vec_id") === 5L).count() === 0)
     // the new generation starts clean: the purged id may re-enter
-    Similarity.ingestBatchToIvfIndex(a.filter(col("vec_id") === 5L),
+    VersionedIvf.ingestBatch(a.filter(col("vec_id") === 5L),
       "embedding", "vec_id", idx, batchId = 0L)
     assert(VersionedIvf.corpusView(spark, idx)
       .filter(col("vec_id") === 5L).count() === 1)
@@ -170,15 +170,15 @@ class IvfLifecycleSpec extends AnyFunSuite with SparkTestBase {
     val centsA = Similarity.trainIvfCentroids(a, "embedding", "vec_id", k = 4)
     val booksA = Similarity.trainIvfPqBooks(a, "embedding", "vec_id", centsA,
       m = 4, ksub = 8)
-    Similarity.writeIvfPqIndex(a, "embedding", "vec_id", centsA, booksA, idx)
+    VersionedIvfPq.write(a, "embedding", "vec_id", centsA, booksA, idx)
     // drift: a second population encodes against the FROZEN quantizers
-    Similarity.appendToIvfPqIndex(b, "embedding", "vec_id", idx)
+    VersionedIvfPq.append(b, "embedding", "vec_id", idx)
     val full = a.union(b)
     val queries = b.filter(col("vec_id") < 1008L)
     def recallAt1(): Double = {
       val brute = Similarity.bruteForceTopK(queries, full, "embedding", "vec_id", k = 5)
         .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
-      val approx = Similarity.ivfPqTopKFromIndex(spark, idx, queries, full,
+      val approx = VersionedIvfPq.topKFromIndex(spark, idx, queries, full,
         "embedding", "vec_id", k = 5, nprobe = 1, rerank = 1000)
         .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
       approx.intersect(brute).size.toDouble / brute.size
@@ -186,10 +186,10 @@ class IvfLifecycleSpec extends AnyFunSuite with SparkTestBase {
     val before = recallAt1()
     // a stored id missing from the corpus must fail fast, not drop rows
     val e = intercept[IllegalArgumentException](
-      Similarity.retrainIvfPqIndex(spark, idx, a, "embedding", "vec_id",
+      VersionedIvfPq.retrain(spark, idx, a, "embedding", "vec_id",
         k = Some(8)))
     assert(e.getMessage.contains("absent"))
-    Similarity.retrainIvfPqIndex(spark, idx, full, "embedding", "vec_id",
+    VersionedIvfPq.retrain(spark, idx, full, "embedding", "vec_id",
       k = Some(8))
     val after = recallAt1()
     assert(after > before,
@@ -199,16 +199,16 @@ class IvfLifecycleSpec extends AnyFunSuite with SparkTestBase {
     // for ANY quantizer pair — the three-table swap lost nothing
     val brute = Similarity.bruteForceTopK(queries, full, "embedding", "vec_id", k = 5)
       .select("query_id", "neighbor_id", "rank").as[(Long, Long, Int)].collect().toSet
-    val exact = Similarity.ivfPqTopKFromIndex(spark, idx, queries, full,
+    val exact = VersionedIvfPq.topKFromIndex(spark, idx, queries, full,
       "embedding", "vec_id", k = 5, nprobe = 8, rerank = 1000000)
       .select("query_id", "neighbor_id", "rank").as[(Long, Long, Int)].collect().toSet
     assert(exact === brute)
-    assert(Similarity.readIvfCentroids(spark, idx).size === 8)
+    assert(VersionedIvf.readCentroids(spark, idx).size === 8)
     // membership is the codes table: a deleted id stays deleted through
     // the retrain even though the corpus argument still carries it
-    assert(Similarity.deleteFromIvfPqIndex(spark, idx,
+    assert(VersionedIvfPq.delete(spark, idx,
       Seq(1005L).toDF("vec_id"), "vec_id") === 1L)
-    Similarity.retrainIvfPqIndex(spark, idx, full, "embedding", "vec_id")
+    VersionedIvfPq.retrain(spark, idx, full, "embedding", "vec_id")
     assert(VersionedIvfPq.codesView(spark, idx)
       .filter(col("vec_id") === 1005L).count() === 0L)
   }
@@ -220,11 +220,11 @@ class IvfLifecycleSpec extends AnyFunSuite with SparkTestBase {
     val landing = tmpDir("cgland")
     val ckpt = tmpDir("cgckpt")
     val a = axisCorpus(0L, 30, Seq(0, 1), seed = 7)
-    Similarity.writeIvfIndex(a, "embedding", "vec_id",
+    VersionedIvf.write(a, "embedding", "vec_id",
       Similarity.trainIvfCentroids(a, "embedding", "vec_id", k = 2), idx)
     axisCorpus(100L, 10, Seq(0, 1), seed = 8).coalesce(1)
       .write.mode("overwrite").parquet(landing)
-    Similarity.streamAppendToIvfIndex(
+    VersionedIvf.streamAppend(
       spark.readStream.schema(a.schema).parquet(landing),
       "embedding", "vec_id", idx, ckpt).awaitTermination()
     val started = graft.streaming.CommitLog.lastStartedBatch(spark, ckpt)
@@ -237,13 +237,13 @@ class IvfLifecycleSpec extends AnyFunSuite with SparkTestBase {
     fs.create(new org.apache.hadoop.fs.Path(s"$ckpt/offsets/$next"), false).close()
     assert(graft.streaming.CommitLog.uncommittedBatch(spark, ckpt) === Some(next))
     val e = intercept[IllegalStateException](
-      Similarity.consolidateIvfIndex(spark, idx, checkpointDir = Some(ckpt)))
+      VersionedIvf.consolidate(spark, idx, checkpointDir = Some(ckpt)))
     assert(e.getMessage.contains("not committed"))
     intercept[IllegalStateException](
-      Similarity.purgeIvfTombstones(spark, idx, checkpointDir = Some(ckpt)))
+      VersionedIvf.consolidate(spark, idx, checkpointDir = Some(ckpt)))
     // batch commits → maintenance permitted
     fs.create(new org.apache.hadoop.fs.Path(s"$ckpt/commits/$next"), false).close()
-    Similarity.consolidateIvfIndex(spark, idx, checkpointDir = Some(ckpt))
+    VersionedIvf.consolidate(spark, idx, checkpointDir = Some(ckpt))
     val parts = VersionedIvf.corpusView(spark, idx)
       .select("ingest_batch").distinct().as[Long].collect().toSet
     assert(parts === Set(-1L))
@@ -253,18 +253,16 @@ class IvfLifecycleSpec extends AnyFunSuite with SparkTestBase {
     val idx = tmpDir("cgnd")
     val ckpt = tmpDir("cgndck")
     val fs = fsOf(ckpt)
-    Dedup.writeNearDupIndex(
+    VersionedNearDup.write(
       Seq((1L, "the quick brown fox jumps over the lazy dog once more"))
         .toDF("doc_id", "text"), "text", "doc_id", idx)
     fs.mkdirs(new org.apache.hadoop.fs.Path(s"$ckpt/offsets"))
     fs.create(new org.apache.hadoop.fs.Path(s"$ckpt/offsets/0"), false).close()
     intercept[IllegalStateException](
-      Dedup.compactNearDupIndex(spark, idx, consolidate = true,
-        checkpointDir = Some(ckpt)))
+      VersionedNearDup.consolidate(spark, idx, checkpointDir = Some(ckpt)))
     fs.mkdirs(new org.apache.hadoop.fs.Path(s"$ckpt/commits"))
     fs.create(new org.apache.hadoop.fs.Path(s"$ckpt/commits/0"), false).close()
-    Dedup.compactNearDupIndex(spark, idx, consolidate = true,
-      checkpointDir = Some(ckpt))
+    VersionedNearDup.consolidate(spark, idx, checkpointDir = Some(ckpt))
   }
 
   // ------------------------------------------------- maintenance lease
@@ -297,12 +295,12 @@ class IvfLifecycleSpec extends AnyFunSuite with SparkTestBase {
   test("a held lease fails a second mutator fast; an expired one is broken") {
     val idx = tmpDir("lkidx")
     val a = axisCorpus(0L, 30, Seq(0, 1), seed = 9)
-    Similarity.writeIvfIndex(a, "embedding", "vec_id",
+    VersionedIvf.write(a, "embedding", "vec_id",
       Similarity.trainIvfCentroids(a, "embedding", "vec_id", k = 2), idx)
     val lock = java.nio.file.Paths.get(idx, "_maintenance.lock")
     java.nio.file.Files.writeString(lock, "other-job pid=1")
     val e = intercept[IllegalStateException](
-      Similarity.deleteFromIvfIndex(spark, idx, Seq(1L).toDF("vec_id"), "vec_id"))
+      VersionedIvf.delete(spark, idx, Seq(1L).toDF("vec_id"), "vec_id"))
     assert(e.getMessage.contains("held by"))
     // nothing was mutated behind the held lease
     assert(!fsOf(idx).exists(new org.apache.hadoop.fs.Path(
@@ -311,19 +309,19 @@ class IvfLifecycleSpec extends AnyFunSuite with SparkTestBase {
     java.nio.file.Files.setLastModifiedTime(lock,
       java.nio.file.attribute.FileTime.fromMillis(
         System.currentTimeMillis() - MaintenanceLock.DefaultTtlMs - 60000L))
-    assert(Similarity.deleteFromIvfIndex(spark, idx,
+    assert(VersionedIvf.delete(spark, idx,
       Seq(1L).toDF("vec_id"), "vec_id") === 1L)
     // released on exit
     assert(!java.nio.file.Files.exists(lock))
     // the same lease fences the near-dup family
     val nd = tmpDir("lknd")
-    Dedup.writeNearDupIndex(
+    VersionedNearDup.write(
       Seq((1L, "some sufficiently long text body for shingling right here"))
         .toDF("doc_id", "text"), "text", "doc_id", nd)
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(nd, "_maintenance.lock"), "other-job pid=2")
     intercept[IllegalStateException](
-      Dedup.deleteFromNearDupIndex(Seq(1L).toDF("doc_id"), "doc_id", nd))
+      VersionedNearDup.delete(Seq(1L).toDF("doc_id"), "doc_id", nd))
   }
 
   test("release is ownership-checked: an overrunning holder never deletes a successor's lease") {

@@ -6,9 +6,8 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Lifecycle tests for the persisted near-dup signature index and its
-  * streaming dedup gate (Dedup.writeNearDupIndex / deleteFromNearDupIndex /
-  * compactNearDupIndex / streamDedupAgainstNearDupIndex) on the unified
-  * generation-log commit model.
+  * streaming dedup gate (VersionedNearDup.write / delete / consolidate /
+  * streamGate) on the generation-log commit model.
   */
 class NearDupIndexSpec extends AnyFunSuite with SparkTestBase {
   import spark.implicits._
@@ -24,11 +23,11 @@ class NearDupIndexSpec extends AnyFunSuite with SparkTestBase {
   }
 
   private def writeIndex(docs: DataFrame, path: String): Unit =
-    Dedup.writeNearDupIndex(docs, "text", "doc_id", path,
+    VersionedNearDup.write(docs, "text", "doc_id", path,
       shingleSize = 3, numer = 1, denom = 2, bands = 32, rowsPerBand = 2)
 
   private def gate(batch: DataFrame, idx: String, kept: String, id: Long): Unit =
-    Dedup.gateBatchAgainstNearDupIndex(batch, "text", "doc_id", idx, kept, id)
+    VersionedNearDup.gateBatch(batch, "text", "doc_id", idx, kept, id)
 
   private def keptIds(kept: String): Set[Long] =
     spark.read.parquet(kept).select("doc_id").as[Long].collect().toSet
@@ -51,7 +50,7 @@ class NearDupIndexSpec extends AnyFunSuite with SparkTestBase {
   test("params are pinned by the index, not the caller") {
     val idx = tmpDir("ndidx")
     writeIndex(Seq((1L, baseText)).toDF("doc_id", "text"), idx)
-    assert(Dedup.readNearDupIndexParams(spark, idx) === ((3, 32, 2, 1, 2)))
+    assert(VersionedNearDup.readParams(spark, idx) === ((3, 32, 2, 1, 2)))
   }
 
   test("replaying a gate batch leaves kept table and manifest content-identical") {
@@ -63,7 +62,7 @@ class NearDupIndexSpec extends AnyFunSuite with SparkTestBase {
     gate(b0, idx, kept, 0L)
     gate(b1, idx, kept, 1L)
     def snap(): (Set[Long], Long) = {
-      val m = Dedup.nearDupIndexManifest(spark, idx)
+      val m = VersionedNearDup.liveManifest(spark, idx)
         .agg(sum(hash(col("doc"), col("keys"), col("shh"))
           .cast("long"))).head.getLong(0)
       (keptIds(kept), m)
@@ -80,18 +79,18 @@ class NearDupIndexSpec extends AnyFunSuite with SparkTestBase {
     gate(Seq((10L, baseText + " near"), (11L, thirdText)).toDF("doc_id", "text"),
       idx, kept, 0L)
     assert(keptIds(kept) === Set(11L)) // 10 suppressed by index doc 1
-    Dedup.deleteFromNearDupIndex(Seq(1L).toDF("doc_id"), "doc_id", idx)
+    VersionedNearDup.delete(Seq(1L).toDF("doc_id"), "doc_id", idx)
     gate(Seq((20L, baseText + " near")).toDF("doc_id", "text"), idx, kept, 1L)
     assert(keptIds(kept) === Set(11L, 20L)) // doc 1 forgotten: no longer suppresses
-    val liveBefore = Dedup.nearDupIndexManifest(spark, idx)
+    val liveBefore = VersionedNearDup.liveManifest(spark, idx)
       .select("doc").as[Long].collect().toSet
-    Dedup.compactNearDupIndex(spark, idx)
+    VersionedNearDup.consolidate(spark, idx)
     val fs = new org.apache.hadoop.fs.Path(idx)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val genDir = GenerationLog.requireCurrentDir(spark, idx)
     assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$genDir/tombstones")))
     // live view unchanged; the raw manifest no longer holds doc 1 at all
-    assert(Dedup.nearDupIndexManifest(spark, idx)
+    assert(VersionedNearDup.liveManifest(spark, idx)
       .select("doc").as[Long].collect().toSet === liveBefore)
     assert(spark.read.parquet(s"$genDir/manifest")
       .filter(col("doc") === 1L).count() === 0)
@@ -100,10 +99,10 @@ class NearDupIndexSpec extends AnyFunSuite with SparkTestBase {
   test("rebuilding an index is a fresh start: old tombstones never shadow the new incarnation") {
     val idx = tmpDir("ndidx")
     writeIndex(Seq((1L, baseText)).toDF("doc_id", "text"), idx)
-    Dedup.deleteFromNearDupIndex(Seq(1L).toDF("doc_id"), "doc_id", idx)
+    VersionedNearDup.delete(Seq(1L).toDF("doc_id"), "doc_id", idx)
     writeIndex(Seq((1L, baseText), (2L, otherText)).toDF("doc_id", "text"), idx)
     // doc 1's old tombstone must NOT shadow the rebuilt index's doc 1
-    assert(Dedup.nearDupIndexManifest(spark, idx)
+    assert(VersionedNearDup.liveManifest(spark, idx)
       .select("doc").as[Long].collect().toSet === Set(1L, 2L))
   }
 
@@ -113,16 +112,16 @@ class NearDupIndexSpec extends AnyFunSuite with SparkTestBase {
     writeIndex(Seq((1L, baseText)).toDF("doc_id", "text"), idx)
     gate(Seq((10L, otherText)).toDF("doc_id", "text"), idx, kept, 0L)
     gate(Seq((20L, thirdText)).toDF("doc_id", "text"), idx, kept, 1L)
-    val liveBefore = Dedup.nearDupIndexManifest(spark, idx)
+    val liveBefore = VersionedNearDup.liveManifest(spark, idx)
       .select("doc").as[Long].collect().toSet
-    Dedup.compactNearDupIndex(spark, idx, consolidate = true)
+    VersionedNearDup.consolidate(spark, idx)
     val fs = new org.apache.hadoop.fs.Path(idx)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     // gate segments folded into the next generation's base; live view identical
     val genDir = GenerationLog.requireCurrentDir(spark, idx)
     assert(fs.exists(new org.apache.hadoop.fs.Path(s"$genDir/manifest")))
     assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$genDir/segments")))
-    assert(Dedup.nearDupIndexManifest(spark, idx)
+    assert(VersionedNearDup.liveManifest(spark, idx)
       .select("doc").as[Long].collect().toSet === liveBefore)
     // consolidated signatures still suppress future batches
     gate(Seq((30L, otherText + " ish"), (31L, "wholly new unseen sentence goes right here"))
@@ -133,8 +132,8 @@ class NearDupIndexSpec extends AnyFunSuite with SparkTestBase {
   test("compacting an all-tombstoned index is refused; live manifest intact") {
     val idx = tmpDir("ndidx")
     writeIndex(Seq((1L, baseText)).toDF("doc_id", "text"), idx)
-    Dedup.deleteFromNearDupIndex(Seq(1L).toDF("doc_id"), "doc_id", idx)
-    val e = intercept[IllegalStateException](Dedup.compactNearDupIndex(spark, idx))
+    VersionedNearDup.delete(Seq(1L).toDF("doc_id"), "doc_id", idx)
+    val e = intercept[IllegalStateException](VersionedNearDup.consolidate(spark, idx))
     assert(e.getMessage.contains("rebuild"))
     // the refusal left the current generation standing: base manifest and
     // tombstones both intact (retry-the-delete semantics)
@@ -172,7 +171,7 @@ class NearDupIndexSpec extends AnyFunSuite with SparkTestBase {
       "degenerate corpus: every band has one 40-doc bucket")
     assert(gStats.forall(_.getLong(4) === 1600L), "sumsq = 40² per band")
     // the audit is the live view: tombstoning half the docs shrinks it
-    Dedup.deleteFromNearDupIndex(
+    VersionedNearDup.delete(
       (100 until 120).map(_.toLong).toDF("doc_id"), "doc_id", gIdx)
     assert(Dedup.nearDupIndexBucketStats(spark, gIdx)
       .collect().forall(_.getLong(3) === 20L))
@@ -181,7 +180,7 @@ class NearDupIndexSpec extends AnyFunSuite with SparkTestBase {
   test("substring-index key stats: unique within a batch, cross-batch recurrence counted") {
     val idx = tmpDir("sshd")
     val body = "alpha beta gamma delta epsilon zeta eta theta " * 2
-    Dedup.writeSubstringIndex(Seq((1L, body)).toDF("doc_id", "text"),
+    VersionedSubstring.write(Seq((1L, body)).toDF("doc_id", "text"),
       "text", "doc_id", idx, n = 8)
     val s1 = Dedup.substringIndexKeyStats(spark, idx).head()
     assert(s1.getLong(2) === 1L, "base build: every window key once")
@@ -190,7 +189,7 @@ class NearDupIndexSpec extends AnyFunSuite with SparkTestBase {
     // are cut from the batch, not re-recorded) — but a batch whose unseen
     // windows repeat internally still records one key per distinct window
     val clean = tmpDir("sshc")
-    Dedup.gateBatchAgainstSubstringIndex(
+    VersionedSubstring.gateBatch(
       Seq((2L, "iota kappa lambda mu nu xi omicron pi rho sigma tau upsilon"))
         .toDF("doc_id", "text"),
       "text", "doc_id", idx, clean, 0L)
@@ -205,7 +204,7 @@ class NearDupIndexSpec extends AnyFunSuite with SparkTestBase {
     writeIndex(Seq((1L, baseText)).toDF("doc_id", "text"), idx)
     // a gate batch lands signatures under ingest_batch=0
     gate(Seq((10L, otherText)).toDF("doc_id", "text"), idx, kept, 0L)
-    assert(Dedup.nearDupIndexManifest(spark, idx)
+    assert(VersionedNearDup.liveManifest(spark, idx)
       .select("doc").as[Long].collect().toSet === Set(1L, 10L))
     val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
@@ -216,7 +215,7 @@ class NearDupIndexSpec extends AnyFunSuite with SparkTestBase {
     }
     // the old incarnation's gate segments must be gone, not lingering to
     // suppress future arrivals
-    assert(Dedup.nearDupIndexManifest(spark, idx)
+    assert(VersionedNearDup.liveManifest(spark, idx)
       .select("doc").as[Long].collect().toSet === Set(2L))
   }
 
@@ -246,7 +245,7 @@ class NearDupIndexSpec extends AnyFunSuite with SparkTestBase {
       java.nio.file.Files.setLastModifiedTime(dst,
         java.nio.file.attribute.FileTime.fromMillis(1700000000000L + k * 60000L))
     }
-    Dedup.streamDedupAgainstNearDupIndex(
+    VersionedNearDup.streamGate(
       spark.readStream.schema(batches.head.schema)
         .option("maxFilesPerTrigger", 1).parquet(landing),
       "text", "doc_id", idx, keptStream, ckpt)

@@ -768,15 +768,15 @@ class OperatorsSpec extends AnyFunSuite with SparkTestBase {
     val half2 = all.filter(col("vec_id") >= 20)
     val path = java.nio.file.Files.createTempDirectory("ivfidx").toString
     val centroids = Similarity.trainIvfCentroids(half1, "embedding", "vec_id", k = 4)
-    Similarity.writeIvfIndex(half1, "embedding", "vec_id", centroids, path)
+    VersionedIvf.write(half1, "embedding", "vec_id", centroids, path)
     // stored centroids round-trip exactly
-    assert(Similarity.readIvfCentroids(spark, path) == centroids)
+    assert(VersionedIvf.readCentroids(spark, path) == centroids)
     // append the second half against the FROZEN centroids — no retrain
-    Similarity.appendToIvfIndex(half2, "embedding", "vec_id", path)
+    VersionedIvf.append(half2, "embedding", "vec_id", path)
     assert(VersionedIvf.corpusView(spark, path).count() == 40L)
     // exhaustive probe over the persisted index == brute force on the union
     val queries = all.filter(col("vec_id") < 5)
-    val viaIndex = Similarity.ivfTopKFromIndex(spark, path, queries,
+    val viaIndex = VersionedIvf.topKFromIndex(spark, path, queries,
       "embedding", "vec_id", k = 3, nprobe = 4)
       .select(col("query_id"), col("neighbor_id"), col("rank"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
@@ -793,7 +793,7 @@ class OperatorsSpec extends AnyFunSuite with SparkTestBase {
     val all = (0 until 40).map(i => (i.toLong, vec(i))).toDF("vec_id", "embedding")
     val path = java.nio.file.Files.createTempDirectory("ivfdel").toString
     val centroids = Similarity.trainIvfCentroids(all, "embedding", "vec_id", k = 4)
-    Similarity.writeIvfIndex(all, "embedding", "vec_id", centroids, path)
+    VersionedIvf.write(all, "embedding", "vec_id", centroids, path)
     def corpusFiles(): Set[String] = {
       import scala.jdk.CollectionConverters._
       val base = java.nio.file.Paths.get(
@@ -813,7 +813,7 @@ class OperatorsSpec extends AnyFunSuite with SparkTestBase {
     val wholeCluster = clusterOf.minBy { case (_, ids) => ids.size }
     val partialCluster = clusterOf.filter(_._1 != wholeCluster._1).maxBy(_._2.size)
     val delIds = wholeCluster._2 ++ partialCluster._2.take(2) ++ Seq(999L, 1000L)
-    val deleted = Similarity.deleteFromIvfIndex(spark, path,
+    val deleted = VersionedIvf.delete(spark, path,
       delIds.toDF("vec_id"), "vec_id")
     assert(deleted == wholeCluster._2.size + 2) // not-found ids don't count
 
@@ -824,7 +824,7 @@ class OperatorsSpec extends AnyFunSuite with SparkTestBase {
     // probe over the suppressed index == brute force over the survivors
     val survivors = all.filter(!col("vec_id").isin(delIds: _*))
     val queries = survivors.filter(col("vec_id") < 12)
-    val viaIndex = Similarity.ivfTopKFromIndex(spark, path, queries,
+    val viaIndex = VersionedIvf.topKFromIndex(spark, path, queries,
       "embedding", "vec_id", k = 3, nprobe = 4)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
     val brute = Similarity.bruteForceTopK(queries, survivors, "embedding", "vec_id", k = 3)
@@ -832,26 +832,26 @@ class OperatorsSpec extends AnyFunSuite with SparkTestBase {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
     assert(viaIndex == brute)
     // idempotence: re-deleting the same set newly suppresses nothing
-    assert(Similarity.deleteFromIvfIndex(spark, path,
+    assert(VersionedIvf.delete(spark, path,
       delIds.toDF("vec_id"), "vec_id") == 0L)
     // consolidation purges physically: segments folded, tombstones gone,
     // the emptied cluster's partition no longer materializes
-    Similarity.consolidateIvfIndex(spark, path)
+    VersionedIvf.consolidate(spark, path)
     val genDir = GenerationLog.requireCurrentDir(spark, path)
     assert(!java.nio.file.Files.exists(
       java.nio.file.Paths.get(s"$genDir/tombstones")))
     assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(
       s"$genDir/corpus/cluster=${wholeCluster._1}")))
-    assert(Similarity.ivfTopKFromIndex(spark, path, queries,
+    assert(VersionedIvf.topKFromIndex(spark, path, queries,
       "embedding", "vec_id", k = 3, nprobe = 4)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet == brute)
     // tombstoning EVERY live row is legal (logical delete)… but the
     // consolidation that would materialize the empty index refuses
-    Similarity.deleteFromIvfIndex(spark, path, survivors.select(col("vec_id")), "vec_id")
-    assert(Similarity.ivfTopKFromIndex(spark, path, queries,
+    VersionedIvf.delete(spark, path, survivors.select(col("vec_id")), "vec_id")
+    assert(VersionedIvf.topKFromIndex(spark, path, queries,
       "embedding", "vec_id", k = 3, nprobe = 4).count() == 0L)
     val e = intercept[IllegalStateException] {
-      Similarity.consolidateIvfIndex(spark, path)
+      VersionedIvf.consolidate(spark, path)
     }
     assert(e.getMessage.contains("rebuild"))
   }
@@ -864,16 +864,16 @@ class OperatorsSpec extends AnyFunSuite with SparkTestBase {
     val path = java.nio.file.Files.createTempDirectory("ivfpqdel").toString
     val centroids = Similarity.trainIvfCentroids(all, "embedding", "vec_id", k = 4)
     val books = Similarity.trainIvfPqBooks(all, "embedding", "vec_id", centroids, m = 4, ksub = 4)
-    Similarity.writeIvfPqIndex(all, "embedding", "vec_id", centroids, books, path)
+    VersionedIvfPq.write(all, "embedding", "vec_id", centroids, books, path)
     val delIds = Seq(3L, 7L, 11L, 999L)
-    val deleted = Similarity.deleteFromIvfPqIndex(spark, path,
+    val deleted = VersionedIvfPq.delete(spark, path,
       delIds.toDF("vec_id"), "vec_id")
     assert(deleted == 3L)
     assert(VersionedIvfPq.codesView(spark, path).count() == 37L)
     // exact-mode probe (all clusters, rerank >= corpus) == brute over survivors
     val survivors = all.filter(!col("vec_id").isin(delIds: _*))
     val queries = survivors.filter(col("vec_id") < 10)
-    val viaIndex = Similarity.ivfPqTopKFromIndex(spark, path, queries, all,
+    val viaIndex = VersionedIvfPq.topKFromIndex(spark, path, queries, all,
       "embedding", "vec_id", k = 3, nprobe = 4, rerank = 100)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
     val brute = Similarity.bruteForceTopK(queries, survivors, "embedding", "vec_id", k = 3)
@@ -893,14 +893,14 @@ class OperatorsSpec extends AnyFunSuite with SparkTestBase {
     val landing = java.nio.file.Files.createTempDirectory("ivflanding").toString
     val ckpt = java.nio.file.Files.createTempDirectory("ivfckpt").toString
     val centroids = Similarity.trainIvfCentroids(half1, "embedding", "vec_id", k = 4)
-    Similarity.writeIvfIndex(half1, "embedding", "vec_id", centroids, path)
+    VersionedIvf.write(half1, "embedding", "vec_id", centroids, path)
     // arrivals land as 4 files → maxFilesPerTrigger=1 forces 4 micro-batches
     half2.repartition(4).write.mode("overwrite").parquet(landing)
     val stream = spark.readStream
       .schema(half2.schema)
       .option("maxFilesPerTrigger", 1)
       .parquet(landing)
-    val q = Similarity.streamAppendToIvfIndex(stream, "embedding", "vec_id", path, ckpt)
+    val q = VersionedIvf.streamAppend(stream, "embedding", "vec_id", path, ckpt)
     q.awaitTermination()
     // several distinct ingest_batch partitions actually materialized
     val batches = VersionedIvf.corpusView(spark, path)
@@ -909,7 +909,7 @@ class OperatorsSpec extends AnyFunSuite with SparkTestBase {
     assert(batches.size >= 3 && batches.contains(-1L))
     // exhaustive probe over the streamed index == brute force on the union
     val queries = all.filter(col("vec_id") < 5)
-    val viaIndex = Similarity.ivfTopKFromIndex(spark, path, queries,
+    val viaIndex = VersionedIvf.topKFromIndex(spark, path, queries,
       "embedding", "vec_id", k = 3, nprobe = 4)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
     val brute = Similarity.bruteForceTopK(queries, all, "embedding", "vec_id", k = 3)
@@ -918,7 +918,7 @@ class OperatorsSpec extends AnyFunSuite with SparkTestBase {
     assert(viaIndex == brute)
     // replay-idempotence: a fresh stream over the SAME landing dir with the
     // SAME checkpoint has nothing new to do — the index is unchanged
-    val q2 = Similarity.streamAppendToIvfIndex(
+    val q2 = VersionedIvf.streamAppend(
       spark.readStream.schema(half2.schema).option("maxFilesPerTrigger", 1).parquet(landing),
       "embedding", "vec_id", path, ckpt)
     q2.awaitTermination()
@@ -934,25 +934,25 @@ class OperatorsSpec extends AnyFunSuite with SparkTestBase {
     val batch = all.filter(col("vec_id") >= 20)
     val path = java.nio.file.Files.createTempDirectory("ivftomb").toString
     val centroids = Similarity.trainIvfCentroids(base, "embedding", "vec_id", k = 4)
-    Similarity.writeIvfIndex(base, "embedding", "vec_id", centroids, path)
+    VersionedIvf.write(base, "embedding", "vec_id", centroids, path)
     // batch 0 ingested (written AND committed in the happy path)
-    Similarity.ingestBatchToIvfIndex(batch, "embedding", "vec_id", path, 0L)
+    VersionedIvf.ingestBatch(batch, "embedding", "vec_id", path, 0L)
     assert(VersionedIvf.corpusView(spark, path).count() == 40L)
     // retention delete hits ids from the ingested batch AND the base
     val delIds = Seq(25L, 30L, 3L)
-    assert(Similarity.deleteFromIvfIndex(spark, path,
+    assert(VersionedIvf.delete(spark, path,
       delIds.toDF("vec_id"), "vec_id") == 3L)
     // the failure being modeled: batch 0's write predated the delete but
     // its checkpoint commit didn't land — the stream replays it with
     // PRE-DELETE content. Without tombstones this dynamic overwrite would
     // resurrect 25 and 30.
-    Similarity.ingestBatchToIvfIndex(batch, "embedding", "vec_id", path, 0L)
+    VersionedIvf.ingestBatch(batch, "embedding", "vec_id", path, 0L)
     val after = VersionedIvf.corpusView(spark, path)
       .select(col("vec_id")).collect().map(_.getLong(0)).toSet
     assert(after == (0L until 40L).toSet -- delIds)
     // a NEW batch of genuinely new ids is unaffected by the tombstones
     val fresh = Seq((100L, vec(100))).toDF("vec_id", "embedding")
-    Similarity.ingestBatchToIvfIndex(fresh, "embedding", "vec_id", path, 1L)
+    VersionedIvf.ingestBatch(fresh, "embedding", "vec_id", path, 1L)
     assert(VersionedIvf.corpusView(spark, path)
       .filter(col("vec_id") === 100L).count() == 1L)
   }
@@ -968,12 +968,12 @@ class OperatorsSpec extends AnyFunSuite with SparkTestBase {
     val centroids = Similarity.trainIvfCentroids(half1, "embedding", "vec_id", k = 4)
     val books = Similarity.trainIvfPqBooks(half1, "embedding", "vec_id",
       centroids, m = 4, ksub = 4)
-    Similarity.writeIvfPqIndex(half1, "embedding", "vec_id", centroids, books, path)
+    VersionedIvfPq.write(half1, "embedding", "vec_id", centroids, books, path)
     // stored quantizers round-trip exactly
-    assert(Similarity.readIvfCentroids(spark, path) == centroids)
-    assert(Similarity.readIvfPqBooks(spark, path) == books)
+    assert(VersionedIvf.readCentroids(spark, path) == centroids)
+    assert(VersionedIvfPq.readBooks(spark, path) == books)
     // append against the FROZEN quantizers — no retrain, codes only
-    Similarity.appendToIvfPqIndex(half2, "embedding", "vec_id", path)
+    VersionedIvfPq.append(half2, "embedding", "vec_id", path)
     assert(VersionedIvfPq.codesView(spark, path).count() == 40L)
     // ...and appended codes equal a fresh in-memory encode of the same rows
     val stored = VersionedIvfPq.codesView(spark, path)
@@ -984,7 +984,7 @@ class OperatorsSpec extends AnyFunSuite with SparkTestBase {
     assert(stored == fresh)
     // exhaustive probe + full re-rank over the persisted codes == brute
     val queries = all.filter(col("vec_id") < 5)
-    val viaIndex = Similarity.ivfPqTopKFromIndex(spark, path, queries, all,
+    val viaIndex = VersionedIvfPq.topKFromIndex(spark, path, queries, all,
       "embedding", "vec_id", k = 3, nprobe = 4, rerank = 1000)
       .select(col("query_id"), col("neighbor_id"), col("rank"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet

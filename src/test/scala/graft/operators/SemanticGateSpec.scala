@@ -21,7 +21,7 @@ class SemanticGateSpec extends AnyFunSuite with SparkTestBase {
   private def buildIndex(path: String): Seq[Seq[Float]] = {
     val base = vecs(1L -> v(1, 0, 0, 0), 2L -> v(0, 1, 0, 0))
     val cents = Similarity.trainIvfCentroids(base, "embedding", "vec_id", k = 2)
-    Similarity.writeIvfIndex(base, "embedding", "vec_id", cents, path)
+    VersionedIvf.write(base, "embedding", "vec_id", cents, path)
     cents
   }
 
@@ -76,12 +76,12 @@ class SemanticGateSpec extends AnyFunSuite with SparkTestBase {
     val cents = buildIndex(idx)
     gate(vecs(10L -> v(0.999f, 0.01f, 0, 0)), idx, kept, cents, 0L)
     assert(keptIds(kept).isEmpty) // all suppressed
-    Similarity.deleteFromIvfIndex(spark, idx, Seq(1L).toDF("vec_id"), "vec_id")
+    VersionedIvf.delete(spark, idx, Seq(1L).toDF("vec_id"), "vec_id")
     gate(vecs(20L -> v(0.999f, 0.01f, 0, 0)), idx, kept, cents, 1L)
     assert(keptIds(kept) === Set(20L)) // vec 1 forgotten: no longer suppresses
   }
 
-  test("consolidateIvfIndex folds batch partitions into the base; probes and gates unchanged") {
+  test("VersionedIvf.consolidate folds batch partitions into the base; probes and gates unchanged") {
     val idx = tmp("sgidx"); val kept = tmp("sgkept")
     val cents = buildIndex(idx)
     gate(vecs(10L -> v(0, 0, 1, 0)), idx, kept, cents, 0L)
@@ -89,7 +89,7 @@ class SemanticGateSpec extends AnyFunSuite with SparkTestBase {
     def corpusIds() = VersionedIvf.corpusView(spark, idx)
       .select("vec_id").as[Long].collect().toSet
     val before = corpusIds()
-    Similarity.consolidateIvfIndex(spark, idx)
+    VersionedIvf.consolidate(spark, idx)
     val fs = new org.apache.hadoop.fs.Path(idx)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     // segments folded into the next generation's base; no tombstones left
@@ -103,9 +103,9 @@ class SemanticGateSpec extends AnyFunSuite with SparkTestBase {
       idx, kept, cents, 2L)
     assert(keptIds(kept) === Set(10L, 20L, 31L)) // 30 ~ consolidated vec 20
     // re-running folds the new batch too and is otherwise a no-op
-    Similarity.consolidateIvfIndex(spark, idx)
+    VersionedIvf.consolidate(spark, idx)
     assert(corpusIds() === before + 31L)
-    Similarity.consolidateIvfIndex(spark, idx)
+    VersionedIvf.consolidate(spark, idx)
     assert(corpusIds() === before + 31L)
   }
 

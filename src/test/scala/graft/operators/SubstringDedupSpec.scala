@@ -115,7 +115,7 @@ class SubstringDedupSpec extends AnyFunSuite with SparkTestBase {
   }
 
   private def gate(batch: DataFrame, idx: String, clean: String, id: Long): Unit =
-    Dedup.gateBatchAgainstSubstringIndex(batch, "text", "doc_id", idx, clean, id)
+    VersionedSubstring.gateBatch(batch, "text", "doc_id", idx, clean, id)
 
   private def cleanedMap(dir: String): Map[Long, String] =
     spark.read.parquet(dir).select("doc", "cleaned_text")
@@ -126,8 +126,8 @@ class SubstringDedupSpec extends AnyFunSuite with SparkTestBase {
     val clean = tmpDir("ssclean")
     val corpus = Seq((10L, s"${toks(0 until 5, "x")} $boiler ${toks(0 until 5, "y")}"))
       .toDF("doc_id", "text")
-    Dedup.writeSubstringIndex(corpus, "text", "doc_id", idx, n = 4)
-    assert(Dedup.readSubstringIndexN(spark, idx) === 4)
+    VersionedSubstring.write(corpus, "text", "doc_id", idx, n = 4)
+    assert(VersionedSubstring.readParams(spark, idx) === 4)
     // batch 0: a doc re-pasting the boilerplate (cut), one novel doc;
     // batch 1: a doc duplicating batch 0's novel text (cut against the
     // GATE-GROWN index, not just the base build)
@@ -154,11 +154,11 @@ class SubstringDedupSpec extends AnyFunSuite with SparkTestBase {
     val idx = tmpDir("ssidx")
     val clean = tmpDir("ssclean")
     val corpus = Seq((10L, s"$boiler ${toks(0 until 6, "c")}")).toDF("doc_id", "text")
-    Dedup.writeSubstringIndex(corpus, "text", "doc_id", idx, n = 4)
+    VersionedSubstring.write(corpus, "text", "doc_id", idx, n = 4)
     val b0 = Seq((20L, toks(0 until 10, "k"))).toDF("doc_id", "text")
     gate(b0, idx, clean, 0L)
     def snap(): (Map[Long, String], Long, Long) = {
-      val m = Dedup.substringIndexManifest(spark, idx)
+      val m = VersionedSubstring.manifest(spark, idx)
       (cleanedMap(clean), m.count(),
         m.agg(sum(hash(col("h1"), col("h2")).cast("long")))
           .head.getLong(0))
@@ -179,8 +179,8 @@ class SubstringDedupSpec extends AnyFunSuite with SparkTestBase {
     val cleanStream = tmpDir("sscls"); val cleanSeq = tmpDir("ssclq")
     val landing = tmpDir("ssland"); val ckpt = tmpDir("ssckpt")
     val corpus = Seq((1L, s"$boiler ${toks(0 until 6, "c")}")).toDF("doc_id", "text")
-    Dedup.writeSubstringIndex(corpus, "text", "doc_id", idx, n = 4)
-    Dedup.writeSubstringIndex(corpus, "text", "doc_id", idxSeq, n = 4)
+    VersionedSubstring.write(corpus, "text", "doc_id", idx, n = 4)
+    VersionedSubstring.write(corpus, "text", "doc_id", idxSeq, n = 4)
     val batches = Seq(
       Seq((10L, s"$boiler ${toks(0 until 4, "p")}"), (11L, toks(0 until 9, "w"))),
       Seq((20L, s"${toks(0 until 9, "w")} tailA tailB tailC tailD"), (21L, toks(0 until 5, "r"))))
@@ -196,7 +196,7 @@ class SubstringDedupSpec extends AnyFunSuite with SparkTestBase {
       java.nio.file.Files.setLastModifiedTime(dst,
         java.nio.file.attribute.FileTime.fromMillis(1700000000000L + k * 60000L))
     }
-    Dedup.streamSubstringGate(
+    VersionedSubstring.streamGate(
       spark.readStream.schema(batches.head.schema)
         .option("maxFilesPerTrigger", 1).parquet(landing),
       "text", "doc_id", idx, cleanStream, ckpt)

@@ -39,7 +39,7 @@ class VersionedIndexSpec extends AnyFunSuite with SparkTestBase {
     asSet(Similarity.bruteForceTopK(queries, corpus, "embedding", "vec_id", k))
 
   private def centroidCount(root: String): Int =
-    Similarity.readIvfCentroids(spark,
+    VersionedIvf.readCentroids(spark,
       GenerationLog.requireCurrentDir(spark, root)).size
 
   private def exhaustive(root: String, queries: DataFrame, k: Int): Set[(Long, Long, Int)] =
@@ -122,7 +122,7 @@ class VersionedIndexSpec extends AnyFunSuite with SparkTestBase {
     val full = base.unionByName(extra)
     val queries = base.filter(col("vec_id") < 4)
     def exact(corpus: DataFrame, k: Int): Set[(Long, Long, Int)] = {
-      val cents = Similarity.readIvfCentroids(spark,
+      val cents = VersionedIvf.readCentroids(spark,
         GenerationLog.requireCurrentDir(spark, root))
       asSet(VersionedIvfPq.topKFromIndex(spark, root, queries, corpus,
         "embedding", "vec_id", k, nprobe = cents.size, rerank = 1000000))

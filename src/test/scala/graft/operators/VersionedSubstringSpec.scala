@@ -6,7 +6,8 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The generation-log (rename-free) substring-window index: gate parity
-  * with the in-place ExactSubstr gate, replay-after-later-batch identity,
+  * between a filesystem that refuses directory renames and the local
+  * filesystem (the "in-place" arm), replay-after-later-batch identity,
   * marker-only no-new-windows batches, and consolidation invariance — the
   * norename filesystem enforcing the rename-free claim throughout.
   */
@@ -50,14 +51,16 @@ class VersionedSubstringSpec extends AnyFunSuite with SparkTestBase {
     val cleanP = tmpDir("ssplainclean")
     NoDirRenameFileSystem.refused.set(0)
 
+    // the same verbs on both filesystems: rename refusal must not change
+    // what the gate cuts
     VersionedSubstring.write(base, "text", "doc_id", root, n = 8)
-    Dedup.writeSubstringIndex(base, "text", "doc_id", idxP, n = 8)
+    VersionedSubstring.write(base, "text", "doc_id", idxP, n = 8)
     Seq((b0, 0L), (b1, 1L)).foreach { case (b, id) =>
       VersionedSubstring.gateBatch(b, "text", "doc_id", root, cleanV, id)
-      Dedup.gateBatchAgainstSubstringIndex(b, "text", "doc_id", idxP, cleanP, id)
+      VersionedSubstring.gateBatch(b, "text", "doc_id", idxP, cleanP, id)
     }
     assert(cleaned(cleanV) === cleaned(cleanP),
-      "versioned substring gate diverged from the in-place gate")
+      "gate on the rename-refusing filesystem diverged from the local-filesystem gate")
     // the shared boilerplate must actually have been cut somewhere
     assert(cleaned(cleanV).values.exists(_ != null))
 

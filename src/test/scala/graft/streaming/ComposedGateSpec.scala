@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.SparkTestBase
-import graft.operators.{Dedup, Similarity}
+import graft.operators.{Dedup, VersionedIvf, VersionedNearDup, VersionedSubstring}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -40,9 +40,9 @@ class ComposedGateSpec extends AnyFunSuite with SparkTestBase {
     val landing = tmpDir("cgl")
     val ckpt = tmpDir("cgc")
     val base = Seq(row(1L, textA, e(0))).toDF("doc_id", "text", "embedding")
-    Dedup.writeNearDupIndex(base.select("doc_id", "text"), "text", "doc_id",
+    VersionedNearDup.write(base.select("doc_id", "text"), "text", "doc_id",
       textIdx, shingleSize = 3, numer = 1, denom = 2, bands = 32, rowsPerBand = 2)
-    Similarity.writeIvfIndex(base.select("doc_id", "embedding"), "embedding",
+    VersionedIvf.write(base.select("doc_id", "embedding"), "embedding",
       "doc_id", Seq(e(0)), annIdx) // k = 1: one cluster, gate is exact
     val batches = Seq(
       Seq(row(10L, textA + " extra", e(2)),        // text near-dup of index doc 1
@@ -80,22 +80,21 @@ class ComposedGateSpec extends AnyFunSuite with SparkTestBase {
       (spark.read.parquet(kept), Seq("doc_id", "ingest_batch")),
       (graft.operators.VersionedIvf.corpusView(spark, annIdx),
         Seq("vec_id", "cluster", "ingest_batch")),
-      (graft.operators.Dedup.nearDupIndexManifest(spark, textIdx),
+      (graft.operators.VersionedNearDup.liveManifest(spark, textIdx),
         Seq("doc", "keys")))
       .map { case (df, cols) =>
         val r = df.agg(count(lit(1)), sum(hash(cols.map(col): _*).cast("long"))).head
         (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
       }
     val before = hashes()
-    val cents = Similarity.readIvfCentroids(spark, annIdx)
+    val cents = VersionedIvf.readCentroids(spark, annIdx)
     ComposedGate.ingestBatch(batches(1), "text", "embedding", "doc_id",
       textIdx, annIdx, cents, textKept, kept, 1L, threshold = 0.9, nprobe = 1)
     assert(hashes() === before)
     // checkpoint is clean → the commit-log guard permits maintenance on both
     graft.streaming.CommitLog.requireAllCommitted(spark, ckpt, "test")
-    Similarity.consolidateIvfIndex(spark, annIdx, checkpointDir = Some(ckpt))
-    Dedup.compactNearDupIndex(spark, textIdx, consolidate = true,
-      checkpointDir = Some(ckpt))
+    VersionedIvf.consolidate(spark, annIdx, checkpointDir = Some(ckpt))
+    VersionedNearDup.consolidate(spark, textIdx, checkpointDir = Some(ckpt))
     assert(keptIds === Set(12L, 22L))
   }
 
@@ -108,15 +107,15 @@ class ComposedGateSpec extends AnyFunSuite with SparkTestBase {
     val boiler = w(0 until 10, "b")
     val base = Seq(row(1L, s"$boiler ${w(0 until 6, "c")}", e(0)))
       .toDF("doc_id", "text", "embedding")
-    Dedup.writeSubstringIndex(base.select("doc_id", "text"), "text", "doc_id",
+    VersionedSubstring.write(base.select("doc_id", "text"), "text", "doc_id",
       substrIdx, n = 4)
     // near-dup index over the substring-CLEANED base (what arrivals get)
     val cleanedBase = Dedup.substringClean(base.select("doc_id", "text"),
       "text", "doc_id", n = 4)
       .select(col("doc").as("doc_id"), col("cleaned_text").as("text"))
-    Dedup.writeNearDupIndex(cleanedBase, "text", "doc_id", textIdx,
+    VersionedNearDup.write(cleanedBase, "text", "doc_id", textIdx,
       shingleSize = 3, numer = 1, denom = 2, bands = 32, rowsPerBand = 2)
-    Similarity.writeIvfIndex(base.select("doc_id", "embedding"), "embedding",
+    VersionedIvf.write(base.select("doc_id", "embedding"), "embedding",
       "doc_id", Seq(e(0)), annIdx)
     val batches = Seq(
       Seq(
@@ -159,20 +158,20 @@ class ComposedGateSpec extends AnyFunSuite with SparkTestBase {
     // replay batch 1 through all three stages: every output identical
     def hashes(): Seq[(Long, Long)] = Seq(
       (spark.read.parquet(cleanDir), Seq("doc", "cleaned_text", "ingest_batch")),
-      (graft.operators.Dedup.substringIndexManifest(spark, substrIdx),
+      (graft.operators.VersionedSubstring.manifest(spark, substrIdx),
         Seq("h1", "h2")),
       (spark.read.parquet(textKept), Seq("doc_id", "text", "ingest_batch")),
       (spark.read.parquet(kept), Seq("doc_id", "ingest_batch")),
       (graft.operators.VersionedIvf.corpusView(spark, annIdx),
         Seq("vec_id", "cluster", "ingest_batch")),
-      (graft.operators.Dedup.nearDupIndexManifest(spark, textIdx),
+      (graft.operators.VersionedNearDup.liveManifest(spark, textIdx),
         Seq("doc", "keys")))
       .map { case (df, cols) =>
         val r = df.agg(count(lit(1)), sum(hash(cols.map(col): _*).cast("long"))).head
         (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
       }
     val before = hashes()
-    val cents = Similarity.readIvfCentroids(spark, annIdx)
+    val cents = VersionedIvf.readCentroids(spark, annIdx)
     ComposedGate.ingestBatch3(batches(1), "text", "embedding", "doc_id",
       substrIdx, textIdx, annIdx, cents, cleanDir, textKept, kept, 1L,
       threshold = 0.9, nprobe = 1)
