@@ -59,7 +59,7 @@ object Stress {
     var qualityStressModel: Option[Seq[(Long, Long)]] = None
     var streamDirHandle: Option[java.nio.file.Path] = None
     lazy val streamEventsDir: String = {
-      val dir = java.nio.file.Files.createTempDirectory("stress_events")
+      val dir = Fixtures.dir("stress_events")
       streamDirHandle = Some(dir)
       val t0 = System.nanoTime()
       events
@@ -194,14 +194,14 @@ object Stress {
       // corpus re-tokenization (the receipt for "probe cost independent of
       // the corpus" — compare probe numbers across 20×/50×)
       time(s"bm25_index_build_x$mult") {
-        val dir = java.nio.file.Files.createTempDirectory("stress_bm25")
+        val dir = Fixtures.dir("stress_bm25")
         bm25StressIdx = Some(dir.toString)
         operators.SparseSim.writeBm25Index(docs, "text", "doc_id", dir.toString)
         1L
       },
       time(s"bm25_index_probe_x$mult") {
         val idx = bm25StressIdx.getOrElse {
-          val dir = java.nio.file.Files.createTempDirectory("stress_bm25")
+          val dir = Fixtures.dir("stress_bm25")
           System.err.println("[stress] bm25_index_probe: building index (untimed op skipped)")
           operators.SparseSim.writeBm25Index(docs, "text", "doc_id", dir.toString)
           bm25StressIdx = Some(dir.toString); dir.toString
@@ -216,7 +216,7 @@ object Stress {
       // object-store trade: a generation swap is a full rewrite, never
       // quadratic, never rename-dependent)
       time(s"versioned_ivf_lifecycle_x$mult") {
-        val root = java.nio.file.Files.createTempDirectory("stress_vivf").toString
+        val root = Fixtures.dir("stress_vivf").toString
         versionedStressIdx = Some(root)
         val cents = operators.Similarity.trainIvfCentroids(
           embs, "embedding", "vec_id", k = 16)
@@ -233,7 +233,7 @@ object Stress {
       // with cluster size (corpus/16), not with lifecycle history
       time(s"versioned_ivf_probe_x$mult") {
         val root = versionedStressIdx.getOrElse {
-          val dir = java.nio.file.Files.createTempDirectory("stress_vivf").toString
+          val dir = Fixtures.dir("stress_vivf").toString
           System.err.println("[stress] versioned_ivf_probe: building index (untimed op skipped)")
           operators.VersionedIvf.write(embs, "embedding", "vec_id",
             operators.Similarity.trainIvfCentroids(embs, "embedding", "vec_id", k = 16), dir)
@@ -254,7 +254,7 @@ object Stress {
       // consolidation cadence contract (indexHealth.n_stream_segments is
       // the trigger).
       time(s"segment_fanout_x$mult") {
-        val root = java.nio.file.Files.createTempDirectory("stress_segfan").toString
+        val root = Fixtures.dir("stress_segfan").toString
         val base = embs.filter(pmod(col("vec_id"), lit(50)) === 0)
         val cents = operators.Similarity.trainIvfCentroids(
           base, "embedding", "vec_id", k = 16, iterations = 1)
@@ -339,7 +339,7 @@ object Stress {
         val lowent = docs.withColumn("text",
           concat(lit("shared boilerplate page body number "),
             pmod(col("doc_id"), lit(2000))))
-        val idx = java.nio.file.Files.createTempDirectory("stress_hidx").toString
+        val idx = Fixtures.dir("stress_hidx").toString
         operators.VersionedNearDup.write(lowent, "text", "doc_id", idx,
           3, 1, 2, 32, 2)
         val viol = operators.Dedup.nearDupIndexBucketStats(spark, idx)
@@ -500,7 +500,7 @@ object Stress {
       // an nprobe probe that reads only the probed clusters' partitions —
       // the ANN-at-rest shape (build cost amortizes; probes stay pruned)
       time(s"ivf_index_x$mult") {
-        val dir = java.nio.file.Files.createTempDirectory("stress_ivf")
+        val dir = Fixtures.dir("stress_ivf")
         try {
           val base = embs.filter(pmod(col("vec_id"), lit(4)) =!= 0)
           val batch = embs.filter(pmod(col("vec_id"), lit(4)) === 0)
@@ -509,11 +509,7 @@ object Stress {
           operators.VersionedIvf.append(batch, "embedding", "vec_id", dir.toString)
           operators.VersionedIvf.topKFromIndex(spark, dir.toString,
             embs.filter(col("vec_id") < 10), "embedding", "vec_id", k = 5, nprobe = 2).count()
-        } finally {
-          import scala.jdk.CollectionConverters._
-          java.nio.file.Files.walk(dir).sorted(java.util.Comparator.reverseOrder())
-            .iterator().asScala.foreach(p => java.nio.file.Files.deleteIfExists(p))
-        }
+        } finally Fixtures.delete(dir)
       },
       // retention delete at scale: build an index over the expanded corpus
       // (untimed separately on stderr), then delete a ~1% id slice — the
@@ -521,7 +517,7 @@ object Stress {
       // clusters rewrite, untouched partitions are never read or written,
       // so the cost tracks the hit clusters' volume, not the index
       time(s"ivf_delete_x$mult") {
-        val dir = java.nio.file.Files.createTempDirectory("stress_ivfdel")
+        val dir = Fixtures.dir("stress_ivfdel")
         try {
           val cents = operators.Similarity.trainIvfCentroids(
             embs, "embedding", "vec_id", k = 16, trainSample = 8)
@@ -548,11 +544,7 @@ object Stress {
           System.err.println(
             f"[stress] ivf_delete_x$mult one-cluster: ${(System.nanoTime() - t1) / 1e9}%.2f s, $deleted1 rows (1 cluster affected)")
           deleted + deleted1
-        } finally {
-          import scala.jdk.CollectionConverters._
-          java.nio.file.Files.walk(dir).sorted(java.util.Comparator.reverseOrder())
-            .iterator().asScala.foreach(p => java.nio.file.Files.deleteIfExists(p))
-        }
+        } finally Fixtures.delete(dir)
       },
       // mergeable CMS at scale: per-part sketches folded must estimate
       // identically to the sketch of the whole — the incremental-ingest
@@ -591,7 +583,7 @@ object Stress {
       // range read that must skip most files — the lakehouse scan-planning
       // loop, build included
       time(s"stats_prune_x$mult") {
-        val dir = java.nio.file.Files.createTempDirectory("stress_prune")
+        val dir = Fixtures.dir("stress_prune")
         try {
           load.Warehouse.writeRangeLayout(orders, dir.toString,
             Seq("o_orderkey"), partitions = 64)
@@ -602,11 +594,7 @@ object Stress {
           require(kept < total / 4,
             s"stats pruning too weak at ${mult}x: kept $kept of $total files")
           pruned.count()
-        } finally {
-          import scala.jdk.CollectionConverters._
-          java.nio.file.Files.walk(dir).sorted(java.util.Comparator.reverseOrder())
-            .iterator().asScala.foreach(p => java.nio.file.Files.deleteIfExists(p))
-        }
+        } finally Fixtures.delete(dir)
       },
       // CDC merge with tombstones at scale: same shuffle shape as upsert
       // (one union + one key shuffle + per-key top-1), deletes carried as
@@ -627,8 +615,8 @@ object Stress {
       // 256 debris files, bin-packed back shuffle-free (coalesce) — cost is
       // one read+write of the data, never a shuffle
       time(s"compact_x$mult") {
-        val in = java.nio.file.Files.createTempDirectory("stress_cmp_in")
-        val out = java.nio.file.Files.createTempDirectory("stress_cmp_out")
+        val in = Fixtures.dir("stress_cmp_in")
+        val out = Fixtures.dir("stress_cmp_out")
         try {
           orders.repartition(256).write.mode("overwrite").parquet(in.toString)
           val (before, after) = load.Warehouse.compactSmallFiles(
@@ -636,18 +624,13 @@ object Stress {
           require(after < before / 4,
             s"compaction too weak at ${mult}x: $before -> $after files")
           spark.read.parquet(out.toString).count()
-        } finally {
-          import scala.jdk.CollectionConverters._
-          Seq(in, out).foreach(d =>
-            java.nio.file.Files.walk(d).sorted(java.util.Comparator.reverseOrder())
-              .iterator().asScala.foreach(p => java.nio.file.Files.deleteIfExists(p)))
-        }
+        } finally Seq(in, out).foreach(Fixtures.delete)
       },
       // snapshot lifecycle at scale: two full-table commits (v1, v2 = the
       // CDC merge), a PINNED v1 read after the v2 commit, and a vacuum —
       // commit cost is one table write; version resolution is a dir listing
       time(s"snapshot_x$mult") {
-        val root = java.nio.file.Files.createTempDirectory("stress_snap")
+        val root = Fixtures.dir("stress_snap")
         try {
           val base = orders.withColumn("version", lit(1L))
           load.Warehouse.commitSnapshot(base, root.toString, 1)
@@ -662,11 +645,7 @@ object Stress {
           val v1rows = load.Warehouse.readSnapshot(spark, root.toString, Some(1)).count()
           require(load.Warehouse.vacuumSnapshots(spark, root.toString, 1) == Seq(1))
           v1rows
-        } finally {
-          import scala.jdk.CollectionConverters._
-          java.nio.file.Files.walk(root).sorted(java.util.Comparator.reverseOrder())
-            .iterator().asScala.foreach(p => java.nio.file.Files.deleteIfExists(p))
-        }
+        } finally Fixtures.delete(root)
       },
       // per-day HLL sketch tables over the expanded events, REQUIRED to
       // hold the merge contract: the union-of-slices estimate stays within
@@ -784,7 +763,7 @@ object Stress {
       // state — per-batch cost is (batch + state) key-shuffled; state is
       // O(distinct users), never O(events)
       time(s"stream_upsert_x$mult") {
-        val tmp = java.nio.file.Files.createTempDirectory("stress_supsert")
+        val tmp = Fixtures.dir("stress_supsert")
         try {
           val stream = streaming.EventStream.readEvents(spark, streamEventsDir,
             Map("maxFilesPerTrigger" -> "8"))
@@ -793,11 +772,7 @@ object Stress {
             stream, Seq("user_id"), Seq("ts", "event_id"),
             s"$tmp/state", s"$tmp/ckpt")
           spark.read.parquet(state.get).count()
-        } finally {
-          import scala.jdk.CollectionConverters._
-          java.nio.file.Files.walk(tmp).sorted(java.util.Comparator.reverseOrder())
-            .iterator().asScala.foreach(p => java.nio.file.Files.deleteIfExists(p))
-        }
+        } finally Fixtures.delete(tmp)
       },
       // SCD2 + point-in-time at scale: mult× deeper per-user change
       // histories — interval construction is one key-shuffle window, the
@@ -1082,9 +1057,9 @@ object Stress {
       // content-identical (hash compared), the exactly-once claim as a
       // measured receipt rather than a doc line
       time(s"stream_index_ingest_x$mult") {
-        val dir = java.nio.file.Files.createTempDirectory("stress_ivfstr")
-        val landing = java.nio.file.Files.createTempDirectory("stress_ivfland")
-        val ckpt = java.nio.file.Files.createTempDirectory("stress_ivfck")
+        val dir = Fixtures.dir("stress_ivfstr")
+        val landing = Fixtures.dir("stress_ivfland")
+        val ckpt = Fixtures.dir("stress_ivfck")
         try {
           val base = embs.filter(pmod(col("vec_id"), lit(2)) === 0)
           val arrivals = embs.filter(pmod(col("vec_id"), lit(2)) === 1)
@@ -1124,12 +1099,7 @@ object Stress {
               f"$ingestWall%.1f s; replayed batch left corpus content-identical " +
               s"(rows=${before._1}, hash=${before._2})")
           before._1
-        } finally {
-          import scala.jdk.CollectionConverters._
-          Seq(dir, landing, ckpt).foreach(d =>
-            java.nio.file.Files.walk(d).sorted(java.util.Comparator.reverseOrder())
-              .iterator().asScala.foreach(p => java.nio.file.Files.deleteIfExists(p)))
-        }
+        } finally Seq(dir, landing, ckpt).foreach(Fixtures.delete)
       },
       // VERDICT r9 #6: e_stream_join cost breakdown — the bench-shaped
       // interval join on the UNEXPANDED sf0.1 events, per-micro-batch wall
@@ -1173,8 +1143,8 @@ object Stress {
       // after later ones ran — kept table and manifest must stay
       // content-identical (the exactly-once claim, measured)
       time(s"stream_gate_x$mult") {
-        val idx = java.nio.file.Files.createTempDirectory("stress_ndidx")
-        val kept = java.nio.file.Files.createTempDirectory("stress_ndkept")
+        val idx = Fixtures.dir("stress_ndidx")
+        val kept = Fixtures.dir("stress_ndkept")
         try {
           val base = docs.filter(pmod(col("doc_id"), lit(2)) === 0)
           // half the arrivals are corpus near-dups (the suppression work),
@@ -1223,12 +1193,7 @@ object Stress {
               s"2-3: kept table + manifest content-identical " +
               s"(kept=${before._1._1}, sigs=${before._2._1})")
           before._1._1
-        } finally {
-          import scala.jdk.CollectionConverters._
-          Seq(idx, kept).foreach(d =>
-            java.nio.file.Files.walk(d).sorted(java.util.Comparator.reverseOrder())
-              .iterator().asScala.foreach(p => java.nio.file.Files.deleteIfExists(p)))
-        }
+        } finally Seq(idx, kept).foreach(Fixtures.delete)
       },
       // round-9 addition: the streaming SEMANTIC gate at mult× — IVF index
       // on half the expanded embeddings, the other half gated in 4 batches
@@ -1238,8 +1203,8 @@ object Stress {
       // batches ran. Receipt: per-batch wall + the probe shuffle bounded by
       // arrivals × nprobe clusters (never the index), replay content-identity
       time(s"semantic_gate_x$mult") {
-        val idx = java.nio.file.Files.createTempDirectory("stress_sgidx")
-        val kept = java.nio.file.Files.createTempDirectory("stress_sgkept")
+        val idx = Fixtures.dir("stress_sgidx")
+        val kept = Fixtures.dir("stress_sgkept")
         try {
           val base = embs.filter(pmod(col("vec_id"), lit(2)) === 0)
             .select(col("vec_id"), col("embedding"))
@@ -1283,12 +1248,7 @@ object Stress {
             f"[stress] semantic_gate_x$mult replay of batch 1 after batches " +
               s"2-3: kept + index content-identical (kept=${before._1._1})")
           before._1._1
-        } finally {
-          import scala.jdk.CollectionConverters._
-          Seq(idx, kept).foreach(d =>
-            java.nio.file.Files.walk(d).sorted(java.util.Comparator.reverseOrder())
-              .iterator().asScala.foreach(p => java.nio.file.Files.deleteIfExists(p)))
-        }
+        } finally Seq(idx, kept).foreach(Fixtures.delete)
       },
       // round-10 (VERDICT r9 #6): the COMPOSED ingest — text near-dup gate
       // → semantic gate stacked in ONE per-batch path over one arrival
@@ -1301,10 +1261,10 @@ object Stress {
       // tables (text kept, final kept, index corpus, signature manifest)
       // must stay content-identical
       time(s"composed_gate_x$mult") {
-        val textIdx = java.nio.file.Files.createTempDirectory("stress_cgt")
-        val annIdx = java.nio.file.Files.createTempDirectory("stress_cga")
-        val textKept = java.nio.file.Files.createTempDirectory("stress_cgtk")
-        val kept = java.nio.file.Files.createTempDirectory("stress_cgk")
+        val textIdx = Fixtures.dir("stress_cgt")
+        val annIdx = Fixtures.dir("stress_cga")
+        val textKept = Fixtures.dir("stress_cgtk")
+        val kept = Fixtures.dir("stress_cgk")
         try {
           val baseDocs = docs.filter(pmod(col("doc_id"), lit(2)) === 0)
           val baseEmb = embs.filter(pmod(col("vec_id"), lit(2)) === 0)
@@ -1367,12 +1327,7 @@ object Stress {
               s"text-kept/kept/index/manifest all content-identical " +
               s"(final kept=${before(1)._1}, stage-1 kept=${before.head._1})")
           before(1)._1
-        } finally {
-          import scala.jdk.CollectionConverters._
-          Seq(textIdx, annIdx, textKept, kept).foreach(d =>
-            java.nio.file.Files.walk(d).sorted(java.util.Comparator.reverseOrder())
-              .iterator().asScala.foreach(p => java.nio.file.Files.deleteIfExists(p)))
-        }
+        } finally Seq(textIdx, annIdx, textKept, kept).foreach(Fixtures.delete)
       },
       // round-13 (r12 VERDICT #7): the FOUR-stage composed gate at mult× —
       // classifier score gate → substring cut → near-dup gate → semantic
@@ -1389,7 +1344,7 @@ object Stress {
       time(s"composed4_gate_x$mult") {
         val dirs = Seq("stress_c4s", "stress_c4t", "stress_c4a", "stress_c4q",
           "stress_c4cl", "stress_c4tk", "stress_c4k")
-          .map(java.nio.file.Files.createTempDirectory(_))
+          .map(Fixtures.dir)
         val Seq(substrIdx, textIdx, annIdx, qKept, cleanD, textKept, kept) = dirs
         try {
           def junk(id: org.apache.spark.sql.Column) = concat_ws(" ",
@@ -1485,12 +1440,7 @@ object Stress {
               s"all five output tables content-identical " +
               s"(final kept=${before(3)._1})")
           before(3)._1
-        } finally {
-          import scala.jdk.CollectionConverters._
-          dirs.foreach(d =>
-            java.nio.file.Files.walk(d).sorted(java.util.Comparator.reverseOrder())
-              .iterator().asScala.foreach(p => java.nio.file.Files.deleteIfExists(p)))
-        }
+        } finally dirs.foreach(Fixtures.delete)
       },
       // round-10 (VERDICT r9 #5): trainFast at PRODUCTION depth — 30k
       // merges on a realistic Zipf vocabulary (log-uniform rank sampling ⇒
@@ -1553,7 +1503,7 @@ object Stress {
       // (allowed again post-purge). Receipt: purge wall + the two ingest
       // walls + deleted ids probe-visible after re-add
       time(s"ivf_purge_x$mult") {
-        val dir = java.nio.file.Files.createTempDirectory("stress_ivfpg")
+        val dir = Fixtures.dir("stress_ivfpg")
         try {
           val base = embs.filter(pmod(col("vec_id"), lit(4)) === 0)
           val cents = operators.Similarity.trainIvfCentroids(
@@ -1589,18 +1539,14 @@ object Stress {
               f"ingest with-tombstones=$withTomb%.1f s post-purge=$afterPurge%.1f s " +
               s"re-added=$back (all probe-visible)")
           back
-        } finally {
-          import scala.jdk.CollectionConverters._
-          java.nio.file.Files.walk(dir).sorted(java.util.Comparator.reverseOrder())
-            .iterator().asScala.foreach(p => java.nio.file.Files.deleteIfExists(p))
-        }
+        } finally Fixtures.delete(dir)
       },
       // round-10 (VERDICT r9 #3): the in-place RETRAIN at mult× — index on
       // a quarter of the expanded embeddings, retrain with a 1/8 training
       // sample under the whole-index _COMMIT swap. Receipt: retrain wall,
       // corpus row count invariant across the full rewrite, centroid count
       time(s"ivf_retrain_x$mult") {
-        val dir = java.nio.file.Files.createTempDirectory("stress_ivfrt")
+        val dir = Fixtures.dir("stress_ivfrt")
         try {
           val base = embs.filter(pmod(col("vec_id"), lit(4)) === 0)
           val cents = operators.Similarity.trainIvfCentroids(
@@ -1620,21 +1566,13 @@ object Stress {
               f"swapped in $wall%.1f s (16 centroids, 1/8 train sample), " +
               s"row count invariant")
           rowsAfter
-        } finally {
-          import scala.jdk.CollectionConverters._
-          java.nio.file.Files.walk(dir).sorted(java.util.Comparator.reverseOrder())
-            .iterator().asScala.foreach(p => java.nio.file.Files.deleteIfExists(p))
-        }
+        } finally Fixtures.delete(dir)
       }
     )
     val ran = results.flatten
     val qs = ran.map { case (k, v, _) => s"\"$k\":$v" }.mkString("{", ",", "}")
     println(s"""{"metric":"stress_total","value":${ran.map(_._2).sum},"unit":"sec","mult":$mult,"ops":$qs}""")
-    streamDirHandle.foreach { dir =>
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(dir).sorted(java.util.Comparator.reverseOrder())
-        .iterator().asScala.foreach(p => java.nio.file.Files.deleteIfExists(p))
-    }
+    streamDirHandle.foreach(Fixtures.delete)
     spark.stop()
   }
 }
