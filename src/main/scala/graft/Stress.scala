@@ -588,9 +588,13 @@ object Stress {
           load.Warehouse.writeRangeLayout(orders, dir.toString,
             Seq("o_orderkey"), partitions = 64)
           val manifest = load.Warehouse.statsManifest(spark, dir.toString, Seq("o_orderkey"))
-          val hi = 150000L * mult / 16 // ~1/16 of the key domain
+          // 1/16 of the expanded orders' own key range, whatever the scale
+          val range = orders.agg(min(col("o_orderkey")).cast("long"),
+            max(col("o_orderkey")).cast("long")).head()
+          val lo = range.getLong(0)
+          val hi = lo + (range.getLong(1) - lo) / 16
           val (pruned, kept, total) =
-            load.Warehouse.prunedRead(spark, manifest, "o_orderkey", 0L, hi)
+            load.Warehouse.prunedRead(spark, manifest, "o_orderkey", lo, hi)
           require(kept < total / 4,
             s"stats pruning too weak at ${mult}x: kept $kept of $total files")
           pruned.count()

@@ -60,11 +60,18 @@ object DcfSource {
     parsed.flatMap(_.items)
   }
 
+  /** All value labels across parsed files as one Dataset (the
+    * dhs_value_descs shape: the reference's per-file FlatValuesSpec rows,
+    * DCF_Parser.py:24-25, loaded by lib03_Update_Metadata.py:9-12).
+    */
   def allValues(parsed: Dataset[ParsedFile]): Dataset[ValueSpec] = {
     import parsed.sparkSession.implicits._
     parsed.flatMap(_.values)
   }
 
+  /** All `[Relation]` joins across parsed files as one Dataset (the
+    * reference's per-file RelationshipsSpec rows, DCF_Parser.py:537-645).
+    */
   def allRelations(parsed: Dataset[ParsedFile]): Dataset[RelationshipSpec] = {
     import parsed.sparkSession.implicits._
     parsed.flatMap(_.relations)

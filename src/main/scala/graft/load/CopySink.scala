@@ -3,17 +3,24 @@ package graft.load
 import java.sql.{Connection, DriverManager}
 import java.util.Properties
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.execution.datasources.jdbc.JdbcUtils
+import org.apache.spark.sql.jdbc.JdbcDialects
+import org.apache.spark.sql.types.{StringType, StructType}
 
 /** Postgres COPY-parity bulk sink (SURVEY.md §2.1 S11).
   *
   * The reference's single biggest hand-rolled optimization is streaming CSV
   * through `COPY ... FROM STDIN` instead of row INSERTs ("WAY faster", ref
-  * lib04_Update_Table_Data.py:417-434, lib03:255-264). The distributed
-  * equivalent: every partition opens its own connection and streams its rows
-  * through one COPY, rendered in Postgres TEXT format with the reference's
-  * `null=''` contract (empty string ⇔ NULL, SURVEY §1.4-4; ref lib04:432-434).
+  * lib04_Update_Table_Data.py:417-434, lib03:255-264). Here one row writer
+  * streams rows through one COPY per connection, rendered in Postgres TEXT
+  * format with the reference's `null=''` contract (empty string ⇔ NULL,
+  * SURVEY §1.4-4; ref lib04:432-434). The same writer runs in two places: on
+  * the driver, over one connection, for a frame whose rows are already in
+  * driver memory; and inside `foreachPartition`, one connection per
+  * partition, for a distributed frame.
   *
   * pgjdbc is not a compile-time dependency — the `CopyManager` is reached by
   * reflection from the live connection, so this compiles and tests against
@@ -138,7 +145,7 @@ object CopySink {
       conn.isWrapperFor(pg.asInstanceOf[Class[java.sql.Connection]])
     } catch { case _: ClassNotFoundException | _: java.sql.SQLException => false }
 
-  /** Stream the partition through one COPY via the reflected CopyManager. */
+  /** Stream the rows through one COPY via the reflected CopyManager. */
   private def copyPartition(
       conn: Connection, table: String, columns: Seq[String],
       rows: Iterator[Seq[Any]]): Unit = {
@@ -155,9 +162,10 @@ object CopySink {
   /** Batched prepared-INSERT fallback for non-Postgres drivers: same rows,
     * same null semantics (empty string stays distinct only if the target
     * engine distinguishes it — Postgres parity is the COPY path's job).
+    * NULLs bind with the column's JDBC type from [[nullTypes]].
     */
   private def insertPartition(
-      conn: Connection, table: String, columns: Seq[String],
+      conn: Connection, table: String, columns: Seq[String], nullTypes: Array[Int],
       rows: Iterator[Seq[Any]], batchSize: Int): Unit = {
     val sql = s"INSERT INTO ${tableRef(table)} (${columns.map(qcol).mkString(", ")}) " +
       s"VALUES (${columns.map(_ => "?").mkString(", ")})"
@@ -168,7 +176,7 @@ object CopySink {
         var i = 0
         while (i < vals.length) {
           vals(i) match {
-            case null      => st.setNull(i + 1, java.sql.Types.VARCHAR)
+            case null      => st.setNull(i + 1, nullTypes(i))
             case s: String => st.setString(i + 1, s)
             case other     => st.setObject(i + 1, other)
           }
@@ -182,45 +190,101 @@ object CopySink {
     } finally st.close()
   }
 
-  /** Append `df` by per-partition COPY (Postgres) or batched INSERT
-    * (anything else). The table must already exist — pair with
-    * [[DdlManager]] plans, which is also how the reference sequences it
-    * (DDL strictly before data, lib04:85-121 then 407-443).
+  /** The JDBC NULL type of each column: the one Spark's jdbc writer binds,
+    * except VARCHAR for strings. Derby's dialect binds a NULL string as
+    * CLOB, which Derby refuses for the VARCHAR(n) columns that
+    * `createTableColumnTypes` plans.
+    */
+  private def nullTypes(schema: StructType, url: String): Array[Int] = {
+    val dialect = JdbcDialects.get(url)
+    schema.fields.map(_.dataType match {
+      case StringType => java.sql.Types.VARCHAR
+      case dt => JdbcUtils.getJdbcType(dt, dialect).jdbcNullType
+    })
+  }
+
+  /** The row writer: COPY when `conn` is Postgres, batched INSERTs
+    * otherwise, in one transaction on `conn`. It is the only writer; it runs
+    * on the driver for a driver-resident frame and inside `foreachPartition`
+    * for a distributed one.
+    */
+  private def writeRows(
+      conn: Connection, table: String, columns: Seq[String], nullTypes: Array[Int],
+      rows: Iterator[Seq[Any]], batchSize: Int): Unit = {
+    conn.setAutoCommit(false)
+    try {
+      if (copyCapable(conn)) copyPartition(conn, table, columns, rows)
+      else insertPartition(conn, table, columns, nullTypes, rows, batchSize)
+      conn.commit()
+    } catch {
+      case NonFatal(e) =>
+        try conn.rollback() catch { case NonFatal(r) => e.addSuppressed(r) }
+        throw e
+    }
+  }
+
+  /** Append a driver-resident frame (`df.isLocal`) over `conn`: its rows are
+    * already in driver memory, so they go straight to [[writeRows]] with no
+    * Spark job. `columns` names the target columns in frame order (the
+    * frame's own names unless the caller resolved them against the table).
+    */
+  private[load] def appendLocal(
+      conn: Connection, df: DataFrame, url: String, table: String,
+      columns: Seq[String], batchSize: Int): Unit = {
+    checkCopyableSchema(df.schema)
+    tableRef(table)
+    val rows = df.collect()
+    if (rows.nonEmpty)
+      writeRows(conn, table, columns, nullTypes(df.schema, url),
+        rows.iterator.map(_.toSeq), batchSize)
+  }
+
+  /** Append `df` by COPY (Postgres) or batched INSERT (anything else). The
+    * table must already exist — pair with [[DdlManager]] plans, which is
+    * also how the reference sequences it (DDL strictly before data,
+    * lib04:85-121 then 407-443).
+    *
+    * A driver-resident frame is written on the driver over one connection
+    * ([[appendLocal]]); any other frame is written per partition, each
+    * partition over its own connection.
     */
   def append(
       df: DataFrame, url: String, table: String, props: Properties,
-      batchSize: Int = 10000, maxWriters: Int = 8): Unit = {
-    val schema: StructType = df.schema
-    checkCopyableSchema(schema)
-    tableRef(table) // fail on the driver, not per-partition
-    val columns = schema.fieldNames.toSeq
-    // repartition, NOT coalesce: coalesce folds the UPSTREAM stages into
-    // maxWriters tasks too, so an expensive lineage (shingling, feature
-    // math) would compute on 8 cores of a 64-core cluster before writing.
-    // The extra shuffle buys full upstream parallelism; only the write
-    // fan-out is bounded.
-    val bounded =
-      if (df.rdd.getNumPartitions > maxWriters) df.repartition(maxWriters) else df
-    // Properties is not serializable-friendly across closures; flatten
-    val propPairs = {
-      val it = props.stringPropertyNames().iterator()
-      val b = Seq.newBuilder[(String, String)]
-      while (it.hasNext) { val k = it.next(); b += k -> props.getProperty(k) }
-      b.result()
-    }
-    bounded.foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
-      if (rows.hasNext) {
-        val p = new Properties()
-        propPairs.foreach { case (k, v) => p.setProperty(k, v) }
-        val conn = DriverManager.getConnection(url, p)
-        try {
-          conn.setAutoCommit(false)
-          val asSeqs = rows.map(r => r.toSeq)
-          if (copyCapable(conn)) copyPartition(conn, table, columns, asSeqs)
-          else insertPartition(conn, table, columns, asSeqs, batchSize)
-          conn.commit()
-        } finally conn.close()
+      batchSize: Int = 10000, maxWriters: Int = 8): Unit =
+    if (df.isLocal) {
+      val conn = DriverManager.getConnection(url, props)
+      try appendLocal(conn, df, url, table, df.columns.toSeq, batchSize)
+      finally conn.close()
+    } else {
+      val schema: StructType = df.schema
+      checkCopyableSchema(schema)
+      tableRef(table) // fail on the driver, not per-partition
+      val columns = schema.fieldNames.toSeq
+      val nulls = nullTypes(schema, url)
+      // repartition, NOT coalesce: coalesce folds the UPSTREAM stages into
+      // maxWriters tasks too, so an expensive lineage (shingling, feature
+      // math) would compute on 8 cores of a 64-core cluster before writing.
+      // The extra shuffle buys full upstream parallelism; only the write
+      // fan-out is bounded.
+      val bounded =
+        if (df.rdd.getNumPartitions > maxWriters) df.repartition(maxWriters) else df
+      // Properties is not serializable-friendly across closures; flatten
+      val propPairs = {
+        val it = props.stringPropertyNames().iterator()
+        val b = Seq.newBuilder[(String, String)]
+        while (it.hasNext) { val k = it.next(); b += k -> props.getProperty(k) }
+        b.result()
+      }
+      // the closure must capture only these locals: a local def here would
+      // drag the (non-serializable) CopySink module into the task
+      bounded.foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
+        if (rows.hasNext) {
+          val p = new Properties()
+          propPairs.foreach { case (k, v) => p.setProperty(k, v) }
+          val conn = DriverManager.getConnection(url, p)
+          try writeRows(conn, table, columns, nulls, rows.map(_.toSeq), batchSize)
+          finally conn.close()
+        }
       }
     }
-  }
 }

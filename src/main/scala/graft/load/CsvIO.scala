@@ -2,7 +2,6 @@ package graft.load
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, expr, regexp_replace, when}
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** CSV source/sink with the reference's typing discipline.
   *
@@ -111,13 +110,6 @@ object CsvIO {
     }
     readAllString(spark, path, charset.name())
   }
-
-  /** Read a headerless CSV against an explicit column list (all string). */
-  def readWithColumns(spark: SparkSession, path: String, columns: Seq[String]): DataFrame =
-    spark.read
-      .schema(StructType(columns.map(c => StructField(c, StringType))))
-      .option("header", "false")
-      .csv(path)
 
   /** Write one table as a header CSV dataset. Spark's csv WRITER trims
     * leading/trailing whitespace by default — fatal here, because

@@ -122,6 +122,11 @@ object DdlManager {
     DdlPlan(perKey ++ covering)
   }
 
+  /** Drop the battery [[indexPlan]] creates (the DROP INDEX half of the
+    * reference's DDL sink, SURVEY.md §2.1 S14). Both covering names are
+    * always listed; `IF EXISTS` makes the ones a short key list never
+    * created harmless.
+    */
   def dropIndexPlan(table: String, keys: Seq[String]): DdlPlan = {
     val ks = keys.map(_.toLowerCase)
     val names = ks.map(k => s"idx_${indexStem(table)}_$k") ++

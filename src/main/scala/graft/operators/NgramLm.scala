@@ -45,9 +45,6 @@ object NgramLm {
       .select(col(idCol), explode(bigramPairs(col("tk"))).as("bg"))
       .select(col(idCol), col("bg.w1").as("w1"), col("bg.w2").as("w2"))
 
-  private def docBigrams(docs: DataFrame, textCol: String, idCol: String): DataFrame =
-    bigramsFromToks(tokenized(docs, textCol, idCol), idCol)
-
   /** Train bigram counts, context totals, and vocabulary size over `docs`.
     * Tokenization is [[TextOps.tokens]] (lowercased whitespace tokens) so
     * the model composes with the rest of the text stack.

@@ -69,8 +69,10 @@ object Organize {
     files.withColumn("surveyid",
       regexp_extract(element_at(split(col("path"), "/"), -1), "^(\\d+)\\.", 1))
 
-  /** List a landing directory as a DataFrame of paths (driver FS listing —
-    * at deployment scale this becomes the object-store inventory feed).
+  /** List a landing directory as a DataFrame of paths (the reference's
+    * directory scan, lib02:49-125: plain files only, no recursion; a missing
+    * directory lists as empty). Driver FS listing — at deployment scale this
+    * becomes the object-store inventory feed.
     */
   def listDir(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._

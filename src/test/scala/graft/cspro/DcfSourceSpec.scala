@@ -43,6 +43,48 @@ class DcfSourceSpec extends AnyFunSuite with SparkTestBase {
     assert(byCode("TDHR61").items.exists(i => i.name == "HV001" && i.len == 6))
   }
 
+  test("allValues/allRelations: every file's value labels and relations, as the parser emits them") {
+    val withExtras = dcf(3) +
+      """
+        |[ValueSet]
+        |Label=Cluster
+        |Name=HV001_VS1
+        |Value=1;Urban
+        |Value=2;Rural
+        |
+        |[Record]
+        |Label=Members
+        |Name=RECH1
+        |RecordTypeValue='H01'
+        |
+        |[Item]
+        |Label=Line number
+        |Name=HVIDX
+        |Start=19
+        |Len=2
+        |
+        |[Relation]
+        |Name=HHMembers
+        |Primary=RECH0
+        |Secondary=RECH1
+        |SecondaryLink=HVIDX
+        |""".stripMargin
+    val dir = Files.createTempDirectory("dcfs_vr")
+    Files.writeString(dir.resolve("511.BJHR71.DCF"), withExtras)
+    Files.writeString(dir.resolve("522.TDHR61.DCF"), dcf(6))
+    val parsed = DcfSource.parseFiles(spark, s"$dir/*.DCF")
+    val direct = DcfParser.parse(withExtras, "BJHR71")
+    assert(direct.values.map(v => (v.name, v.value, v.valueDesc)) ==
+      Seq(("HV001", "1", "Urban"), ("HV001", "2", "Rural")))
+    assert(direct.relations.map(r => (r.primaryTable, r.secondaryTable, r.secondaryLink)) ==
+      Seq(("RECH0", "RECH1", "HVIDX")))
+    // the Dataset verbs carry exactly the per-file parser output, fileCode
+    // stamped; the file with neither contributes nothing
+    assert(DcfSource.allValues(parsed).collect().toSet == direct.values.toSet)
+    assert(DcfSource.allRelations(parsed).collect().toSet == direct.relations.toSet)
+    assert(direct.values.forall(_.fileCode == "BJHR71"))
+  }
+
   test("schema merge over distributed parse: max width wins across surveys") {
     val dir = Files.createTempDirectory("dcfs2")
     Files.writeString(dir.resolve("511.BJHR71.DCF"), dcf(3))

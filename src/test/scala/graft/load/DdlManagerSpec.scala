@@ -59,6 +59,21 @@ class DdlManagerSpec extends AnyFunSuite {
     assert(indexPlan("t", Seq("a")).statements.size == 1)
   }
 
+  test("drop-index plan drops every index the battery creates, IF EXISTS") {
+    def created(keys: Seq[String]) =
+      indexPlan("analytics.REC21", keys).statements.map(_.split(" ")(5)).toSet
+    def dropped(keys: Seq[String]) =
+      dropIndexPlan("analytics.REC21", keys).statements.map(_.stripPrefix("DROP INDEX IF EXISTS ")).toSet
+    val three = Seq("CASEID", "surveyid", "bidx")
+    assert(created(three) == dropped(three))
+    assert(dropped(three) == Set("idx_analytics_rec21_caseid", "idx_analytics_rec21_surveyid",
+      "idx_analytics_rec21_bidx", "idx_analytics_rec21_all", "idx_analytics_rec21_parent"))
+    // one key creates no covering index; dropping the covering names anyway
+    // is harmless under IF EXISTS
+    assert(created(Seq("hhid")).subsetOf(dropped(Seq("hhid"))))
+    assert(dropIndexPlan("t", Seq("a")).statements.forall(_.startsWith("DROP INDEX IF EXISTS idx_t_")))
+  }
+
   test("delete survey slice escapes quotes") {
     assert(deleteSurveySliceSql("rech0", "it's") ==
       """DELETE FROM "rech0" WHERE "surveyid" = 'it''s'""")

@@ -2,7 +2,12 @@ package graft.load
 
 import java.util.Properties
 
+import scala.jdk.CollectionConverters._
+
 import graft.SparkTestBase
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** JDBC sink/source round-trip against embedded Derby (in Spark's jars) —
@@ -98,7 +103,6 @@ class JdbcSinkSpec extends AnyFunSuite with SparkTestBase {
 
   test("COPY rendering: binary as bytea hex; nested types refused up front") {
     assert(CopySink.renderCopyRow(Seq(Array[Byte](0x0a, 0x41, -1))) == "\\\\x0a41ff")
-    import org.apache.spark.sql.types._
     intercept[IllegalArgumentException] {
       CopySink.checkCopyableSchema(StructType(Seq(
         StructField("ok", StringType), StructField("bad", ArrayType(LongType)))))
@@ -128,8 +132,6 @@ class JdbcSinkSpec extends AnyFunSuite with SparkTestBase {
     // backslash, unicode multibyte, boolean/long/decimal rendering, and the
     // two-partition split (each partition is its own COPY stream; their
     // ordered concatenation is the golden).
-    import org.apache.spark.sql.types._
-    import org.apache.spark.sql.Row
     val schema = StructType(Seq(
       StructField("s", StringType), StructField("n", LongType),
       StructField("t", StringType), StructField("b", BinaryType),
@@ -170,6 +172,15 @@ class JdbcSinkSpec extends AnyFunSuite with SparkTestBase {
       "2024-01-02 03:04:05.678\t2024-01-02\t3.5\t42\t")
   }
 
+  private val nullableSchema = StructType(Seq(
+    StructField("surveyid", StringType), StructField("name", StringType),
+    StructField("n", LongType), StructField("k", IntegerType)))
+  private val nullableRows = Seq(
+    Row("811", "a", 1L, 10), Row("811", null, 2L, null),
+    Row("822", "c", null, 30), Row(null, null, null, null))
+  private val nullableWidths = JdbcSink.columnTypesClause(Seq(
+    DdlManager.ColumnDef("surveyid", 8), DdlManager.ColumnDef("name", 32)))
+
   test("CopySink falls back to batched INSERTs on a non-Postgres connection") {
     val t = "graft_copy_fallback"
     val conn = java.sql.DriverManager.getConnection(url, props)
@@ -177,15 +188,142 @@ class JdbcSinkSpec extends AnyFunSuite with SparkTestBase {
       val st = conn.createStatement()
       // quoted lowercase columns — the shape Spark's jdbc writer / DdlManager
       // create, which the sink's case-preserved quoting must match
-      try st.executeUpdate(s"""CREATE TABLE $t ("surveyid" VARCHAR(8), "name" VARCHAR(32))""")
+      try st.executeUpdate(s"""CREATE TABLE $t ("surveyid" VARCHAR(8), "name" VARCHAR(32), """ +
+        """"n" BIGINT, "k" INTEGER)""")
       finally st.close()
       assert(!CopySink.copyCapable(conn)) // Derby, no pgjdbc on classpath
     } finally conn.close()
-    val df = Seq(("711", "p1"), ("711", null: String), ("722", "p3"))
-      .toDF("surveyid", "name")
-    CopySink.append(df, url, t, props, batchSize = 2)
+    // a frame made from a local list is driver-resident (written on the
+    // driver); the parallelize input is distributed (written per partition,
+    // the path whose task closure must serialize). Same rows, NULLs in the
+    // VARCHAR, BIGINT and INTEGER columns: each must land once per path.
+    val local = spark.createDataFrame(nullableRows.asJava, nullableSchema)
+    val distributed = spark.createDataFrame(spark.sparkContext.parallelize(nullableRows, 2), nullableSchema)
+    assert(local.isLocal && !distributed.isLocal)
+    CopySink.append(local, url, t, props, batchSize = 2)
+    CopySink.append(distributed, url, t, props, batchSize = 2)
+    val back = spark.read.jdbc(url, t, props).collect().toSeq.map(_.toSeq)
+    assert(back.groupBy(identity).map { case (r, copies) => r -> copies.size } ==
+      nullableRows.map(r => r.toSeq -> 2).toMap)
+  }
+
+  // ----------------------------------------------- driver-resident appends
+
+  /** Spark jobs this thread starts while `body` runs. A fence job closes
+    * the window: the listener bus delivers events in order, so once the
+    * fence's JobEnd has arrived every earlier JobStart has too.
+    */
+  private def jobsRunBy(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"jdbcsink-${java.util.UUID.randomUUID()}"
+    val started = new java.util.concurrent.atomic.AtomicInteger()
+    val fenceEnded = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      @volatile private var fenceId = -1
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group) {
+          if (e.properties.getProperty("spark.job.description") == "fence") fenceId = e.jobId
+          else started.incrementAndGet()
+        }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (e.jobId == fenceId) fenceEnded.countDown()
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "body")
+      body
+      sc.setJobDescription("fence")
+      sc.parallelize(Seq(1), 1).count()
+      assert(fenceEnded.await(60, java.util.concurrent.TimeUnit.SECONDS), "fence job never ended")
+      started.get()
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  /** (TYPE_NAME, COLUMN_SIZE) per lowercased column, from DatabaseMetaData. */
+  private def columnTypes(table: String): Map[String, (String, Int)] = {
+    val conn = java.sql.DriverManager.getConnection(url, props)
+    try {
+      val rs = conn.getMetaData.getColumns(null, null, table.toUpperCase, null)
+      val b = Map.newBuilder[String, (String, Int)]
+      while (rs.next())
+        b += rs.getString("COLUMN_NAME").toLowerCase -> (rs.getString("TYPE_NAME") -> rs.getInt("COLUMN_SIZE"))
+      b.result()
+    } finally conn.close()
+  }
+
+  test("a driver-resident append runs no Spark job and creates the planned VARCHAR widths") {
+    val t = "graft_local_append"
+    val df = spark.createDataFrame(nullableRows.asJava, nullableSchema)
+    assert(df.isLocal)
+    val jobs = jobsRunBy(JdbcSink.append(df, url, t, props, columnTypes = Some(nullableWidths)))
+    assert(jobs == 0, s"driver-resident append ran $jobs Spark jobs")
+    // created the way Spark's writer creates it: createTableColumnTypes
+    // widths, not Derby's CLOB default for strings
+    val types = columnTypes(t)
+    assert(types("surveyid") == ("VARCHAR" -> 8))
+    assert(types("name") == ("VARCHAR" -> 32))
+    assert(types("n")._1 == "BIGINT" && types("k")._1 == "INTEGER")
+    // a second append finds the table and only inserts
+    assert(jobsRunBy(JdbcSink.append(df, url, t, props, columnTypes = Some(nullableWidths))) == 0)
+    assert(spark.read.jdbc(url, t, props).count() == 2L * nullableRows.size)
+    // without planned widths strings get the dialect's CLOB; NULLs land too
+    JdbcSink.append(df, url, t + "_clob", props)
+    assert(columnTypes(t + "_clob")("name")._1 == "CLOB")
+    assert(spark.read.jdbc(url, t + "_clob", props).filter("name IS NULL").count() == 2)
+  }
+
+  test("a driver-resident append matches an existing table's columns as the writer does") {
+    // unquoted DDL: Derby folds the columns to upper case, the frame's are lower
+    val t = "graft_local_existing"
+    val conn = java.sql.DriverManager.getConnection(url, props)
+    try {
+      val st = conn.createStatement()
+      try st.executeUpdate(s"CREATE TABLE $t (surveyid VARCHAR(8), name VARCHAR(32), n BIGINT, k INTEGER)")
+      finally st.close()
+    } finally conn.close()
+    val df = spark.createDataFrame(nullableRows.asJava, nullableSchema)
+    assert(jobsRunBy(JdbcSink.append(df, url, t, props)) == 0)
+    assert(spark.read.jdbc(url, t, props).collect().map(_.toSeq).toSet ==
+      nullableRows.map(_.toSeq).toSet)
+    val extra = spark.createDataFrame(java.util.List.of(Row("x")),
+      StructType(Seq(StructField("absent", StringType))))
+    intercept[IllegalArgumentException](JdbcSink.append(extra, url, t, props))
+  }
+
+  // Spark's writer binds a NULL string as CLOB on Derby, which Derby refuses
+  // for a VARCHAR(n) column; rows bound for the writer keep their strings
+  private val writerRows = Seq(
+    Row("811", "a", 1L, 10), Row("811", "b", 2L, null),
+    Row("822", "c", null, 30), Row("833", "d", null, null))
+
+  test("a distributed frame still appends through Spark's writer") {
+    val t = "graft_distributed_append"
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(writerRows, 2), nullableSchema)
+    assert(!df.isLocal)
+    val jobs = jobsRunBy(JdbcSink.append(df, url, t, props, columnTypes = Some(nullableWidths)))
+    assert(jobs >= 1, "a distributed append must run through the writer's job")
+    assert(columnTypes(t)("surveyid") == ("VARCHAR" -> 8))
+    assert(spark.read.jdbc(url, t, props).count() == writerRows.size)
+  }
+
+  test("driver-resident and distributed appends to one table read back identical rows") {
+    val t = "graft_mixed_append"
+    val withSide = StructType(StructField("side", StringType) +: nullableSchema.fields)
+    def tagged(side: String) = writerRows.map(r => Row.fromSeq(side +: r.toSeq))
+    val local = spark.createDataFrame(tagged("local").asJava, withSide)
+    val distributed = spark.createDataFrame(
+      spark.sparkContext.parallelize(tagged("dist"), 2), withSide)
+    val widths = Some("side VARCHAR(8), " + nullableWidths)
+    JdbcSink.append(local, url, t, props, columnTypes = widths)   // creates, no job
+    JdbcSink.append(distributed, url, t, props, columnTypes = widths) // the writer
     val back = spark.read.jdbc(url, t, props)
-    assert(back.count() == 3)
-    assert(back.filter(back("name").isNull).count() == 1)
+    def side(s: String): Seq[Seq[Any]] =
+      back.filter(back("side") === s).drop("side").collect().toSeq.map(_.toSeq)
+        .sortBy(_.mkString("|"))
+    assert(side("local") == side("dist"))
+    assert(side("local").toSet == writerRows.map(_.toSeq).toSet)
   }
 }

@@ -173,5 +173,13 @@ class JoinOpsSpec extends AnyFunSuite with SparkTestBase {
     assert(rows(1).getInt(1) == 2017 && rows(1).getInt(2) == 6)
     assert(rows(2).getInt(0) == 1513 && rows(2).getInt(3) == 0)
     assert(rows(1).getInt(3) == (1513 - ((2017 - 1900) * 12 + 6)) / 12)
+    // cmcToDate: the first day of the CMC month (cmc = months since
+    // January 1900, doc/Data_Format.md); inverse of dateToCmc on that day
+    val dates = Seq(1, 12, 13, 1213, 1513).toDF("cmc")
+      .select(col("cmc"), cmcToDate(col("cmc")).as("d"),
+        dateToCmc(cmcToDate(col("cmc"))).as("back")).collect()
+      .map(r => r.getInt(0) -> (r.getDate(1).toString, r.getInt(2))).toMap
+    assert(dates == Map(1 -> ("1900-01-01", 1), 12 -> ("1900-12-01", 12),
+      13 -> ("1901-01-01", 13), 1213 -> ("2001-01-01", 1213), 1513 -> ("2026-01-01", 1513)))
   }
 }

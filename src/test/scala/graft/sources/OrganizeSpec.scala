@@ -57,4 +57,18 @@ class OrganizeSpec extends AnyFunSuite with SparkTestBase {
       .map(r => r.getString(0) -> r.getString(1)).toMap
     assert(ids("/x/511.BJHR71.dat") == "511" && ids("/x/readme.txt") == "")
   }
+
+  test("listDir lists plain files only, feeds routing, and a missing dir is empty") {
+    val tmp = java.nio.file.Files.createTempDirectory("org3").toFile
+    java.nio.file.Files.writeString(new File(tmp, "511.BJHR71.DCF").toPath, "x")
+    java.nio.file.Files.writeString(new File(tmp, "511.BJHR71.DAT").toPath, "x")
+    new File(tmp, "staging").mkdir() // a subdirectory is not a landed file
+    java.nio.file.Files.writeString(new File(tmp, "staging/522.TDHR61.DCF").toPath, "x")
+    val listed = Organize.listDir(spark, tmp.getPath)
+    assert(listed.columns.toSeq == Seq("path"))
+    val routes = Organize.routeByExtension(listed).collect()
+      .map(r => new File(r.getString(0)).getName -> r.getString(2)).toMap
+    assert(routes == Map("511.BJHR71.DCF" -> "dcf", "511.BJHR71.DAT" -> "dat"))
+    assert(Organize.listDir(spark, new File(tmp, "absent").getPath).count() == 0)
+  }
 }
