@@ -8,20 +8,12 @@ import org.apache.spark.sql.SparkSession
   * only measure the cross join, not the engine.
   */
 object Bench {
-  /** Validation-only oracles, excluded from throughput measurement: all
-    * build on the O(n²) brute-force pair generation whose only purpose is
-    * anchoring the LSH paths to an exact oracle at small scale. Queries
-    * named `*_contract` (the verify-only siblings of the production
-    * operators, VERDICT r5 #4) are excluded the same way via
-    * [[benchExcluded]] — they measure the verification harness, not the
-    * engine, and their cost would make per-query history incomparable.
+  /** True for the queries Bench does not time: the `_contract` rows and the
+    * brute-force validation oracles (see [[graft.queries.Role]]). They
+    * measure the verification harness, not the engine, and their cost
+    * would make per-query history incomparable.
     */
-  val ValidationOnly: Set[String] =
-    Set("d_jaccard_brute", "d_jaccard_char", "d_dup_clusters", "d_embed_brute",
-      "d_semantic_keepers")
-
-  def benchExcluded(name: String): Boolean =
-    ValidationOnly.contains(name) || name.endsWith("_contract")
+  def benchExcluded(name: String): Boolean = !SparkEntry.timed.contains(name)
 
   /** Self-calibration sentinels (r11 verdict #2): two FIXED-WORK probes —
     * one CPU-bound (codegen hash-agg over a generated range, no I/O), one
@@ -73,6 +65,10 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    // SPARK_GRAFT_BENCH_ONLY=q1,q2 narrows to named queries (perf triage);
+    // an unknown name fails here, before the session starts
+    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
+      .map(v => SparkEntry.select(v.split(",").map(_.trim).filter(_.nonEmpty)))
     val spark = GraftSession.localFromEnv()
     // steady-state warmup: JIT/codegen compile paths and parquet footers,
     // so the first measured query doesn't absorb session start-up
@@ -99,10 +95,7 @@ object Bench {
     // success); all-runs-failed reports -1.
     val runs = math.max(1,
       scala.util.Try(sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "2").toInt).getOrElse(2))
-    // SPARK_GRAFT_BENCH_ONLY=q1,q2 narrows to named queries (perf triage);
     // SPARK_GRAFT_BENCH_EXPLAIN=1 dumps each formatted plan to stderr first
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     val explain = sys.env.get("SPARK_GRAFT_BENCH_EXPLAIN").contains("1")
     val (cpuStart, ioStart) = calibrate(spark)
     System.err.println(f"[bench] calibration start: cpu=$cpuStart%.2f s io=$ioStart%.2f s")

@@ -5,9 +5,9 @@ import org.apache.spark.sql.functions._
 
 /** Dev triage main: measure ANN recall@k vs brute force for the approximate
   * paths at each shipped SF — the numbers behind the committed recall floors
-  * in SparkEntry (re-run after a dataset regeneration before trusting the
-  * `_contract` gates; floors must sit BELOW every measured value with
-  * headroom). Prints one line per (sf, path).
+  * in [[graft.queries.SimilarityQueries]] (re-run after a dataset
+  * regeneration before trusting the `_contract` gates; floors must sit
+  * BELOW every measured value with headroom). Prints one line per (sf, path).
   */
 object RecallProbe {
   def main(args: Array[String]): Unit = {

@@ -10,7 +10,7 @@ object Verify {
     // optional name filter for the dev loop (check_oracle.py skips oracle
     // entries with no result dir, so a partial dump still compares cleanly);
     // the driver passes exactly two args and gets the full set
-    val only = args.drop(2).toSet
+    val only = SparkEntry.select(args.drop(2))
     // benchOnly names are timing-only faces of operators whose correctness
     // gate is the `_contract` sibling (engine-specific raw outputs have no
     // DuckDB-expressible hash oracle) — dumping them would only re-create

@@ -255,36 +255,41 @@ object CopySink {
       val conn = DriverManager.getConnection(url, props)
       try appendLocal(conn, df, url, table, df.columns.toSeq, batchSize)
       finally conn.close()
-    } else {
-      val schema: StructType = df.schema
-      checkCopyableSchema(schema)
-      tableRef(table) // fail on the driver, not per-partition
-      val columns = schema.fieldNames.toSeq
-      val nulls = nullTypes(schema, url)
-      // repartition, NOT coalesce: coalesce folds the UPSTREAM stages into
-      // maxWriters tasks too, so an expensive lineage (shingling, feature
-      // math) would compute on 8 cores of a 64-core cluster before writing.
-      // The extra shuffle buys full upstream parallelism; only the write
-      // fan-out is bounded.
-      val bounded =
-        if (df.rdd.getNumPartitions > maxWriters) df.repartition(maxWriters) else df
-      // Properties is not serializable-friendly across closures; flatten
-      val propPairs = {
-        val it = props.stringPropertyNames().iterator()
-        val b = Seq.newBuilder[(String, String)]
-        while (it.hasNext) { val k = it.next(); b += k -> props.getProperty(k) }
-        b.result()
-      }
-      // the closure must capture only these locals: a local def here would
-      // drag the (non-serializable) CopySink module into the task
-      bounded.foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
-        if (rows.hasNext) {
-          val p = new Properties()
-          propPairs.foreach { case (k, v) => p.setProperty(k, v) }
-          val conn = DriverManager.getConnection(url, p)
-          try writeRows(conn, table, columns, nulls, rows.map(_.toSeq), batchSize)
-          finally conn.close()
-        }
+    } else appendPartitions(df, url, table, props, df.columns.toSeq, batchSize, maxWriters)
+
+  /** Append a distributed frame per partition, each partition over its own
+    * connection, into `columns` (the target names in frame order).
+    */
+  private[load] def appendPartitions(
+      df: DataFrame, url: String, table: String, props: Properties,
+      columns: Seq[String], batchSize: Int, maxWriters: Int): Unit = {
+    checkCopyableSchema(df.schema)
+    tableRef(table) // fail on the driver, not per-partition
+    val nulls = nullTypes(df.schema, url)
+    // repartition, NOT coalesce: coalesce folds the UPSTREAM stages into
+    // maxWriters tasks too, so an expensive lineage (shingling, feature
+    // math) would compute on 8 cores of a 64-core cluster before writing.
+    // The extra shuffle buys full upstream parallelism; only the write
+    // fan-out is bounded.
+    val bounded =
+      if (df.rdd.getNumPartitions > maxWriters) df.repartition(maxWriters) else df
+    // Properties is not serializable-friendly across closures; flatten
+    val propPairs = {
+      val it = props.stringPropertyNames().iterator()
+      val b = Seq.newBuilder[(String, String)]
+      while (it.hasNext) { val k = it.next(); b += k -> props.getProperty(k) }
+      b.result()
+    }
+    // the closure must capture only these locals: a local def here would
+    // drag the (non-serializable) CopySink module into the task
+    bounded.foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
+      if (rows.hasNext) {
+        val p = new Properties()
+        propPairs.foreach { case (k, v) => p.setProperty(k, v) }
+        val conn = DriverManager.getConnection(url, p)
+        try writeRows(conn, table, columns, nulls, rows.map(_.toSeq), batchSize)
+        finally conn.close()
       }
     }
+  }
 }

@@ -10,22 +10,20 @@ import org.apache.spark.sql.execution.datasources.jdbc.{JDBCOptions, JdbcOptions
 import org.apache.spark.sql.jdbc.JdbcDialects
 
 /** JDBC data sink: the reference's load path (COPY/INSERT append, survey-
-  * slice idempotence) on Spark's jdbc writer (SURVEY.md §2.1 S10-S13).
+  * slice idempotence, SURVEY.md §2.1 S10-S13).
   *
-  * - Driver-resident rows (`df.isLocal`: a frame made by `createDataFrame`
-  *   from a local list, such as the DCF parser's spec and value rows) are
-  *   written on the
-  *   driver, over one connection, in one transaction, through
-  *   [[CopySink]]'s row writer. The table is created first when missing, by
-  *   the calls Spark's writer makes (`JdbcUtils.tableExists`, then
-  *   `JdbcUtils.createTable` with `createTableColumnTypes`). Such rows never
-  *   become a Spark job: through `df.write.jdbc` each append cost one job of
-  *   four tasks, four connections and 110-190 ms for a few hundred rows.
-  * - Distributed frames keep `df.write.jdbc` with a tuned `batchsize`: each
-  *   partition writes concurrently over its own connection. On Postgres they
-  *   stream per-partition `COPY ... FROM STDIN` through [[CopySink]] instead
-  *   (the reference's "WAY faster" load, lib04:417-434, distributed), after
-  *   the same create-if-missing step on the driver.
+  * - Every append runs the create-if-missing step on the driver first,
+  *   with the calls Spark's writer makes (`JdbcUtils.tableExists`, then
+  *   `JdbcUtils.createTable` with `createTableColumnTypes`), and resolves
+  *   the target columns the way the writer does.
+  * - The rows then go through [[CopySink]]'s row writer: COPY on Postgres
+  *   (the reference's "WAY faster" load, lib04:417-434), batched INSERTs
+  *   elsewhere. Driver-resident rows (`df.isLocal`: a frame made by
+  *   `createDataFrame` from a local list, such as the DCF parser's spec and
+  *   value rows) are written on the driver over one connection and never
+  *   become a Spark job, which for a few hundred rows would cost four tasks,
+  *   four connections and 110-190 ms. Any other frame is written per
+  *   partition, each over its own connection, in one job.
   * - `maxWriters` caps writer concurrency: a thousand executors opening a
   *   thousand connections is a DB outage, not a fast load.
   * - Idempotent per-survey reload = driver-side DELETE of the slice, then
@@ -36,16 +34,13 @@ object JdbcSink {
 
   /** Append a frame, creating the table when it is missing.
     *
-    * A driver-resident frame (`df.isLocal`) runs no Spark job: one driver
-    * connection checks for the table, creates it the way Spark's writer
-    * would, and inserts the rows in one transaction (COPY on Postgres,
-    * batched INSERTs elsewhere). This is the catalog path — the parsed spec
-    * and value rows of every file — and the job it no longer launches was
-    * most of its cost (four tasks and four connections per append).
-    *
-    * A distributed frame keeps Spark's writer: `df.write.jdbc` with a tuned
-    * `batchsize`, or on Postgres the create-if-missing step followed by
-    * per-partition `COPY ... FROM STDIN` streams ([[CopySink.append]]).
+    * One driver connection checks for the table, creates it the way Spark's
+    * writer would, and resolves the target columns. A driver-resident frame
+    * (`df.isLocal`) is then inserted over that connection in one
+    * transaction and runs no Spark job: this is the catalog path — the
+    * parsed spec and value rows of every file. Any other frame is written
+    * per partition into the resolved columns ([[CopySink]]), so a NULL
+    * string binds as VARCHAR on every path.
     *
     * `columnTypes` feeds Spark's `createTableColumnTypes`: pass the
     * DdlManager-planned VARCHAR widths so a created table gets real
@@ -57,24 +52,15 @@ object JdbcSink {
       batchSize: Int = 10000, maxWriters: Int = 8,
       columnTypes: Option[String] = None): Unit = {
     val local = df.isLocal
-    if (local || url.startsWith("jdbc:postgresql")) {
-      val options = writeOptions(url, table, props, columnTypes)
-      val conn = JdbcDialects.get(url).createConnectionFactory(options)(-1)
+    val options = writeOptions(url, table, props, columnTypes)
+    val conn = JdbcDialects.get(url).createConnectionFactory(options)(-1)
+    val columns =
       try {
         val columns = createIfMissing(conn, df, options)
         if (local) CopySink.appendLocal(conn, df, url, table, columns, batchSize)
+        columns
       } finally conn.close()
-      if (!local) CopySink.append(df, url, table, props, batchSize, maxWriters)
-    } else {
-      // repartition, not coalesce — see CopySink.append: coalesce would
-      // throttle the upstream compute to maxWriters tasks as well
-      val bounded =
-        if (df.rdd.getNumPartitions > maxWriters) df.repartition(maxWriters) else df
-      val w = bounded.write.mode(SaveMode.Append)
-        .option("batchsize", batchSize.toString)
-      columnTypes.fold(w)(ct => w.option("createTableColumnTypes", ct))
-        .jdbc(url, table, props)
-    }
+    if (!local) CopySink.appendPartitions(df, url, table, props, columns, batchSize, maxWriters)
   }
 
   /** The writer options `df.write.jdbc(url, table, props)` would build. */

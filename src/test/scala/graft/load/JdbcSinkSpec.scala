@@ -275,7 +275,7 @@ class JdbcSinkSpec extends AnyFunSuite with SparkTestBase {
     assert(spark.read.jdbc(url, t + "_clob", props).filter("name IS NULL").count() == 2)
   }
 
-  test("a driver-resident append matches an existing table's columns as the writer does") {
+  test("an append matches an existing table's columns as the writer does") {
     // unquoted DDL: Derby folds the columns to upper case, the frame's are lower
     val t = "graft_local_existing"
     val conn = java.sql.DriverManager.getConnection(url, props)
@@ -286,27 +286,34 @@ class JdbcSinkSpec extends AnyFunSuite with SparkTestBase {
     } finally conn.close()
     val df = spark.createDataFrame(nullableRows.asJava, nullableSchema)
     assert(jobsRunBy(JdbcSink.append(df, url, t, props)) == 0)
-    assert(spark.read.jdbc(url, t, props).collect().map(_.toSeq).toSet ==
-      nullableRows.map(_.toSeq).toSet)
+    // a distributed frame lands in the same resolved upper-case columns
+    val distributed = spark.createDataFrame(spark.sparkContext.parallelize(nullableRows, 2), nullableSchema)
+    assert(jobsRunBy(JdbcSink.append(distributed, url, t, props)) == 1)
+    val back = spark.read.jdbc(url, t, props).collect().toSeq.map(_.toSeq)
+    assert(back.groupBy(identity).map { case (r, copies) => r -> copies.size } ==
+      nullableRows.map(r => r.toSeq -> 2).toMap)
     val extra = spark.createDataFrame(java.util.List.of(Row("x")),
       StructType(Seq(StructField("absent", StringType))))
     intercept[IllegalArgumentException](JdbcSink.append(extra, url, t, props))
   }
 
-  // Spark's writer binds a NULL string as CLOB on Derby, which Derby refuses
-  // for a VARCHAR(n) column; rows bound for the writer keep their strings
+  // the NULL name: Spark's own jdbc writer binds a NULL string as CLOB on
+  // Derby, which Derby refuses for a VARCHAR(n) column
   private val writerRows = Seq(
     Row("811", "a", 1L, 10), Row("811", "b", 2L, null),
-    Row("822", "c", null, 30), Row("833", "d", null, null))
+    Row("822", "c", null, 30), Row("833", "d", null, null),
+    Row("844", null, 4L, 40))
 
-  test("a distributed frame still appends through Spark's writer") {
+  test("a distributed frame appends per partition in one Spark job") {
     val t = "graft_distributed_append"
     val df = spark.createDataFrame(spark.sparkContext.parallelize(writerRows, 2), nullableSchema)
     assert(!df.isLocal)
     val jobs = jobsRunBy(JdbcSink.append(df, url, t, props, columnTypes = Some(nullableWidths)))
-    assert(jobs >= 1, "a distributed append must run through the writer's job")
+    assert(jobs == 1, s"a distributed append ran $jobs Spark jobs")
     assert(columnTypes(t)("surveyid") == ("VARCHAR" -> 8))
-    assert(spark.read.jdbc(url, t, props).count() == writerRows.size)
+    assert(columnTypes(t)("name") == ("VARCHAR" -> 32))
+    assert(spark.read.jdbc(url, t, props).collect().map(_.toSeq).toSet ==
+      writerRows.map(_.toSeq).toSet)
   }
 
   test("driver-resident and distributed appends to one table read back identical rows") {
@@ -318,7 +325,7 @@ class JdbcSinkSpec extends AnyFunSuite with SparkTestBase {
       spark.sparkContext.parallelize(tagged("dist"), 2), withSide)
     val widths = Some("side VARCHAR(8), " + nullableWidths)
     JdbcSink.append(local, url, t, props, columnTypes = widths)   // creates, no job
-    JdbcSink.append(distributed, url, t, props, columnTypes = widths) // the writer
+    JdbcSink.append(distributed, url, t, props, columnTypes = widths) // per partition
     val back = spark.read.jdbc(url, t, props)
     def side(s: String): Seq[Seq[Any]] =
       back.filter(back("side") === s).drop("side").collect().toSeq.map(_.toSeq)
