@@ -225,7 +225,7 @@ object Stress {
           embs.filter(pmod(col("vec_id"), lit(97)) === 0).select(col("vec_id")),
           "vec_id")
         operators.VersionedIvf.consolidate(spark, root)
-        operators.VersionedIvf.vacuum(spark, root, ttlMs = 0L)
+        operators.GenerationLog.vacuum(spark, root, ttlMs = 0L)
         1L
       },
       // ...while the probe stays partition-pruned to nprobe clusters of the

@@ -1,17 +1,9 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
-
-/** Dev-only stage/job tracing for perf triage, all gated on `GRAFT_TRACE`
-  * (same switch the alt-star round trace uses) so production runs pay one
-  * env lookup and nothing else.
-  *
-  *  - [[t]] wraps a named phase and prints its wall time;
-  *  - [[installJobTrace]] registers a listener that prints every Spark
-  *    job's id, duration and submission callsite — the fast way to see how
-  *    many actions a "single" operator really runs and which one is slow
-  *    when the UI is disabled (the bench/harness shape).
+/** Dev-only phase tracing for perf triage, gated on `GRAFT_TRACE` (same
+  * switch the alt-star round trace uses) so production runs pay one env
+  * lookup and nothing else: [[t]] wraps a named phase and prints its wall
+  * time.
   */
 object Trace {
   val enabled: Boolean = sys.env.contains("GRAFT_TRACE")
@@ -24,27 +16,4 @@ object Trace {
       finally System.err.println(
         f"[trace] $label%-40s ${(System.nanoTime() - t0) / 1e9}%7.3f s")
     }
-
-  def installJobTrace(spark: SparkSession): Unit = {
-    if (!enabled) return
-    val starts = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = {
-        // callSite.short is absent on SQL-execution jobs; the final stage's
-        // NAME (e.g. "parquet at Dedup.scala:913") attributes the action
-        val site = Option(js.properties)
-          .flatMap(p => Option(p.getProperty("callSite.short")))
-          .orElse(js.stageInfos.lastOption.map(si =>
-            s"${si.name} [${js.stageInfos.length}st/${js.stageInfos.map(_.numTasks).sum}tk]"))
-          .getOrElse("?")
-        starts.put(js.jobId, (System.nanoTime(), site))
-      }
-      override def onJobEnd(je: SparkListenerJobEnd): Unit = {
-        Option(starts.remove(je.jobId)).foreach { case (t0, site) =>
-          System.err.println(
-            f"[trace] job ${je.jobId}%4d ${(System.nanoTime() - t0) / 1e9}%7.3f s  $site")
-        }
-      }
-    })
-  }
 }

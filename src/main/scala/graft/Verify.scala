@@ -7,9 +7,10 @@ object Verify {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: Verify <sfDir> <outDir> [queryName...]")
     val sfDir = args(0); val outDir = args(1)
-    // optional name filter for the dev loop (check_oracle.py skips oracle
-    // entries with no result dir, so a partial dump still compares cleanly);
-    // the driver passes exactly two args and gets the full set
+    // optional name filter for the dev loop: a partial dump's
+    // oracle_sql.json holds the selected names only, so check_oracle.py
+    // compares it cleanly; the driver passes exactly two args and gets the
+    // full set
     val only = SparkEntry.select(args.drop(2))
     // benchOnly names are timing-only faces of operators whose correctness
     // gate is the `_contract` sibling (engine-specific raw outputs have no
@@ -75,7 +76,8 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
+    val json = SparkEntry.oracleSql.view
+      .filterKeys(n => only.isEmpty || only.contains(n))
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // explicit machine-readable error ledger (empty object when all green) —

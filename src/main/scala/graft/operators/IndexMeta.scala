@@ -57,32 +57,33 @@ private[graft] object IndexMeta {
   /** [[cachedParams]] gated on `dir` actually being a committed generation
     * dir: a raw root path (no generation log) has no immutability contract,
     * so it is re-read every time (r14 ADVICE: the stale-params gating
-    * hazard). A real generation dir is additionally keyed on its COMMIT
-    * MARKER's (mtime, length): generation numbering restarts when an index
-    * root is wiped and rebuilt at the same path in one JVM (stageNext maxes
-    * over existing children, so a wiped root reuses `_generations/1`), and
-    * the marker identity distinguishes the incarnations — one driver-side
-    * `getFileStatus` per lookup, never a Spark job. An uncommitted (or
-    * unreachable) marker skips the cache entirely.
+    * hazard). A real generation dir is keyed on its commit marker
+    * ([[cachedByMarker]]).
     */
   def cachedParamsIfGeneration[T <: AnyRef](
       spark: SparkSession, kind: String, dir: String)(load: => T): T = {
     val i = dir.lastIndexOf("/_generations/")
-    if (i < 0) return load
-    val marker = dir.substring(0, i) + "/_commits/" +
-      dir.substring(i + "/_generations/".length)
-    val mp = new org.apache.hadoop.fs.Path(marker)
-    val st =
-      try {
-        val fs = mp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (fs.exists(mp)) Some(fs.getFileStatus(mp)) else None
-      } catch { case _: Throwable => None }
-    st match {
-      case Some(s) =>
-        cachedParams(kind, s"$dir@${s.getModificationTime}_${s.getLen}")(load)
+    if (i < 0) load
+    else cachedByMarker(spark, kind, dir, dir.substring(0, i) + "/_commits/" +
+      dir.substring(i + "/_generations/".length))(load)
+  }
+
+  /** [[cachedParams]] for the immutable `dir` that the commit `marker`
+    * published, keyed on the marker's BYTES: ids restart when an index root
+    * is wiped and rebuilt at the same path in one JVM (a wiped root reuses
+    * `_generations/1`, a BM25 root segment 1), and mtimes can repeat, but
+    * every marker carries its own random token
+    * ([[GenerationLog.writeMarker]]) — one driver-side small-file read per
+    * lookup, never a Spark job. An uncommitted (or unreadable) marker skips
+    * the cache entirely.
+    */
+  def cachedByMarker[T <: AnyRef](
+      spark: SparkSession, kind: String, dir: String, marker: String)(load: => T): T =
+    (try Some(GenerationLog.readMarker(spark, marker))
+    catch { case _: Throwable => None }) match {
+      case Some(body) => cachedParams(kind, s"$dir@$body")(load)
       case None => load
     }
-  }
 
   /** Total row count across the parquet part-files directly under `dir`,
     * from file footers only (no Spark job; the files a gate batch writes

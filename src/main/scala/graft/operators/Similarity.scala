@@ -403,21 +403,13 @@ object Similarity {
       indexPath: String, keptDir: String, checkpointDir: String,
       threshold: Double, nprobe: Int = 2)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    val spark = stream.sparkSession
-    GenerationLog.requireCurrentDir(spark, indexPath)
     // GENERATION-TAGGED freeze: the tag lets each batch cheaply validate
     // that the index is still on the generation these centroids came
     // from — a mid-stream consolidate keeps them valid, a retrain does not
-    val frozenGen = GenerationLog.currentGeneration(spark, indexPath).get
-    val centroids = VersionedIvf.readCentroids(spark, indexPath)
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch((batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        semanticGateBatch(batch.toDF(), vecCol, idCol, indexPath, keptDir,
-          centroids, batchId, threshold, nprobe, frozenGen = Some(frozenGen)))
-      .start()
+    val (frozenGen, centroids) = VersionedIvf.frozenCentroids(stream.sparkSession, indexPath)
+    graft.streaming.GateStream.start(stream, checkpointDir)((batch, batchId) =>
+      semanticGateBatch(batch, vecCol, idCol, indexPath, keptDir,
+        centroids, batchId, threshold, nprobe, frozenGen = Some(frozenGen)))
   }
 
   /** One gate batch of [[streamSemanticGate]], exposed for replay testing
@@ -437,10 +429,7 @@ object Similarity {
       frozenGen: Option[Long] = None): Unit =
     graft.CacheScope.withScope {
       val spark = batch.sparkSession
-      val gen = GenerationLog.currentGeneration(spark, indexPath).getOrElse(
-        throw new IllegalStateException(
-          s"no committed generation at $indexPath — build the index first"))
-      val dir = GenerationLog.generationDir(indexPath, gen)
+      val (gen, dir) = GenerationLog.requireCurrent(spark, indexPath)
       val centroids =
         if (frozenGen.contains(gen)) frozenCentroids
         else graft.Trace.t("semgate.centroids")(VersionedIvf.readCentroids(spark, dir))

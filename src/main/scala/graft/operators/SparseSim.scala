@@ -228,9 +228,8 @@ object SparseSim {
       // rebuild = fresh start (the VersionedIvf.write/VersionedNearDup.write
       // contract): the previous incarnation's tombstones must not screen
       // the new build's docs
-      val tombDir = new org.apache.hadoop.fs.Path(s"$path/tombstones")
-      tombDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .delete(tombDir, true)
+      GenerationLog.fsOf(spark, path)
+        .delete(new org.apache.hadoop.fs.Path(s"$path/tombstones"), true)
       val segId = nextBm25SegmentId(spark, path)
       val seg = s"$path/segments/$segId"
       val toks = corpus.select(col(idCol).cast("long").as("doc_id"),
@@ -325,13 +324,8 @@ object SparseSim {
       stream: DataFrame, textCol: String, idCol: String,
       path: String, checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery = {
     committedBm25Segments(stream.sparkSession, path) // base must exist
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch((batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        ingestBatchToBm25Index(batch.toDF(), textCol, idCol, path, batchId))
-      .start()
+    graft.streaming.GateStream.start(stream, checkpointDir)(
+      ingestBatchToBm25Index(_, textCol, idCol, path, _))
   }
 
   /** One ingest batch of [[streamAppendToBm25Index]], exposed for replay
@@ -390,7 +384,7 @@ object SparseSim {
       .filter(col("tbucket").isin(buckets: _*))
       .filter(col("df") <= maxDf)
       .select(col("term"), col("df"))
-    val cand = screenBm25Tombstones(spark, path, post)
+    val cand = GenerationLog.screenTombstones(spark, path, "doc_id", post)
       .join(broadcast(qTerms), Seq("term"))
       .join(broadcast(dfr), Seq("term"))
       .select(col("query_id"), col("doc_id"),
@@ -417,18 +411,6 @@ object SparseSim {
       ids.select(col(idCol).cast("long").as("doc_id")).distinct()
         .coalesce(1).write.mode("append").parquet(s"$path/tombstones")
     }
-
-  /** Anti-join the tombstone set (if any) against a postings frame. */
-  private def screenBm25Tombstones(
-      spark: SparkSession, path: String, post: DataFrame): DataFrame = {
-    val tombDir = new org.apache.hadoop.fs.Path(s"$path/tombstones")
-    val fs = tombDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(tombDir)) post
-    else post.join(
-      broadcast(spark.read.parquet(tombDir.toString)
-        .select(col("doc_id").as("__tomb")).distinct()),
-      col("doc_id") === col("__tomb"), "left_anti")
-  }
 
   /** Consolidate the visible generation into ONE fresh base segment —
     * the Lucene segment-merge move, and the frozen-stats contract's
@@ -468,7 +450,7 @@ object SparseSim {
     MaintenanceLock.withLock(spark, path) {
       val (baseId, appendIds) = committedBm25Segments(spark, path)
       val numBuckets = readBm25Stats(spark, path, baseId).getInt(2)
-      val post = graft.CacheScope.persist(screenBm25Tombstones(spark, path,
+      val post = graft.CacheScope.persist(GenerationLog.screenTombstones(spark, path, "doc_id",
         (baseId +: appendIds)
           .map(id => spark.read.parquet(s"$path/segments/$id/postings")
             .select(col("term"), col("doc_id"), col("tf"), col("dl"), col("tbucket")))
@@ -496,9 +478,8 @@ object SparseSim {
         .coalesce(1).write.mode("overwrite").parquet(s"$seg/stats")
       commitBm25Segment(spark, path, segId, "base")
       // the purge is committed with the base — clear the applied tombstones
-      val tombDir = new org.apache.hadoop.fs.Path(s"$path/tombstones")
-      tombDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .delete(tombDir, true)
+      GenerationLog.fsOf(spark, path)
+        .delete(new org.apache.hadoop.fs.Path(s"$path/tombstones"), true)
     }
   }
 
@@ -518,7 +499,7 @@ object SparseSim {
     MaintenanceLock.withLock(spark, path) {
       val (baseId, _) = committedBm25Segments(spark, path)
       val segRoot = new org.apache.hadoop.fs.Path(s"$path/segments")
-      val fs = segRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val fs = GenerationLog.fsOf(spark, path)
       val committed = listBm25Commits(spark, path).map(_._1).toSet
       fs.listStatus(segRoot).filter(_.isDirectory).foreach { st =>
         val id = scala.util.Try(st.getPath.getName.toLong).getOrElse(-1L)
@@ -557,9 +538,8 @@ object SparseSim {
     def rows(id: Long): Long =
       spark.read.parquet(s"$path/segments/$id/postings").count()
     val tombDir = new org.apache.hadoop.fs.Path(s"$path/tombstones")
-    val fs = tombDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val tombstoned =
-      if (fs.exists(tombDir))
+      if (GenerationLog.fsOf(spark, path).exists(tombDir))
         spark.read.parquet(tombDir.toString).select(col("doc_id")).distinct().count()
       else 0L
     Seq((1L + appendIds.size, rows(baseId), appendIds.map(rows).sum, tombstoned))
@@ -573,18 +553,13 @@ object SparseSim {
   private def listBm25Commits(
       spark: SparkSession, path: String): Seq[(Long, String)] = {
     val dir = new org.apache.hadoop.fs.Path(s"$path/_commits")
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = GenerationLog.fsOf(spark, path)
     if (!fs.exists(dir)) Seq.empty
     else fs.listStatus(dir).toSeq.filter(_.isFile)
       .flatMap(st => scala.util.Try(st.getPath.getName.toLong).toOption)
       .sorted
-      .map { id =>
-        val in = fs.open(new org.apache.hadoop.fs.Path(dir, id.toString))
-        val kind =
-          try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-          finally in.close()
-        (id, kind)
-      }
+      .map(id => (id, GenerationLog.markerKind(
+        GenerationLog.readMarker(spark, s"$path/_commits/$id"))))
   }
 
   /** The visible index generation: the highest committed base segment,
@@ -603,9 +578,11 @@ object SparseSim {
 
   private def readBm25Stats(
       spark: SparkSession, path: String, baseId: Long): org.apache.spark.sql.Row =
-    // a committed base segment is immutable (rebuilds allocate a NEW id) —
-    // memoized so repeated probes/appends skip the one-row job per call
-    IndexMeta.cachedParams("bm25-stats", s"$path/segments/$baseId")(
+    // a committed base segment is immutable — memoized so repeated
+    // probes/appends skip the one-row job per call, keyed on its commit
+    // marker's bytes: a wiped and rebuilt root reuses segment id 1
+    IndexMeta.cachedByMarker(spark, "bm25-stats", s"$path/segments/$baseId",
+      s"$path/_commits/$baseId")(
       spark.read.parquet(s"$path/segments/$baseId/stats")
         .select(col("n_docs"), col("dl_sum"), col("num_buckets"))
         .head())
@@ -615,7 +592,7 @@ object SparseSim {
     // uncommitted segment dir (ids are allocated under the maintenance
     // lease, so two live writers cannot race the allocation)
     val segRoot = new org.apache.hadoop.fs.Path(s"$path/segments")
-    val fs = segRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = GenerationLog.fsOf(spark, path)
     val staged =
       if (!fs.exists(segRoot)) Seq.empty
       else fs.listStatus(segRoot).toSeq
@@ -625,12 +602,6 @@ object SparseSim {
   }
 
   private def commitBm25Segment(
-      spark: SparkSession, path: String, segId: Long, kind: String): Unit = {
-    val marker = new org.apache.hadoop.fs.Path(s"$path/_commits/$segId")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(marker.getParent)
-    val out = fs.create(marker, false) // one atomic PUT = the commit
-    try out.write(kind.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-  }
+      spark: SparkSession, path: String, segId: Long, kind: String): Unit =
+    GenerationLog.writeMarker(spark, s"$path/_commits/$segId", kind)
 }

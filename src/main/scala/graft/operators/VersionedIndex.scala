@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Generation log: the OBJECT-STORE-SAFE commit spine for the persisted
@@ -32,7 +32,7 @@ import org.apache.spark.sql.functions._
   */
 object GenerationLog {
 
-  private def fsOf(spark: SparkSession, p: String): org.apache.hadoop.fs.FileSystem =
+  private[operators] def fsOf(spark: SparkSession, p: String): org.apache.hadoop.fs.FileSystem =
     new org.apache.hadoop.fs.Path(p)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
 
@@ -55,9 +55,15 @@ object GenerationLog {
   def currentDir(spark: SparkSession, root: String): Option[String] =
     currentGeneration(spark, root).map(generationDir(root, _))
 
-  def requireCurrentDir(spark: SparkSession, root: String): String =
-    currentDir(spark, root).getOrElse(throw new IllegalStateException(
+  /** The current generation and its dir; fails on a root with none. */
+  private[operators] def requireCurrent(spark: SparkSession, root: String): (Long, String) = {
+    val gen = currentGeneration(spark, root).getOrElse(throw new IllegalStateException(
       s"no committed generation at $root — build the index first"))
+    (gen, generationDir(root, gen))
+  }
+
+  def requireCurrentDir(spark: SparkSession, root: String): String =
+    requireCurrent(spark, root)._2
 
   /** Reserve the next generation id: past max over committed markers AND
     * staged directories, so a crashed stager's debris is never reused (it
@@ -73,15 +79,90 @@ object GenerationLog {
     (gen, dir)
   }
 
-  /** The commit point: one marker-file create, no rename anywhere. */
-  private[operators] def commit(spark: SparkSession, root: String, gen: Long): Unit = {
-    val fs = fsOf(spark, root)
-    val marker = new org.apache.hadoop.fs.Path(s"$root/_commits/$gen")
-    fs.mkdirs(marker.getParent)
-    val out = fs.create(marker, false)
-    try out.write(s"generation $gen".getBytes(java.nio.charset.StandardCharsets.UTF_8))
+  /** Stage the next generation, let `write` fill its dir, then commit it:
+    * one marker-file create, no rename anywhere. The build, consolidate
+    * and retrain verbs of every family publish through here.
+    */
+  private[operators] def publish(spark: SparkSession, root: String)(write: String => Unit): Unit = {
+    val (gen, dir) = stageNext(spark, root)
+    write(dir)
+    writeMarker(spark, s"$root/_commits/$gen", s"generation $gen")
+  }
+
+  /** The one commit-marker writer (generation, segment and BM25 segment
+    * markers): ONE file create, an atomic PUT on any store. The body is
+    * `kind` on its first line and a random token on its second, so two
+    * incarnations of a marker path (a root wiped and rebuilt reuses its
+    * ids, and mtimes can repeat within a granule) never have the same
+    * bytes — [[IndexMeta.cachedByMarker]] keys memos on them. Readers of the
+    * kind take the first line ([[markerKind]]), so markers without a token
+    * line read the same.
+    */
+  private[operators] def writeMarker(spark: SparkSession, marker: String, kind: String): Unit = {
+    val p = new org.apache.hadoop.fs.Path(marker)
+    val fs = fsOf(spark, marker)
+    fs.mkdirs(p.getParent)
+    val out = fs.create(p, false)
+    try out.write(s"$kind\n${java.util.UUID.randomUUID}"
+      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
   }
+
+  /** A marker's bytes as text; throws if it does not exist. */
+  private[operators] def readMarker(spark: SparkSession, marker: String): String = {
+    val in = fsOf(spark, marker).open(new org.apache.hadoop.fs.Path(marker))
+    try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
+    finally in.close()
+  }
+
+  private[operators] def markerKind(body: String): String = body.takeWhile(_ != '\n').trim
+
+  /** `df` minus its rows whose `key` is tombstoned under `dir` — a
+    * broadcast anti-join (delete sets are small next to the index) that
+    * every probe and live view pays until a consolidate/retrain purges the
+    * tombstones.
+    */
+  private[operators] def screenTombstones(
+      spark: SparkSession, dir: String, key: String, df: DataFrame): DataFrame = {
+    val tombDir = s"$dir/tombstones"
+    if (!fsOf(spark, dir).exists(new org.apache.hadoop.fs.Path(tombDir))) df
+    else df.join(
+      broadcast(spark.read.parquet(tombDir).select(col(key).as("__tomb")).distinct()),
+      col(key) === col("__tomb"), "left_anti")
+  }
+
+  /** A maintenance verb's fences, in order: the
+    * [[graft.streaming.CommitLog]] guard (refuses while the stream
+    * checkpointed at `checkpointDir` has a written-but-uncommitted batch),
+    * then the index's [[MaintenanceLock]].
+    */
+  private[operators] def maintain[T](
+      spark: SparkSession, root: String, verb: String,
+      checkpointDir: Option[String])(body: => T): T = {
+    checkpointDir.foreach(graft.streaming.CommitLog.requireAllCommitted(
+      spark, _, s"$verb($root)"))
+    MaintenanceLock.withLock(spark, root)(body)
+  }
+
+  /** Tombstone-only retention delete of vector ids (the IVF and IVF-PQ
+    * `delete` verbs): one small tombstone append to the current
+    * generation. Returns the rows of `live(genDir)` the tombstones newly
+    * suppress; the id set is pinned once so the count and the tombstone
+    * write cannot diverge under a non-deterministic `ids` plan.
+    */
+  private[operators] def deleteVectors(
+      spark: SparkSession, root: String, ids: DataFrame, idCol: String,
+      verb: String, checkpointDir: Option[String])(live: String => DataFrame): Long =
+    maintain(spark, root, verb, checkpointDir) {
+      val dir = requireCurrentDir(spark, root)
+      val pinned = graft.CacheScope.localCheckpoint(
+        ids.select(col(idCol).cast("long").as("vec_id")).distinct())
+      try {
+        val n = live(dir).join(broadcast(pinned), Seq("vec_id"), "left_semi").count()
+        pinned.coalesce(1).write.mode("append").parquet(s"$dir/tombstones")
+        n
+      } finally graft.CacheScope.unpersistCheckpoint(pinned)
+    }
 
   private[operators] def newestMtime(
       fs: org.apache.hadoop.fs.FileSystem, p: org.apache.hadoop.fs.Path, depth: Int): Long = {
@@ -149,7 +230,9 @@ object GenerationLog {
     * the previous current dir just before a consolidate/retrain swapped
     * generations — vacuuming it immediately would turn that probe into
     * FileNotFound. Pass `ttlMs = 0` only where single-writer/no-reader
-    * quiescence is known (tests, sequential fixtures).
+    * quiescence is known (tests, sequential fixtures): it grants no grace
+    * at all, whatever the mtimes say — a marker written in the same
+    * millisecond, or stamped ahead by a writer's clock, still goes.
     */
   def vacuumGenerations(
       spark: SparkSession, root: String,
@@ -158,14 +241,14 @@ object GenerationLog {
     val committed = committedGenerations(spark, root)
     val current = committed.lastOption
     val now = System.currentTimeMillis()
+    def quiet(mtime: Long): Boolean = quietPast(ttlMs, now, mtime)
     def markerMtime(g: Long): Long =
       try fs.getFileStatus(new org.apache.hadoop.fs.Path(s"$root/_commits/$g"))
         .getModificationTime
       catch { case _: java.io.IOException => now }
     val superseded = committed.dropRight(1).filter { g =>
       // superseded at the instant its successor committed
-      val supersededAt = committed.filter(_ > g).map(markerMtime).min
-      now - supersededAt > ttlMs
+      quiet(committed.filter(_ > g).map(markerMtime).min)
     }
     superseded.foreach { g =>
       fs.delete(new org.apache.hadoop.fs.Path(generationDir(root, g)), true)
@@ -175,13 +258,28 @@ object GenerationLog {
     val deadStaged = numericChildren(fs, gensDir)
       .filterNot(g => current.contains(g))
       .filterNot(committed.contains)
-      .filter { g =>
-        val p = new org.apache.hadoop.fs.Path(generationDir(root, g))
-        now - newestMtime(fs, p, 4) > ttlMs
-      }
+      .filter(g => quiet(newestMtime(fs,
+        new org.apache.hadoop.fs.Path(generationDir(root, g)), 4)))
     deadStaged.foreach(g =>
       fs.delete(new org.apache.hadoop.fs.Path(generationDir(root, g)), true))
     superseded ++ deadStaged
+  }
+
+  /** Quiet for longer than `ttlMs` at `now`; `ttlMs <= 0` grants no
+    * grace, whatever the mtime says.
+    */
+  private[operators] def quietPast(ttlMs: Long, now: Long, mtime: Long): Boolean =
+    ttlMs <= 0 || now - mtime > ttlMs
+
+  /** GC an index root of any family on this log: [[vacuumGenerations]],
+    * then the uncommitted segment debris inside the current generation
+    * quiet past `ttlMs`. Deletes only.
+    */
+  def vacuum(
+      spark: SparkSession, root: String,
+      ttlMs: Long = MaintenanceLock.DefaultTtlMs): Unit = {
+    vacuumGenerations(spark, root, ttlMs)
+    currentDir(spark, root).foreach(SegmentLog.vacuumSegments(spark, _, ttlMs))
   }
 }
 
@@ -196,9 +294,7 @@ object GenerationLog {
   */
 private[operators] object SegmentLog {
 
-  private def fsOf(spark: SparkSession, p: String): org.apache.hadoop.fs.FileSystem =
-    new org.apache.hadoop.fs.Path(p)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+  import GenerationLog.fsOf
 
   def segmentsDir(genDir: String) = s"$genDir/segments"
   def markersDir(genDir: String) = s"$genDir/_batch_commits"
@@ -289,6 +385,28 @@ private[operators] object SegmentLog {
       .map(_._1).distinct.sorted
       .map(segmentDir(genDir, _))
 
+  /** The live view of a generation, for every family: its base `table` ∪
+    * the committed segments, each projected to `cols`, minus the rows whose
+    * `tombKey` is tombstoned (families without a tombstone face pass
+    * `None`). Stream segments can be restricted to STRICTLY BEFORE
+    * `beforeBatch` (base and batch appends always qualify) — the gates'
+    * replay-safe read. Uncommitted segment dirs are excluded by
+    * construction (an explicit committed-dir list under a basePath), not
+    * by filtering.
+    */
+  def liveView(
+      spark: SparkSession, genDir: String, table: String, cols: Seq[Column],
+      tombKey: Option[String], beforeBatch: Option[Long] = None): DataFrame = {
+    val base = spark.read.parquet(s"$genDir/$table").select(cols: _*)
+    val segDirs = committedDirs(spark, genDir, beforeBatch)
+    val all =
+      if (segDirs.isEmpty) base
+      else base.unionByName(
+        spark.read.option("basePath", segmentsDir(genDir)).parquet(segDirs: _*)
+          .select(cols: _*))
+    tombKey.fold(all)(GenerationLog.screenTombstones(spark, genDir, _, all))
+  }
+
   /** Next segment id: past max over markers AND staged dirs (crash debris
     * is never reused; it ages out via vacuum).
     */
@@ -304,13 +422,37 @@ private[operators] object SegmentLog {
   }
 
   /** Publish a staged segment: one marker-file create. */
-  def commitMarker(spark: SparkSession, genDir: String, markerName: String): Unit = {
+  def commitMarker(spark: SparkSession, genDir: String, markerName: String): Unit =
+    GenerationLog.writeMarker(spark, s"${markersDir(genDir)}/$markerName",
+      s"segment $markerName")
+
+  /** Stage `rows` as segment `segId` (partitioned by `partitionCol` if
+    * given) and publish it under `markerName`. Overwrite clears a crashed
+    * earlier attempt's debris at this id; visibility comes from the
+    * marker, not the write. An EMPTY segment (every row screened or
+    * suppressed) stages zero partitions, or no footer with rows, which
+    * schema inference on the segment union cannot read: its dir is
+    * dropped (with a `segments` dir it leaves empty) and the marker still
+    * lands, so a stream replay is recognized as such.
+    */
+  def writeSegment(
+      spark: SparkSession, genDir: String, segId: Long, rows: DataFrame,
+      markerName: String, partitionCol: Option[String] = None): Unit = {
+    val segDir = new org.apache.hadoop.fs.Path(segmentDir(genDir, segId))
+    val w = rows.write.mode("overwrite").option("partitionOverwriteMode", "static")
+    partitionCol.fold(w)(w.partitionBy(_)).parquet(segDir.toString)
     val fs = fsOf(spark, genDir)
-    val marker = new org.apache.hadoop.fs.Path(markersDir(genDir), markerName)
-    fs.mkdirs(marker.getParent)
-    val out = fs.create(marker, false)
-    try out.write(s"segment $markerName".getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
+    val hasData = partitionCol match {
+      case Some(p) => fs.listStatus(segDir)
+        .exists(st => st.isDirectory && st.getPath.getName.startsWith(s"$p="))
+      case None => IndexMeta.dirHasRows(spark, segDir.toString)
+    }
+    if (!hasData) {
+      fs.delete(segDir, true)
+      val parent = segDir.getParent
+      if (fs.exists(parent) && fs.listStatus(parent).isEmpty) fs.delete(parent, false)
+    }
+    commitMarker(spark, genDir, markerName)
   }
 
   /** Drop uncommitted segment dirs quiet past `ttlMs`. */
@@ -325,7 +467,8 @@ private[operators] object SegmentLog {
       .filterNot(s => scala.util.Try(
         s.getPath.getName.stripPrefix("ingest_batch=").toLong).toOption
         .exists(committedIds.contains))
-      .filter(s => now - GenerationLog.newestMtime(fs, s.getPath, 3) > ttlMs)
+      .filter(s => GenerationLog.quietPast(ttlMs, now,
+        GenerationLog.newestMtime(fs, s.getPath, 3)))
       .foreach(s => fs.delete(s.getPath, true))
   }
 }
@@ -368,64 +511,19 @@ private[operators] object SegmentLog {
   */
 object VersionedIvf {
 
-  private def fsOf(spark: SparkSession, p: String): org.apache.hadoop.fs.FileSystem =
-    new org.apache.hadoop.fs.Path(p)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private def writeSegment(
-      spark: SparkSession, genDir: String, segId: Long,
-      rows: DataFrame, markerName: String): Unit = {
-    // overwrite clears a crashed earlier attempt's debris at this id;
-    // visibility comes from the marker, not the write
-    val segDir = SegmentLog.segmentDir(genDir, segId)
-    rows.select(col("vec_id"), col("embedding"), col("cluster"))
-      .write.mode("overwrite").option("partitionOverwriteMode", "static")
-      .partitionBy("cluster")
-      .parquet(segDir)
-    // an ALL-SCREENED batch (every row tombstoned) stages zero partitions —
-    // a dir with no parquet footers, which schema inference on the segment
-    // union cannot read. Drop it and commit marker-only: the marker must
-    // still land so a stream replay is recognized as such (the
-    // VersionedNearDup.gateBatch all-suppressed contract)
-    val fs = fsOf(spark, genDir)
-    val hasData = fs.listStatus(new org.apache.hadoop.fs.Path(segDir))
-      .exists(st => st.isDirectory && st.getPath.getName.startsWith("cluster="))
-    if (!hasData) fs.delete(new org.apache.hadoop.fs.Path(segDir), true)
-    SegmentLog.commitMarker(spark, genDir, markerName)
-  }
+  private def corpusCols = Seq(col("vec_id"), col("embedding"),
+    col("cluster").cast("int").as("cluster"),
+    col("ingest_batch").cast("long").as("ingest_batch"))
 
   /** Live membership of a generation: the base corpus ∪ committed batch
-    * segments, minus tombstones. Cluster partition pruning flows through
-    * both legs (`cluster=` dirs in base and inside every segment);
-    * uncommitted segment dirs are excluded by construction (explicit
-    * committed-dir list under a basePath), not by filtering. Stream
-    * segments can be restricted to STRICTLY BEFORE `beforeBatch` (base and
-    * batch appends always qualify) — the gates' replay-safe read.
+    * segments, minus tombstones ([[SegmentLog.liveView]]). Cluster
+    * partition pruning flows through both legs (`cluster=` dirs in base
+    * and inside every segment).
     */
   private[operators] def liveCorpus(
       spark: SparkSession, genDir: String,
-      beforeBatch: Option[Long] = None): DataFrame = {
-    val fs = fsOf(spark, genDir)
-    val base = spark.read.parquet(s"$genDir/corpus")
-      .select(col("vec_id"), col("embedding"),
-        col("cluster").cast("int").as("cluster"),
-        col("ingest_batch").cast("long").as("ingest_batch"))
-    val segDirs = SegmentLog.committedDirs(spark, genDir, beforeBatch)
-    val all =
-      if (segDirs.isEmpty) base
-      else base.unionByName(
-        spark.read.option("basePath", SegmentLog.segmentsDir(genDir)).parquet(segDirs: _*)
-          .select(col("vec_id"), col("embedding"),
-            col("cluster").cast("int").as("cluster"),
-            col("ingest_batch").cast("long").as("ingest_batch")))
-    val tombDir = new org.apache.hadoop.fs.Path(s"$genDir/tombstones")
-    if (fs.exists(tombDir))
-      all.join(
-        broadcast(spark.read.parquet(tombDir.toString)
-          .select(col("vec_id").as("__tomb_id")).distinct()),
-        col("vec_id") === col("__tomb_id"), "left_anti")
-    else all
-  }
+      beforeBatch: Option[Long] = None): DataFrame =
+    SegmentLog.liveView(spark, genDir, "corpus", corpusCols, Some("vec_id"), beforeBatch)
 
   /** The live corpus of the CURRENT generation, as a reader view —
     * (vec_id, embedding, cluster, ingest_batch), where `ingest_batch` is
@@ -449,9 +547,19 @@ object VersionedIvf {
     // consolidate stages a NEW `_generations/<N>` dir) — memoized so gate
     // batches and repeated probes don't pay a collect job per call. Paths
     // outside the generation log (no immutability contract) read directly,
-    // and the memo is keyed on the commit marker's identity (r14 ADVICE:
+    // and the memo is keyed on the commit marker's bytes (r14 ADVICE:
     // a wiped-and-rebuilt root reuses generation numbers).
     IndexMeta.cachedParamsIfGeneration(spark, "ivf-centroids", dir)(load)
+  }
+
+  /** The current generation of `root` with its centroids, read from that
+    * generation's own dir: the generation-tagged freeze a gate stream
+    * takes at start (see [[ingestBatch]]'s `frozenCentroids`).
+    */
+  private[graft] def frozenCentroids(
+      spark: SparkSession, root: String): (Long, Seq[Seq[Float]]) = {
+    val (gen, dir) = GenerationLog.requireCurrent(spark, root)
+    (gen, readCentroids(spark, dir))
   }
 
   private def writeGeneration(
@@ -467,6 +575,14 @@ object VersionedIvf {
       .parquet(s"$genDir/corpus")
   }
 
+  /** A segment of assigned rows, partitioned by cluster. */
+  private def writeSegment(
+      spark: SparkSession, genDir: String, segId: Long,
+      rows: DataFrame, markerName: String): Unit =
+    SegmentLog.writeSegment(spark, genDir, segId,
+      rows.select(col("vec_id"), col("embedding"), col("cluster")),
+      markerName, Some("cluster"))
+
   /** Build (or rebuild) the index: stage generation N+1, commit by marker.
     * A rebuild over a live index is automatically a fresh start — the new
     * generation carries no tombstones or segments, and the old one keeps
@@ -477,11 +593,9 @@ object VersionedIvf {
       centroids: Seq[Seq[Float]], root: String): Unit = {
     val spark = corpus.sparkSession
     MaintenanceLock.withLock(spark, root) {
-      val (gen, dir) = GenerationLog.stageNext(spark, root)
-      writeGeneration(spark, dir, centroids,
+      GenerationLog.publish(spark, root)(writeGeneration(spark, _, centroids,
         Similarity.assignToIndex(corpus, vecCol, idCol, centroids)
-          .withColumn("ingest_batch", lit(-1L)))
-      GenerationLog.commit(spark, root, gen)
+          .withColumn("ingest_batch", lit(-1L))))
     }
   }
 
@@ -521,9 +635,7 @@ object VersionedIvf {
     * [[consolidate]]/[[retrain]]; until one runs, tombstones accumulate and
     * screen stream ingest AND probes, so re-adding a deleted id needs a
     * consolidation first. Idempotent. Returns the number of LIVE rows the
-    * tombstones newly suppress; the id set is pinned once so the count and
-    * the tombstone write cannot diverge under a non-deterministic `ids`
-    * plan.
+    * tombstones newly suppress ([[GenerationLog.deleteVectors]]).
     *
     * `checkpointDir`: pass the ingest/gate stream's checkpoint dir when
     * deleting from an index a stream is actively gating against — the
@@ -535,21 +647,9 @@ object VersionedIvf {
     */
   def delete(
       spark: SparkSession, root: String, ids: DataFrame, idCol: String,
-      checkpointDir: Option[String] = None): Long = {
-    checkpointDir.foreach(graft.streaming.CommitLog.requireAllCommitted(
-      spark, _, s"VersionedIvf.delete($root)"))
-    MaintenanceLock.withLock(spark, root) {
-      val dir = GenerationLog.requireCurrentDir(spark, root)
-      val pinned = graft.CacheScope.localCheckpoint(
-        ids.select(col(idCol).cast("long").as("vec_id")).distinct())
-      try {
-        val n = liveCorpus(spark, dir)
-          .join(broadcast(pinned), Seq("vec_id"), "left_semi").count()
-        pinned.coalesce(1).write.mode("append").parquet(s"$dir/tombstones")
-        n
-      } finally graft.CacheScope.unpersistCheckpoint(pinned)
-    }
-  }
+      checkpointDir: Option[String] = None): Long =
+    GenerationLog.deleteVectors(spark, root, ids, idCol,
+      "VersionedIvf.delete", checkpointDir)(liveCorpus(spark, _))
 
   /** Batch append WITHOUT retraining: vectors are assigned against the
     * current generation's FROZEN centroids and land as one
@@ -605,23 +705,13 @@ object VersionedIvf {
       frozenCentroids: Option[(Long, Seq[Seq[Float]])] = None): Unit =
    MaintenanceLock.withLockRetry(batch.sparkSession, root) {
     val spark = batch.sparkSession
-    val gen = GenerationLog.currentGeneration(spark, root).getOrElse(
-      throw new IllegalStateException(
-        s"no committed generation at $root — build the index first"))
-    val dir = GenerationLog.generationDir(root, gen)
+    val (gen, dir) = GenerationLog.requireCurrent(spark, root)
     val centroids = frozenCentroids match {
       case Some((g, c)) if g == gen => c
       case _ => readCentroids(spark, dir)
     }
-    val fs = fsOf(spark, dir)
-    val tombDir = new org.apache.hadoop.fs.Path(s"$dir/tombstones")
-    def screen(df: DataFrame): DataFrame =
-      if (fs.exists(tombDir))
-        df.join(
-          broadcast(spark.read.parquet(tombDir.toString)
-            .select(col("vec_id").as("__tomb_id")).distinct()),
-          col("vec_id") === col("__tomb_id"), "left_anti")
-      else df
+    def screened = GenerationLog.screenTombstones(spark, dir, "vec_id",
+      Similarity.assignToIndex(batch, vecCol, idCol, centroids))
     if (SegmentLog.streamBatchCommitted(spark, dir, batchId)) {
       // REPLAY HEAL: the batch content a gate hands in can legitimately
       // differ from the first attempt's (a tombstone delete between the
@@ -638,11 +728,9 @@ object VersionedIvf {
       val segDirs = SegmentLog.committedPresent(spark, dir)
         .filter(_._2.contains(batchId))
         .map(s => SegmentLog.segmentDir(dir, s._1))
-      val assigned = screen(
-        Similarity.assignToIndex(batch, vecCol, idCol, centroids))
       val missing =
-        if (segDirs.isEmpty) assigned
-        else assigned.join(
+        if (segDirs.isEmpty) screened
+        else screened.join(
           spark.read.option("basePath", SegmentLog.segmentsDir(dir))
             .parquet(segDirs: _*).select(col("vec_id")),
           Seq("vec_id"), "left_anti")
@@ -652,8 +740,6 @@ object VersionedIvf {
       }
       return
     }
-    val screened = screen(
-      Similarity.assignToIndex(batch, vecCol, idCol, centroids))
     val segId = SegmentLog.nextSegId(spark, dir)
     writeSegment(spark, dir, segId, screened, s"$segId.s$batchId")
   }
@@ -668,13 +754,8 @@ object VersionedIvf {
   def streamAppend(
       stream: DataFrame, vecCol: String, idCol: String,
       root: String, checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch((batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        ingestBatch(batch.toDF(), vecCol, idCol, root, batchId))
-      .start()
+    graft.streaming.GateStream.start(stream, checkpointDir)(
+      ingestBatch(_, vecCol, idCol, root, _))
 
   /** Fold every segment into the base and physically purge tombstones —
     * as the NEXT generation (assignments and centroids unchanged). One
@@ -691,10 +772,8 @@ object VersionedIvf {
     */
   def consolidate(
       spark: SparkSession, root: String,
-      checkpointDir: Option[String] = None): Unit = {
-    checkpointDir.foreach(graft.streaming.CommitLog.requireAllCommitted(
-      spark, _, s"VersionedIvf.consolidate($root)"))
-    MaintenanceLock.withLock(spark, root) {
+      checkpointDir: Option[String] = None): Unit =
+    GenerationLog.maintain(spark, root, "VersionedIvf.consolidate", checkpointDir) {
       val dir = GenerationLog.requireCurrentDir(spark, root)
       val live = liveCorpus(spark, dir)
         .select(col("vec_id"), col("embedding"), col("cluster"))
@@ -702,11 +781,9 @@ object VersionedIvf {
       if (live.isEmpty) throw new IllegalStateException(
         s"consolidating $root would write an empty generation (every doc " +
           "tombstoned) — rebuild with VersionedIvf.write instead")
-      val (gen, next) = GenerationLog.stageNext(spark, root)
-      writeGeneration(spark, next, readCentroids(spark, dir), live)
-      GenerationLog.commit(spark, root, gen)
+      GenerationLog.publish(spark, root)(
+        writeGeneration(spark, _, readCentroids(spark, dir), live))
     }
-  }
 
   /** Retrain the coarse quantizer for a drifted corpus. Every append and
     * gate assigns against FROZEN centroids; a corpus that drifts away from
@@ -725,10 +802,8 @@ object VersionedIvf {
   def retrain(
       spark: SparkSession, root: String,
       k: Option[Int] = None, iterations: Int = 3, trainSample: Int = 1,
-      checkpointDir: Option[String] = None): Unit = {
-    checkpointDir.foreach(graft.streaming.CommitLog.requireAllCommitted(
-      spark, _, s"VersionedIvf.retrain($root)"))
-    MaintenanceLock.withLock(spark, root) {
+      checkpointDir: Option[String] = None): Unit =
+    GenerationLog.maintain(spark, root, "VersionedIvf.retrain", checkpointDir) {
       val dir = GenerationLog.requireCurrentDir(spark, root)
       val live = graft.CacheScope.localCheckpoint(
         liveCorpus(spark, dir).select(col("vec_id"), col("embedding")))
@@ -739,26 +814,12 @@ object VersionedIvf {
         val kk = k.getOrElse(readCentroids(spark, dir).size)
         val cents = Similarity.trainIvfCentroids(
           live, "embedding", "vec_id", kk, iterations, trainSample)
-        val (gen, next) = GenerationLog.stageNext(spark, root)
-        writeGeneration(spark, next, cents,
+        GenerationLog.publish(spark, root)(writeGeneration(spark, _, cents,
           live.select(col("vec_id"), col("embedding"),
             Similarity.nearestCentroid(col("embedding"), cents).as("cluster"))
-            .withColumn("ingest_batch", lit(-1L)))
-        GenerationLog.commit(spark, root, gen)
+            .withColumn("ingest_batch", lit(-1L))))
       } finally graft.CacheScope.unpersistCheckpoint(live)
     }
-  }
-
-  /** GC superseded generations plus aged uncommitted segment debris inside
-    * the current one. Deletes only.
-    */
-  def vacuum(
-      spark: SparkSession, root: String,
-      ttlMs: Long = MaintenanceLock.DefaultTtlMs): Unit = {
-    GenerationLog.vacuumGenerations(spark, root, ttlMs)
-    GenerationLog.currentDir(spark, root)
-      .foreach(SegmentLog.vacuumSegments(spark, _, ttlMs))
-  }
 
   /** RECEIPT/STRESS hook: publish already-staged fabricated segment dirs
     * (written directly under `segments/ingest_batch=<id>` of the current
@@ -830,10 +891,6 @@ object VersionedIvf {
   */
 object VersionedNearDup {
 
-  private def fsOf(spark: SparkSession, p: String): org.apache.hadoop.fs.FileSystem =
-    new org.apache.hadoop.fs.Path(p)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
   /** Build (or rebuild) the index: params + base manifest as generation
     * N+1, committed by one marker create.
     */
@@ -844,14 +901,20 @@ object VersionedNearDup {
     val spark = docs.sparkSession
     import spark.implicits._
     MaintenanceLock.withLock(spark, root) {
-      val (gen, dir) = GenerationLog.stageNext(spark, root)
-      Seq((shingleSize, bands, rowsPerBand, numer, denom))
-        .toDF("shingle_size", "bands", "rows_per_band", "numer", "denom")
-        .coalesce(1).write.mode("overwrite").parquet(s"$dir/params")
-      Dedup.nearDupManifest(docs, textCol, idCol, shingleSize, bands, rowsPerBand)
-        .write.mode("overwrite").parquet(s"$dir/manifest")
-      GenerationLog.commit(spark, root, gen)
+      GenerationLog.publish(spark, root)(writeGeneration(_,
+        Seq((shingleSize, bands, rowsPerBand, numer, denom))
+          .toDF("shingle_size", "bands", "rows_per_band", "numer", "denom"),
+        Dedup.nearDupManifest(docs, textCol, idCol, shingleSize, bands, rowsPerBand)))
     }
+  }
+
+  /** A generation of this family or of [[VersionedSubstring]]: the
+    * one-row `params` and the base `manifest`.
+    */
+  private[operators] def writeGeneration(
+      genDir: String, params: DataFrame, manifest: DataFrame): Unit = {
+    params.coalesce(1).write.mode("overwrite").parquet(s"$genDir/params")
+    manifest.write.mode("overwrite").parquet(s"$genDir/manifest")
   }
 
   /** The pinned LSH shape (shingle_size, bands, rows_per_band, numer,
@@ -881,24 +944,9 @@ object VersionedNearDup {
     */
   def liveManifest(
       spark: SparkSession, root: String,
-      beforeBatch: Option[Long] = None): DataFrame = {
-    val dir = GenerationLog.requireCurrentDir(spark, root)
-    val base = spark.read.parquet(s"$dir/manifest")
-      .select(col("doc"), col("keys"), col("shh"))
-    val segDirs = SegmentLog.committedDirs(spark, dir, beforeBatch)
-    val all =
-      if (segDirs.isEmpty) base
-      else base.unionByName(
-        spark.read.option("basePath", SegmentLog.segmentsDir(dir)).parquet(segDirs: _*)
-          .select(col("doc"), col("keys"), col("shh")))
-    val tombDir = new org.apache.hadoop.fs.Path(s"$dir/tombstones")
-    if (fsOf(spark, dir).exists(tombDir))
-      all.join(
-        broadcast(spark.read.parquet(tombDir.toString)
-          .select(col("doc").as("__tomb")).distinct()),
-        col("doc") === col("__tomb"), "left_anti")
-    else all
-  }
+      beforeBatch: Option[Long] = None): DataFrame =
+    SegmentLog.liveView(spark, GenerationLog.requireCurrentDir(spark, root), "manifest",
+      Seq(col("doc"), col("keys"), col("shh")), Some("doc"), beforeBatch)
 
   /** Retention delete ("right to be forgotten" for the dedup corpus): the
     * given doc ids stop suppressing future arrivals IMMEDIATELY — every
@@ -927,9 +975,7 @@ object VersionedNearDup {
       ids: DataFrame, idCol: String, root: String,
       checkpointDir: Option[String] = None): Unit = {
     val spark = ids.sparkSession
-    checkpointDir.foreach(graft.streaming.CommitLog.requireAllCommitted(
-      spark, _, s"VersionedNearDup.delete($root)"))
-    MaintenanceLock.withLock(spark, root) {
+    GenerationLog.maintain(spark, root, "VersionedNearDup.delete", checkpointDir) {
       val dir = GenerationLog.requireCurrentDir(spark, root)
       ids.select(col(idCol).cast("long").as("doc")).distinct()
         .coalesce(1).write.mode("append").parquet(s"$dir/tombstones")
@@ -1009,15 +1055,13 @@ object VersionedNearDup {
       // an all-suppressed batch has no signatures to append, but the
       // marker must still land so a replay is recognized as such
       val segId = SegmentLog.nextSegId(spark, dir)
-      if (hasData) {
+      if (hasData)
         // derive the appended signatures from the WRITTEN kept partition —
         // replay-identical by construction (the in-place gate's contract)
-        graft.Trace.t("neardup.sig-append")(
-          Dedup.nearDupManifest(spark.read.parquet(batchKeptDir), textCol, idCol, ss, bands, rpb)
-            .write.mode("overwrite").option("partitionOverwriteMode", "static")
-            .parquet(SegmentLog.segmentDir(dir, segId)))
-      }
-      SegmentLog.commitMarker(spark, dir, s"$segId.s$batchId")
+        graft.Trace.t("neardup.sig-append")(SegmentLog.writeSegment(spark, dir, segId,
+          Dedup.nearDupManifest(spark.read.parquet(batchKeptDir), textCol, idCol, ss, bands, rpb),
+          s"$segId.s$batchId"))
+      else SegmentLog.commitMarker(spark, dir, s"$segId.s$batchId")
     } else if (hasData && SegmentLog.tombstonesSinceMarker(spark, dir, batchId)) {
       // REPLAY HEAL (see scaladoc): kept docs whose signatures are absent
       // from this batch's committed segments get a supplemental segment —
@@ -1038,9 +1082,7 @@ object VersionedNearDup {
           Seq("doc"), "left_anti")
       if (!missing.limit(1).isEmpty) {
         val segId = SegmentLog.nextSegId(spark, dir)
-        missing.write.mode("overwrite").option("partitionOverwriteMode", "static")
-          .parquet(SegmentLog.segmentDir(dir, segId))
-        SegmentLog.commitMarker(spark, dir, s"$segId.s$batchId")
+        SegmentLog.writeSegment(spark, dir, segId, missing, s"$segId.s$batchId")
       }
     }
    } }
@@ -1067,13 +1109,8 @@ object VersionedNearDup {
       stream: DataFrame, textCol: String, idCol: String,
       root: String, keptDir: String, checkpointDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch((batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        gateBatch(batch.toDF(), textCol, idCol, root, keptDir, batchId))
-      .start()
+    graft.streaming.GateStream.start(stream, checkpointDir)(
+      gateBatch(_, textCol, idCol, root, keptDir, _))
 
   /** Physically purge tombstoned signatures and fold every gate segment
     * into the base manifest — published as the NEXT generation with one
@@ -1088,31 +1125,16 @@ object VersionedNearDup {
     */
   def consolidate(
       spark: SparkSession, root: String,
-      checkpointDir: Option[String] = None): Unit = {
-    checkpointDir.foreach(graft.streaming.CommitLog.requireAllCommitted(
-      spark, _, s"VersionedNearDup.consolidate($root)"))
-    MaintenanceLock.withLock(spark, root) {
+      checkpointDir: Option[String] = None): Unit =
+    GenerationLog.maintain(spark, root, "VersionedNearDup.consolidate", checkpointDir) {
       val dir = GenerationLog.requireCurrentDir(spark, root)
       val live = liveManifest(spark, root)
       if (live.limit(1).isEmpty) throw new IllegalStateException(
         s"consolidating $root would write an empty generation (every doc " +
           "tombstoned) — rebuild with VersionedNearDup.write instead")
-      val (gen, next) = GenerationLog.stageNext(spark, root)
-      spark.read.parquet(s"$dir/params")
-        .coalesce(1).write.mode("overwrite").parquet(s"$next/params")
-      live.write.mode("overwrite").parquet(s"$next/manifest")
-      GenerationLog.commit(spark, root, gen)
+      GenerationLog.publish(spark, root)(
+        writeGeneration(_, spark.read.parquet(s"$dir/params"), live))
     }
-  }
-
-  /** GC superseded generations + aged uncommitted segment debris. */
-  def vacuum(
-      spark: SparkSession, root: String,
-      ttlMs: Long = MaintenanceLock.DefaultTtlMs): Unit = {
-    GenerationLog.vacuumGenerations(spark, root, ttlMs)
-    GenerationLog.currentDir(spark, root)
-      .foreach(SegmentLog.vacuumSegments(spark, _, ttlMs))
-  }
 }
 
 /** The persisted IVF-PQ index on the generation-log commit model — the
@@ -1128,10 +1150,6 @@ object VersionedNearDup {
   * next generation with ONE marker create.
   */
 object VersionedIvfPq {
-
-  private def fsOf(spark: SparkSession, p: String): org.apache.hadoop.fs.FileSystem =
-    new org.apache.hadoop.fs.Path(p)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   private def writeGeneration(
       spark: SparkSession, genDir: String,
@@ -1151,24 +1169,10 @@ object VersionedIvfPq {
   }
 
   /** Live code rows: base ∪ committed segments − tombstones. */
-  private def liveCodes(spark: SparkSession, genDir: String): DataFrame = {
-    val fs = fsOf(spark, genDir)
-    val base = spark.read.parquet(s"$genDir/codes")
-      .select(col("vec_id"), col("codes"), col("cluster").cast("int").as("cluster"))
-    val segDirs = SegmentLog.committedDirs(spark, genDir)
-    val all =
-      if (segDirs.isEmpty) base
-      else base.unionByName(
-        spark.read.option("basePath", SegmentLog.segmentsDir(genDir)).parquet(segDirs: _*)
-          .select(col("vec_id"), col("codes"), col("cluster").cast("int").as("cluster")))
-    val tombDir = new org.apache.hadoop.fs.Path(s"$genDir/tombstones")
-    if (fs.exists(tombDir))
-      all.join(
-        broadcast(spark.read.parquet(tombDir.toString)
-          .select(col("vec_id").as("__tomb_id")).distinct()),
-        col("vec_id") === col("__tomb_id"), "left_anti")
-    else all
-  }
+  private def liveCodes(spark: SparkSession, genDir: String): DataFrame =
+    SegmentLog.liveView(spark, genDir, "codes",
+      Seq(col("vec_id"), col("codes"), col("cluster").cast("int").as("cluster")),
+      Some("vec_id"))
 
   /** The live codes of the CURRENT generation, as a reader view —
     * (vec_id, codes, cluster). The audit face of the stored membership.
@@ -1198,10 +1202,8 @@ object VersionedIvfPq {
       root: String): Unit = {
     val spark = corpus.sparkSession
     MaintenanceLock.withLock(spark, root) {
-      val (gen, dir) = GenerationLog.stageNext(spark, root)
-      writeGeneration(spark, dir, centroids, books,
-        Similarity.ivfPqEncode(corpus, vecCol, idCol, centroids, books))
-      GenerationLog.commit(spark, root, gen)
+      GenerationLog.publish(spark, root)(writeGeneration(spark, _, centroids, books,
+        Similarity.ivfPqEncode(corpus, vecCol, idCol, centroids, books)))
     }
   }
 
@@ -1239,20 +1241,11 @@ object VersionedIvfPq {
     MaintenanceLock.withLock(spark, root) {
       val dir = GenerationLog.requireCurrentDir(spark, root)
       val segId = SegmentLog.nextSegId(spark, dir)
-      val segDir = SegmentLog.segmentDir(dir, segId)
-      Similarity.ivfPqEncode(batch, vecCol, idCol,
-        VersionedIvf.readCentroids(spark, dir),
-        readBooks(spark, dir))
-        .select(col("vec_id"), col("codes"), col("cluster"))
-        .write.mode("overwrite").option("partitionOverwriteMode", "static")
-        .partitionBy("cluster")
-        .parquet(segDir)
-      // empty append: drop the footerless dir, marker-only (see VersionedIvf)
-      val fs = fsOf(spark, dir)
-      val hasData = fs.listStatus(new org.apache.hadoop.fs.Path(segDir))
-        .exists(st => st.isDirectory && st.getPath.getName.startsWith("cluster="))
-      if (!hasData) fs.delete(new org.apache.hadoop.fs.Path(segDir), true)
-      SegmentLog.commitMarker(spark, dir, segId.toString)
+      SegmentLog.writeSegment(spark, dir, segId,
+        Similarity.ivfPqEncode(batch, vecCol, idCol,
+          VersionedIvf.readCentroids(spark, dir), readBooks(spark, dir))
+          .select(col("vec_id"), col("codes"), col("cluster")),
+        segId.toString, Some("cluster"))
     }
   }
 
@@ -1263,21 +1256,9 @@ object VersionedIvfPq {
     */
   def delete(
       spark: SparkSession, root: String, ids: DataFrame, idCol: String,
-      checkpointDir: Option[String] = None): Long = {
-    checkpointDir.foreach(graft.streaming.CommitLog.requireAllCommitted(
-      spark, _, s"VersionedIvfPq.delete($root)"))
-    MaintenanceLock.withLock(spark, root) {
-      val dir = GenerationLog.requireCurrentDir(spark, root)
-      val pinned = graft.CacheScope.localCheckpoint(
-        ids.select(col(idCol).cast("long").as("vec_id")).distinct())
-      try {
-        val n = liveCodes(spark, dir)
-          .join(broadcast(pinned), Seq("vec_id"), "left_semi").count()
-        pinned.coalesce(1).write.mode("append").parquet(s"$dir/tombstones")
-        n
-      } finally graft.CacheScope.unpersistCheckpoint(pinned)
-    }
-  }
+      checkpointDir: Option[String] = None): Long =
+    GenerationLog.deleteVectors(spark, root, ids, idCol,
+      "VersionedIvfPq.delete", checkpointDir)(liveCodes(spark, _))
 
   /** Fold code segments and physically purge tombstones as the next
     * generation — the [[VersionedIvf.consolidate]] contract; quantizers
@@ -1285,22 +1266,16 @@ object VersionedIvfPq {
     */
   def consolidate(
       spark: SparkSession, root: String,
-      checkpointDir: Option[String] = None): Unit = {
-    checkpointDir.foreach(graft.streaming.CommitLog.requireAllCommitted(
-      spark, _, s"VersionedIvfPq.consolidate($root)"))
-    MaintenanceLock.withLock(spark, root) {
+      checkpointDir: Option[String] = None): Unit =
+    GenerationLog.maintain(spark, root, "VersionedIvfPq.consolidate", checkpointDir) {
       val dir = GenerationLog.requireCurrentDir(spark, root)
       val live = liveCodes(spark, dir)
       if (live.isEmpty) throw new IllegalStateException(
         s"consolidating $root would write an empty generation (every vector " +
           "tombstoned) — rebuild with VersionedIvfPq.write instead")
-      val (gen, next) = GenerationLog.stageNext(spark, root)
-      writeGeneration(spark, next,
-        VersionedIvf.readCentroids(spark, dir),
-        readBooks(spark, dir), live)
-      GenerationLog.commit(spark, root, gen)
+      GenerationLog.publish(spark, root)(writeGeneration(spark, _,
+        VersionedIvf.readCentroids(spark, dir), readBooks(spark, dir), live))
     }
-  }
 
   /** Retrain BOTH quantizer levels over live membership and publish the
     * re-encoded index (new coarse centroids, new residual codebooks, full
@@ -1319,10 +1294,8 @@ object VersionedIvfPq {
       vecCol: String, idCol: String,
       k: Option[Int] = None, m: Option[Int] = None, ksub: Option[Int] = None,
       iterations: Int = 3, trainSample: Int = 1,
-      checkpointDir: Option[String] = None): Unit = {
-    checkpointDir.foreach(graft.streaming.CommitLog.requireAllCommitted(
-      spark, _, s"VersionedIvfPq.retrain($root)"))
-    MaintenanceLock.withLock(spark, root) {
+      checkpointDir: Option[String] = None): Unit =
+    GenerationLog.maintain(spark, root, "VersionedIvfPq.retrain", checkpointDir) {
       val dir = GenerationLog.requireCurrentDir(spark, root)
       val storedIds = liveCodes(spark, dir).select(col("vec_id"))
       val member = graft.CacheScope.localCheckpoint(
@@ -1344,21 +1317,10 @@ object VersionedIvfPq {
           kk, iterations, trainSample)
         val books = Similarity.trainIvfPqBooks(member, "embedding", "vec_id",
           cents, mm, ks, iterations, trainSample)
-        val (gen, next) = GenerationLog.stageNext(spark, root)
-        writeGeneration(spark, next, cents, books,
-          Similarity.ivfPqEncode(member, "embedding", "vec_id", cents, books))
-        GenerationLog.commit(spark, root, gen)
+        GenerationLog.publish(spark, root)(writeGeneration(spark, _, cents, books,
+          Similarity.ivfPqEncode(member, "embedding", "vec_id", cents, books)))
       } finally graft.CacheScope.unpersistCheckpoint(member)
     }
-  }
-
-  def vacuum(
-      spark: SparkSession, root: String,
-      ttlMs: Long = MaintenanceLock.DefaultTtlMs): Unit = {
-    GenerationLog.vacuumGenerations(spark, root, ttlMs)
-    GenerationLog.currentDir(spark, root)
-      .foreach(SegmentLog.vacuumSegments(spark, _, ttlMs))
-  }
 }
 
 /** The persisted SUBSTRING WINDOW (ExactSubstr) index — the on-disk
@@ -1388,21 +1350,14 @@ object VersionedIvfPq {
   */
 object VersionedSubstring {
 
-  private def fsOf(spark: SparkSession, p: String): org.apache.hadoop.fs.FileSystem =
-    new org.apache.hadoop.fs.Path(p)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
   def write(
       docs: DataFrame, textCol: String, idCol: String, root: String,
       n: Int = 8): Unit = {
     val spark = docs.sparkSession
     import spark.implicits._
     MaintenanceLock.withLock(spark, root) {
-      val (gen, dir) = GenerationLog.stageNext(spark, root)
-      Seq(n).toDF("n").coalesce(1).write.mode("overwrite").parquet(s"$dir/params")
-      Dedup.substringWindowManifest(docs, textCol, idCol, n)
-        .write.mode("overwrite").parquet(s"$dir/manifest")
-      GenerationLog.commit(spark, root, gen)
+      GenerationLog.publish(spark, root)(VersionedNearDup.writeGeneration(_,
+        Seq(n).toDF("n"), Dedup.substringWindowManifest(docs, textCol, idCol, n)))
     }
   }
 
@@ -1423,15 +1378,9 @@ object VersionedSubstring {
     */
   def manifest(
       spark: SparkSession, root: String,
-      beforeBatch: Option[Long] = None): DataFrame = {
-    val dir = GenerationLog.requireCurrentDir(spark, root)
-    val base = spark.read.parquet(s"$dir/manifest").select(col("h1"), col("h2"))
-    val segDirs = SegmentLog.committedDirs(spark, dir, beforeBatch)
-    if (segDirs.isEmpty) base
-    else base.unionByName(
-      spark.read.option("basePath", SegmentLog.segmentsDir(dir)).parquet(segDirs: _*)
-        .select(col("h1"), col("h2")))
-  }
+      beforeBatch: Option[Long] = None): DataFrame =
+    SegmentLog.liveView(spark, GenerationLog.requireCurrentDir(spark, root), "manifest",
+      Seq(col("h1"), col("h2")), None, beforeBatch)
 
   /** One gate batch of [[streamGate]], exposed for replay testing and
     * receipts. Cleaned text lands by static overwrite of
@@ -1469,22 +1418,9 @@ object VersionedSubstring {
       val newKeys = occ.select(col("h1"), col("h2")).distinct()
         .join(man, Seq("h1", "h2"), "left_anti")
       val segId = SegmentLog.nextSegId(spark, dir)
+      // a batch with no new windows commits marker-only (see writeSegment)
       graft.Trace.t("substr.keys-write")(
-        newKeys.write.mode("overwrite").option("partitionOverwriteMode", "static")
-          .parquet(SegmentLog.segmentDir(dir, segId)))
-      // a batch with no new windows still writes its (empty-but-readable)
-      // segment? No: zero-task writes may leave no parquet footers — treat
-      // like VersionedNearDup's all-suppressed case and commit marker-only
-      val hasData = graft.Trace.t("substr.empty-probe")(
-        IndexMeta.dirHasRows(spark, SegmentLog.segmentDir(dir, segId)))
-      if (!hasData) {
-        val fs = fsOf(spark, dir)
-        fs.delete(new org.apache.hadoop.fs.Path(SegmentLog.segmentDir(dir, segId)), true)
-        val parent = new org.apache.hadoop.fs.Path(SegmentLog.segmentsDir(dir))
-        if (fs.exists(parent) && fs.listStatus(parent).isEmpty)
-          fs.delete(parent, false)
-      }
-      SegmentLog.commitMarker(spark, dir, s"$segId.s$batchId")
+        SegmentLog.writeSegment(spark, dir, segId, newKeys, s"$segId.s$batchId"))
     }
    } }
 
@@ -1503,13 +1439,8 @@ object VersionedSubstring {
       stream: DataFrame, textCol: String, idCol: String,
       root: String, cleanDir: String, checkpointDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch((batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        gateBatch(batch.toDF(), textCol, idCol, root, cleanDir, batchId))
-      .start()
+    graft.streaming.GateStream.start(stream, checkpointDir)(
+      gateBatch(_, textCol, idCol, root, cleanDir, _))
 
   /** Fold segments into the base manifest as the next generation (the
     * partition-count maintenance for a long-running gate). The manifest is
@@ -1518,25 +1449,10 @@ object VersionedSubstring {
     */
   def consolidate(
       spark: SparkSession, root: String,
-      checkpointDir: Option[String] = None): Unit = {
-    checkpointDir.foreach(graft.streaming.CommitLog.requireAllCommitted(
-      spark, _, s"VersionedSubstring.consolidate($root)"))
-    MaintenanceLock.withLock(spark, root) {
+      checkpointDir: Option[String] = None): Unit =
+    GenerationLog.maintain(spark, root, "VersionedSubstring.consolidate", checkpointDir) {
       val dir = GenerationLog.requireCurrentDir(spark, root)
-      val live = manifest(spark, root)
-      val (gen, next) = GenerationLog.stageNext(spark, root)
-      spark.read.parquet(s"$dir/params")
-        .coalesce(1).write.mode("overwrite").parquet(s"$next/params")
-      live.write.mode("overwrite").parquet(s"$next/manifest")
-      GenerationLog.commit(spark, root, gen)
+      GenerationLog.publish(spark, root)(VersionedNearDup.writeGeneration(_,
+        spark.read.parquet(s"$dir/params"), manifest(spark, root)))
     }
-  }
-
-  def vacuum(
-      spark: SparkSession, root: String,
-      ttlMs: Long = MaintenanceLock.DefaultTtlMs): Unit = {
-    GenerationLog.vacuumGenerations(spark, root, ttlMs)
-    GenerationLog.currentDir(spark, root)
-      .foreach(SegmentLog.vacuumSegments(spark, _, ttlMs))
-  }
 }

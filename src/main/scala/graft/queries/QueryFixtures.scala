@@ -219,7 +219,7 @@ private[queries] object QueryFixtures {
     val liveBefore = contentHash(
       VersionedSubstring.manifest(s, root.toString), Seq("h1", "h2"))
     VersionedSubstring.consolidate(s, root.toString)
-    VersionedSubstring.vacuum(s, root.toString, ttlMs = 0L)
+    GenerationLog.vacuum(s, root.toString, ttlMs = 0L)
     val compactOk = contentHash(
       VersionedSubstring.manifest(s, root.toString), Seq("h1", "h2")) == liveBefore &&
       GenerationLog.committedGenerations(s, root.toString).size == 1
@@ -589,7 +589,7 @@ private[queries] object QueryFixtures {
       emb.filter(col("vec_id") % 7 === 3).select(col("vec_id")), "vec_id")
     VersionedIvf.consolidate(s, dir.toString)
     VersionedIvf.retrain(s, dir.toString, k = Some(8))
-    VersionedIvf.vacuum(s, dir.toString, ttlMs = 0L)
+    GenerationLog.vacuum(s, dir.toString, ttlMs = 0L)
     dir.toString
   }
 
@@ -633,7 +633,7 @@ private[queries] object QueryFixtures {
       VersionedNearDup.liveManifest(s, root.toString), Seq("doc", "keys", "shh"))
     val beforeCompact = liveHash()
     VersionedNearDup.consolidate(s, root.toString)
-    VersionedNearDup.vacuum(s, root.toString, ttlMs = 0L)
+    GenerationLog.vacuum(s, root.toString, ttlMs = 0L)
     val fs = new org.apache.hadoop.fs.Path(root.toString)
       .getFileSystem(s.sparkContext.hadoopConfiguration)
     val genDir = GenerationLog.requireCurrentDir(s, root.toString)

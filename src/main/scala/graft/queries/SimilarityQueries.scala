@@ -486,7 +486,7 @@ private[graft] object SimilarityQueries {
         VersionedIvfPq.consolidate(s, dir.toString)
         VersionedIvfPq.retrain(s, dir.toString, emb,
           "embedding", "vec_id", k = Some(8))
-        VersionedIvfPq.vacuum(s, dir.toString, ttlMs = 0L)
+        GenerationLog.vacuum(s, dir.toString, ttlMs = 0L)
         dir.toString
       }
       VersionedIvfPq.topKFromIndex(s, path,

@@ -162,20 +162,12 @@ object ComposedGate {
       keptDir: String, checkpointDir: String,
       threshold: Double, nprobe: Int = 2)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    graft.operators.GenerationLog.requireCurrentDir(stream.sparkSession, annIndexPath)
-    val gen = graft.operators.GenerationLog
-      .currentGeneration(stream.sparkSession, annIndexPath)
-    val centroids = VersionedIvf.readCentroids(stream.sparkSession, annIndexPath)
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch((batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        ingestBatch4(batch.toDF(), textCol, vecCol, idCol, model, numBuckets,
-          substrIndexPath, textIndexPath, annIndexPath, centroids,
-          qualityKeptDir, cleanDir, textKeptDir, keptDir, batchId,
-          threshold, nprobe, frozenGen = gen))
-      .start()
+    val (gen, centroids) = VersionedIvf.frozenCentroids(stream.sparkSession, annIndexPath)
+    GateStream.start(stream, checkpointDir)((batch, batchId) =>
+      ingestBatch4(batch, textCol, vecCol, idCol, model, numBuckets,
+        substrIndexPath, textIndexPath, annIndexPath, centroids,
+        qualityKeptDir, cleanDir, textKeptDir, keptDir, batchId,
+        threshold, nprobe, frozenGen = Some(gen)))
   }
 
   /** [[ingestBatch3]] as a Structured Streaming query — one checkpoint for
@@ -189,20 +181,12 @@ object ComposedGate {
       cleanDir: String, textKeptDir: String, keptDir: String,
       checkpointDir: String, threshold: Double, nprobe: Int = 2)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    graft.operators.GenerationLog.requireCurrentDir(stream.sparkSession, annIndexPath)
-    val gen = graft.operators.GenerationLog
-      .currentGeneration(stream.sparkSession, annIndexPath)
-    val centroids = VersionedIvf.readCentroids(stream.sparkSession, annIndexPath)
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch((batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        ingestBatch3(batch.toDF(), textCol, vecCol, idCol,
-          substrIndexPath, textIndexPath, annIndexPath, centroids,
-          cleanDir, textKeptDir, keptDir, batchId, threshold, nprobe,
-          frozenGen = gen))
-      .start()
+    val (gen, centroids) = VersionedIvf.frozenCentroids(stream.sparkSession, annIndexPath)
+    GateStream.start(stream, checkpointDir)((batch, batchId) =>
+      ingestBatch3(batch, textCol, vecCol, idCol,
+        substrIndexPath, textIndexPath, annIndexPath, centroids,
+        cleanDir, textKeptDir, keptDir, batchId, threshold, nprobe,
+        frozenGen = Some(gen)))
   }
 
   /** Drive the composition as a Structured Streaming query (AvailableNow,
@@ -220,18 +204,10 @@ object ComposedGate {
       textKeptDir: String, keptDir: String, checkpointDir: String,
       threshold: Double, nprobe: Int = 2)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    graft.operators.GenerationLog.requireCurrentDir(stream.sparkSession, annIndexPath)
-    val gen = graft.operators.GenerationLog
-      .currentGeneration(stream.sparkSession, annIndexPath)
-    val centroids = VersionedIvf.readCentroids(stream.sparkSession, annIndexPath)
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch((batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        ingestBatch(batch.toDF(), textCol, vecCol, idCol,
-          textIndexPath, annIndexPath, centroids,
-          textKeptDir, keptDir, batchId, threshold, nprobe, frozenGen = gen))
-      .start()
+    val (gen, centroids) = VersionedIvf.frozenCentroids(stream.sparkSession, annIndexPath)
+    GateStream.start(stream, checkpointDir)((batch, batchId) =>
+      ingestBatch(batch, textCol, vecCol, idCol,
+        textIndexPath, annIndexPath, centroids,
+        textKeptDir, keptDir, batchId, threshold, nprobe, frozenGen = Some(gen)))
   }
 }

@@ -82,6 +82,22 @@ class Bm25IndexSpec extends AnyFunSuite with SparkTestBase {
     assert(gotCap !== got, "the df cap should change results on this corpus")
   }
 
+  test("a root wiped and rebuilt over another corpus probes with the new base's stats, not the old incarnation's memo") {
+    val idx = tmpDir("bm25wipe")
+    SparseSim.writeBm25Index(corpus, "text", "doc_id", idx, numBuckets = 8)
+    SparseSim.bm25TopKFromIndex(spark, idx, queries, "text", "doc_id", k = 5)
+      .collect() // memoizes the base segment's stats
+    // the rebuild reuses base segment id 1 at the same path
+    val fs = new org.apache.hadoop.fs.Path(idx)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.delete(new org.apache.hadoop.fs.Path(idx), true)
+    val smaller = corpus.filter(col("doc_id") < 30)
+    SparseSim.writeBm25Index(smaller, "text", "doc_id", idx, numBuckets = 8)
+    assert(asSet(SparseSim.bm25TopKFromIndex(spark, idx, queries,
+      "text", "doc_id", k = 5)) === asSet(SparseSim.bm25TopK(smaller, queries,
+      "text", "doc_id", "text", "doc_id", k = 5)))
+  }
+
   test("probe reads only the query terms' hash buckets (partition pruning)") {
     val idx = tmpDir("bm25pp")
     SparseSim.writeBm25Index(corpus, "text", "doc_id", idx, numBuckets = 32)

@@ -100,10 +100,10 @@ class VersionedIndexSpec extends AnyFunSuite with SparkTestBase {
     // (an in-flight probe may still hold the old dir — snapshot isolation),
     // ttl 0 GCs them; current untouched either way
     assert(GenerationLog.committedGenerations(spark, root).size === 3)
-    VersionedIvf.vacuum(spark, root)
+    GenerationLog.vacuum(spark, root)
     assert(GenerationLog.committedGenerations(spark, root).size === 3,
       "vacuum deleted a freshly-superseded generation out from under readers")
-    VersionedIvf.vacuum(spark, root, ttlMs = 0L)
+    GenerationLog.vacuum(spark, root, ttlMs = 0L)
     assert(GenerationLog.committedGenerations(spark, root).size === 1)
     assert(exhaustive(root, queries, k = 5) === brute(queries, live, k = 5))
 
@@ -137,6 +137,18 @@ class VersionedIndexSpec extends AnyFunSuite with SparkTestBase {
     VersionedIvfPq.append(extra, "embedding", "vec_id", root)
     assert(exact(full, 5) === brute(queries, full, 5))
 
+    // an empty append commits marker-only: its marker lands, its segment
+    // dir does not, the probe still reads, and indexHealth counts only the
+    // segment with rows
+    VersionedIvfPq.append(extra.limit(0), "embedding", "vec_id", root)
+    val appendDir = GenerationLog.requireCurrentDir(spark, root)
+    assert(SegmentLog.committed(spark, appendDir).map(_._1).sorted === Seq(0L, 1L))
+    assert(!fsOf(root).exists(
+      new org.apache.hadoop.fs.Path(SegmentLog.segmentDir(appendDir, 1L))))
+    assert(exact(full, 5) === brute(queries, full, 5))
+    assert(GenerationLog.indexHealth(spark, root)
+      .select("n_segments").head.getLong(0) === 1L)
+
     val delIds = Seq(7L, 103L)
     VersionedIvfPq.delete(spark, root, delIds.toDF("vec_id"), "vec_id")
     val live = full.filter(!col("vec_id").isin(delIds: _*))
@@ -151,10 +163,14 @@ class VersionedIndexSpec extends AnyFunSuite with SparkTestBase {
     assert(exact(full, 5) === brute(queries, live, 5))
 
     assert(GenerationLog.committedGenerations(spark, root).size === 3)
-    VersionedIvfPq.vacuum(spark, root)
+    GenerationLog.vacuum(spark, root)
     assert(GenerationLog.committedGenerations(spark, root).size === 3,
       "vacuum deleted a freshly-superseded generation inside the TTL grace")
-    VersionedIvfPq.vacuum(spark, root, ttlMs = 0L)
+    // ttl 0 grants no grace even to a marker stamped ahead of this clock
+    // (or in the same millisecond as the vacuum)
+    fsOf(root).setTimes(new org.apache.hadoop.fs.Path(s"$root/_commits/3"),
+      System.currentTimeMillis() + 60000L, -1L)
+    GenerationLog.vacuum(spark, root, ttlMs = 0L)
     assert(GenerationLog.committedGenerations(spark, root).size === 1)
     assert(exact(full, 5) === brute(queries, live, 5))
 
@@ -184,14 +200,14 @@ class VersionedIndexSpec extends AnyFunSuite with SparkTestBase {
     assert(exhaustive(root, queries, k = 5) === want, "probe read uncommitted staging")
 
     // fresh staging survives vacuum (a live stager), aged staging does not
-    VersionedIvf.vacuum(spark, root)
+    GenerationLog.vacuum(spark, root)
     assert(fsOf(root).exists(new org.apache.hadoop.fs.Path(staged)))
     import scala.jdk.CollectionConverters._
     val old = java.nio.file.attribute.FileTime.fromMillis(
       System.currentTimeMillis() - MaintenanceLock.DefaultTtlMs - 60000L)
     java.nio.file.Files.walk(java.nio.file.Paths.get(staged))
       .iterator().asScala.foreach(p => java.nio.file.Files.setLastModifiedTime(p, old))
-    VersionedIvf.vacuum(spark, root)
+    GenerationLog.vacuum(spark, root)
     assert(!fsOf(root).exists(new org.apache.hadoop.fs.Path(staged)),
       "aged dead staging survived vacuum")
     assert(exhaustive(root, queries, k = 5) === want)
@@ -224,7 +240,7 @@ class VersionedIndexSpec extends AnyFunSuite with SparkTestBase {
       System.currentTimeMillis() - MaintenanceLock.DefaultTtlMs - 60000L)
     java.nio.file.Files.walk(java.nio.file.Paths.get(s"$genDir/segments/ingest_batch=9"))
       .iterator().asScala.foreach(p => java.nio.file.Files.setLastModifiedTime(p, old))
-    VersionedIvf.vacuum(spark, root)
+    GenerationLog.vacuum(spark, root)
     assert(!fsOf(root).exists(
       new org.apache.hadoop.fs.Path(s"$genDir/segments/ingest_batch=9")))
   }

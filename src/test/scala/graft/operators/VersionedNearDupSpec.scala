@@ -81,10 +81,10 @@ class VersionedNearDupSpec extends AnyFunSuite with SparkTestBase {
     assert(keptIds(keptV).contains(30L), "tombstoned doc kept suppressing")
     val liveBefore = liveHash(root)
     VersionedNearDup.consolidate(spark, root)
-    VersionedNearDup.vacuum(spark, root)
+    GenerationLog.vacuum(spark, root)
     assert(GenerationLog.committedGenerations(spark, root).size === 2,
       "vacuum deleted the freshly-superseded generation inside the TTL grace")
-    VersionedNearDup.vacuum(spark, root, ttlMs = 0L)
+    GenerationLog.vacuum(spark, root, ttlMs = 0L)
     assert(liveHash(root) === liveBefore, "consolidation changed the live view")
     assert(GenerationLog.committedGenerations(spark, root).size === 1)
     val genDir = GenerationLog.requireCurrentDir(spark, root)
@@ -92,6 +92,23 @@ class VersionedNearDupSpec extends AnyFunSuite with SparkTestBase {
     assert(!fsOf(root).exists(new org.apache.hadoop.fs.Path(s"$genDir/segments")))
     assert(NoDirRenameFileSystem.refused.get() === 0,
       "a versioned near-dup operation attempted to publish via directory rename")
+  }
+
+  test("a root wiped and rebuilt with other params reads the new params even when the marker mtime repeats") {
+    val root = tmpDir("vndwipe")
+    val docs = Seq((1L, baseText)).toDF("doc_id", "text")
+    writeV(docs, root)
+    assert(VersionedNearDup.readParams(spark, root) === ((3, 32, 2, 1, 2))) // memoized
+    val marker = new org.apache.hadoop.fs.Path(s"$root/_commits/1")
+    val mtime = fsOf(root).getFileStatus(marker).getModificationTime
+    // the rebuild reuses generation 1 at the same path; pin the new marker
+    // to the old one's mtime (one mtime granule)
+    fsOf(root).delete(new org.apache.hadoop.fs.Path(root), true)
+    VersionedNearDup.write(docs, "text", "doc_id", root,
+      shingleSize = 5, numer = 7, denom = 10, bands = 16, rowsPerBand = 4)
+    fsOf(root).setTimes(marker, mtime, -1L)
+    assert(fsOf(root).getFileStatus(marker).getModificationTime === mtime)
+    assert(VersionedNearDup.readParams(spark, root) === ((5, 16, 4, 7, 10)))
   }
 
   test("an all-suppressed batch commits a marker (replay-recognizable) but no segment") {

@@ -74,10 +74,10 @@ class VersionedSubstringSpec extends AnyFunSuite with SparkTestBase {
     // consolidation folds segments; the manifest VIEW is invariant
     val liveBefore = manifestSet(root)
     VersionedSubstring.consolidate(spark, root)
-    VersionedSubstring.vacuum(spark, root)
+    GenerationLog.vacuum(spark, root)
     assert(GenerationLog.committedGenerations(spark, root).size === 2,
       "vacuum deleted the freshly-superseded generation inside the TTL grace")
-    VersionedSubstring.vacuum(spark, root, ttlMs = 0L)
+    GenerationLog.vacuum(spark, root, ttlMs = 0L)
     assert(manifestSet(root) === liveBefore)
     assert(GenerationLog.committedGenerations(spark, root).size === 1)
     val genDir = GenerationLog.requireCurrentDir(spark, root)
