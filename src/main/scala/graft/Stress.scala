@@ -18,6 +18,9 @@ object Stress {
 
   // the sf1 expansion: joins on the remapped keys stay 1:N at mult×
   import MakeScaledSf.expand
+  // the replay receipts' content hash and the planted-junk quality set are
+  // the contract queries' own
+  import queries.QueryFixtures.{composedOutputsHash, contentHash, junkLabeled, junkText}
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -96,14 +99,19 @@ object Stress {
       acc.get
     }
 
-    // Per-op shuffle tally: task-end metrics summed while the op runs, bus
-    // drained before reading (CoreBridge) so the numbers are complete. This
-    // turns the scale claims into MEASURED receipts — "the k-bounded top-k
+    // One run-wide tally: Spark jobs started and task-end shuffle writes.
+    // Receipts read deltas around a body, with the listener bus drained
+    // (CoreBridge) before each read so the numbers are complete. This turns
+    // the scale claims into MEASURED receipts — "the k-bounded top-k
     // exchanges 45k rows where the window plan exchanges 15M" is a printed
     // number, not prose.
-    class ShuffleTally extends org.apache.spark.scheduler.SparkListener {
-      val records = new java.util.concurrent.atomic.AtomicLong
-      val bytes = new java.util.concurrent.atomic.AtomicLong
+    object Tally extends org.apache.spark.scheduler.SparkListener {
+      private val jobs = new java.util.concurrent.atomic.AtomicLong
+      private val records = new java.util.concurrent.atomic.AtomicLong
+      private val bytes = new java.util.concurrent.atomic.AtomicLong
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
       override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
         val m = e.taskMetrics
         if (m != null) {
@@ -111,20 +119,28 @@ object Stress {
           bytes.addAndGet(m.shuffleWriteMetrics.bytesWritten)
         }
       }
+      /** (jobs, shuffle records, shuffle bytes) so far, bus drained. */
+      def read(): (Long, Long, Long) = {
+        org.apache.spark.graftbridge.CoreBridge.drainListenerBus(spark.sparkContext)
+        (jobs.get, records.get, bytes.get)
+      }
+      /** `body`'s value and the Spark jobs it started. */
+      def jobsOf[A](body: => A): (A, Long) = {
+        val j0 = read()._1
+        val a = body
+        (a, read()._1 - j0)
+      }
     }
+    spark.sparkContext.addSparkListener(Tally)
 
     def time(name: String)(body: => Long): Option[(String, Double, Long)] = {
       if (only.exists(sel => !sel.exists(name.startsWith))) return None
-      val tally = new ShuffleTally
-      spark.sparkContext.addSparkListener(tally)
+      val (_, r0, b0) = Tally.read()
       val t0 = System.nanoTime()
       // per-op scope: each measured op frees its own persisted/checkpointed
       // frames at exit, so later ops never pay for earlier ops' cache state
-      val n = try CacheScope.withScope(body)
-      finally {
-        org.apache.spark.graftbridge.CoreBridge.drainListenerBus(spark.sparkContext)
-        spark.sparkContext.removeSparkListener(tally)
-      }
+      val n = CacheScope.withScope(body)
+      val (_, r1, b1) = Tally.read()
       // ... and that must actually be TRUE: a new stress body that persists
       // outside scope discipline fails its own run here, instead of
       // resurfacing later as cross-op accumulation (the round-3 collapse)
@@ -132,7 +148,7 @@ object Stress {
         s"$name leaked CacheManager entries past its scope close")
       val sec = (System.nanoTime() - t0) / 1e9
       System.err.println(f"[stress] $name%-22s ${sec}%8.2f s   rows=$n" +
-        f"   shuffle=${tally.records.get}%d recs/${tally.bytes.get / (1 << 20)}%d MiB")
+        f"   shuffle=${r1 - r0}%d recs/${(b1 - b0) / (1 << 20)}%d MiB")
       Some((name, sec, n))
     }
 
@@ -1033,24 +1049,12 @@ object Stress {
       // per merge — 1000+ jobs of pure scheduling overhead at this depth
       time("bpe_trainfast_1k") {
         val cust = Tables(spark, sfDir, "customer")
-        val jobs = new java.util.concurrent.atomic.AtomicLong
-        val jl = new org.apache.spark.scheduler.SparkListener {
-          override def onJobStart(
-              e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-            jobs.incrementAndGet(); ()
-          }
-        }
-        spark.sparkContext.addSparkListener(jl)
         val t0 = System.nanoTime()
-        val n =
-          try operators.BpeTrainer.trainFast(cust, "c_name", numMerges = 1000).count()
-          finally {
-            org.apache.spark.graftbridge.CoreBridge.drainListenerBus(spark.sparkContext)
-            spark.sparkContext.removeSparkListener(jl)
-          }
+        val (n, jobs) = Tally.jobsOf(
+          operators.BpeTrainer.trainFast(cust, "c_name", numMerges = 1000).count())
         System.err.println(
           f"[stress] bpe_trainfast_1k: $n merges in ${(System.nanoTime() - t0) / 1e9}%.1f s, " +
-            s"${jobs.get} Spark jobs total (train() would be ~1 per merge)")
+            s"$jobs Spark jobs total (train() would be ~1 per merge)")
         n
       },
       // VERDICT r9 #5: the streaming index INGEST itself at mult× (the
@@ -1078,13 +1082,9 @@ object Stress {
             "embedding", "vec_id", dir.toString, ckpt.toString)
             .awaitTermination()
           val ingestWall = (System.nanoTime() - t0) / 1e9
-          def corpusHash(): (Long, Long) = {
-            val r = operators.VersionedIvf.corpusView(spark, dir.toString)
-              .agg(count(lit(1)), sum(hash(col("vec_id"), col("embedding"),
-                col("cluster"), col("ingest_batch")).cast("long")))
-              .head
-            (r.getLong(0), r.getLong(1))
-          }
+          def corpusHash(): (Long, Long) = contentHash(
+            operators.VersionedIvf.corpusView(spark, dir.toString),
+            Seq("vec_id", "embedding", "cluster", "ingest_batch"))
           val before = corpusHash()
           // replay batch 3 with its own landed content (what a failure
           // between write and checkpoint commit re-delivers)
@@ -1178,15 +1178,10 @@ object Stress {
               f"[stress] stream_gate_x$mult batch=$k " +
                 f"${(System.nanoTime() - t0) / 1e9}%.1f s")
           }
-          def snap(): ((Long, Long), (Long, Long)) = {
-            val kr = spark.read.parquet(kept.toString)
-              .agg(count(lit(1)), sum(hash(col("doc_id"), col("ingest_batch"))
-                .cast("long"))).head
-            val mr = operators.VersionedNearDup.liveManifest(spark, idx.toString)
-              .agg(count(lit(1)), sum(hash(col("doc"), col("keys"))
-                .cast("long"))).head
-            ((kr.getLong(0), kr.getLong(1)), (mr.getLong(0), mr.getLong(1)))
-          }
+          def snap(): ((Long, Long), (Long, Long)) = (
+            contentHash(spark.read.parquet(kept.toString), Seq("doc_id", "ingest_batch")),
+            contentHash(operators.VersionedNearDup.liveManifest(spark, idx.toString),
+              Seq("doc", "keys")))
           val before = snap()
           operators.VersionedNearDup.gateBatch(batchOf(1),
             "text", "doc_id", idx.toString, kept.toString, 1L)
@@ -1233,15 +1228,10 @@ object Stress {
               f"[stress] semantic_gate_x$mult batch=$k " +
                 f"${(System.nanoTime() - t0) / 1e9}%.1f s")
           }
-          def snap(): ((Long, Long), (Long, Long)) = {
-            val kr = spark.read.parquet(kept.toString)
-              .agg(count(lit(1)), sum(hash(col("vec_id"), col("ingest_batch"))
-                .cast("long"))).head
-            val cr = operators.VersionedIvf.corpusView(spark, idx.toString)
-              .agg(count(lit(1)), sum(hash(col("vec_id"), col("cluster"),
-                col("ingest_batch")).cast("long"))).head
-            ((kr.getLong(0), kr.getLong(1)), (cr.getLong(0), cr.getLong(1)))
-          }
+          def snap(): ((Long, Long), (Long, Long)) = (
+            contentHash(spark.read.parquet(kept.toString), Seq("vec_id", "ingest_batch")),
+            contentHash(operators.VersionedIvf.corpusView(spark, idx.toString),
+              Seq("vec_id", "cluster", "ingest_batch")))
           val before = snap()
           operators.Similarity.semanticGateBatch(batchOf(1), "embedding",
             "vec_id", idx.toString, kept.toString, cents, 1L,
@@ -1310,18 +1300,8 @@ object Stress {
               f"[stress] composed_gate_x$mult batch=$k " +
                 f"${(System.nanoTime() - t0) / 1e9}%.1f s")
           }
-          def snap(): Seq[(Long, Long)] = Seq(
-            (spark.read.parquet(textKept.toString), Seq("doc_id", "ingest_batch")),
-            (spark.read.parquet(kept.toString), Seq("doc_id", "ingest_batch")),
-            (operators.VersionedIvf.corpusView(spark, annIdx.toString),
-              Seq("vec_id", "cluster", "ingest_batch")),
-            (operators.VersionedNearDup.liveManifest(spark, textIdx.toString),
-              Seq("doc", "keys")))
-            .map { case (df, cols) =>
-              val r = df.agg(count(lit(1)),
-                sum(hash(cols.map(col): _*).cast("long"))).head
-              (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
-            }
+          def snap(): Seq[(Long, Long)] = composedOutputsHash(spark,
+            textIdx.toString, annIdx.toString, textKept.toString, kept.toString)
           val before = snap()
           composed(1)
           require(snap() == before,
@@ -1351,10 +1331,6 @@ object Stress {
           .map(Fixtures.dir)
         val Seq(substrIdx, textIdx, annIdx, qKept, cleanD, textKept, kept) = dirs
         try {
-          def junk(id: org.apache.spark.sql.Column) = concat_ws(" ",
-            concat(lit("jnk"), pmod(id, lit(7))), lit("zzq xxq"),
-            concat(lit("jnk"), pmod(id, lit(5))), lit("qqz jnky zzq"),
-            concat(lit("jnk"), pmod(id, lit(3))))
           val baseDocs = docs.filter(pmod(col("doc_id"), lit(2)) === 0)
           val baseEmb = embs.filter(pmod(col("vec_id"), lit(2)) === 0)
             .select(col("vec_id"), col("embedding"))
@@ -1366,7 +1342,7 @@ object Stress {
               when(pmod(col("doc_id"), lit(4)) === 1,
                 concat(lit("nva"), col("doc_id"), lit(" nvb"), col("doc_id"),
                   lit(" nvc"), col("doc_id"), lit(" nvd"), col("doc_id")))
-                .when(pmod(col("doc_id"), lit(16)) === 3, junk(col("doc_id")))
+                .when(pmod(col("doc_id"), lit(16)) === 3, junkText(col("doc_id")))
                 .otherwise(col("text")))
           val arrivalEmb = embs.filter(pmod(col("vec_id"), lit(2)) === 1)
             .withColumn("embedding",
@@ -1379,11 +1355,8 @@ object Stress {
           def batchOf(k: Int) =
             arrivals.filter(pmod(col("doc_id"), lit(8)) === (2 * k + 1))
           // fixed-size labeled set from the un-multiplied reference table
-          val fixed = Tables.balanced(spark, sfDir, "documents")
-            .select(col("doc_id").cast("long").as("doc_id"), col("text"))
-          val labeled = fixed.withColumn("label", lit(1L)).unionByName(
-            fixed.select((col("doc_id") + lit(1000000000L)).as("doc_id"),
-              junk(col("doc_id")).as("text"), lit(0L).as("label")))
+          val labeled = junkLabeled(
+            Tables.balanced(spark, sfDir, "documents"), 1000000000L)
           val buckets = 1 << 12
           val model = operators.TextClassifier.train(
             labeled, "text", "doc_id", "label",
@@ -1430,11 +1403,7 @@ object Stress {
             (spark.read.parquet(kept.toString), Seq("doc_id", "ingest_batch")),
             (operators.VersionedNearDup.liveManifest(spark, textIdx.toString),
               Seq("doc", "keys")))
-            .map { case (df, cols) =>
-              val r = df.agg(count(lit(1)),
-                sum(hash(cols.map(col): _*).cast("long"))).head
-              (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
-            }
+            .map { case (df, cols) => contentHash(df, cols) }
           val before = snap()
           composed(1)
           require(snap() == before,
@@ -1463,29 +1432,17 @@ object Stress {
           translate(
             floor(exp(u * log(lit(60000.0)))).cast("long").cast("string"),
             "0123456789", "abcdefghij").as("word"))
-        val jobs = new java.util.concurrent.atomic.AtomicLong
-        val jl = new org.apache.spark.scheduler.SparkListener {
-          override def onJobStart(
-              e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-            jobs.incrementAndGet(); ()
-          }
-        }
         import scala.jdk.CollectionConverters._
         val heapPools = java.lang.management.ManagementFactory
           .getMemoryPoolMXBeans.asScala
           .filter(_.getType == java.lang.management.MemoryType.HEAP)
         heapPools.foreach(_.resetPeakUsage())
-        spark.sparkContext.addSparkListener(jl)
         val t0 = System.nanoTime()
-        val full =
-          try operators.BpeTrainer.trainFast(corpus, "word", numMerges = 30000)
+        val (full, jobs) = Tally.jobsOf(
+          operators.BpeTrainer.trainFast(corpus, "word", numMerges = 30000)
             .orderBy(col("rank"))
             .select(col("rank"), col("left"), col("right"), col("pair_count"))
-            .collect().toSeq
-          finally {
-            org.apache.spark.graftbridge.CoreBridge.drainListenerBus(spark.sparkContext)
-            spark.sparkContext.removeSparkListener(jl)
-          }
+            .collect().toSeq)
         val wall = (System.nanoTime() - t0) / 1e9
         val peakMb = heapPools.map(_.getPeakUsage.getUsed).sum / (1024L * 1024L)
         val prefix = operators.BpeTrainer.trainFast(corpus, "word", numMerges = 500)
@@ -1496,7 +1453,7 @@ object Stress {
           "trainFast(500) diverged from the first 500 merges of trainFast(30k)")
         System.err.println(
           f"[stress] bpe_trainfast_30k: ${full.size} merges in $wall%.1f s, " +
-            s"${jobs.get} Spark jobs (30k-merge leg only), peak driver heap " +
+            s"$jobs Spark jobs (30k-merge leg only), peak driver heap " +
             s"${peakMb} MB, 500-merge prefix contract OK")
         full.size.toLong
       },

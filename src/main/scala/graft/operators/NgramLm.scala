@@ -139,9 +139,10 @@ object NgramLm {
     *    histogram is cut into ~4096 VALUE-RANGE blocks (block = integer
     *    DIV of the score by a width derived from the observed range, so
     *    the key is monotone in the score and block counts are bounded by
-    *    construction at any corpus size); per-block totals flow through
-    *    the one ordered window (≤ 4097 rows), within-block prefixes
-    *    through a window PARTITIONED on the block;
+    *    construction at any corpus size); the per-block totals (≤ 4097
+    *    rows) are collected and prefix-summed on the driver, within-block
+    *    prefixes come from a window PARTITIONED on the block — no window
+    *    runs without a partition key;
     *  - within-score rank by doc id: the same trick on the DOC id —
     *    per-(score, doc-block) counts prefix-summed per score (≤ 4097
     *    rows per score, however many docs tie on it), row_number only
@@ -151,7 +152,9 @@ object NgramLm {
     *
     * The scored frame is persisted for the pass (it feeds the histogram,
     * the block stats and the ranked output; its LM-join subplan would
-    * otherwise re-run three times).
+    * otherwise re-run three times). The row count and score/doc ranges
+    * and the block prefixes are two driver collects, so the ranked plan
+    * carries them as literals and broadcasts only the block prefixes.
     */
   def bucketsFromScores(
       scored: DataFrame, idCol: String, scoreCol: String, nBuckets: Int): DataFrame = {
@@ -160,23 +163,24 @@ object NgramLm {
     val s = graft.CacheScope.persist(scored
       .select(col(idCol).cast("long").as("doc"),
         floor(col(scoreCol) * lit(1000000.0)).cast("long").as("score_x1e6")))
-    // every scalar the block math needs, in one pass (broadcast 1 row)
-    val bounds = s.agg(count(lit(1)).as("n"),
-      coalesce(min(col("score_x1e6")), lit(0L)).as("slo"),
-      coalesce(max(col("score_x1e6")), lit(0L)).as("shi"),
-      coalesce(min(col("doc")), lit(0L)).as("dlo"),
-      coalesce(max(col("doc")), lit(0L)).as("dhi"))
-    val withB = s.crossJoin(broadcast(bounds))
-      .withColumn("__sb", expr("(score_x1e6 - slo) DIV ((shi - slo) DIV 4096 + 1)"))
-      .withColumn("__db", expr("(doc - dlo) DIV ((dhi - dlo) DIV 4096 + 1)"))
+    // every scalar the block math needs, in one pass (one driver row)
+    val Array(n, slo, shi, dlo, dhi) = s.agg(count(lit(1)),
+      coalesce(min(col("score_x1e6")), lit(0L)),
+      coalesce(max(col("score_x1e6")), lit(0L)),
+      coalesce(min(col("doc")), lit(0L)),
+      coalesce(max(col("doc")), lit(0L))).head.toSeq.map(_.asInstanceOf[Long]).toArray
+    val withB = s
+      .withColumn("__sb", expr(s"(score_x1e6 - ${slo}L) DIV ${(shi - slo) / 4096 + 1}L"))
+      .withColumn("__db", expr(s"(doc - ${dlo}L) DIV ${(dhi - dlo) / 4096 + 1}L"))
     // strictly-better-score counts, two levels over the histogram
     val hist = withB.groupBy(col("__sb"), col("score_x1e6"))
       .agg(count(lit(1)).as("__c"))
     val blkTot = hist.groupBy(col("__sb")).agg(sum(col("__c")).as("__bc"))
-    val wBlk = Window.orderBy(col("__sb").desc)
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val blkBefore = blkTot.select(col("__sb"),
-      coalesce(sum(col("__bc")).over(wBlk), lit(0L)).as("__bb"))
+      .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(-_._1)
+    val spark = scored.sparkSession
+    import spark.implicits._
+    val blkBefore = blkTot.map(_._1).zip(blkTot.scanLeft(0L)(_ + _._2)).toSeq
+      .toDF("__sb", "__bb")
     val wIn = Window.partitionBy(col("__sb")).orderBy(col("score_x1e6").desc)
       .rowsBetween(Window.unboundedPreceding, -1)
     val cum = hist
@@ -197,7 +201,7 @@ object NgramLm {
       .join(cum, Seq("score_x1e6"))
       .select(col("doc"), col("score_x1e6"),
         // integer DIV, not `/` (which is double division in Spark SQL)
-        expr(s"CAST((before + __dbf + __rn - 1) * $nBuckets DIV n + 1 AS BIGINT)")
+        expr(s"CAST((before + __dbf + __rn - 1) * $nBuckets DIV ${n}L + 1 AS BIGINT)")
           .as("bucket"))
   }
 

@@ -1,8 +1,7 @@
 package graft
 package queries
 
-import graft.operators.{Dedup, GenerationLog, Linkage, PageRank, Similarity, SparseSim, TextClassifier, TextOps, VersionedIvf, VersionedNearDup, VersionedSubstring}
-import org.apache.spark.sql.DataFrame
+import graft.operators.{Dedup, Linkage, PageRank, Similarity, SparseSim, TextClassifier, TextOps, VersionedIvf, VersionedNearDup, VersionedSubstring}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -105,7 +104,6 @@ private[graft] object DedupQueries {
     // gate's cleaned rows on the same base/batches/replay schedule, with
     // replay identity and consolidate/vacuum invariance. Provably empty
     Query("d_substr_gate_versioned_contract", (s, d) => fixtureSerialized("substrgate", d) {
-      import s.implicits._
       val (_, cleanP, _) =
         Fixtures.memo("substrGate", d)(buildSubstringGateFixture(s, d))
       val (_, cleanV, replayOk, compactOk) =
@@ -117,17 +115,11 @@ private[graft] object DedupQueries {
         .select(col("doc"), col("cleaned_text"), col("ingest_batch").cast("long").as("b"))
       val versioned = s.read.parquet(cleanV)
         .select(col("doc"), col("cleaned_text"), col("ingest_batch").cast("long").as("b"))
-      val extra = versioned.except(inPlace)
-        .withColumn("violation", lit("cleaned by versioned gate, not by in-place"))
-      val missing = inPlace.except(versioned)
-        .withColumn("violation", lit("cleaned by in-place gate, not by versioned"))
-      val lifecycle = Seq(
-        ("replay changed versioned gate outputs", replayOk),
-        ("consolidate/vacuum changed manifest view or kept generations", compactOk))
-        .filter(!_._2).map(t => (0L, "", -1L, t._1))
-        .toDF("doc", "cleaned_text", "b", "violation")
-      extra.unionByName(missing).unionByName(lifecycle)
-        .select(col("doc"), col("violation"))
+      keptVerdict(versioned, inPlace, "doc", "doc",
+        "cleaned by versioned gate, not by in-place",
+        "cleaned by in-place gate, not by versioned",
+        "replay changed versioned gate outputs" -> replayOk,
+        "consolidate/vacuum changed manifest view or kept generations" -> compactOk)
     },
       // the versioned substring gate produces the in-place gate's cleaned
       // rows exactly, replay- and consolidation-invariant — provably empty
@@ -136,13 +128,9 @@ private[graft] object DedupQueries {
     Query("d_substr_versioned_health_contract", (s, d) => fixtureSerialized("substrgate", d) {
       val (root, _, _, _) =
         Fixtures.memo("versionedSubstr", d)(buildVersionedSubstrFixture(s, d))
-      GenerationLog.indexHealth(s, root)
-        .filter(col("n_generations") =!= 1L || col("n_staged_debris") =!= 0L ||
-          col("n_segments") =!= 0L || col("n_stream_segments") =!= 0L ||
-          col("n_tombstones") =!= 0L)
-        .select(col("n_generations"), col("n_segments"), col("n_tombstones"))
+      settledHealthViolations(s, root)
     },
-      Contract("SELECT CAST(0 AS BIGINT) AS n_generations, CAST(0 AS BIGINT) AS n_segments, CAST(0 AS BIGINT) AS n_tombstones FROM documents WHERE 1 = 0")),
+      Contract(settledHealthOracle("documents"))),
     // THREE-stage composed ingest (substring → near-dup → semantic), the
     // full crawl-pipeline shape in one foreachBatch: timed body = replay
     // of batch 0 through all three stages
@@ -165,7 +153,6 @@ private[graft] object DedupQueries {
       // replay identity across all SIX output tables (batch 1 re-driven
       // through ingestBatch3 here). Violations frame provably empty
       BenchOnly(Query("d_composed3_gate_contract", (s, d) => fixtureSerialized("composed3", d) {
-        import s.implicits._
         val (substrIdx, textIdx, annIdx, cleanDir, textKept, kept, cents) =
           Fixtures.memo("composed3Gate", d)(buildComposed3GateFixture(s, d))
         val beforeReplay =
@@ -178,15 +165,10 @@ private[graft] object DedupQueries {
           s, substrIdx, textIdx, annIdx, cleanDir, textKept, kept) == beforeReplay
         val refKept = composed3ReferenceKept(s, d,
           Seq(gateSubBatch(composedArrivals(s, d), 0)), cents)
-        val streamKept = s.read.parquet(kept).select(col("doc_id"))
-        val extra = streamKept.except(refKept)
-          .withColumn("violation", lit("kept by composition, not by reference"))
-        val missing = refKept.except(streamKept)
-          .withColumn("violation", lit("kept by reference, not by composition"))
-        val lifecycle = Seq(("replay changed composed outputs", replayOk))
-          .filter(!_._2).map(t => (0L, t._1)).toDF("doc_id", "violation")
-        extra.union(missing).union(lifecycle)
-          .select(col("doc_id").cast("bigint").as("doc"), col("violation"))
+        keptVerdict(s.read.parquet(kept).select(col("doc_id")), refKept, "doc_id", "doc",
+          "kept by composition, not by reference",
+          "kept by reference, not by composition",
+          "replay changed composed outputs" -> replayOk)
       },
         Contract("SELECT CAST(doc_id AS BIGINT) AS doc, '' AS violation FROM documents WHERE 1 = 0")))),
     // FOUR-stage composed ingest (classifier score gate → substring →
@@ -213,7 +195,6 @@ private[graft] object DedupQueries {
       // planted junk docs must actually have been dropped at stage -1).
       // Violations frame provably empty
       BenchOnly(Query("d_composed4_gate_contract", (s, d) => fixtureSerialized("composed4", d) {
-        import s.implicits._
         val (substrIdx, textIdx, annIdx, qualityKept, cleanDir, textKept, kept, cents) =
           Fixtures.memo("composed4Gate", d)(buildComposed4GateFixture(s, d))
         val model = composed4Model(s, d)
@@ -233,11 +214,6 @@ private[graft] object DedupQueries {
             .filter(col("quality") === 1L).select(col("doc").as("doc_id")),
           Seq("doc_id")))
         val refKept = composed3ReferenceKept(s, d, Seq(qualityRef), cents)
-        val streamKept = s.read.parquet(kept).select(col("doc_id"))
-        val extra = streamKept.except(refKept)
-          .withColumn("violation", lit("kept by composition, not by reference"))
-        val missing = refKept.except(streamKept)
-          .withColumn("violation", lit("kept by reference, not by composition"))
         // non-vacuity: every planted junk arrival of batch 0 must be absent
         // from the quality ledger (stage -1 dropped it) — otherwise the
         // classifier stage silently passed everything
@@ -245,18 +221,20 @@ private[graft] object DedupQueries {
           .filter(pmod(col("doc_id"), lit(16)) === 4).select(col("doc_id"))
         val leaked = s.read.parquet(qualityKept).select(col("doc_id"))
           .join(planted, Seq("doc_id"), "left_semi")
-          .withColumn("violation", lit("planted junk doc survived the quality gate"))
-        val lifecycle = Seq(("replay changed composed4 outputs", replayOk))
-          .filter(!_._2).map(t => (0L, t._1)).toDF("doc_id", "violation")
-        extra.union(missing).union(leaked).union(lifecycle)
-          .select(col("doc_id").cast("bigint").as("doc"), col("violation"))
+          .select(col("doc_id").cast("bigint").as("doc"),
+            lit("planted junk doc survived the quality gate").as("violation"))
+        keptVerdict(s.read.parquet(kept).select(col("doc_id")), refKept, "doc_id", "doc",
+          "kept by composition, not by reference",
+          "kept by reference, not by composition",
+          "replay changed composed4 outputs" -> replayOk)
+          .union(leaked)
       },
         // four-stage (classifier → substring → near-dup → semantic): streamed
         // ≡ quality-filtered stacked references + replay identity + the
         // planted junk docs dropped at stage -1 — all provably empty
         Contract("SELECT CAST(doc_id AS BIGINT) AS doc, '' AS violation FROM documents WHERE 1 = 0")))),
     Query("d_stream_gate", (s, d) => fixtureSerialized("streamgate", d) {
-      val (idx, kept, _, _) =
+      val (idx, kept, _) =
         Fixtures.memo("nearDupGate", d)(buildNearDupGateFixture(s, d))
       VersionedNearDup.gateBatch(
         gateSubBatch(tb(s, d, "documents")
@@ -270,28 +248,21 @@ private[graft] object DedupQueries {
       // pipeline (pure batch ops, no index/stream machinery) applying the
       // same first-arrival-wins semantics — including the retention delete
       // before batch 2 (forgotten docs must stop suppressing) — plus the
-      // replay-identity and compact-invariance probes from the fixture
-      // build. Violations frame provably empty, hash-gated
+      // replay-identity probe from the fixture build (compaction of this
+      // index family is d_gate_versioned_contract's probe). Violations
+      // frame provably empty, hash-gated
       BenchOnly(Query("d_stream_gate_contract", (s, d) => fixtureSerialized("streamgate", d) {
-        import s.implicits._
-        val (_, kept, replayOk, compactOk) =
+        val (_, kept, replayOk) =
           Fixtures.memo("nearDupGate", d)(buildNearDupGateFixture(s, d))
-        val refKept = sequentialGateReferenceKept(s, d)
-        val streamKept = s.read.parquet(kept).select(col("doc_id"))
-        val extra = streamKept.except(refKept)
-          .withColumn("violation", lit("kept by stream, not by reference"))
-        val missing = refKept.except(streamKept)
-          .withColumn("violation", lit("kept by reference, not by stream"))
-        val lifecycle = Seq(
-          ("replay changed gate outputs", replayOk),
-          ("compact changed live manifest or left tombstones", compactOk))
-          .filter(!_._2).map(t => (0L, t._1)).toDF("doc_id", "violation")
-        extra.union(missing).union(lifecycle)
-          .select(col("doc_id").cast("bigint").as("doc"), col("violation"))
+        keptVerdict(s.read.parquet(kept).select(col("doc_id")),
+          sequentialGateReferenceKept(s, d), "doc_id", "doc",
+          "kept by stream, not by reference",
+          "kept by reference, not by stream",
+          "replay changed gate outputs" -> replayOk)
       },
         // streaming near-dup gate lifecycle: stream ≡ sequential reference,
-        // replay identity, tombstone release, compact invariance — all folded
-        // into one provably-empty violations frame
+        // replay identity, tombstone release — all folded into one
+        // provably-empty violations frame
         Contract("SELECT CAST(doc_id AS BIGINT) AS doc, '' AS violation FROM documents WHERE 1 = 0")))),
     // the VERSIONED gate's bench face (runs before the contract in the
     // shared-JVM smoke, so the fixture build and the reference computation
@@ -311,21 +282,14 @@ private[graft] object DedupQueries {
       // sequential reference the in-place gate is pinned to, plus replay
       // identity and consolidate/vacuum invariance. Provably empty
       BenchOnly(Query("d_gate_versioned_contract", (s, d) => fixtureSerialized("versionedgate", d) {
-        import s.implicits._
         val (_, kept, replayOk, compactOk) =
           Fixtures.memo("versionedGate", d)(buildVersionedGateFixture(s, d))
-        val refKept = sequentialGateReferenceKept(s, d)
-        val streamKept = s.read.parquet(kept).select(col("doc_id"))
-        val extra = streamKept.except(refKept)
-          .withColumn("violation", lit("kept by versioned gate, not by reference"))
-        val missing = refKept.except(streamKept)
-          .withColumn("violation", lit("kept by reference, not by versioned gate"))
-        val lifecycle = Seq(
-          ("replay changed gate outputs", replayOk),
-          ("consolidate/vacuum changed live manifest, left tombstones, or kept generations", compactOk))
-          .filter(!_._2).map(t => (0L, t._1)).toDF("doc_id", "violation")
-        extra.union(missing).union(lifecycle)
-          .select(col("doc_id").cast("bigint").as("doc"), col("violation"))
+        keptVerdict(s.read.parquet(kept).select(col("doc_id")),
+          sequentialGateReferenceKept(s, d), "doc_id", "doc",
+          "kept by versioned gate, not by reference",
+          "kept by reference, not by versioned gate",
+          "replay changed gate outputs" -> replayOk,
+          "consolidate/vacuum changed live manifest, left tombstones, or kept generations" -> compactOk)
       },
         // the versioned (rename-free) gate shares the in-place gate's contract
         // shape: streamed ≡ sequential reference + lifecycle probes, all empty
@@ -335,13 +299,9 @@ private[graft] object DedupQueries {
     Query("d_gate_versioned_health_contract", (s, d) => fixtureSerialized("versionedgate", d) {
       val (root, _, _, _) =
         Fixtures.memo("versionedGate", d)(buildVersionedGateFixture(s, d))
-      GenerationLog.indexHealth(s, root)
-        .filter(col("n_generations") =!= 1L || col("n_staged_debris") =!= 0L ||
-          col("n_segments") =!= 0L || col("n_stream_segments") =!= 0L ||
-          col("n_tombstones") =!= 0L)
-        .select(col("n_generations"), col("n_segments"), col("n_tombstones"))
+      settledHealthViolations(s, root)
     },
-      Contract("SELECT CAST(0 AS BIGINT) AS n_generations, CAST(0 AS BIGINT) AS n_segments, CAST(0 AS BIGINT) AS n_tombstones FROM documents WHERE 1 = 0")),
+      Contract(settledHealthOracle("documents"))),
     // the LSH families' health audit (r10 verdict #5 — VersionedIvf.assignmentDrift's
     // twin): per-band bucket-occupancy stats of the persisted near-dup
     // index from ONE manifest scan, gated by SCALE-FREE healthy-shape
@@ -353,7 +313,7 @@ private[graft] object DedupQueries {
     // sf0.1 (rule: 125), sumsq/n_sigs ≤ 1.06 (rule: 4). The planted
     // degenerate corpus in NearDupIndexSpec trips both rules at every band
     Query("d_index_health", (s, d) => fixtureSerialized("streamgate", d) {
-      val (idx, _, _, _) =
+      val (idx, _, _) =
         Fixtures.memo("nearDupGate", d)(buildNearDupGateFixture(s, d))
       Dedup.nearDupIndexBucketStats(s, idx)
         .filter(col("max_bucket") * 10 > col("n_sigs") + 50 ||
@@ -405,38 +365,25 @@ private[graft] object DedupQueries {
         val (_, kept, replayOk, cents) =
           Fixtures.memo("semanticGate", d)(buildSemanticGateFixture(s, d))
         val embs = tb(s, d, "embeddings")
-        val base = embs.filter(pmod(col("vec_id"), lit(4)) === 2)
-          .select(col("vec_id"), col("embedding"))
+        val base = gateEmbBase(embs)
         val arrivals = embs.filter(pmod(col("vec_id"), lit(4)) === 0)
           .select(col("vec_id"), col("embedding"))
         val deleted = base.filter(pmod(col("vec_id"), lit(20)) === 2)
           .select(col("vec_id").as("__t"))
-        val (_, refKept) = (0 to 2).foldLeft(
-          (graft.CacheScope.localCheckpoint(base),
-            s.emptyDataset[Long].toDF("vec_id"))) { case ((corpusRef, acc), k) =>
-          val cr =
-            if (k == 2) corpusRef.join(broadcast(deleted),
+        val start = (graft.CacheScope.localCheckpoint(base),
+          s.emptyDataset[Long].toDF("vec_id"))
+        val refKept = (0 to 2).foldLeft(start) { case ((corpus, acc), k) =>
+          val live =
+            if (k == 2) corpus.join(broadcast(deleted),
               col("vec_id") === col("__t"), "left_anti")
-            else corpusRef
-          val bk = semSubBatch(arrivals, k)
-          val sup = Similarity.ivfTopK(bk, cr, "embedding", "vec_id",
-              k = 1, cents, SemGateNprobe)
-            .filter(col("cos") >= SemGateTau).select(col("query_id"))
-          val unseen = bk.join(sup, bk("vec_id") === sup("query_id"), "left_anti")
-          val keptK = graft.CacheScope.localCheckpoint(
-            Dedup.semanticKeepers(unseen, "embedding", "vec_id", SemGateTau))
-          (graft.CacheScope.localCheckpoint(corpusRef.union(keptK)),
-            acc.union(keptK.select(col("vec_id"))))
-        }
-        val streamKept = s.read.parquet(kept).select(col("vec_id"))
-        val extra = streamKept.except(refKept)
-          .withColumn("violation", lit("kept by stream, not by reference"))
-        val missing = refKept.except(streamKept)
-          .withColumn("violation", lit("kept by reference, not by stream"))
-        val lifecycle = Seq(("replay changed gate outputs", replayOk))
-          .filter(!_._2).map(t => (0L, t._1)).toDF("vec_id", "violation")
-        extra.union(missing).union(lifecycle)
-          .select(col("vec_id").cast("bigint").as("vec"), col("violation"))
+            else corpus
+          val (keptK, grown) = semanticGateStep(semSubBatch(arrivals, k), live, "vec_id", cents)
+          (grown, acc.union(keptK.select(col("vec_id"))))
+        }._2
+        keptVerdict(s.read.parquet(kept).select(col("vec_id")), refKept, "vec_id", "vec",
+          "kept by stream, not by reference",
+          "kept by reference, not by stream",
+          "replay changed gate outputs" -> replayOk)
       },
         // semantic-gate lifecycle: stream ≡ sequential in-memory reference,
         // replay identity, tombstone release — one provably-empty frame
@@ -473,52 +420,23 @@ private[graft] object DedupQueries {
           SemGateTau, SemGateNprobe)
         val replayOk =
           composedOutputsHash(s, textIdx, annIdx, textKept, kept) == beforeReplay
-        val docs = tb(s, d, "documents")
-        val embs = tb(s, d, "embeddings")
         val arrivals = composedArrivals(s, d)
-        def manifestOf(df: DataFrame): DataFrame =
-          Dedup.nearDupManifest(df, "text", "doc_id", GateShingle, GateBands, GateRows)
-        val man0 = graft.CacheScope.localCheckpoint(manifestOf(gateIndexBase(docs)))
-        val corpus0 = graft.CacheScope.localCheckpoint(
-          embs.filter(pmod(col("vec_id"), lit(4)) === 2)
-            .select(col("vec_id").as("doc_id"), col("embedding")))
-        val (_, _, refKept) = (0 to 1).foldLeft(
-          (man0, corpus0, s.emptyDataset[Long].toDF("doc_id"))) {
-          case ((man, corpusRef, acc), k) =>
-            val bk = gateSubBatch(arrivals, k)
-            // stage 1 reference: the text gate's exact-Jaccard pipeline
-            // (eager checkpoints per round — the folded-plan-blowup lesson)
-            val unseenT = Dedup.dropSeenNearDuplicates(
-              bk, man, "text", "doc_id",
-              GateShingle, GateNumer, GateDenom, GateBands, GateRows)
-            val keptT = graft.CacheScope.localCheckpoint(Dedup.dropNearDuplicates(
-              unseenT,
-              Dedup.jaccardDuplicatePairs(unseenT, "text", "doc_id",
-                GateShingle, GateNumer, GateDenom, GateBands, GateRows),
-              "doc_id"))
-            // stage 2 reference: semantic suppression against the
-            // accumulating corpus, then in-batch semantic keepers
-            val bkE = keptT.select(col("doc_id"), col("embedding"))
-            val sup = Similarity.ivfTopK(bkE, corpusRef, "embedding", "doc_id",
-                k = 1, cents, SemGateNprobe)
-              .filter(col("cos") >= SemGateTau).select(col("query_id"))
-            val unseenS = bkE.join(sup, bkE("doc_id") === sup("query_id"), "left_anti")
-            val keptS = graft.CacheScope.localCheckpoint(
-              Dedup.semanticKeepers(unseenS, "embedding", "doc_id", SemGateTau))
-            (graft.CacheScope.localCheckpoint(
-              man.union(manifestOf(keptT.select(col("doc_id"), col("text"))))),
-              graft.CacheScope.localCheckpoint(corpusRef.union(keptS)),
-              acc.union(keptS.select(col("doc_id"))))
-        }
-        val streamKept = s.read.parquet(kept).select(col("doc_id"))
-        val extra = streamKept.except(refKept)
-          .withColumn("violation", lit("kept by composition, not by reference"))
-        val missing = refKept.except(streamKept)
-          .withColumn("violation", lit("kept by reference, not by composition"))
-        val lifecycle = Seq(("replay changed composed outputs", replayOk))
-          .filter(!_._2).map(t => (0L, t._1)).toDF("doc_id", "violation")
-        extra.union(missing).union(lifecycle)
-          .select(col("doc_id").cast("bigint").as("doc"), col("violation"))
+        // the composed3 fold minus its substring stage
+        val start = (
+          graft.CacheScope.localCheckpoint(
+            gateManifest(gateIndexBase(tb(s, d, "documents")))),
+          graft.CacheScope.localCheckpoint(
+            gateEmbBase(tb(s, d, "embeddings")).toDF("doc_id", "embedding")),
+          s.emptyDataset[Long].toDF("doc_id"))
+        val refKept = (0 to 1).foldLeft(start) { case ((man, corpus, acc), k) =>
+          val (keptT, grownMan) = textGateStep(gateSubBatch(arrivals, k), man)
+          val (keptS, grownCorpus) = semanticGateStep(keptT, corpus, "doc_id", cents)
+          (grownMan, grownCorpus, acc.union(keptS.select(col("doc_id"))))
+        }._3
+        keptVerdict(s.read.parquet(kept).select(col("doc_id")), refKept, "doc_id", "doc",
+          "kept by composition, not by reference",
+          "kept by reference, not by composition",
+          "replay changed composed outputs" -> replayOk)
       },
         // composed text→semantic gate: streamed composition ≡ the two stacked
         // sequential references + whole-composition replay identity

@@ -4,12 +4,17 @@ package queries
 import graft.operators.{Dedup, GenerationLog, Similarity, SparseSim, TextClassifier, VersionedIvf, VersionedNearDup, VersionedSubstring}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.concurrent.{Await, Future}
+import scala.concurrent.ExecutionContext.Implicits.global
+import scala.concurrent.duration.Duration
 
 /** The harness tables and the gate and index fixtures that query builds
   * share: each fixture is built once per sf dir (through [[Fixtures.memo]])
-  * and read by a bench face and its `_contract` sibling alike.
+  * and read by a bench face and its `_contract` sibling alike — and the
+  * pieces every gate `_contract` composes: the kept-set verdict, one
+  * sequential-reference step per gate stage and the settled-health audit.
   */
-private[queries] object QueryFixtures {
+private[graft] object QueryFixtures {
 
   def t(s: SparkSession, dir: String, name: String): DataFrame =
     Tables(s, dir, name)
@@ -43,15 +48,20 @@ private[queries] object QueryFixtures {
   def gateIndexBase(docs: DataFrame): DataFrame =
     docs.filter(pmod(col("doc_id"), lit(4)) === 2)
 
+  /** The embedding twin of [[gateIndexBase]]: the vec_id ≡ 2 mod 4 quarter. */
+  def gateEmbBase(embs: DataFrame): DataFrame =
+    embs.filter(pmod(col("vec_id"), lit(4)) === 2)
+      .select(col("vec_id"), col("embedding"))
+
   private def gateDeletedIds(docs: DataFrame): DataFrame =
     gateIndexBase(docs).filter(pmod(col("doc_id"), lit(20)) === 2)
       .select(col("doc_id"))
 
   /** Order-independent content hash of a frame: (row count, sum of per-row
-    * hashes) — the replay/compact invariance currency (mirrors the Stress
-    * receipts' corpusHash).
+    * hashes) — the replay/compact invariance currency of the gate contracts
+    * and of the Stress replay receipts.
     */
-  private def contentHash(df: DataFrame, cols: Seq[String]): (Long, Long) = {
+  private[graft] def contentHash(df: DataFrame, cols: Seq[String]): (Long, Long) = {
     val r = df.agg(count(lit(1)),
       sum(hash(cols.map(col): _*).cast("long"))).head
     (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
@@ -111,8 +121,7 @@ private[queries] object QueryFixtures {
   def buildSemanticGateFixture(
       s: SparkSession, d: String): (String, String, Boolean, Seq[Seq[Float]]) = {
     val embs = tb(s, d, "embeddings")
-    val base = embs.filter(pmod(col("vec_id"), lit(4)) === 2)
-      .select(col("vec_id"), col("embedding"))
+    val base = gateEmbBase(embs)
     val arrivals = embs.filter(pmod(col("vec_id"), lit(4)) === 0)
       .select(col("vec_id"), col("embedding"))
     val idx = Fixtures.dir("sgidx")
@@ -241,37 +250,12 @@ private[queries] object QueryFixtures {
   def buildComposed3GateFixture(
       s: SparkSession, d: String)
       : (String, String, String, String, String, String, Seq[Seq[Float]]) = {
-    val docs = tb(s, d, "documents")
-    val embs = tb(s, d, "embeddings")
-    val baseDocs = gateIndexBase(docs)
-    val baseEmb = embs.filter(pmod(col("vec_id"), lit(4)) === 2)
-      .select(col("vec_id"), col("embedding"))
     val arrivals = composedArrivals(s, d)
     val dirs = Seq("c3s", "c3t", "c3a", "c3cl", "c3tk", "c3k", "c3l", "c3c")
       .map(Fixtures.dir)
     val Seq(substrIdx, textIdx, annIdx, cleanDir, textKept, kept, landing, ckpt) = dirs
-    // the three base indexes are independent — build them on concurrent
-    // threads (Spark actions are thread-safe; local[32] has slack) to keep
-    // the whole fixture + one composed execution inside the smoke gate's
-    // 20 s single-shot bound. One Lloyd round: the contract compares the
-    // stream against a reference sharing the SAME frozen centroids, so
-    // centroid quality is not under test here (the recall contracts are)
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val fSub = Future(VersionedSubstring.write(
-      baseDocs, "text", "doc_id", substrIdx.toString, n = SubstrGateN))
-    val fText = Future(VersionedNearDup.write(baseDocs, "text", "doc_id",
-      textIdx.toString, GateShingle, GateNumer, GateDenom, GateBands, GateRows))
-    val fAnn = Future {
-      val c = Similarity.trainIvfCentroids(baseEmb, "embedding", "vec_id",
-        k = 8, iterations = 1)
-      VersionedIvf.write(baseEmb, "embedding", "vec_id", c, annIdx.toString)
-      c
-    }
-    Await.result(fSub, Duration.Inf)
-    Await.result(fText, Duration.Inf)
-    val cents = Await.result(fAnn, Duration.Inf)
+    val cents = Await.result(writeComposedBaseIndexes(
+      s, d, substrIdx.toString, textIdx.toString, annIdx.toString), Duration.Inf)
     landBatch(gateSubBatch(arrivals, 0), landing, 0)
     graft.streaming.ComposedGate.stream3(
       s.readStream.schema(arrivals.schema).option("maxFilesPerTrigger", 1)
@@ -285,76 +269,169 @@ private[queries] object QueryFixtures {
       cleanDir.toString, textKept.toString, kept.toString, cents)
   }
 
+  /** Write the composed gates' three base indexes — substring windows and
+    * near-dup signatures on the ≡2 mod 4 doc quarter, IVF on the matching
+    * embedding quarter. They are independent, so they build on concurrent
+    * futures (Spark actions are thread-safe; local[32] has slack) to keep
+    * the whole fixture + one composed execution inside the smoke gate's
+    * 20 s single-shot bound. One Lloyd round: the contracts compare the
+    * stream against a reference sharing the SAME frozen centroids, so
+    * centroid quality is not under test here (the recall contracts are).
+    * Value: the frozen centroids, once all three indexes are written.
+    */
+  private def writeComposedBaseIndexes(
+      s: SparkSession, d: String, substrIdx: String, textIdx: String,
+      annIdx: String): Future[Seq[Seq[Float]]] = {
+    val baseDocs = gateIndexBase(tb(s, d, "documents"))
+    val baseEmb = gateEmbBase(tb(s, d, "embeddings"))
+    val fSub = Future(VersionedSubstring.write(
+      baseDocs, "text", "doc_id", substrIdx, n = SubstrGateN))
+    val fText = Future(VersionedNearDup.write(baseDocs, "text", "doc_id",
+      textIdx, GateShingle, GateNumer, GateDenom, GateBands, GateRows))
+    val fAnn = Future {
+      val c = Similarity.trainIvfCentroids(baseEmb, "embedding", "vec_id",
+        k = 8, iterations = 1)
+      VersionedIvf.write(baseEmb, "embedding", "vec_id", c, annIdx)
+      c
+    }
+    for (_ <- fSub; _ <- fText; c <- fAnn) yield c
+  }
+
   /** The stacked THREE-stage sequential reference (substring manifest fold
-    * → exact-Jaccard text fold → in-memory semantic fold) — pure batch
-    * ops, no index/stream machinery, base state from the ≡2 mod 4 corpus.
-    * Shared by d_composed3_gate_contract and the 4-stage contract (which
-    * feeds it quality-filtered batches).
+    * → [[textGateStep]] → [[semanticGateStep]]) — pure batch ops, no
+    * index/stream machinery, base state from the ≡2 mod 4 corpus. Shared
+    * by d_composed3_gate_contract and the 4-stage contract (which feeds it
+    * quality-filtered batches).
     */
   def composed3ReferenceKept(
       s: SparkSession, d: String, batches: Seq[DataFrame],
       cents: Seq[Seq[Float]]): DataFrame = {
     import s.implicits._
-    val docs = tb(s, d, "documents")
-    val embs = tb(s, d, "embeddings")
-    val baseDocs = gateIndexBase(docs)
-    def manifestOf(df: DataFrame): DataFrame =
-      Dedup.nearDupManifest(df, "text", "doc_id", GateShingle, GateBands, GateRows)
-    val subMan0 = graft.CacheScope.localCheckpoint(
-      Dedup.substringWindowManifest(baseDocs, "text", "doc_id", SubstrGateN))
-    val man0 = graft.CacheScope.localCheckpoint(manifestOf(baseDocs))
-    val corpus0 = graft.CacheScope.localCheckpoint(
-      embs.filter(pmod(col("vec_id"), lit(4)) === 2)
-        .select(col("vec_id").as("doc_id"), col("embedding")))
-    val (_, _, _, refKept) = batches.foldLeft(
-      (subMan0, man0, corpus0, s.emptyDataset[Long].toDF("doc_id"))) {
-      case ((subMan, man, corpusRef, acc), bk) =>
-        // stage 0 reference: the batch-incremental substring face (pure
-        // batch ops) — cleaned text, fully-duplicated docs dropped,
-        // manifest grown by the batch's ORIGINAL windows
-        val spans = Dedup.substringSpansAgainstManifest(
-          bk, subMan, "text", "doc_id", SubstrGateN)
-        val cleanedK = graft.CacheScope.localCheckpoint(
-          Dedup.applyRemovedSpans(bk, spans, "text", "doc_id")
-            .select(col("doc").as("doc_id"), col("cleaned_text").as("text"))
-            .join(bk.select(col("doc_id"), col("embedding")), Seq("doc_id")))
-        // stage 1 reference: the text gate's exact-Jaccard pipeline
-        val unseenT = Dedup.dropSeenNearDuplicates(
-          cleanedK, man, "text", "doc_id",
-          GateShingle, GateNumer, GateDenom, GateBands, GateRows)
-        val keptT = graft.CacheScope.localCheckpoint(Dedup.dropNearDuplicates(
-          unseenT,
-          Dedup.jaccardDuplicatePairs(unseenT, "text", "doc_id",
-            GateShingle, GateNumer, GateDenom, GateBands, GateRows),
-          "doc_id"))
-        // stage 2 reference: semantic suppression + in-batch keepers
-        val bkE = keptT.select(col("doc_id"), col("embedding"))
-        val sup = Similarity.ivfTopK(bkE, corpusRef, "embedding", "doc_id",
-            k = 1, cents, SemGateNprobe)
-          .filter(col("cos") >= SemGateTau).select(col("query_id"))
-        val unseenS = bkE.join(sup, bkE("doc_id") === sup("query_id"), "left_anti")
-        val keptS = graft.CacheScope.localCheckpoint(
-          Dedup.semanticKeepers(unseenS, "embedding", "doc_id", SemGateTau))
-        (graft.CacheScope.localCheckpoint(subMan.unionByName(
-          Dedup.substringWindowManifest(bk, "text", "doc_id", SubstrGateN))
-          .distinct()),
-          graft.CacheScope.localCheckpoint(
-            man.union(manifestOf(keptT.select(col("doc_id"), col("text"))))),
-          graft.CacheScope.localCheckpoint(corpusRef.union(keptS)),
-          acc.union(keptS.select(col("doc_id"))))
-    }
-    refKept
+    val baseDocs = gateIndexBase(tb(s, d, "documents"))
+    val start = (
+      graft.CacheScope.localCheckpoint(
+        Dedup.substringWindowManifest(baseDocs, "text", "doc_id", SubstrGateN)),
+      graft.CacheScope.localCheckpoint(gateManifest(baseDocs)),
+      graft.CacheScope.localCheckpoint(
+        gateEmbBase(tb(s, d, "embeddings")).toDF("doc_id", "embedding")),
+      s.emptyDataset[Long].toDF("doc_id"))
+    batches.foldLeft(start) { case ((subMan, man, corpus, acc), bk) =>
+      // stage 0 reference: the batch-incremental substring face (pure
+      // batch ops) — cleaned text, fully-duplicated docs dropped,
+      // manifest grown by the batch's ORIGINAL windows
+      val spans = Dedup.substringSpansAgainstManifest(
+        bk, subMan, "text", "doc_id", SubstrGateN)
+      val cleaned = graft.CacheScope.localCheckpoint(
+        Dedup.applyRemovedSpans(bk, spans, "text", "doc_id")
+          .select(col("doc").as("doc_id"), col("cleaned_text").as("text"))
+          .join(bk.select(col("doc_id"), col("embedding")), Seq("doc_id")))
+      val (keptT, grownMan) = textGateStep(cleaned, man)
+      val (keptS, grownCorpus) = semanticGateStep(keptT, corpus, "doc_id", cents)
+      (graft.CacheScope.localCheckpoint(subMan.unionByName(
+        Dedup.substringWindowManifest(bk, "text", "doc_id", SubstrGateN))
+        .distinct()),
+        grownMan, grownCorpus, acc.union(keptS.select(col("doc_id"))))
+    }._4
   }
+
+  /** The text gate's signature manifest at the gate's LSH shape. */
+  def gateManifest(docs: DataFrame): DataFrame =
+    Dedup.nearDupManifest(docs, "text", "doc_id", GateShingle, GateBands, GateRows)
+
+  /** One text-gate step of a sequential reference, in pure batch ops: drop
+    * the batch's near-dups of `manifest`, self-dedup the rest by exact
+    * Jaccard, then grow the manifest by the kept docs. Both results are
+    * eagerly checkpointed, not lazily persisted: dropSeen reads the
+    * manifest twice and the dedup pipeline reads the batch four times, so a
+    * fold over these steps otherwise grows its LOGICAL plan exponentially
+    * in the step count and Catalyst analysis alone dwarfs execution
+    * (measured at sf0.01: 98 s with lazy persist, ~6 s checkpointed).
+    * Value: (kept docs, grown manifest).
+    */
+  def textGateStep(batch: DataFrame, manifest: DataFrame): (DataFrame, DataFrame) = {
+    val unseen = Dedup.dropSeenNearDuplicates(batch, manifest, "text", "doc_id",
+      GateShingle, GateNumer, GateDenom, GateBands, GateRows)
+    val kept = graft.CacheScope.localCheckpoint(Dedup.dropNearDuplicates(
+      unseen,
+      Dedup.jaccardDuplicatePairs(unseen, "text", "doc_id",
+        GateShingle, GateNumer, GateDenom, GateBands, GateRows),
+      "doc_id"))
+    (kept, graft.CacheScope.localCheckpoint(
+      manifest.union(gateManifest(kept.select(col("doc_id"), col("text"))))))
+  }
+
+  /** One semantic-gate step of a sequential reference, in pure batch ops:
+    * suppress the batch vectors with a cosine ≥ τ neighbour in `corpus`
+    * (in-memory ivfTopK over the same frozen centroids and nprobe), keep
+    * the in-batch semantic keepers of the rest, then grow the corpus by
+    * them. Both results are eagerly checkpointed (see [[textGateStep]]).
+    * Value: (kept (id, embedding) rows, grown corpus).
+    */
+  def semanticGateStep(batch: DataFrame, corpus: DataFrame, id: String,
+      cents: Seq[Seq[Float]]): (DataFrame, DataFrame) = {
+    val vecs = batch.select(col(id), col("embedding"))
+    val sup = Similarity.ivfTopK(vecs, corpus, "embedding", id,
+        k = 1, cents, SemGateNprobe)
+      .filter(col("cos") >= SemGateTau).select(col("query_id"))
+    val unseen = vecs.join(sup, vecs(id) === sup("query_id"), "left_anti")
+    val kept = graft.CacheScope.localCheckpoint(
+      Dedup.semanticKeepers(unseen, "embedding", id, SemGateTau))
+    (kept, graft.CacheScope.localCheckpoint(corpus.union(kept)))
+  }
+
+  /** The gate contracts' verdict: rows of `got` not in `want` and rows of
+    * `want` not in `got`, each under its own label, plus one row (id 0)
+    * per failed lifecycle probe — one `(out, violation)` frame keyed by
+    * `id` cast to bigint, provably empty when the gate holds.
+    */
+  def keptVerdict(got: DataFrame, want: DataFrame, id: String, out: String,
+      gotOnly: String, wantOnly: String, probes: (String, Boolean)*): DataFrame = {
+    val s = got.sparkSession
+    import s.implicits._
+    def labeled(df: DataFrame, label: String): DataFrame =
+      df.select(col(id).cast("bigint").as(out), lit(label).as("violation"))
+    labeled(got.except(want), gotOnly)
+      .union(labeled(want.except(got), wantOnly))
+      .union(probes.filterNot(_._2).map(p => (0L, p._1)).toDF(out, "violation"))
+  }
+
+  /** The settled-shape audit of a consolidated + ttl-0-vacuumed generation
+    * log root: ONE committed generation, zero staged debris, zero segments,
+    * zero tombstones. Any row is a violation (a vacuum regression, crash
+    * loop or tombstone leak).
+    */
+  def settledHealthViolations(s: SparkSession, root: String): DataFrame =
+    GenerationLog.indexHealth(s, root)
+      .filter(col("n_generations") =!= 1L || col("n_staged_debris") =!= 0L ||
+        col("n_segments") =!= 0L || col("n_stream_segments") =!= 0L ||
+        col("n_tombstones") =!= 0L)
+      .select(col("n_generations"), col("n_segments"), col("n_tombstones"))
+
+  /** The oracle of [[settledHealthViolations]]: its empty frame over `table`. */
+  def settledHealthOracle(table: String): String =
+    "SELECT CAST(0 AS BIGINT) AS n_generations, CAST(0 AS BIGINT) AS n_segments, " +
+      s"CAST(0 AS BIGINT) AS n_tombstones FROM $table WHERE 1 = 0"
 
   /** Planted low-quality text in the classifier's junk vocabulary —
     * deterministic per id; disjoint from the harness corpus vocabulary, so
     * a converged linear model separates the classes exactly.
     */
-  private def junkText(id: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+  private[graft] def junkText(id: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     concat_ws(" ",
       concat(lit("jnk"), pmod(id, lit(7))), lit("zzq xxq"),
       concat(lit("jnk"), pmod(id, lit(5))), lit("qqz jnky zzq"),
       concat(lit("jnk"), pmod(id, lit(3))))
+
+  /** The planted-junk labeled set the quality classifiers train on: `docs`
+    * (doc_id, text) as label 1, plus one [[junkText]] doc per doc at id +
+    * `offset` as label 0.
+    */
+  private[graft] def junkLabeled(docs: DataFrame, offset: Long): DataFrame = {
+    val pos = docs.select(col("doc_id").cast("long").as("doc_id"), col("text"))
+    pos.withColumn("label", lit(1L)).unionByName(
+      pos.select((col("doc_id") + lit(offset)).as("doc_id"),
+        junkText(col("doc_id")).as("text"), lit(0L).as("label")))
+  }
 
   val ClsGateBuckets = 1 << 12
 
@@ -374,11 +451,7 @@ private[queries] object QueryFixtures {
   def composed4Model(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     Fixtures.memo("composed4Model", d) {
-      val base = gateIndexBase(tb(s, d, "documents"))
-        .select(col("doc_id").cast("long").as("doc_id"), col("text"))
-      val labeled = base.withColumn("label", lit(1L)).unionByName(
-        base.select((col("doc_id") + lit(2000000L)).as("doc_id"),
-          junkText(col("doc_id")).as("text"), lit(0L).as("label")))
+      val labeled = junkLabeled(gateIndexBase(tb(s, d, "documents")), 2000000L)
       // 5 iterations: the classes have DISJOINT vocabularies, so the sign
       // structure converges in the first couple of passes — the contract's
       // non-vacuity probe (planted junk must be dropped) guards the margin
@@ -397,33 +470,15 @@ private[queries] object QueryFixtures {
   def buildComposed4GateFixture(
       s: SparkSession, d: String)
       : (String, String, String, String, String, String, String, Seq[Seq[Float]]) = {
-    val docs = tb(s, d, "documents")
-    val embs = tb(s, d, "embeddings")
-    val baseDocs = gateIndexBase(docs)
-    val baseEmb = embs.filter(pmod(col("vec_id"), lit(4)) === 2)
-      .select(col("vec_id"), col("embedding"))
     val arrivals = composed4Arrivals(s, d)
     val dirs = Seq("c4s", "c4t", "c4a", "c4q", "c4cl", "c4tk", "c4k", "c4l", "c4c")
       .map(Fixtures.dir)
     val Seq(substrIdx, textIdx, annIdx, qualityKept, cleanDir, textKept,
       kept, landing, ckpt) = dirs
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val fSub = Future(VersionedSubstring.write(
-      baseDocs, "text", "doc_id", substrIdx.toString, n = SubstrGateN))
-    val fText = Future(VersionedNearDup.write(baseDocs, "text", "doc_id",
-      textIdx.toString, GateShingle, GateNumer, GateDenom, GateBands, GateRows))
-    val fAnn = Future {
-      val c = Similarity.trainIvfCentroids(baseEmb, "embedding", "vec_id",
-        k = 8, iterations = 1)
-      VersionedIvf.write(baseEmb, "embedding", "vec_id", c, annIdx.toString)
-      c
-    }
-    val model = composed4Model(s, d)
-    Await.result(fSub, Duration.Inf)
-    Await.result(fText, Duration.Inf)
-    val cents = Await.result(fAnn, Duration.Inf)
+    val indexes = writeComposedBaseIndexes(
+      s, d, substrIdx.toString, textIdx.toString, annIdx.toString)
+    val model = composed4Model(s, d) // trains while the indexes build
+    val cents = Await.result(indexes, Duration.Inf)
     landBatch(gateSubBatch(arrivals, 0), landing, 0)
     graft.streaming.ComposedGate.stream4(
       s.readStream.schema(arrivals.schema).option("maxFilesPerTrigger", 1)
@@ -479,13 +534,15 @@ private[queries] object QueryFixtures {
     *   3. replay probe: batch 1 re-gated through the same per-batch path —
     *      kept table and index manifest must hash-identical (replayOk);
     *   4. retention: base docs with doc_id ≡ 2 mod 20 tombstoned, batch 2
-    *      gated AFTER the delete (forgotten docs must no longer suppress);
-    *   5. compact: physical purge must leave the LIVE manifest view
-    *      hash-identical and remove the tombstone dir (compactOk).
-    * Value: (indexDir, keptDir, replayOk, compactOk).
+    *      gated AFTER the delete (forgotten docs must no longer suppress).
+    * No consolidation here: it would fold batch 2's segment into the base,
+    * and the d_stream_gate face's re-gate of batch 2 would then find the
+    * batch's own signatures and empty its kept partition. Compaction of
+    * this index family is checked by [[buildVersionedGateFixture]].
+    * Value: (indexDir, keptDir, replayOk).
     */
   def buildNearDupGateFixture(
-      s: SparkSession, d: String): (String, String, Boolean, Boolean) = {
+      s: SparkSession, d: String): (String, String, Boolean) = {
     val docs = tb(s, d, "documents")
     val base = gateIndexBase(docs)
     val arrivals = docs.filter(pmod(col("doc_id"), lit(4)) === 0)
@@ -513,16 +570,7 @@ private[queries] object QueryFixtures {
     VersionedNearDup.delete(gateDeletedIds(docs), "doc_id", idx.toString)
     VersionedNearDup.gateBatch(gateSubBatch(arrivals, 2),
       "text", "doc_id", idx.toString, kept.toString, 2L)
-    def liveHash(): (Long, Long) = contentHash(
-      VersionedNearDup.liveManifest(s, idx.toString), Seq("doc", "keys", "shh"))
-    val beforeCompact = liveHash()
-    VersionedNearDup.consolidate(s, idx.toString)
-    val fs = new org.apache.hadoop.fs.Path(idx.toString)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    val compactOk = liveHash() == beforeCompact &&
-      !fs.exists(new org.apache.hadoop.fs.Path(
-        s"${GenerationLog.requireCurrentDir(s, idx.toString)}/tombstones"))
-    (idx.toString, kept.toString, replayOk, compactOk)
+    (idx.toString, kept.toString, replayOk)
   }
 
   /** The SEQUENTIAL reference pipeline both gate contracts pin their
@@ -541,34 +589,17 @@ private[queries] object QueryFixtures {
   private def sequentialGateReferenceKeptUncached(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val docs = tb(s, d, "documents")
-    val base = gateIndexBase(docs)
     val arrivals = docs.filter(pmod(col("doc_id"), lit(4)) === 0)
     val deleted = gateDeletedIds(docs).select(col("doc_id").as("__t"))
-    def manifestOf(df: DataFrame): DataFrame =
-      Dedup.nearDupManifest(df, "text", "doc_id", GateShingle, GateBands, GateRows)
-    val (_, refKept) = (0 to 2).foldLeft(
-      (graft.CacheScope.localCheckpoint(manifestOf(base)),
-        s.emptyDataset[Long].toDF("doc_id"))) { case ((man, acc), k) =>
-      val manK =
+    val start = (graft.CacheScope.localCheckpoint(gateManifest(gateIndexBase(docs))),
+      s.emptyDataset[Long].toDF("doc_id"))
+    (0 to 2).foldLeft(start) { case ((man, acc), k) =>
+      val live =
         if (k == 2) man.join(broadcast(deleted), col("doc") === col("__t"), "left_anti")
         else man
-      val unseen = Dedup.dropSeenNearDuplicates(
-        gateSubBatch(arrivals, k), manK, "text", "doc_id",
-        GateShingle, GateNumer, GateDenom, GateBands, GateRows)
-      // EAGER lineage truncation each round, not lazy persist: dropSeen
-      // reads the manifest twice and the dedup pipeline reads the batch
-      // four times, so the folded LOGICAL plan otherwise grows
-      // exponentially in k and Catalyst analysis alone dwarfs execution
-      // (measured at sf0.01: 98 s with lazy persist, ~6 s checkpointed)
-      val keptK = graft.CacheScope.localCheckpoint(Dedup.dropNearDuplicates(
-        unseen,
-        Dedup.jaccardDuplicatePairs(unseen, "text", "doc_id",
-          GateShingle, GateNumer, GateDenom, GateBands, GateRows),
-        "doc_id"))
-      (graft.CacheScope.localCheckpoint(man.union(manifestOf(keptK))),
-        acc.union(keptK.select(col("doc_id"))))
-    }
-    refKept
+      val (kept, grown) = textGateStep(gateSubBatch(arrivals, k), live)
+      (grown, acc.union(kept.select(col("doc_id"))))
+    }._2
   }
 
   /** Build the versioned-IVF lifecycle fixture once per sf dir
@@ -673,7 +704,7 @@ private[queries] object QueryFixtures {
     * replay-identity currency shared by the contract query and the Stress
     * receipt.
     */
-  def composedOutputsHash(
+  private[graft] def composedOutputsHash(
       s: SparkSession, textIdx: String, annIdx: String,
       textKept: String, kept: String): Seq[(Long, Long)] = Seq(
     contentHash(s.read.parquet(textKept), Seq("doc_id", "text", "ingest_batch")),
@@ -695,11 +726,8 @@ private[queries] object QueryFixtures {
   def buildComposedGateFixture(
       s: SparkSession, d: String)
       : (String, String, String, String, Seq[Seq[Float]]) = {
-    val docs = tb(s, d, "documents")
-    val embs = tb(s, d, "embeddings")
-    val baseDocs = gateIndexBase(docs)
-    val baseEmb = embs.filter(pmod(col("vec_id"), lit(4)) === 2)
-      .select(col("vec_id"), col("embedding"))
+    val baseDocs = gateIndexBase(tb(s, d, "documents"))
+    val baseEmb = gateEmbBase(tb(s, d, "embeddings"))
     val arrivals = composedArrivals(s, d)
     val textIdx = Fixtures.dir("cmpt")
     val annIdx = Fixtures.dir("cmpa")

@@ -440,15 +440,11 @@ private[graft] object SimilarityQueries {
     Query("s_knn_versioned_health_contract", (s, d) => {
       val emb = tb(s, d, "embeddings")
       val path = Fixtures.memo("ivfVersionedIndex", d)(buildVersionedIvfFixture(s, emb))
-      GenerationLog.indexHealth(s, path)
-        .filter(col("n_generations") =!= 1L || col("n_staged_debris") =!= 0L ||
-          col("n_segments") =!= 0L || col("n_stream_segments") =!= 0L ||
-          col("n_tombstones") =!= 0L)
-        .select(col("n_generations"), col("n_segments"), col("n_tombstones"))
+      settledHealthViolations(s, path)
     },
       // generation-log lifecycle telemetry: the settled-shape violation
       // frames are provably empty on every consolidated + vacuumed fixture
-      Contract("SELECT CAST(0 AS BIGINT) AS n_generations, CAST(0 AS BIGINT) AS n_segments, CAST(0 AS BIGINT) AS n_tombstones FROM embeddings WHERE 1 = 0")),
+      Contract(settledHealthOracle("embeddings"))),
     // the drift scan's INTEGRITY law: every stored row of a healthy index
     // sits in its argmax cluster (all write paths assign the argmax;
     // retrain reassigns atomically with the centroid swap) — zero

@@ -1,7 +1,7 @@
 package graft
 package queries
 
-import graft.operators.{Curation, Dedup, TextClassifier, TextOps}
+import graft.operators.{Curation, Dedup, NgramLm, TextClassifier, TextOps}
 import org.apache.spark.sql.functions._
 
 import QueryFixtures._
@@ -111,16 +111,7 @@ private[graft] object TextQueries {
     // train ∪ holdout. Provably empty; the learning dynamics, bit-identical
     // retrains, and bias/feature-less contracts live in TextClassifierSpec
     Query("t_quality_classifier_contract", (s, d) => {
-      val docs = tb(s, d, "documents").filter(col("doc_id") % 7 === 0)
-        .select(col("doc_id").cast("long").as("doc_id"), col("text"))
-      val pos = docs.withColumn("label", lit(1L))
-      val neg = docs.select((col("doc_id") + lit(1000000L)).as("doc_id"),
-        concat_ws(" ",
-          concat(lit("jnk"), pmod(col("doc_id"), lit(7))), lit("zzq xxq"),
-          concat(lit("jnk"), pmod(col("doc_id"), lit(5))), lit("qqz jnky zzq"),
-          concat(lit("jnk"), pmod(col("doc_id"), lit(3)))).as("text"),
-        lit(0L).as("label"))
-      val all = pos.unionByName(neg)
+      val all = junkLabeled(tb(s, d, "documents").filter(col("doc_id") % 7 === 0), 1000000L)
       val model = TextClassifier.train(
         all.filter(col("doc_id") % 3 =!= 0), "text", "doc_id", "label",
         numBuckets = 1 << 12, iterations = 10)
@@ -145,30 +136,26 @@ private[graft] object TextQueries {
     //      label rate beats the bottom-3 by >= 400000 ppm (planted signal
     //      ~714286 — wide headroom). Provably empty
     Query("t_classifier_calibration_contract", (s, d) => {
-      import org.apache.spark.sql.expressions.Window
-      val docs = tb(s, d, "documents").filter(col("doc_id") % 7 === 1)
-        .select(col("doc_id").cast("long").as("doc_id"), col("text"))
-      val pos = docs.withColumn("label", lit(1L))
-      val neg = docs.select((col("doc_id") + lit(1000000L)).as("doc_id"),
-        concat_ws(" ",
-          concat(lit("jnk"), pmod(col("doc_id"), lit(7))), lit("zzq xxq"),
-          concat(lit("jnk"), pmod(col("doc_id"), lit(5))), lit("qqz jnky zzq"),
-          concat(lit("jnk"), pmod(col("doc_id"), lit(3)))).as("text"),
-        lit(0L).as("label"))
-      val noisy = pos.unionByName(neg).withColumn("y",
+      val noisy = junkLabeled(tb(s, d, "documents").filter(col("doc_id") % 7 === 1),
+        1000000L).withColumn("y",
         when(pmod(xxhash64(col("doc_id"), lit(12L)), lit(7L)) === 0L,
           lit(1L) - col("label")).otherwise(col("label")))
       val model = TextClassifier.train(noisy, "text", "doc_id", "y",
         numBuckets = 1 << 12, iterations = 10)
-      val scored = TextClassifier.scoreDocs(noisy, "text", "doc_id", model,
-        numBuckets = 1 << 12)
+      val margins = graft.CacheScope.persist(TextClassifier.scoreDocs(
+        noisy, "text", "doc_id", model, numBuckets = 1 << 12))
+      // deciles by the distributed exact ntile (bucket 1 = highest margin),
+      // not a single-partition window: the laws hold for any split of the
+      // margin order into contiguous slices
+      val decileOf = NgramLm.bucketsFromScores(margins, "doc", "margin_micro", 10)
+        .select(col("doc"), (lit(11L) - col("bucket")).as("decile"))
+      val scored = margins
         .join(noisy.select(col("doc_id").as("doc"), col("y")), Seq("doc"))
+        .join(decileOf, Seq("doc"))
         .withColumn("sig_ppm",
           floor(lit(1000000.0) / (lit(1.0) +
             exp(-col("margin_micro").cast("double") / lit(1000000.0))))
             .cast("bigint"))
-        .withColumn("decile", ntile(10).over(
-          Window.orderBy(col("margin_micro"), col("doc"))))
       val argmaxViol = scored
         .filter((col("quality") === 1L) =!= (col("sig_ppm") >= 500000L))
         .select(col("decile").cast("long").as("decile"),
