@@ -20,7 +20,7 @@ object Stress {
   import MakeScaledSf.expand
   // the replay receipts' content hash and the planted-junk quality set are
   // the contract queries' own
-  import queries.QueryFixtures.{composedOutputsHash, contentHash, junkLabeled, junkText}
+  import queries.QueryFixtures.{composedOutputsHash, contentHash, junkLabeled, junkText, landBatch}
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -1074,7 +1074,8 @@ object Stress {
           val cents = operators.Similarity.trainIvfCentroids(
             base, "embedding", "vec_id", k = 16, trainSample = 8)
           operators.VersionedIvf.write(base, "embedding", "vec_id", cents, dir.toString)
-          arrivals.repartition(8).write.mode("overwrite").parquet(landing.toString)
+          (0 until 8).foreach(k => landBatch(
+            arrivals.filter(pmod(col("vec_id"), lit(16)) === lit(2 * k + 1)), landing, k))
           val t0 = System.nanoTime()
           operators.VersionedIvf.streamAppend(
             spark.readStream.schema(base.schema).option("maxFilesPerTrigger", 1)

@@ -1,19 +1,21 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import scala.jdk.CollectionConverters._
 
 /** Corpus-curation operators for training-data pipelines: deterministic
   * sampling, per-group quotas, sequence packing (concat-and-chunk token
   * budgeting), and benchmark-contamination screening.
   *
-  * Everything here is declarative DataFrame algebra — no UDFs, no driver-side
-  * loops — so Catalyst plans it and the shapes survive a 1000-executor
-  * scale-up:
+  * Everything here is declarative DataFrame algebra — no UDFs, and driver
+  * work only over frames bounded by a group or block count — so Catalyst
+  * plans it and the shapes survive a 1000-executor scale-up:
   *  - sampling / quotas are a codegen'd filter resp. one partitioned window;
-  *  - sequence packing is a two-level prefix sum: the only global (single-
-  *    partition) window runs over BLOCK TOTALS, whose cardinality is
+  *  - sequence packing is a two-level prefix sum: the only global step
+  *    sums BLOCK TOTALS on the driver, whose cardinality is
   *    `#docs / blockSize` — tune blockSize so that frame is driver-trivial
   *    at any corpus size;
   *  - contamination joins on 64-bit shingle hashes, never shingle strings,
@@ -150,8 +152,8 @@ object Curation {
     * default.
     *
     * Scale shape: group sizes are one tiny aggregation (rows = #groups),
-    * quotas broadcast back; the only corpus-wide work is quotaSample's one
-    * partitioned window. Quotas follow the largest-remainder method: the
+    * quotas are computed on the driver and broadcast back; the only
+    * corpus-wide work is quotaSample's one partitioned window. Quotas follow the largest-remainder method: the
     * floored shares `⌊w·B/Σw⌋` leave a shortfall of up to #groups−1 rows,
     * which is redistributed +1 at a time to the groups with the largest
     * division remainder (ties by group name asc) — so Σ quota equals
@@ -174,24 +176,21 @@ object Curation {
     val sizes = df.groupBy(col(groupCol)).agg(count(lit(1)).as("__n"))
       .select(col(groupCol), weightOf(col("__n")).as("__w"))
     // exact integer weight sum (order-free), cross-joined as a 1-row frame
-    // — the no-driver-scalar pattern
     val total = sizes.agg(sum(col("__w")).as("__sw"))
-    // largest-remainder redistribution on the #groups-row frame: the
-    // whole-frame windows below are a single-partition sort over a frame
-    // that never exceeds the group count — driver-trivial by construction
-    val wAll = Window.partitionBy().rowsBetween(
-      Window.unboundedPreceding, Window.unboundedFollowing)
-    val wRem = Window.partitionBy()
-      .orderBy(col("__rem").desc, col(groupCol).asc)
-    val quotas = sizes.crossJoin(broadcast(total))
+    // largest-remainder redistribution: the #groups-row frame is collected
+    // in remainder order (ties by group name asc), and the shortfall goes
+    // +1 to its first rows
+    val shares = sizes.crossJoin(broadcast(total))
       .select(col(groupCol),
         expr(s"__w * ${totalBudget}L div __sw").as("__q0"),
         expr(s"(__w * ${totalBudget}L) % __sw").as("__rem"))
-      .withColumn("__short", lit(totalBudget) - sum(col("__q0")).over(wAll))
-      .withColumn("__rk", row_number().over(wRem))
-      .select(col(groupCol),
-        (col("__q0") + when(col("__rk") <= col("__short"), lit(1L))
-          .otherwise(lit(0L))).as("__quota"))
+      .orderBy(col("__rem").desc, col(groupCol).asc)
+      .collect()
+    val short = totalBudget - shares.map(_.getLong(1)).sum
+    val quotas = df.sparkSession.createDataFrame(
+      shares.zipWithIndex.map { case (r, i) =>
+        Row(r.get(0), r.getLong(1) + (if (i < short) 1L else 0L)) }.toSeq.asJava,
+      StructType(Seq(df.schema(groupCol), StructField("__quota", LongType))))
     val w = Window.partitionBy(col(groupCol))
       .orderBy(portableHash(col(keyCol)), col(keyCol))
     df.join(broadcast(quotas), groupCol)
@@ -255,13 +254,27 @@ object Curation {
       .withColumn("__b", pmod(col("__mix"), lit(buckets.toLong))))
     val w = Window.partitionBy(col("__b")).orderBy(col("__mix"), col(keyCol))
     val ranked = withB.withColumn("__rk", row_number().over(w).cast("long"))
-    val offW = Window.orderBy(col("__b"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = withB.groupBy(col("__b")).agg(count(lit(1)).as("__n"))
-      .select(col("__b"), coalesce(sum(col("__n")).over(offW), lit(0L)).as("__off"))
-    ranked.join(broadcast(offsets), "__b")
+    ranked.join(broadcast(blockPrefix(withB, "__b", count(lit(1)), "__off")), "__b")
       .withColumn("shuffle_pos", col("__off") + col("__rk") - 1L)
       .drop("__mix", "__b", "__rk", "__off")
+  }
+
+  /** (`blk`, `out`): per block, the sum of `total` over every LOWER block
+    * of `df` — the exclusive prefix sum of [[shuffleOrder]]'s bucket
+    * offsets and [[packSequences]]' block bases. The per-block totals
+    * (≤ #blocks rows) are collected and summed on the driver, so no
+    * unpartitioned window moves them through one task. `descending` sums
+    * over every HIGHER block instead ([[NgramLm.bucketsFromScores]]).
+    */
+  private[operators] def blockPrefix(
+      df: DataFrame, blk: String, total: Column, out: String,
+      descending: Boolean = false): DataFrame = {
+    val spark = df.sparkSession
+    import spark.implicits._
+    val tot = df.groupBy(col(blk)).agg(total.cast("long").as("__t"))
+      .collect().map(r => (r.getLong(0), r.getLong(1)))
+      .sortBy(t => if (descending) -t._1 else t._1)
+    tot.map(_._1).zip(tot.scanLeft(0L)(_ + _._2)).toSeq.toDF(blk, out)
   }
 
   /** Contiguous-range shard assignment over the [[shuffleOrder]] positions:
@@ -375,13 +388,8 @@ object Curation {
       .rowsBetween(Window.unboundedPreceding, -1)
     val intra = base.withColumn("__intra",
       coalesce(sum(col("n_tokens")).over(intraW), lit(0L)))
-    val blockW = Window.orderBy(col("__blk"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val blockBases = base.groupBy(col("__blk"))
-      .agg(sum(col("n_tokens")).as("__blk_total"))
-      .select(col("__blk"),
-        coalesce(sum(col("__blk_total")).over(blockW), lit(0L)).as("__blk_base"))
-    val off = intra.join(broadcast(blockBases), "__blk")
+    val off = intra
+      .join(broadcast(blockPrefix(base, "__blk", sum(col("n_tokens")), "__blk_base")), "__blk")
       .withColumn("token_offset", col("__blk_base") + col("__intra"))
     off.select(
       col(idCol), col("n_tokens"), col("token_offset"),

@@ -71,7 +71,7 @@ private[graft] object IndexMeta {
   /** [[cachedParams]] for the immutable `dir` that the commit `marker`
     * published, keyed on the marker's BYTES: ids restart when an index root
     * is wiped and rebuilt at the same path in one JVM (a wiped root reuses
-    * `_generations/1`, a BM25 root segment 1), and mtimes can repeat, but
+    * `_generations/1`), and mtimes can repeat, but
     * every marker carries its own random token
     * ([[GenerationLog.writeMarker]]) — one driver-side small-file read per
     * lookup, never a Spark job. An uncommitted (or unreadable) marker skips

@@ -175,12 +175,8 @@ object NgramLm {
     // strictly-better-score counts, two levels over the histogram
     val hist = withB.groupBy(col("__sb"), col("score_x1e6"))
       .agg(count(lit(1)).as("__c"))
-    val blkTot = hist.groupBy(col("__sb")).agg(sum(col("__c")).as("__bc"))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(-_._1)
-    val spark = scored.sparkSession
-    import spark.implicits._
-    val blkBefore = blkTot.map(_._1).zip(blkTot.scanLeft(0L)(_ + _._2)).toSeq
-      .toDF("__sb", "__bb")
+    val blkBefore = Curation.blockPrefix(hist, "__sb", sum(col("__c")), "__bb",
+      descending = true)
     val wIn = Window.partitionBy(col("__sb")).orderBy(col("score_x1e6").desc)
       .rowsBetween(Window.unboundedPreceding, -1)
     val cum = hist

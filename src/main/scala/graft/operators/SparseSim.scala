@@ -176,7 +176,7 @@ object SparseSim {
   }
 
   // -------------------------------------------------------------------
-  // persisted BM25 index: segment log + commit markers (rename-free)
+  // persisted BM25 index: the fifth family on the generation log
   // -------------------------------------------------------------------
 
   /** The persisted text-retrieval index — [[bm25TopK]]'s semantics with
@@ -187,10 +187,13 @@ object SparseSim {
     *
     * {{{
     * path/
-    *   segments/<id>/postings/tbucket=K/   (term, doc_id, tf, dl)
-    *   segments/<id>/df/tbucket=K/         (term, df)        base segments only
-    *   segments/<id>/stats/                one row            base segments only
-    *   _commits/<id>                       marker: "base" | "append"
+    *   _generations/<N>/postings/tbucket=K/   (term, doc_id, tf, dl)
+    *   _generations/<N>/df/tbucket=K/         (term, df)
+    *   _generations/<N>/stats/                one row (n_docs, dl_sum, num_buckets)
+    *   _generations/<N>/segments/ingest_batch=<S>/tbucket=K/   appended postings
+    *   _generations/<N>/_batch_commits/<S>[.s<batch>]          segment markers
+    *   _generations/<N>/tombstones/           deleted doc ids
+    *   _commits/<N>                           generation marker
     * }}}
     *
     *  - `postings` carry the document LENGTH denormalized per row, so the
@@ -199,17 +202,14 @@ object SparseSim {
     *    xxhash64(term) mod numBuckets` PARTITIONS: a probe reads only the
     *    buckets its query terms hash to — partition-pruned I/O
     *    proportional to the query, not the corpus;
-    *  - COMMITS ARE MARKER FILES, NOT RENAMES (the object-store-safe
-    *    protocol the directory-swap indexes document as a caveat): a
-    *    segment is staged fully under `segments/<id>/`, then made visible
-    *    by a single `_commits/<id>` file create — one atomic PUT on any
-    *    store, no directory rename anywhere on the commit path. Readers
-    *    resolve the HIGHEST committed `base` segment plus every committed
-    *    `append` segment above it; a crash mid-stage leaves an invisible
-    *    orphan ([[vacuumBm25Index]] sweeps it), and a REBUILD is just a
-    *    new base segment whose one-file commit atomically supersedes the
-    *    entire previous index generation (old segments stay readable
-    *    until vacuumed — snapshot-isolation for in-flight probes).
+    *  - the index lives on the [[GenerationLog]] spine of the `Versioned*`
+    *    families: a build or [[consolidateBm25Index]] publishes a
+    *    generation with ONE marker-file create, appends and stream batches
+    *    are [[SegmentLog]] segments inside it, and [[GenerationLog.vacuum]]
+    *    is its GC. No directory rename anywhere on the commit path; a crash
+    *    mid-stage leaves an invisible orphan, and a rebuild supersedes the
+    *    previous generation with its segments and tombstones (which stay
+    *    readable until vacuumed — snapshot isolation for in-flight probes).
     *
     * Appends are FROZEN-STATS (the frozen-centroid contract of the ANN
     * index): appended documents become retrievable immediately, but df /
@@ -218,6 +218,10 @@ object SparseSim {
     * they contribute nothing until the next rebuild. That staleness is
     * the price of never rewriting the base; rebuild on the operator's
     * cadence (the Lucene posture: segment merges refresh stats).
+    *
+    * A root in the older segment-log layout (root-level `segments/<id>/`
+    * under `base`/`append` markers) is refused by every verb except
+    * [[consolidateBm25Index]], which upgrades it.
     */
   def writeBm25Index(
       corpus: DataFrame, textCol: String, idCol: String, path: String,
@@ -225,81 +229,22 @@ object SparseSim {
     require(numBuckets >= 1)
     val spark = corpus.sparkSession
     MaintenanceLock.withLock(spark, path) {
-      // rebuild = fresh start (the VersionedIvf.write/VersionedNearDup.write
-      // contract): the previous incarnation's tombstones must not screen
-      // the new build's docs
-      GenerationLog.fsOf(spark, path)
-        .delete(new org.apache.hadoop.fs.Path(s"$path/tombstones"), true)
-      val segId = nextBm25SegmentId(spark, path)
-      val seg = s"$path/segments/$segId"
-      val toks = corpus.select(col(idCol).cast("long").as("doc_id"),
-        TextOps.tokens(col(textCol)).as("tk"))
-      val tf = graft.CacheScope.persist(
-        toks.filter(size(col("tk")) > 0)
-          .select(col("doc_id"), size(col("tk")).cast("long").as("dl"),
-            explode(col("tk")).as("term"))
-          .groupBy(col("doc_id"), col("dl"), col("term"))
-          .agg(count(lit(1)).as("tf")))
-      tf.select(col("term"), col("doc_id"), col("tf"), col("dl"),
-          bm25Bucket(col("term"), numBuckets).as("tbucket"))
-        .write.mode("overwrite").option("partitionOverwriteMode", "static")
-        .partitionBy("tbucket").parquet(s"$seg/postings")
-      tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
-        .select(col("term"), col("df"), bm25Bucket(col("term"), numBuckets).as("tbucket"))
-        .write.mode("overwrite").option("partitionOverwriteMode", "static")
-        .partitionBy("tbucket").parquet(s"$seg/df")
-      // n_docs + dl_sum as exact longs: avgdl recomputes at probe time as
-      // dl_sum/n — bit-identical to avg(dl) (integer-valued double sums
-      // are exact far past any real corpus size)
-      tf.select(col("doc_id"), col("dl")).distinct()
-        .agg(count(lit(1)).as("n_docs"),
-          // coalesce: an empty (or all-empty-text) corpus must write a
-          // readable 0, not a null the probe would NPE on
-          coalesce(sum(col("dl")), lit(0L)).as("dl_sum"))
-        .withColumn("num_buckets", lit(numBuckets))
-        .coalesce(1).write.mode("overwrite").parquet(s"$seg/stats")
-      commitBm25Segment(spark, path, segId, "base")
+      GenerationLog.refuseSegmentLogRoot(spark, path)
+      publishGeneration(spark, path,
+        graft.CacheScope.persist(postingsOf(corpus, textCol, idCol, numBuckets)), numBuckets)
     }
   }
 
-  /** Frozen-stats incremental ingest: tokenize the batch, stage its
-    * postings as a new `append` segment, commit with one marker file.
-    * See [[writeBm25Index]] for the df-staleness contract. The batch's
-    * own df/stats are NOT written — scoring always uses the base's.
+  /** Frozen-stats incremental ingest: tokenize the batch and commit its
+    * postings as one segment of the current generation. See
+    * [[writeBm25Index]] for the df-staleness contract. The batch's own
+    * df/stats are NOT written — scoring always uses the base's.
     */
   def appendToBm25Index(
-      batch: DataFrame, textCol: String, idCol: String, path: String): Unit = {
-    val spark = batch.sparkSession
-    MaintenanceLock.withLock(spark, path) {
-      stageBm25AppendSegment(batch, textCol, idCol, path, "append")
+      batch: DataFrame, textCol: String, idCol: String, path: String): Unit =
+    MaintenanceLock.withLock(batch.sparkSession, path) {
+      stageSegment(batch, textCol, idCol, currentDir(batch.sparkSession, path), None)
     }
-  }
-
-  /** Stage one append segment and commit it with `kind` as the marker
-    * content (shared by the batch and streaming append faces; caller
-    * holds the lease).
-    */
-  private def stageBm25AppendSegment(
-      batch: DataFrame, textCol: String, idCol: String, path: String,
-      kind: String): Unit = {
-    val spark = batch.sparkSession
-    val (baseId, _) = committedBm25Segments(spark, path)
-    val numBuckets = readBm25Stats(spark, path, baseId).getInt(2)
-    val segId = nextBm25SegmentId(spark, path)
-    val seg = s"$path/segments/$segId"
-    batch.select(col(idCol).cast("long").as("doc_id"),
-        TextOps.tokens(col(textCol)).as("tk"))
-      .filter(size(col("tk")) > 0)
-      .select(col("doc_id"), size(col("tk")).cast("long").as("dl"),
-        explode(col("tk")).as("term"))
-      .groupBy(col("doc_id"), col("dl"), col("term"))
-      .agg(count(lit(1)).as("tf"))
-      .select(col("term"), col("doc_id"), col("tf"), col("dl"),
-        bm25Bucket(col("term"), numBuckets).as("tbucket"))
-      .write.mode("overwrite").option("partitionOverwriteMode", "static")
-      .partitionBy("tbucket").parquet(s"$seg/postings")
-    commitBm25Segment(spark, path, segId, kind)
-  }
 
   /** Streaming face of [[appendToBm25Index]]: a stream of documents (e.g.
     * a parquet landing dir of daily crawl output) is tokenized per
@@ -308,22 +253,20 @@ object SparseSim {
     * face ([[consolidateBm25Index]] is the staleness recourse, on the
     * operator's cadence).
     *
-    * Exactly-once under replay WITHOUT dynamic partition overwrite: a
-    * segment's visibility IS its marker file, and the marker records the
-    * micro-batch id — a batch replayed after a crash between segment
-    * commit and checkpoint commit finds `append batch=<id>` already
-    * committed and SKIPS (the stage-then-commit protocol doubles as the
-    * replay guard); a batch that crashed BEFORE its marker left only an
-    * invisible orphan (the replay re-stages under a fresh segment id,
-    * [[vacuumBm25Index]] sweeps the debris once TTL-aged). After a
-    * REBUILD supersedes the generation, restart the stream with a fresh
-    * checkpoint — old batch markers below the new base are correctly
-    * invisible, but the replay guard would still skip their ids.
+    * Exactly-once under replay WITHOUT dynamic partition overwrite: the
+    * micro-batch id rides in the segment marker's NAME (`<seg>.s<batch>`),
+    * so a batch replayed after a crash between segment commit and
+    * checkpoint commit finds its marker by listing and SKIPS; a batch that
+    * crashed BEFORE its marker left only an invisible orphan (the replay
+    * re-stages under a fresh segment id, [[GenerationLog.vacuum]] sweeps
+    * the debris once TTL-aged). Markers live in their generation, so a
+    * consolidation or rebuild must not run while a batch is written but
+    * uncheckpointed (pass `checkpointDir` to [[consolidateBm25Index]]).
     */
   def streamAppendToBm25Index(
       stream: DataFrame, textCol: String, idCol: String,
       path: String, checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery = {
-    committedBm25Segments(stream.sparkSession, path) // base must exist
+    currentDir(stream.sparkSession, path) // a committed generation must exist
     graft.streaming.GateStream.start(stream, checkpointDir)(
       ingestBatchToBm25Index(_, textCol, idCol, path, _))
   }
@@ -337,9 +280,9 @@ object SparseSim {
       batchId: Long): Unit = {
     val spark = batch.sparkSession
     MaintenanceLock.withLock(spark, path) {
-      val marker = s"append batch=$batchId"
-      if (!listBm25Commits(spark, path).exists(_._2 == marker))
-        stageBm25AppendSegment(batch, textCol, idCol, path, marker)
+      val dir = currentDir(spark, path)
+      if (!SegmentLog.streamBatchCommitted(spark, dir, batchId))
+        stageSegment(batch, textCol, idCol, dir, Some(batchId))
     }
   }
 
@@ -347,11 +290,12 @@ object SparseSim {
     * tables — NEVER touches the corpus. I/O shape: the query's distinct
     * terms are collected (bounded: a query batch is tiny next to the
     * corpus — same class of bounded pull as the ANN index's centroids) to
-    * compute their hash buckets; the postings and df reads are
-    * partition-PRUNED to those buckets, then filtered to the exact terms
-    * by a broadcast join. Candidate rows = Σ_{t∈queries} df(t), one
-    * shuffle into the per-(query, doc) sum, one k-bounded window —
-    * independent of corpus re-tokenization entirely.
+    * compute their hash buckets; the reads of base ∪ committed segments
+    * ([[SegmentLog.liveView]]) and of the df table are partition-PRUNED to
+    * those buckets, then filtered to the exact terms by a broadcast join.
+    * Candidate rows = Σ_{t∈queries} df(t), one shuffle into the per-(query,
+    * doc) sum, one k-bounded window — independent of corpus
+    * re-tokenization entirely.
     */
   def bm25TopKFromIndex(
       spark: SparkSession, path: String, queries: DataFrame,
@@ -359,8 +303,8 @@ object SparseSim {
       k: Int, k1: Double = 1.2, b: Double = 0.75,
       maxDf: Long = Long.MaxValue): DataFrame = {
     require(k > 0 && k1 > 0 && b >= 0 && b <= 1 && maxDf > 0)
-    val (baseId, appendIds) = committedBm25Segments(spark, path)
-    val st = readBm25Stats(spark, path, baseId)
+    val dir = currentDir(spark, path)
+    val st = readStats(spark, dir)
     val (nDocs, dlSum, numBuckets) = (st.getLong(0), st.getLong(1), st.getInt(2))
     val qTerms = graft.CacheScope.localCheckpoint(queries
       .select(col(qIdCol).as("query_id"),
@@ -371,20 +315,13 @@ object SparseSim {
     // bucket math is definitionally identical to the write side's.
     val buckets = qTerms.select(bm25Bucket(col("term"), numBuckets).as("b"))
       .distinct().collect().map(_.getLong(0)).toSeq
-    // one read per segment (each is its own partitioned table root — a
-    // multi-root read would fight partition discovery), each pruned to
-    // the query buckets, unioned; segment counts stay small (appends are
-    // batched, rebuilds reset to one)
-    val post = (baseId +: appendIds)
-      .map(id => spark.read.parquet(s"$path/segments/$id/postings")
-        .filter(col("tbucket").isin(buckets: _*))
-        .select(col("term"), col("doc_id"), col("tf"), col("dl")))
-      .reduce(_.unionByName(_))
-    val dfr = spark.read.parquet(s"$path/segments/$baseId/df")
+    val post = SegmentLog.liveView(spark, dir, "postings", postingCols, Some("doc_id"))
+      .filter(col("tbucket").isin(buckets: _*))
+    val dfr = spark.read.parquet(s"$dir/df")
       .filter(col("tbucket").isin(buckets: _*))
       .filter(col("df") <= maxDf)
       .select(col("term"), col("df"))
-    val cand = GenerationLog.screenTombstones(spark, path, "doc_id", post)
+    val cand = post
       .join(broadcast(qTerms), Seq("term"))
       .join(broadcast(dfr), Seq("term"))
       .select(col("query_id"), col("doc_id"),
@@ -396,31 +333,36 @@ object SparseSim {
 
   /** Retention delete ("right to be forgotten" for the retrieval corpus):
     * the given doc ids stop RETRIEVING immediately — every probe
-    * anti-joins the tombstone set against the postings (a broadcast-sized
-    * read; delete sets are tiny next to the index) — without rewriting
-    * any segment. Physical purge + stats reset happen at the next
-    * [[consolidateBm25Index]] (which rewrites the postings anyway): the
-    * same two-phase tombstone contract as the near-dup index. Until then
-    * N / df / avgdl still count the deleted docs (frozen-stats staleness,
-    * same clock as appends), and a tombstoned id stays suppressed even if
-    * re-appended — re-admitting one means consolidating first. Idempotent:
-    * duplicate tombstone rows collapse in the probe's distinct.
+    * anti-joins the current generation's tombstone set against the
+    * postings (a broadcast-sized read; delete sets are tiny next to the
+    * index) — without rewriting any segment. Physical purge + stats reset
+    * happen at the next [[consolidateBm25Index]] (which rewrites the
+    * postings anyway): the same two-phase tombstone contract as the
+    * near-dup index. Until then N / df / avgdl still count the deleted
+    * docs (frozen-stats staleness, same clock as appends), and a
+    * tombstoned id stays suppressed even if re-appended — re-admitting one
+    * means consolidating first. Idempotent: duplicate tombstone rows
+    * collapse in the probe's distinct.
     */
-  def deleteFromBm25Index(ids: DataFrame, idCol: String, path: String): Unit =
-    MaintenanceLock.withLock(ids.sparkSession, path) {
+  def deleteFromBm25Index(ids: DataFrame, idCol: String, path: String): Unit = {
+    val spark = ids.sparkSession
+    MaintenanceLock.withLock(spark, path) {
       ids.select(col(idCol).cast("long").as("doc_id")).distinct()
-        .coalesce(1).write.mode("append").parquet(s"$path/tombstones")
+        .coalesce(1).write.mode("append").parquet(s"${currentDir(spark, path)}/tombstones")
     }
+  }
 
-  /** Consolidate the visible generation into ONE fresh base segment —
-    * the Lucene segment-merge move, and the frozen-stats contract's
-    * recourse: df / N / avgdl are recomputed over base + all appends FROM
-    * THE STORED POSTINGS (the corpus text is never touched — a rebuild
-    * from segments, not from 100 TB of documents), so appended documents'
-    * terms get real df rows and the score drift resets. Published like
-    * every other segment: staged fully, one marker-file commit atomically
-    * supersedes the old generation (rename-free; in-flight probes keep
-    * their snapshot until [[vacuumBm25Index]]).
+  /** Consolidate the visible generation into ONE fresh base — the Lucene
+    * segment-merge move, and the frozen-stats contract's recourse: df / N
+    * / avgdl are recomputed over base + all segments FROM THE STORED
+    * POSTINGS (the corpus text is never touched — a rebuild from segments,
+    * not from 100 TB of documents), so appended documents' terms get real
+    * df rows and the score drift resets. Tombstoned docs
+    * ([[deleteFromBm25Index]]) are PHYSICALLY PURGED: the merged postings
+    * exclude them and the recomputed stats no longer count them. Published
+    * as the next generation, which starts with no segments and no
+    * tombstones (in-flight probes keep their snapshot until
+    * [[GenerationLog.vacuum]]).
     *
     * Input cost: one pass over the stored postings (Σ segment sizes) —
     * the df agg is map-side combined on the already-bucketed term key, and
@@ -430,86 +372,33 @@ object SparseSim {
     *
     * Pass the ingest stream's `checkpointDir` to refuse while a batch is
     * started-but-uncommitted (the commit-log guard every maintenance op
-    * here takes): consolidating — and then vacuuming — a committed-but-
-    * uncheckpointed stream segment would delete its `append batch=<id>`
-    * marker, and the batch's replay would re-append its postings on top
-    * of the consolidated base.
+    * here takes): the new generation carries no stream-batch markers, so
+    * that batch's replay would re-append its postings on top of the
+    * consolidated base.
     *
-    * Tombstoned docs ([[deleteFromBm25Index]]) are PHYSICALLY PURGED here:
-    * the merged postings exclude them, the recomputed df / N / avgdl no
-    * longer count them, and the tombstone dir is cleared after the new
-    * base's one-file commit (a crash between the two leaves stale
-    * tombstones of already-purged ids — harmless to probes, cleared by
-    * the next consolidation; concurrent deletes are fenced by the lease).
+    * On a root in the older segment-log layout this is the UPGRADE: the
+    * highest committed `base` segment, the `append` segments above it and
+    * the root tombstones are published as one generation that also
+    * carries every old `append batch=<b>` stream marker as a marker-only
+    * `.s<b>` segment (so a replay skips, and the upgrade needs no
+    * checkpoint guard: `checkpointDir` is ignored). Then the old
+    * `base`/`append` markers, root `tombstones/` and `segments/` are
+    * removed — `segments/` last: it is what marks the old layout, so a
+    * rerun after a crash mid-cleanup finds the generation marker above
+    * the old ones, skips the publish and finishes the cleanup.
     */
   def consolidateBm25Index(
       spark: SparkSession, path: String,
       checkpointDir: Option[String] = None): Unit = {
-    checkpointDir.foreach(graft.streaming.CommitLog.requireAllCommitted(
-      spark, _, s"consolidateBm25Index($path)"))
-    MaintenanceLock.withLock(spark, path) {
-      val (baseId, appendIds) = committedBm25Segments(spark, path)
-      val numBuckets = readBm25Stats(spark, path, baseId).getInt(2)
-      val post = graft.CacheScope.persist(GenerationLog.screenTombstones(spark, path, "doc_id",
-        (baseId +: appendIds)
-          .map(id => spark.read.parquet(s"$path/segments/$id/postings")
-            .select(col("term"), col("doc_id"), col("tf"), col("dl"), col("tbucket")))
-          .reduce(_.unionByName(_))))
-      // an all-tombstoned merge would commit an empty partitioned postings
-      // table (unreadable) — refuse, like VersionedNearDup.consolidate: rebuild
-      if (post.isEmpty) throw new IllegalStateException(
-        s"consolidateBm25Index($path): every posting is tombstoned; an " +
-          "empty partitioned postings table is unreadable — rebuild with " +
-          "writeBm25Index instead of consolidating to nothing.")
-      val segId = nextBm25SegmentId(spark, path)
-      val seg = s"$path/segments/$segId"
-      post.write.mode("overwrite").option("partitionOverwriteMode", "static")
-        .partitionBy("tbucket").parquet(s"$seg/postings")
-      post.groupBy(col("tbucket"), col("term")).agg(count(lit(1)).as("df"))
-        .select(col("term"), col("df"), col("tbucket"))
-        .write.mode("overwrite").option("partitionOverwriteMode", "static")
-        .partitionBy("tbucket").parquet(s"$seg/df")
-      post.select(col("doc_id"), col("dl")).distinct()
-        .agg(count(lit(1)).as("n_docs"),
-          // coalesce: an empty (or all-empty-text) corpus must write a
-          // readable 0, not a null the probe would NPE on
-          coalesce(sum(col("dl")), lit(0L)).as("dl_sum"))
-        .withColumn("num_buckets", lit(numBuckets))
-        .coalesce(1).write.mode("overwrite").parquet(s"$seg/stats")
-      commitBm25Segment(spark, path, segId, "base")
-      // the purge is committed with the base — clear the applied tombstones
-      GenerationLog.fsOf(spark, path)
-        .delete(new org.apache.hadoop.fs.Path(s"$path/tombstones"), true)
-    }
-  }
-
-  /** Drop segments no longer visible (superseded by a newer base) and
-    * uncommitted orphans older than the maintenance-lease TTL (a stage
-    * crash's debris; younger orphans may be a LIVE writer staging). The
-    * only destructive op in the family — and the only one a reader's
-    * snapshot can lose to, exactly like Delta VACUUM. Same commit-log
-    * guard as [[consolidateBm25Index]] (vacuum deletes superseded
-    * segments' markers, including stream-batch replay guards).
-    */
-  def vacuumBm25Index(
-      spark: SparkSession, path: String,
-      checkpointDir: Option[String] = None): Unit = {
-    checkpointDir.foreach(graft.streaming.CommitLog.requireAllCommitted(
-      spark, _, s"vacuumBm25Index($path)"))
-    MaintenanceLock.withLock(spark, path) {
-      val (baseId, _) = committedBm25Segments(spark, path)
-      val segRoot = new org.apache.hadoop.fs.Path(s"$path/segments")
-      val fs = GenerationLog.fsOf(spark, path)
-      val committed = listBm25Commits(spark, path).map(_._1).toSet
-      fs.listStatus(segRoot).filter(_.isDirectory).foreach { st =>
-        val id = scala.util.Try(st.getPath.getName.toLong).getOrElse(-1L)
-        val uncommittedOrphan = !committed.contains(id) &&
-          System.currentTimeMillis() - st.getModificationTime >
-            MaintenanceLock.DefaultTtlMs
-        if (id >= 0 && (id < baseId || uncommittedOrphan)) {
-          fs.delete(st.getPath, true)
-          fs.delete(new org.apache.hadoop.fs.Path(s"$path/_commits/$id"), false)
-        }
+    val upgrade = GenerationLog.isSegmentLogRoot(spark, path)
+    GenerationLog.maintain(spark, path, "consolidateBm25Index",
+        checkpointDir.filterNot(_ => upgrade)) {
+      if (upgrade) upgradeSegmentLogRoot(spark, path)
+      else {
+        val dir = GenerationLog.requireCurrentDir(spark, path)
+        publishMerged(spark, path,
+          SegmentLog.liveView(spark, dir, "postings", postingCols, Some("doc_id")),
+          readStats(spark, dir).getInt(2))
       }
     }
   }
@@ -517,12 +406,12 @@ object SparseSim {
   /** The BM25 index's health/staleness audit — the third of the trilogy
     * ([[VersionedIvf.assignmentDrift]] for the ANN index,
     * [[Dedup.nearDupIndexBucketStats]] for the LSH families): one row of
-    * integer stats from segment metadata + posting counts, pricing the
-    * "consolidation overdue" check at a listing plus count-only scans
-    * (parquet row counts come from footers — no data pages read):
+    * integer stats of the current generation from listings plus
+    * count-only scans (parquet row counts come from footers — no data
+    * pages read), pricing the "consolidation overdue" check:
     *
-    *  - `n_segments` — every committed append is one more per-probe read
-    *    and one more partition listing;
+    *  - `n_segments` — the base plus every committed segment holding
+    *    postings: each is one more per-probe partition listing;
     *  - `base_rows` vs `appended_rows` — appended postings score under
     *    the BASE's frozen df/N/avgdl, so this ratio IS the score-drift
     *    bound ([[appendToBm25Index]]'s documented staleness);
@@ -534,74 +423,136 @@ object SparseSim {
     */
   def bm25IndexStats(spark: SparkSession, path: String): DataFrame = {
     import spark.implicits._
-    val (baseId, appendIds) = committedBm25Segments(spark, path)
-    def rows(id: Long): Long =
-      spark.read.parquet(s"$path/segments/$id/postings").count()
-    val tombDir = new org.apache.hadoop.fs.Path(s"$path/tombstones")
+    val dir = currentDir(spark, path)
+    val segDirs = SegmentLog.committedDirs(spark, dir)
+    val appended =
+      if (segDirs.isEmpty) 0L
+      else spark.read.option("basePath", SegmentLog.segmentsDir(dir)).parquet(segDirs: _*).count()
+    val tombDir = new org.apache.hadoop.fs.Path(s"$dir/tombstones")
     val tombstoned =
       if (GenerationLog.fsOf(spark, path).exists(tombDir))
         spark.read.parquet(tombDir.toString).select(col("doc_id")).distinct().count()
       else 0L
-    Seq((1L + appendIds.size, rows(baseId), appendIds.map(rows).sum, tombstoned))
+    Seq((1L + segDirs.size, spark.read.parquet(s"$dir/postings").count(), appended, tombstoned))
       .toDF("n_segments", "base_rows", "appended_rows", "tombstoned_ids")
   }
 
   private def bm25Bucket(term: Column, numBuckets: Int): Column =
     pmod(xxhash64(term), lit(numBuckets.toLong))
 
-  /** (id, kind) of every committed segment, ascending by id. */
-  private def listBm25Commits(
-      spark: SparkSession, path: String): Seq[(Long, String)] = {
-    val dir = new org.apache.hadoop.fs.Path(s"$path/_commits")
-    val fs = GenerationLog.fsOf(spark, path)
-    if (!fs.exists(dir)) Seq.empty
-    else fs.listStatus(dir).toSeq.filter(_.isFile)
-      .flatMap(st => scala.util.Try(st.getPath.getName.toLong).toOption)
-      .sorted
-      .map(id => (id, GenerationLog.markerKind(
-        GenerationLog.readMarker(spark, s"$path/_commits/$id"))))
-  }
+  private def postingCols: Seq[Column] =
+    Seq(col("term"), col("doc_id"), col("tf"), col("dl"), col("tbucket"))
 
-  /** The visible index generation: the highest committed base segment,
-    * plus every committed append above it (batch appends commit as
-    * `append`, streaming batches as `append batch=<id>`).
+  /** (term, doc_id, tf, dl, tbucket) postings of a document frame; a
+    * document with no tokens has none.
     */
-  private def committedBm25Segments(
-      spark: SparkSession, path: String): (Long, Seq[Long]) = {
-    val commits = listBm25Commits(spark, path)
-    val bases = commits.filter(_._2 == "base").map(_._1)
-    require(bases.nonEmpty,
-      s"no committed BM25 base segment under $path — build one with writeBm25Index")
-    val base = bases.max
-    (base, commits.collect { case (id, kind) if id > base && kind.startsWith("append") => id })
+  private def postingsOf(
+      docs: DataFrame, textCol: String, idCol: String, numBuckets: Int): DataFrame =
+    docs.select(col(idCol).cast("long").as("doc_id"), TextOps.tokens(col(textCol)).as("tk"))
+      .filter(size(col("tk")) > 0)
+      .select(col("doc_id"), size(col("tk")).cast("long").as("dl"),
+        explode(col("tk")).as("term"))
+      .groupBy(col("doc_id"), col("dl"), col("term"))
+      .agg(count(lit(1)).as("tf"))
+      .select(col("term"), col("doc_id"), col("tf"), col("dl"),
+        bm25Bucket(col("term"), numBuckets).as("tbucket"))
+
+  /** Publish `post` (persisted postings) as the next generation: the
+    * postings, their df table, the one-row stats and a marker-only
+    * segment per already-ingested `streamBatches` id — the one generation
+    * writer of build, consolidate and upgrade.
+    */
+  private def publishGeneration(
+      spark: SparkSession, path: String, post: DataFrame, numBuckets: Int,
+      streamBatches: Seq[Long] = Nil): Unit =
+    GenerationLog.publish(spark, path) { dir =>
+      post.write.mode("overwrite").option("partitionOverwriteMode", "static")
+        .partitionBy("tbucket").parquet(s"$dir/postings")
+      post.groupBy(col("tbucket"), col("term")).agg(count(lit(1)).as("df"))
+        .select(col("term"), col("df"), col("tbucket"))
+        .write.mode("overwrite").option("partitionOverwriteMode", "static")
+        .partitionBy("tbucket").parquet(s"$dir/df")
+      // n_docs + dl_sum as exact longs: avgdl recomputes at probe time as
+      // dl_sum/n — bit-identical to avg(dl) (integer-valued double sums
+      // are exact far past any real corpus size)
+      post.select(col("doc_id"), col("dl")).distinct()
+        .agg(count(lit(1)).as("n_docs"),
+          // coalesce: an empty (or all-empty-text) corpus must write a
+          // readable 0, not a null the probe would NPE on
+          coalesce(sum(col("dl")), lit(0L)).as("dl_sum"))
+        .withColumn("num_buckets", lit(numBuckets))
+        .coalesce(1).write.mode("overwrite").parquet(s"$dir/stats")
+      streamBatches.zipWithIndex.foreach { case (b, seg) =>
+        SegmentLog.commitMarker(spark, dir, s"$seg.s$b") }
+    }
+
+  /** [[publishGeneration]] of merged live postings; an all-tombstoned
+    * merge would commit an empty partitioned postings table (unreadable),
+    * so it refuses, like VersionedNearDup.consolidate: rebuild instead.
+    */
+  private def publishMerged(
+      spark: SparkSession, path: String, live: DataFrame, numBuckets: Int,
+      streamBatches: Seq[Long] = Nil): Unit = {
+    val post = graft.CacheScope.persist(live)
+    if (post.isEmpty) throw new IllegalStateException(
+      s"consolidateBm25Index($path): every posting is tombstoned; an " +
+        "empty partitioned postings table is unreadable — rebuild with " +
+        "writeBm25Index instead of consolidating to nothing.")
+    publishGeneration(spark, path, post, numBuckets, streamBatches)
   }
 
-  private def readBm25Stats(
-      spark: SparkSession, path: String, baseId: Long): org.apache.spark.sql.Row =
-    // a committed base segment is immutable — memoized so repeated
-    // probes/appends skip the one-row job per call, keyed on its commit
-    // marker's bytes: a wiped and rebuilt root reuses segment id 1
-    IndexMeta.cachedByMarker(spark, "bm25-stats", s"$path/segments/$baseId",
-      s"$path/_commits/$baseId")(
-      spark.read.parquet(s"$path/segments/$baseId/stats")
+  /** [[consolidateBm25Index]] of a segment-log root (see there). */
+  private def upgradeSegmentLogRoot(spark: SparkSession, path: String): Unit = {
+    val old = GenerationLog.committedGenerations(spark, path).map(id =>
+      id -> GenerationLog.markerKind(GenerationLog.readMarker(spark, s"$path/_commits/$id")))
+    // a generation marker above the old ones: an earlier upgrade committed
+    // and crashed in the cleanup, which is all that is left to do
+    if (!old.lastOption.exists(_._2.startsWith("generation"))) {
+      val base = old.collect { case (id, "base") => id }.max
+      val segs = base +: old.collect {
+        case (id, kind) if id > base && kind.startsWith("append") => id }
+      publishMerged(spark, path,
+        GenerationLog.screenTombstones(spark, path, "doc_id", segs
+          .map(id => spark.read.parquet(s"$path/segments/$id/postings").select(postingCols: _*))
+          .reduce(_.unionByName(_))),
+        spark.read.parquet(s"$path/segments/$base/stats").head().getAs[Int]("num_buckets"),
+        old.collect { case (_, kind) if kind.startsWith("append batch=") =>
+          kind.stripPrefix("append batch=").toLong }.distinct)
+    }
+    val fs = GenerationLog.fsOf(spark, path)
+    old.filterNot(_._2.startsWith("generation")).foreach { case (id, _) =>
+      fs.delete(new org.apache.hadoop.fs.Path(s"$path/_commits/$id"), false) }
+    Seq("tombstones", "segments").foreach(d =>
+      fs.delete(new org.apache.hadoop.fs.Path(s"$path/$d"), true))
+  }
+
+  /** Stage `batch`'s postings as one segment of generation `dir`, committed
+    * as `<seg>` or, for stream batch `b`, `<seg>.s<b>` (caller holds the
+    * lease). A batch with no tokens commits marker-only
+    * ([[SegmentLog.writeSegment]]).
+    */
+  private def stageSegment(
+      batch: DataFrame, textCol: String, idCol: String, dir: String,
+      streamBatch: Option[Long]): Unit = {
+    val spark = batch.sparkSession
+    val segId = SegmentLog.nextSegId(spark, dir)
+    SegmentLog.writeSegment(spark, dir, segId,
+      postingsOf(batch, textCol, idCol, readStats(spark, dir).getInt(2)),
+      segId.toString + streamBatch.fold("")(b => s".s$b"), Some("tbucket"))
+  }
+
+  /** The current generation dir; a segment-log root is refused. */
+  private def currentDir(spark: SparkSession, path: String): String = {
+    GenerationLog.refuseSegmentLogRoot(spark, path)
+    GenerationLog.requireCurrentDir(spark, path)
+  }
+
+  /** A generation's (n_docs, dl_sum, num_buckets), memoized per committed
+    * generation: repeated probes and appends skip the one-row job.
+    */
+  private def readStats(spark: SparkSession, dir: String): org.apache.spark.sql.Row =
+    IndexMeta.cachedParamsIfGeneration(spark, "bm25-stats", dir)(
+      spark.read.parquet(s"$dir/stats")
         .select(col("n_docs"), col("dl_sum"), col("num_buckets"))
         .head())
-
-  private def nextBm25SegmentId(spark: SparkSession, path: String): Long = {
-    // next id must clear BOTH committed markers and any staged-but-
-    // uncommitted segment dir (ids are allocated under the maintenance
-    // lease, so two live writers cannot race the allocation)
-    val segRoot = new org.apache.hadoop.fs.Path(s"$path/segments")
-    val fs = GenerationLog.fsOf(spark, path)
-    val staged =
-      if (!fs.exists(segRoot)) Seq.empty
-      else fs.listStatus(segRoot).toSeq
-        .flatMap(st => scala.util.Try(st.getPath.getName.toLong).toOption)
-    val committed = listBm25Commits(spark, path).map(_._1)
-    (staged ++ committed ++ Seq(0L)).max + 1
-  }
-
-  private def commitBm25Segment(
-      spark: SparkSession, path: String, segId: Long, kind: String): Unit =
-    GenerationLog.writeMarker(spark, s"$path/_commits/$segId", kind)
 }

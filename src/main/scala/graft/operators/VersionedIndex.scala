@@ -7,8 +7,9 @@ import org.apache.spark.sql.functions._
   * index families. A directory rename is atomic on HDFS/POSIX but a
   * non-atomic copy + delete on S3-like object stores, so this log
   * publishes by POINTER instead, the
-  * [[graft.load.Warehouse.commitSnapshot]] / BM25-segment-log pattern
-  * generalized to a whole index:
+  * [[graft.load.Warehouse.commitSnapshot]] pattern generalized to a whole
+  * index. Every persisted index family — the four `Versioned*` ones and
+  * the BM25 index ([[SparseSim.writeBm25Index]]) — lives on it:
   *
   * {{{
   *   root/_generations/<N>/...   one complete, immutable index incarnation
@@ -89,8 +90,8 @@ object GenerationLog {
     writeMarker(spark, s"$root/_commits/$gen", s"generation $gen")
   }
 
-  /** The one commit-marker writer (generation, segment and BM25 segment
-    * markers): ONE file create, an atomic PUT on any store. The body is
+  /** The one commit-marker writer (generation and segment markers): ONE
+    * file create, an atomic PUT on any store. The body is
     * `kind` on its first line and a random token on its second, so two
     * incarnations of a marker path (a root wiped and rebuilt reuses its
     * ids, and mtimes can repeat within a granule) never have the same
@@ -191,6 +192,7 @@ object GenerationLog {
     */
   def indexHealth(spark: SparkSession, root: String): DataFrame = {
     import spark.implicits._
+    refuseSegmentLogRoot(spark, root)
     val fs = fsOf(spark, root)
     val committed = committedGenerations(spark, root)
     val staged = numericChildren(fs,
@@ -237,6 +239,7 @@ object GenerationLog {
   def vacuumGenerations(
       spark: SparkSession, root: String,
       ttlMs: Long = MaintenanceLock.DefaultTtlMs): Seq[Long] = {
+    refuseSegmentLogRoot(spark, root)
     val fs = fsOf(spark, root)
     val committed = committedGenerations(spark, root)
     val current = committed.lastOption
@@ -264,6 +267,19 @@ object GenerationLog {
       fs.delete(new org.apache.hadoop.fs.Path(generationDir(root, g)), true))
     superseded ++ deadStaged
   }
+
+  /** Is `root` a BM25 index in the older segment-log layout (root-level
+    * `segments/<id>/` under `base`/`append` markers)? Its markers are not
+    * generations — vacuuming them as such would drop its base. One
+    * existence check, no Spark job.
+    */
+  private[operators] def isSegmentLogRoot(spark: SparkSession, root: String): Boolean =
+    fsOf(spark, root).exists(new org.apache.hadoop.fs.Path(s"$root/segments"))
+
+  private[operators] def refuseSegmentLogRoot(spark: SparkSession, root: String): Unit =
+    if (isSegmentLogRoot(spark, root)) throw new IllegalStateException(
+      s"$root is a BM25 index in the segment-log layout — upgrade it once " +
+        "with SparseSim.consolidateBm25Index")
 
   /** Quiet for longer than `ttlMs` at `now`; `ttlMs <= 0` grants no
     * grace, whatever the mtime says.

@@ -1,7 +1,7 @@
 package graft
 package queries
 
-import graft.operators.{Dedup, Linkage, PageRank, Similarity, SparseSim, TextClassifier, TextOps, VersionedIvf, VersionedNearDup, VersionedSubstring}
+import graft.operators.{Dedup, GenerationLog, Linkage, PageRank, Similarity, SparseSim, TextClassifier, TextOps, VersionedIvf, VersionedNearDup, VersionedSubstring}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -737,7 +737,7 @@ private[graft] object DedupQueries {
       // hybrid fusion: the BM25 CTE + self-free dense CTE + integer RRF
       Timed("""WITH t AS (SELECT doc_id, list_transform(regexp_extract_all(text, '\S+'), x -> lower(x)) AS tk FROM documents), lens AS (SELECT doc_id, len(tk) AS dl FROM t WHERE len(tk) > 0), tf AS (SELECT doc_id, term, count(*) AS tf FROM (SELECT doc_id, unnest(tk) AS term FROM t) GROUP BY 1,2), dfr AS (SELECT term, count(*) AS df FROM tf GROUP BY 1), stats AS (SELECT CAST(count(*) AS DOUBLE) AS n, avg(dl) AS avgdl FROM lens), q AS (SELECT DISTINCT doc_id AS query_id, unnest(tk) AS term FROM t WHERE doc_id < 5), cand AS (SELECT q.query_id, tf.doc_id, ln((s.n - dfr.df + 0.5)/(dfr.df + 0.5) + 1.0) * (tf.tf * 2.2) / (tf.tf + 1.2*(0.25 + 0.75*lens.dl/s.avgdl)) AS contrib FROM tf JOIN q USING (term) JOIN dfr USING (term) JOIN lens ON tf.doc_id = lens.doc_id CROSS JOIN stats s), sc AS (SELECT query_id, doc_id, CAST(floor(sum(contrib)*1000000.0) AS BIGINT) AS score_x1e6 FROM cand GROUP BY 1,2), lex AS (SELECT query_id, doc_id AS item_id, rank FROM (SELECT query_id, doc_id, row_number() OVER (PARTITION BY query_id ORDER BY score_x1e6 DESC, doc_id ASC) AS rank FROM sc) WHERE rank <= 5), dense AS (SELECT query_id, neighbor_id AS item_id, rank FROM (SELECT e.vec_id AS query_id, c.vec_id AS neighbor_id, row_number() OVER (PARTITION BY e.vec_id ORDER BY list_cosine_similarity(e.embedding, c.embedding) DESC, c.vec_id ASC) AS rank FROM embeddings e JOIN embeddings c ON c.vec_id != e.vec_id WHERE e.vec_id < 5) WHERE rank <= 5), u AS (SELECT query_id, item_id, 1000000000 // (60 + rank) AS contrib FROM lex UNION ALL SELECT query_id, item_id, 1000000000 // (60 + rank) FROM dense), f AS (SELECT query_id, item_id, CAST(sum(contrib) AS BIGINT) AS rrf_x1e9 FROM u GROUP BY 1, 2) SELECT query_id, item_id, rrf_x1e9, rank FROM (SELECT query_id, item_id, rrf_x1e9, row_number() OVER (PARTITION BY query_id ORDER BY rrf_x1e9 DESC, item_id ASC) AS rank FROM f) WHERE rank <= 5""")),
     // the PERSISTED text-retrieval index (round-11 close of the r10 gap):
-    // tf/df/doc-length/stats staged once as a marker-committed segment,
+    // tf/df/doc-length/stats staged once as a marker-committed generation,
     // probed WITHOUT touching the corpus — partition-pruned to the query
     // terms' hash buckets. Same oracle as the recompute face (t_bm25_topk):
     // a lost posting, wrong bucket, or drifted stat cannot hash-match
@@ -816,7 +816,7 @@ private[graft] object DedupQueries {
           docs.filter(col("doc_id") % 7 === 3).select(col("doc_id")),
           "doc_id", dir.toString)
         SparseSim.consolidateBm25Index(s, dir.toString)
-        SparseSim.vacuumBm25Index(s, dir.toString)
+        GenerationLog.vacuum(s, dir.toString, ttlMs = 0L)
         dir.toString
       }
       SparseSim.bm25TopKFromIndex(s, path,
@@ -881,7 +881,7 @@ private[graft] object DedupQueries {
         SparseSim.appendToBm25Index(docs.filter(col("doc_id") % 4 === 3),
           "text", "doc_id", dir.toString)
         SparseSim.consolidateBm25Index(s, dir.toString)
-        SparseSim.vacuumBm25Index(s, dir.toString)
+        GenerationLog.vacuum(s, dir.toString, ttlMs = 0L)
         dir.toString
       }
       SparseSim.bm25TopKFromIndex(s, path,

@@ -37,8 +37,9 @@ object NoDirRenameFileSystem {
 }
 
 /** The persisted BM25 text-retrieval index: probe ≡ recompute, frozen-
-  * stats appends, marker-file commits (crash-invisible staging, rename-
-  * free publish), vacuum, and the maintenance-lease fencing.
+  * stats appends, marker-file commits on the generation log (crash-
+  * invisible staging, rename-free publish), vacuum, the upgrade of a
+  * segment-log root, and the maintenance-lease fencing.
   */
 class Bm25IndexSpec extends AnyFunSuite with SparkTestBase {
   import spark.implicits._
@@ -64,6 +65,60 @@ class Bm25IndexSpec extends AnyFunSuite with SparkTestBase {
     df.select(col("query_id").cast("long"), col("doc_id").cast("long"),
       col("score_x1e6"), col("rank"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
+
+  private def probe(idx: String, k: Int = 5): Set[(Long, Long, Long, Long)] =
+    asSet(SparseSim.bm25TopKFromIndex(spark, idx, queries, "text", "doc_id", k = k))
+
+  // the frozen-stats reference: tf over ALL docs but df/stats over the
+  // base — i.e. bm25TopK's own pieces re-staged with frozen statistics
+  private def frozenRef(base: DataFrame, all: DataFrame): Set[(Long, Long, Long, Long)] = {
+    val allToks = all.select(col("doc_id"), TextOps.tokens(col("text")).as("tk"))
+    val baseToks = base.select(col("doc_id"), TextOps.tokens(col("text")).as("tk"))
+    val tf = allToks.filter(size(col("tk")) > 0)
+      .select(col("doc_id"), size(col("tk")).cast("long").as("dl"),
+        explode(col("tk")).as("term"))
+      .groupBy(col("doc_id"), col("dl"), col("term")).agg(count(lit(1)).as("tf"))
+    val dfr = baseToks.filter(size(col("tk")) > 0)
+      .select(col("doc_id"), explode(col("tk")).as("term")).distinct()
+      .groupBy(col("term")).agg(count(lit(1)).as("df"))
+    val stats = baseToks.select(size(col("tk")).cast("long").as("dl"))
+      .filter(col("dl") > 0)
+      .agg(count(lit(1)).cast("double").as("n"), avg(col("dl")).as("avgdl"))
+    val qT = queries.select(col("doc_id").as("query_id"),
+      explode(TextOps.tokens(col("text"))).as("term")).distinct()
+    val cand = tf.join(qT, Seq("term")).join(dfr, Seq("term")).crossJoin(stats)
+      .select(col("query_id"), col("doc_id"),
+        (log((col("n") - col("df") + lit(0.5)) / (col("df") + lit(0.5)) + lit(1.0)) *
+          (col("tf") * lit(2.2)) /
+          (col("tf") + lit(1.2) * (lit(0.25) + lit(0.75) * col("dl") / col("avgdl"))))
+          .as("contrib"))
+    val scored = cand.groupBy(col("query_id"), col("doc_id"))
+      .agg(floor(sum(col("contrib")) * lit(1000000.0)).cast("long").as("score_x1e6"))
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(col("query_id")).orderBy(col("score_x1e6").desc, col("doc_id").asc)
+    asSet(scored
+      .withColumn("rank", row_number().over(w).cast("long")).filter(col("rank") <= 5))
+  }
+
+  private def bruteRef(docs: DataFrame): Set[(Long, Long, Long, Long)] =
+    asSet(SparseSim.bm25TopK(docs, queries, "text", "doc_id", "text", "doc_id", k = 5))
+
+  /** (n_generations, n_segments, n_stream_segments, n_tombstones) of the root. */
+  private def health(idx: String): (Long, Long, Long, Long) = {
+    val r = GenerationLog.indexHealth(spark, idx).head()
+    (r.getAs[Long]("n_generations"), r.getAs[Long]("n_segments"),
+      r.getAs[Long]("n_stream_segments"), r.getAs[Long]("n_tombstones"))
+  }
+
+  private def fs = new org.apache.hadoop.fs.Path("/")
+    .getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  private def setMtime(path: String, millis: Long): Unit = {
+    import scala.jdk.CollectionConverters._
+    java.nio.file.Files.walk(java.nio.file.Paths.get(path)).iterator().asScala
+      .foreach(java.nio.file.Files.setLastModifiedTime(_,
+        java.nio.file.attribute.FileTime.fromMillis(millis)))
+  }
 
   test("indexed probe ≡ recompute, including the exact integer scores") {
     val idx = tmpDir("bm25")
@@ -101,11 +156,15 @@ class Bm25IndexSpec extends AnyFunSuite with SparkTestBase {
   test("probe reads only the query terms' hash buckets (partition pruning)") {
     val idx = tmpDir("bm25pp")
     SparseSim.writeBm25Index(corpus, "text", "doc_id", idx, numBuckets = 32)
+    SparseSim.appendToBm25Index(corpus.limit(5), "text", "doc_id", idx)
     val oneTermQuery = Seq((0L, "t3")).toDF("doc_id", "text")
     val plan = SparseSim.bm25TopKFromIndex(spark, idx, oneTermQuery,
       "text", "doc_id", k = 5).queryExecution.executedPlan.toString
-    // the postings scan must carry a tbucket partition filter
-    assert(plan.contains("tbucket"), s"no tbucket pruning in plan:\n$plan")
+    // every scan — base postings, the appended segment, df — carries a
+    // tbucket partition filter
+    val scans = plan.split("\n").filter(_.contains("FileScan parquet"))
+    assert(scans.length === 3 && scans.forall(_.matches(".*PartitionFilters: \\[.*tbucket.*")),
+      s"no tbucket pruning in plan:\n$plan")
   }
 
   test("frozen-stats append: new docs retrievable, df/N/avgdl stay the base's") {
@@ -114,36 +173,8 @@ class Bm25IndexSpec extends AnyFunSuite with SparkTestBase {
     val idx = tmpDir("bm25app")
     SparseSim.writeBm25Index(base, "text", "doc_id", idx, numBuckets = 8)
     SparseSim.appendToBm25Index(extra, "text", "doc_id", idx)
-    val got = asSet(SparseSim.bm25TopKFromIndex(spark, idx, queries,
-      "text", "doc_id", k = 5))
-    // reference: recompute with tf over ALL docs but df/stats over the base
-    // — i.e. bm25TopK's own pieces re-staged with frozen statistics
-    val allToks = corpus.select(col("doc_id"), TextOps.tokens(col("text")).as("tk"))
-    val baseToks = base.select(col("doc_id"), TextOps.tokens(col("text")).as("tk"))
-    val tf = allToks.filter(size(col("tk")) > 0)
-      .select(col("doc_id"), size(col("tk")).cast("long").as("dl"),
-        explode(col("tk")).as("term"))
-      .groupBy(col("doc_id"), col("dl"), col("term")).agg(count(lit(1)).as("tf"))
-    val dfr = baseToks.filter(size(col("tk")) > 0)
-      .select(col("doc_id"), explode(col("tk")).as("term")).distinct()
-      .groupBy(col("term")).agg(count(lit(1)).as("df"))
-    val stats = baseToks.select(size(col("tk")).cast("long").as("dl"))
-      .filter(col("dl") > 0)
-      .agg(count(lit(1)).cast("double").as("n"), avg(col("dl")).as("avgdl"))
-    val qT = queries.select(col("doc_id").as("query_id"),
-      explode(TextOps.tokens(col("text"))).as("term")).distinct()
-    val cand = tf.join(qT, Seq("term")).join(dfr, Seq("term")).crossJoin(stats)
-      .select(col("query_id"), col("doc_id"),
-        (log((col("n") - col("df") + lit(0.5)) / (col("df") + lit(0.5)) + lit(1.0)) *
-          (col("tf") * lit(2.2)) /
-          (col("tf") + lit(1.2) * (lit(0.25) + lit(0.75) * col("dl") / col("avgdl"))))
-          .as("contrib"))
-    val scored = cand.groupBy(col("query_id"), col("doc_id"))
-      .agg(floor(sum(col("contrib")) * lit(1000000.0)).cast("long").as("score_x1e6"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id")).orderBy(col("score_x1e6").desc, col("doc_id").asc)
-    val want = asSet(scored
-      .withColumn("rank", row_number().over(w).cast("long")).filter(col("rank") <= 5))
+    val got = probe(idx)
+    val want = frozenRef(base, corpus)
     assert(got === want)
     // appended docs actually surface somewhere in the full ranking
     val gotAll = SparseSim.bm25TopKFromIndex(spark, idx, queries,
@@ -151,6 +182,24 @@ class Bm25IndexSpec extends AnyFunSuite with SparkTestBase {
       .select(col("doc_id").cast("long")).as[Long].collect().toSet
     assert(extra.select("doc_id").as[Long].collect().toSet
       .intersect(gotAll).nonEmpty, "appended docs never retrievable")
+  }
+
+  test("an append or stream batch with no tokens commits marker-only and later probes still read") {
+    val base = corpus.filter(col("doc_id") % 4 =!= 3)
+    val extra = corpus.filter(col("doc_id") % 4 === 3)
+    val empty = Seq((900L, ""), (901L, "   ")).toDF("doc_id", "text")
+    val idx = tmpDir("bm25empty")
+    SparseSim.writeBm25Index(base, "text", "doc_id", idx, numBuckets = 8)
+    SparseSim.appendToBm25Index(empty, "text", "doc_id", idx)
+    SparseSim.ingestBatchToBm25Index(empty, "text", "doc_id", idx, 0L)
+    assert(probe(idx) === frozenRef(base, base))
+    SparseSim.appendToBm25Index(extra, "text", "doc_id", idx)
+    assert(probe(idx) === frozenRef(base, corpus))
+    // the empty batches hold no segment dir; the stream one's marker stays
+    // the replay guard
+    assert(health(idx)._2 === 1L)
+    assert(SegmentLog.streamBatchCommitted(spark,
+      GenerationLog.requireCurrentDir(spark, idx), 0L))
   }
 
   test("consolidation merges the generation into one fresh base ≡ a from-scratch full build") {
@@ -169,50 +218,59 @@ class Bm25IndexSpec extends AnyFunSuite with SparkTestBase {
       "text", "doc_id", "text", "doc_id", k = 5))
     assert(got === want)
     assert(got !== frozen, "consolidation should change frozen-stats scores on this corpus")
-    // vacuum collapses to the single merged segment; probe unchanged
-    SparseSim.vacuumBm25Index(spark, idx)
-    val fs = new org.apache.hadoop.fs.Path(idx)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val segs = fs.listStatus(new org.apache.hadoop.fs.Path(s"$idx/segments"))
-      .map(_.getPath.getName).toSet
-    assert(segs.size === 1, s"expected one merged segment, got $segs")
-    assert(asSet(SparseSim.bm25TopKFromIndex(spark, idx, queries,
-      "text", "doc_id", k = 5)) === want)
+    // vacuum collapses to the single merged generation; probe unchanged
+    assert(health(idx) === ((2L, 0L, 0L, 0L)))
+    GenerationLog.vacuum(spark, idx, ttlMs = 0L)
+    assert(health(idx) === ((1L, 0L, 0L, 0L)))
+    assert(fs.listStatus(new org.apache.hadoop.fs.Path(s"$idx/_generations")).length === 1)
+    assert(probe(idx) === want)
   }
 
   test("a staged segment without its commit marker is invisible; vacuum sweeps it and superseded generations") {
     val idx = tmpDir("bm25crash")
     SparseSim.writeBm25Index(corpus, "text", "doc_id", idx, numBuckets = 8)
-    val before = asSet(SparseSim.bm25TopKFromIndex(spark, idx, queries,
-      "text", "doc_id", k = 5))
+    val before = probe(idx)
     // simulate a crash mid-append: segment data staged, marker never lands
-    val fs = new org.apache.hadoop.fs.Path(idx)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    corpus.limit(3).select(lit("zzz").as("term"), col("doc_id"),
-        lit(1L).as("tf"), lit(3L).as("dl"), lit(0L).as("tbucket"))
-      .write.partitionBy("tbucket").parquet(s"$idx/segments/99/postings")
-    assert(asSet(SparseSim.bm25TopKFromIndex(spark, idx, queries,
-      "text", "doc_id", k = 5)) === before, "uncommitted segment leaked into a probe")
+    def stageOrphan(): String = {
+      val seg = SegmentLog.segmentDir(GenerationLog.requireCurrentDir(spark, idx), 99L)
+      corpus.limit(3).select(lit("zzz").as("term"), col("doc_id"),
+          lit(1L).as("tf"), lit(3L).as("dl"), lit(0L).as("tbucket"))
+        .write.partitionBy("tbucket").parquet(seg)
+      seg
+    }
+    stageOrphan()
+    assert(probe(idx) === before, "uncommitted segment leaked into a probe")
+    assert(health(idx)._2 === 0L, "uncommitted segment counted as committed")
     // a rebuild supersedes the old generation with ONE marker file; the
-    // old segments stay on disk (snapshot isolation) until vacuum
+    // old generation stays on disk (snapshot isolation) until vacuum
     SparseSim.writeBm25Index(corpus.filter(col("doc_id") < 30), "text", "doc_id", idx)
-    val rebuilt = asSet(SparseSim.bm25TopKFromIndex(spark, idx, queries,
-      "text", "doc_id", k = 5))
-    assert(rebuilt === asSet(SparseSim.bm25TopK(corpus.filter(col("doc_id") < 30),
-      queries, "text", "doc_id", "text", "doc_id", k = 5)))
-    // age the orphan past the lease TTL so vacuum treats it as dead
-    import scala.jdk.CollectionConverters._
-    val old = java.nio.file.attribute.FileTime.fromMillis(
-      System.currentTimeMillis() - MaintenanceLock.DefaultTtlMs - 60000L)
-    java.nio.file.Files.walk(java.nio.file.Paths.get(s"$idx/segments/99"))
-      .iterator().asScala.foreach(p => java.nio.file.Files.setLastModifiedTime(p, old))
-    SparseSim.vacuumBm25Index(spark, idx)
-    val segs = fs.listStatus(new org.apache.hadoop.fs.Path(s"$idx/segments"))
-      .map(_.getPath.getName).toSet
-    assert(!segs.contains("99"), "aged uncommitted orphan survived vacuum")
-    assert(!segs.contains("1"), "superseded base segment survived vacuum")
-    assert(asSet(SparseSim.bm25TopKFromIndex(spark, idx, queries,
-      "text", "doc_id", k = 5)) === rebuilt, "vacuum changed the visible index")
+    val rebuilt = probe(idx)
+    assert(rebuilt === bruteRef(corpus.filter(col("doc_id") < 30)))
+    assert(health(idx)._1 === 2L)
+    // an orphan in the current generation, aged past the lease TTL so
+    // vacuum treats it as dead; the superseded generation keeps its grace
+    val orphan = stageOrphan()
+    setMtime(orphan, System.currentTimeMillis() - MaintenanceLock.DefaultTtlMs - 60000L)
+    GenerationLog.vacuum(spark, idx)
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(orphan)), "aged uncommitted orphan survived vacuum")
+    assert(health(idx)._1 === 2L, "superseded generation lost its grace")
+    GenerationLog.vacuum(spark, idx, ttlMs = 0L)
+    assert(health(idx) === ((1L, 0L, 0L, 0L)), "superseded generation survived vacuum")
+    assert(probe(idx) === rebuilt, "vacuum changed the visible index")
+  }
+
+  test("a ttl-0 vacuum drops a generation whose successor marker has the same millisecond") {
+    val idx = tmpDir("bm25ttl0")
+    SparseSim.writeBm25Index(corpus, "text", "doc_id", idx, numBuckets = 8)
+    SparseSim.consolidateBm25Index(spark, idx)
+    val now = System.currentTimeMillis()
+    GenerationLog.committedGenerations(spark, idx).foreach(g =>
+      setMtime(s"$idx/_commits/$g", now))
+    GenerationLog.vacuum(spark, idx)
+    assert(health(idx)._1 === 2L)
+    GenerationLog.vacuum(spark, idx, ttlMs = 0L)
+    assert(health(idx)._1 === 1L, "ttl 0 granted grace to a same-millisecond successor")
+    assert(probe(idx) === bruteRef(corpus))
   }
 
   test("the whole lifecycle runs on a filesystem that refuses directory renames (object-store commit model)") {
@@ -228,8 +286,9 @@ class Bm25IndexSpec extends AnyFunSuite with SparkTestBase {
     val got = asSet(SparseSim.bm25TopKFromIndex(spark, idx, queries,
       "text", "doc_id", k = 5))
     SparseSim.consolidateBm25Index(spark, idx) // segment merge, too
+    SparseSim.ingestBatchToBm25Index(corpus.limit(2), "text", "doc_id", idx, 0L)
     SparseSim.writeBm25Index(corpus, "text", "doc_id", idx) // and a rebuild
-    SparseSim.vacuumBm25Index(spark, idx)
+    GenerationLog.vacuum(spark, idx, ttlMs = 0L)
     val rebuilt = asSet(SparseSim.bm25TopKFromIndex(spark, idx, queries,
       "text", "doc_id", k = 5))
     assert(rebuilt === asSet(SparseSim.bm25TopK(corpus, queries,
@@ -245,6 +304,7 @@ class Bm25IndexSpec extends AnyFunSuite with SparkTestBase {
     val gone = corpus.filter(col("doc_id") % 7 === 3).select(col("doc_id"))
     SparseSim.deleteFromBm25Index(gone, "doc_id", idx)
     val goneIds = gone.as[Long].collect().toSet
+    assert(health(idx)._4 === goneIds.size.toLong)
     // deleted docs never retrieve, even at k = everything
     val all = SparseSim.bm25TopKFromIndex(spark, idx, queries,
       "text", "doc_id", k = 1000)
@@ -262,10 +322,7 @@ class Bm25IndexSpec extends AnyFunSuite with SparkTestBase {
     SparseSim.consolidateBm25Index(spark, idx)
     assert(asSet(SparseSim.bm25TopKFromIndex(spark, idx, queries,
       "text", "doc_id", k = 5)) === fresh)
-    val fs = new org.apache.hadoop.fs.Path(idx)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$idx/tombstones")),
-      "consolidation must clear applied tombstones")
+    assert(health(idx)._4 === 0L, "consolidation must start without the applied tombstones")
     // an all-tombstoned consolidation refuses (unreadable empty table)
     SparseSim.deleteFromBm25Index(corpus.select(col("doc_id")), "doc_id", idx)
     val e = intercept[IllegalStateException](SparseSim.consolidateBm25Index(spark, idx))
@@ -286,48 +343,48 @@ class Bm25IndexSpec extends AnyFunSuite with SparkTestBase {
     SparseSim.ingestBatchToBm25Index(b0, "text", "doc_id", idx, 0L)
     SparseSim.ingestBatchToBm25Index(b1, "text", "doc_id", idx, 1L)
     def postingsCount(): Long = {
-      import scala.jdk.CollectionConverters._
-      val fs = new org.apache.hadoop.fs.Path(idx)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.listStatus(new org.apache.hadoop.fs.Path(s"$idx/segments"))
-        .map(st => spark.read.parquet(s"${st.getPath}/postings").count()).sum
+      val r = SparseSim.bm25IndexStats(spark, idx).head()
+      r.getLong(1) + r.getLong(2)
     }
-    val want = asSet(SparseSim.bm25TopKFromIndex(spark, idx, queries,
-      "text", "doc_id", k = 5))
+    val want = probe(idx)
     val n = postingsCount()
+    assert(health(idx) === ((1L, 2L, 2L, 0L)))
     // REPLAY batch 1 (crash between segment commit and checkpoint
     // commit): the marker makes it a no-op — no new segment, no new rows
     SparseSim.ingestBatchToBm25Index(b1, "text", "doc_id", idx, 1L)
     assert(postingsCount() === n, "replayed batch double-appended postings")
-    assert(asSet(SparseSim.bm25TopKFromIndex(spark, idx, queries,
-      "text", "doc_id", k = 5)) === want)
+    assert(health(idx) === ((1L, 2L, 2L, 0L)))
+    assert(probe(idx) === want)
     // streamed state ≡ one batch append of the union (frozen stats)
     val batchIdx = tmpDir("bm25strb")
     SparseSim.writeBm25Index(corpus.filter(col("doc_id") % 4 =!= 3),
       "text", "doc_id", batchIdx, numBuckets = 8)
     SparseSim.appendToBm25Index(corpus.filter(col("doc_id") % 4 === 3),
       "text", "doc_id", batchIdx)
-    assert(asSet(SparseSim.bm25TopKFromIndex(spark, batchIdx, queries,
-      "text", "doc_id", k = 5)) === want)
-    // commit-log guard: an uncommitted stream batch blocks consolidate and
-    // vacuum (they would delete the replay-guard markers); commit permits
+    assert(probe(batchIdx) === want)
+    // batch 2 is committed to the index but not to the checkpoint: vacuum
+    // keeps its marker (it stays in the current generation), so its replay
+    // still skips; consolidation refuses until the checkpoint commits
+    val b2 = corpus.filter(col("doc_id") < 6).withColumn("doc_id", col("doc_id") + 1000L)
     val ckpt = tmpDir("bm25ck")
-    val fs = new org.apache.hadoop.fs.Path(ckpt)
+    val cfs = new org.apache.hadoop.fs.Path(ckpt)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(new org.apache.hadoop.fs.Path(s"$ckpt/offsets"))
-    fs.create(new org.apache.hadoop.fs.Path(s"$ckpt/offsets/2"), false).close()
+    cfs.mkdirs(new org.apache.hadoop.fs.Path(s"$ckpt/offsets"))
+    cfs.create(new org.apache.hadoop.fs.Path(s"$ckpt/offsets/2"), false).close()
+    SparseSim.ingestBatchToBm25Index(b2, "text", "doc_id", idx, 2L)
+    val n2 = postingsCount()
+    GenerationLog.vacuum(spark, idx, ttlMs = 0L)
+    assert(SegmentLog.streamBatchCommitted(spark,
+      GenerationLog.requireCurrentDir(spark, idx), 2L), "vacuum dropped a batch marker")
+    SparseSim.ingestBatchToBm25Index(b2, "text", "doc_id", idx, 2L)
+    assert(postingsCount() === n2, "replay after vacuum double-appended postings")
     intercept[IllegalStateException](
       SparseSim.consolidateBm25Index(spark, idx, checkpointDir = Some(ckpt)))
-    intercept[IllegalStateException](
-      SparseSim.vacuumBm25Index(spark, idx, checkpointDir = Some(ckpt)))
-    fs.mkdirs(new org.apache.hadoop.fs.Path(s"$ckpt/commits"))
-    fs.create(new org.apache.hadoop.fs.Path(s"$ckpt/commits/2"), false).close()
+    cfs.mkdirs(new org.apache.hadoop.fs.Path(s"$ckpt/commits"))
+    cfs.create(new org.apache.hadoop.fs.Path(s"$ckpt/commits/2"), false).close()
     SparseSim.consolidateBm25Index(spark, idx, checkpointDir = Some(ckpt))
-    SparseSim.vacuumBm25Index(spark, idx, checkpointDir = Some(ckpt))
-    assert(asSet(SparseSim.bm25TopKFromIndex(spark, idx, queries,
-      "text", "doc_id", k = 5)) ===
-      asSet(SparseSim.bm25TopK(corpus, queries,
-        "text", "doc_id", "text", "doc_id", k = 5)))
+    GenerationLog.vacuum(spark, idx, ttlMs = 0L)
+    assert(probe(idx) === bruteRef(corpus.unionByName(b2)))
   }
 
   test("staleness audit: healthy shape clears, heavy appends and tombstones are counted") {
@@ -349,7 +406,7 @@ class Bm25IndexSpec extends AnyFunSuite with SparkTestBase {
     assert(s1._4 === 3L, "tombstoned ids counted")
     // consolidation resets the audit: one segment, all rows base, no tombstones
     SparseSim.consolidateBm25Index(spark, idx)
-    SparseSim.vacuumBm25Index(spark, idx)
+    GenerationLog.vacuum(spark, idx, ttlMs = 0L)
     val s2 = stats()
     assert(s2._1 === 1L && s2._3 === 0L && s2._4 === 0L)
     assert(s2._2 > 0L)
@@ -362,10 +419,98 @@ class Bm25IndexSpec extends AnyFunSuite with SparkTestBase {
       java.nio.file.Paths.get(idx, "_maintenance.lock"), "other-job pid=1")
     intercept[IllegalStateException](
       SparseSim.appendToBm25Index(corpus.limit(1), "text", "doc_id", idx))
-    intercept[IllegalStateException](SparseSim.vacuumBm25Index(spark, idx))
     // probes never take the lock
     assert(asSet(SparseSim.bm25TopKFromIndex(spark, idx, queries,
       "text", "doc_id", k = 5)).nonEmpty)
     java.nio.file.Files.delete(java.nio.file.Paths.get(idx, "_maintenance.lock"))
+  }
+
+  private val segmentLogFixture =
+    java.nio.file.Paths.get(getClass.getResource("/bm25-segment-log-root").toURI)
+
+  /** Copy `rel` (a file or tree) of the committed segment-log root into `dst`. */
+  private def copyFixture(rel: String, dst: String): Unit = {
+    import scala.jdk.CollectionConverters._
+    val src = segmentLogFixture.resolve(rel)
+    java.nio.file.Files.walk(src).iterator().asScala.foreach { p =>
+      val t = java.nio.file.Paths.get(dst, segmentLogFixture.relativize(p).toString)
+      if (java.nio.file.Files.isDirectory(p)) java.nio.file.Files.createDirectories(t)
+      else java.nio.file.Files.copy(p, t)
+    }
+  }
+
+  /** A copy of the committed segment-log root: a base of doc_id % 4 != 3,
+    * a batch append of doc_id % 8 == 3, stream batches 0 (doc_id % 16 ==
+    * 7) and 1 (doc_id % 16 == 15) and tombstones for docs 5 and 11, with
+    * numBuckets = 2 — written by the segment-log code over this corpus.
+    */
+  private def segmentLogRoot(): String = {
+    val dst = tmpDir("bm25seglog")
+    copyFixture("", dst)
+    dst
+  }
+
+  private lazy val segmentLogSurvivors = corpus.filter(!col("doc_id").isin(5L, 11L))
+
+  private def postingRows(idx: String): (Long, Long) = {
+    val r = SparseSim.bm25IndexStats(spark, idx).head()
+    (r.getAs[Long]("base_rows"), r.getAs[Long]("appended_rows"))
+  }
+
+  test("a segment-log root is refused by every verb until consolidation upgrades it") {
+    val idx = segmentLogRoot()
+    def refused(verb: => Any): Unit = {
+      val e = intercept[IllegalStateException](verb)
+      assert(e.getMessage.contains("consolidateBm25Index"), e.getMessage)
+    }
+    refused(probe(idx))
+    refused(SparseSim.appendToBm25Index(corpus.limit(1), "text", "doc_id", idx))
+    refused(SparseSim.ingestBatchToBm25Index(corpus.limit(1), "text", "doc_id", idx, 2L))
+    refused(SparseSim.deleteFromBm25Index(corpus.limit(1), "doc_id", idx))
+    refused(SparseSim.writeBm25Index(corpus, "text", "doc_id", idx))
+    refused(SparseSim.bm25IndexStats(spark, idx))
+    refused(GenerationLog.vacuum(spark, idx, ttlMs = 0L))
+    refused(GenerationLog.indexHealth(spark, idx))
+    // stream batch 1 is committed to the old index but not to the
+    // checkpoint: the upgrade takes no checkpoint guard (it carries the
+    // batch's marker), so it neither refuses nor lets the replay double
+    val ckpt = tmpDir("bm25seglogck")
+    val cfs = new org.apache.hadoop.fs.Path(ckpt)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    cfs.mkdirs(new org.apache.hadoop.fs.Path(s"$ckpt/offsets"))
+    cfs.create(new org.apache.hadoop.fs.Path(s"$ckpt/offsets/1"), false).close()
+    SparseSim.consolidateBm25Index(spark, idx, checkpointDir = Some(ckpt))
+    Seq("segments", "tombstones").foreach(d =>
+      assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$idx/$d")), s"$d left at the root"))
+    assert(GenerationLog.committedGenerations(spark, idx).size === 1)
+    assert(health(idx) === ((1L, 0L, 0L, 0L)))
+    assert(probe(idx) === bruteRef(segmentLogSurvivors))
+    val dir = GenerationLog.requireCurrentDir(spark, idx)
+    assert(Seq(0L, 1L).forall(SegmentLog.streamBatchCommitted(spark, dir, _)),
+      "the upgrade dropped an old stream-batch marker")
+    val rows = postingRows(idx)
+    SparseSim.ingestBatchToBm25Index(corpus.filter(col("doc_id") % 16 === 15),
+      "text", "doc_id", idx, 1L)
+    assert(postingRows(idx) === rows, "replay of an old stream batch doubled its postings")
+    // stream batch 2 ingests on top of the upgraded root
+    val b2 = corpus.filter(col("doc_id") < 6).withColumn("doc_id", col("doc_id") + 1000L)
+    SparseSim.ingestBatchToBm25Index(b2, "text", "doc_id", idx, 2L)
+    assert(health(idx) === ((1L, 1L, 1L, 0L)))
+    assert(probe(idx) === frozenRef(segmentLogSurvivors, segmentLogSurvivors.unionByName(b2)))
+  }
+
+  test("an upgrade that crashed mid-cleanup finishes on rerun without a second publish") {
+    val idx = segmentLogRoot()
+    SparseSim.consolidateBm25Index(spark, idx)
+    // the crash: the generation is committed, but `segments/` and an old
+    // stream-batch marker are still on disk
+    copyFixture("segments", idx)
+    copyFixture("_commits/4", idx)
+    intercept[IllegalStateException](probe(idx))
+    SparseSim.consolidateBm25Index(spark, idx)
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$idx/segments")))
+    assert(GenerationLog.committedGenerations(spark, idx).size === 1)
+    assert(health(idx) === ((1L, 0L, 0L, 0L)))
+    assert(probe(idx) === bruteRef(segmentLogSurvivors))
   }
 }
