@@ -143,7 +143,7 @@ object Plans {
     // driver-side trainer, receipted in STRESS_RECEIPTS_r11.md instead.
     // Round-12/13 queries (the r12 verdict's regen flag, adjudicated):
     // d_composed3_gate / d_composed4_gate build their frame by RUNNING one
-    // ingestBatch3/4 replay (four foreachBatch stages, three static
+    // ComposedGate.ingestBatch replay (four foreachBatch stages, three static
     // overwrites, one marker commit) — the returned frame's plan is just
     // the kept-partition scan; the REVIEWABLE per-stage plans are exactly
     // d_stream_gate (near-dup stage), d_substr_* (substring stage),

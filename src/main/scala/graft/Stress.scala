@@ -1223,7 +1223,7 @@ object Stress {
           (0 to 3).foreach { k =>
             val t0 = System.nanoTime()
             operators.Similarity.semanticGateBatch(batchOf(k), "embedding",
-              "vec_id", idx.toString, kept.toString, cents, k.toLong,
+              "vec_id", idx.toString, kept.toString, k.toLong,
               threshold = 0.9, nprobe = 2)
             System.err.println(
               f"[stress] semantic_gate_x$mult batch=$k " +
@@ -1235,7 +1235,7 @@ object Stress {
               Seq("vec_id", "cluster", "ingest_batch")))
           val before = snap()
           operators.Similarity.semanticGateBatch(batchOf(1), "embedding",
-            "vec_id", idx.toString, kept.toString, cents, 1L,
+            "vec_id", idx.toString, kept.toString, 1L,
             threshold = 0.9, nprobe = 2)
           require(snap() == before,
             s"replayed semantic gate batch changed kept/index content: $before")
@@ -1289,11 +1289,12 @@ object Stress {
             baseEmb, "embedding", "vec_id", k = 16, trainSample = 8)
           operators.VersionedIvf.write(baseEmb, "embedding", "vec_id",
             cents, annIdx.toString)
-          def composed(k: Int): Unit =
-            streaming.ComposedGate.ingestBatch(batchOf(k), "text", "embedding",
-              "doc_id", textIdx.toString, annIdx.toString, cents,
-              textKept.toString, kept.toString, k.toLong,
-              threshold = 0.9, nprobe = 2)
+          val stages = Seq(
+            streaming.ComposedGate.Stage.NearDup(textIdx.toString, textKept.toString),
+            streaming.ComposedGate.Stage.Semantic(annIdx.toString, kept.toString,
+              threshold = 0.9, nprobe = 2))
+          def composed(k: Int): Unit = streaming.ComposedGate.ingestBatch(
+            batchOf(k), "text", "embedding", "doc_id", stages, k.toLong)
           (0 to 3).foreach { k =>
             val t0 = System.nanoTime()
             composed(k)
@@ -1301,8 +1302,7 @@ object Stress {
               f"[stress] composed_gate_x$mult batch=$k " +
                 f"${(System.nanoTime() - t0) / 1e9}%.1f s")
           }
-          def snap(): Seq[(Long, Long)] = composedOutputsHash(spark,
-            textIdx.toString, annIdx.toString, textKept.toString, kept.toString)
+          def snap(): Seq[(Long, Long)] = composedOutputsHash(spark, stages)
           val before = snap()
           composed(1)
           require(snap() == before,
@@ -1371,12 +1371,15 @@ object Stress {
             baseEmb, "embedding", "vec_id", k = 16, trainSample = 8)
           operators.VersionedIvf.write(baseEmb, "embedding", "vec_id",
             cents, annIdx.toString)
-          def composed(k: Int): Unit =
-            streaming.ComposedGate.ingestBatch4(batchOf(k), "text",
-              "embedding", "doc_id", model, buckets,
-              substrIdx.toString, textIdx.toString, annIdx.toString, cents,
-              qKept.toString, cleanD.toString, textKept.toString,
-              kept.toString, k.toLong, threshold = 0.9, nprobe = 2)
+          val stages = {
+            import streaming.ComposedGate.Stage._
+            Seq(Quality(model, buckets, qKept.toString),
+              Substring(substrIdx.toString, cleanD.toString),
+              NearDup(textIdx.toString, textKept.toString),
+              Semantic(annIdx.toString, kept.toString, threshold = 0.9, nprobe = 2))
+          }
+          def composed(k: Int): Unit = streaming.ComposedGate.ingestBatch(
+            batchOf(k), "text", "embedding", "doc_id", stages, k.toLong)
           def stageCount(dir: java.nio.file.Path, k: Int): Long = {
             val part = new org.apache.hadoop.fs.Path(
               s"$dir/ingest_batch=$k")
@@ -1397,21 +1400,13 @@ object Stress {
               f"[stress] composed4_gate_x$mult batch=$k $sec%.1f s " +
                 s"shrinkage in->q->clean->text->kept: ${chain.mkString(" -> ")}")
           }
-          def snap(): Seq[(Long, Long)] = Seq(
-            (spark.read.parquet(qKept.toString), Seq("doc_id", "ingest_batch")),
-            (spark.read.parquet(cleanD.toString), Seq("doc", "ingest_batch")),
-            (spark.read.parquet(textKept.toString), Seq("doc_id", "ingest_batch")),
-            (spark.read.parquet(kept.toString), Seq("doc_id", "ingest_batch")),
-            (operators.VersionedNearDup.liveManifest(spark, textIdx.toString),
-              Seq("doc", "keys")))
-            .map { case (df, cols) => contentHash(df, cols) }
-          val before = snap()
+          val before = composedOutputsHash(spark, stages)
           composed(1)
-          require(snap() == before,
+          require(composedOutputsHash(spark, stages) == before,
             s"replayed composed4 batch changed an output table: $before")
           System.err.println(
             f"[stress] composed4_gate_x$mult replay of batch 1 after 2-3: " +
-              s"all five output tables content-identical " +
+              s"all seven output tables content-identical " +
               s"(final kept=${before(3)._1})")
           before(3)._1
         } finally dirs.foreach(Fixtures.delete)

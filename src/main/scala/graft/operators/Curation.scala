@@ -769,7 +769,9 @@ object Curation {
     val model0 = cr.join(ct, Seq("f"), "full_outer")
       .select(col("f"), coalesce(col("cr"), lit(0L)).as("cr"),
         coalesce(col("ct"), lit(0L)).as("ct"))
-    val model = persistIfScopedOrCheckpoint(model0)
+    // scoped persist: the two model reads (totals + ratio) would otherwise
+    // recompute both feature aggs
+    val model = graft.CacheScope.persist(model0)
     val totals = model.agg(sum(col("cr")).as("nr"), sum(col("ct")).as("nt"),
       count(lit(1)).as("vsz"))
     val ratio = model.crossJoin(broadcast(totals))
@@ -804,13 +806,6 @@ object Curation {
       .limit(k)
       .select(col("doc"))
   }
-
-  /** [[Dedup.persistReuse]]'s sibling for the multiply-referenced model
-    * frame: scoped persist keeps the two model reads (totals + ratio) from
-    * recomputing both feature aggs.
-    */
-  private def persistIfScopedOrCheckpoint(df: DataFrame): DataFrame =
-    graft.CacheScope.persist(df)
 
   def leakFreeSplit(
       docs: DataFrame,

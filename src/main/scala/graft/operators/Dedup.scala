@@ -40,22 +40,6 @@ object Dedup {
     docs.withColumn("_rn", row_number().over(w)).filter(col("_rn") === 1).drop("_rn")
   }
 
-  /** Reuse materialization for multiply-referenced frames: persist with
-    * recomputable lineage (MEMORY_AND_DISK), NOT localCheckpoint — lazy
-    * local checkpoints live only on executors with no replication, so one
-    * lost executor mid-job would kill the whole query instead of recomputing
-    * a partition. LIFECYCLE: registration goes through [[graft.CacheScope]]
-    * — inside a `CacheScope.withScope { ... }` the entry is unpersisted
-    * (cache entry removed, not just blocks dropped) when the scope closes,
-    * so a long-lived service composing many queries accrues no per-query
-    * cache growth. Outside any scope the legacy behavior stands: the entry
-    * lives until explicit unpersist / `spark.catalog.clearCache()` /
-    * session end (each entry is small — digests, band keys, sketches —
-    * never text).
-    */
-  private def persistReuse(df: DataFrame): DataFrame =
-    graft.CacheScope.persist(df)
-
   /** Digest manifest of a corpus: the persisted face of exact dedup for
     * INCREMENTAL pipelines — write this once per corpus snapshot, and dedup
     * each arriving batch against it with [[dropSeenDocuments]] instead of
@@ -222,7 +206,7 @@ object Dedup {
     // batch text runs twice. The CALLER's manifest is also read twice — a
     // parquet-backed manifest re-scans cheaply (pruned columns), but an
     // in-flight computed one should be persisted by the caller.
-    val bm = persistReuse(
+    val bm = graft.CacheScope.persist(
       nearDupManifest(batch, textCol, idCol, shingleSize, bands, rowsPerBand))
     val seen = seenDocsAgainstManifest(bm, manifest, numer, denom)
     batch.join(seen, batch(idCol) === seen("b_doc"), "left_anti")
@@ -290,7 +274,7 @@ object Dedup {
     // both sides of the band self-join re-evaluate the shingle projection;
     // see jaccardDuplicatePairs for the reuse trade-off
     val plan = shingleFrame(docs, textCol, idCol, shingleSize)
-    val sh = if (reuseShingles) persistReuse(plan) else plan
+    val sh = if (reuseShingles) graft.CacheScope.persist(plan) else plan
     minhashCandidatePairsFromShingles(sh, bands, rowsPerBand, reuseBanded = reuseShingles)
   }
 
@@ -333,7 +317,7 @@ object Dedup {
     // both sides of the self-join re-evaluate shingle+signature math;
     // `reuseBanded` materializes the (doc, band, key) frame — ~1 KB per doc,
     // orders of magnitude smaller than the text it derives from
-    val banded = if (reuseBanded) persistReuse(banded0) else banded0
+    val banded = if (reuseBanded) graft.CacheScope.persist(banded0) else banded0
     val a = banded.alias("a")
     val b = banded.alias("b")
     a.join(b,
@@ -372,12 +356,12 @@ object Dedup {
     // one shingle pass feeds both the candidate generation and the exact
     // verify joins — tokenize+shingle is the dominant narrow-stage cost.
     // The PLAN references it four times (both sides of the band self-join +
-    // both verify joins); `reuseShingles` materializes it once (see
-    // persistReuse — recomputable under executor loss) — measured ~1.9× on
+    // both verify joins); `reuseShingles` materializes it once (a scoped
+    // persist, recomputable under executor loss) — measured ~1.9× on
     // pair generation at 100k docs. Leave off when the corpus dwarfs
     // executor storage and recompute is cheaper.
     val plan = shingleFrame(docs, textCol, idCol, shingleSize)
-    val withShingles = if (reuseShingles) persistReuse(plan) else plan
+    val withShingles = if (reuseShingles) graft.CacheScope.persist(plan) else plan
     val cands = minhashCandidatePairsFromShingles(withShingles, bands, rowsPerBand, reuseBanded = reuseShingles)
     // exact verify runs on 64-bit shingle HASHES: intersecting long arrays
     // is several times cheaper than UTF8 string arrays at millions of
@@ -537,7 +521,7 @@ object Dedup {
     */
   def simhashPairsFromSketches(
       sk0: DataFrame, maxDist: Int, reuseSketches: Boolean = false): DataFrame = {
-    val sk = if (reuseSketches) persistReuse(sk0) else sk0
+    val sk = if (reuseSketches) graft.CacheScope.persist(sk0) else sk0
     val valuePairs = simhashValuePairs(sk.select(col("simhash")).distinct(), maxDist)
     // identical sketches: expand within each value group, dist = 0
     val x = sk.alias("x")
@@ -738,7 +722,7 @@ object Dedup {
       batch: DataFrame, manifest: DataFrame, textCol: String, idCol: String,
       n: Int): DataFrame =
     substringSpansFromOccurrences(
-      persistReuse(cutOccurrenceKeys(batch, textCol, idCol, n)), manifest, n)
+      graft.CacheScope.persist(cutOccurrenceKeys(batch, textCol, idCol, n)), manifest, n)
 
   /** [[substringSpansAgainstManifest]] over a PRE-BUILT (and ideally
     * persisted) occurrence frame — the gate shares one tokenize+shingle

@@ -406,33 +406,34 @@ object Similarity {
     // GENERATION-TAGGED freeze: the tag lets each batch cheaply validate
     // that the index is still on the generation these centroids came
     // from — a mid-stream consolidate keeps them valid, a retrain does not
-    val (frozenGen, centroids) = VersionedIvf.frozenCentroids(stream.sparkSession, indexPath)
-    graft.streaming.GateStream.start(stream, checkpointDir)((batch, batchId) =>
-      semanticGateBatch(batch, vecCol, idCol, indexPath, keptDir,
-        centroids, batchId, threshold, nprobe, frozenGen = Some(frozenGen)))
+    val frozen = VersionedIvf.frozenCentroids(stream.sparkSession, indexPath)
+    graft.streaming.GateStream.start(stream, checkpointDir)(
+      semanticGateBatch(_, vecCol, idCol, indexPath, keptDir, _, threshold,
+        nprobe, Some(frozen)))
   }
 
   /** One gate batch of [[streamSemanticGate]], exposed for replay testing
-    * and receipts. `frozenGen` tags the generation `centroids` were read
-    * from: when the index has moved past it (a mid-stream retrain
-    * committed a new generation with re-trained centroids), the batch
-    * re-reads the CURRENT centroids instead of pruning clusters and
-    * assigning its segment with stale ones — which would break both the
-    * suppression probe's partition pruning and the misassigned==0 drift
-    * invariant of the new generation. `frozenGen = None` (the direct-call
-    * test shape) always re-validates by re-reading.
+    * and receipts. `frozen` is (generation, centroids) as
+    * [[VersionedIvf.frozenCentroids]] read them at stream start: when the
+    * index has moved past that generation (a mid-stream retrain committed
+    * a new generation with re-trained centroids), the batch re-reads the
+    * CURRENT centroids instead of pruning clusters and assigning its
+    * segment with stale ones — which would break both the suppression
+    * probe's partition pruning and the misassigned==0 drift invariant of
+    * the new generation. `None` (the direct-call shape) always re-reads.
     */
   private[graft] def semanticGateBatch(
       batch: DataFrame, vecCol: String, idCol: String,
-      indexPath: String, keptDir: String, frozenCentroids: Seq[Seq[Float]],
+      indexPath: String, keptDir: String,
       batchId: Long, threshold: Double, nprobe: Int,
-      frozenGen: Option[Long] = None): Unit =
+      frozen: Option[(Long, Seq[Seq[Float]])] = None): Unit =
     graft.CacheScope.withScope {
       val spark = batch.sparkSession
       val (gen, dir) = GenerationLog.requireCurrent(spark, indexPath)
-      val centroids =
-        if (frozenGen.contains(gen)) frozenCentroids
-        else graft.Trace.t("semgate.centroids")(VersionedIvf.readCentroids(spark, dir))
+      val centroids = frozen match {
+        case Some((g, c)) if g == gen => c
+        case _ => graft.Trace.t("semgate.centroids")(VersionedIvf.readCentroids(spark, dir))
+      }
       // strictly-earlier live membership: base ∪ committed segments with
       // stream ids < this batch, minus tombstones — a replay cannot be
       // suppressed by its first attempt's own vectors, and a forgotten

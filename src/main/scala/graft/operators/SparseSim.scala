@@ -231,7 +231,9 @@ object SparseSim {
     MaintenanceLock.withLock(spark, path) {
       GenerationLog.refuseSegmentLogRoot(spark, path)
       publishGeneration(spark, path,
-        graft.CacheScope.persist(postingsOf(corpus, textCol, idCol, numBuckets)), numBuckets)
+        graft.CacheScope.persist(postingsOf(corpus, textCol, idCol, numBuckets)), numBuckets,
+        s"writeBm25Index($path): the corpus has no tokens; an empty " +
+          "partitioned postings table is unreadable — nothing was committed.")
     }
   }
 
@@ -460,14 +462,22 @@ object SparseSim {
   /** Publish `post` (persisted postings) as the next generation: the
     * postings, their df table, the one-row stats and a marker-only
     * segment per already-ingested `streamBatches` id — the one generation
-    * writer of build, consolidate and upgrade.
+    * writer of build, consolidate and upgrade. Postings with no rows
+    * would commit a table with no `tbucket=` partition, which no reader
+    * can infer a schema for: that publish throws `IllegalStateException`
+    * with `emptyRefusal` before the marker, so nothing is committed.
     */
   private def publishGeneration(
       spark: SparkSession, path: String, post: DataFrame, numBuckets: Int,
-      streamBatches: Seq[Long] = Nil): Unit =
+      emptyRefusal: String, streamBatches: Seq[Long] = Nil): Unit =
     GenerationLog.publish(spark, path) { dir =>
       post.write.mode("overwrite").option("partitionOverwriteMode", "static")
         .partitionBy("tbucket").parquet(s"$dir/postings")
+      // emptiness from the written partitions' footers — no Spark job
+      val postings = new org.apache.hadoop.fs.Path(s"$dir/postings")
+      if (!GenerationLog.fsOf(spark, dir).listStatus(postings)
+          .exists(p => p.isDirectory && IndexMeta.dirHasRows(spark, p.getPath.toString)))
+        throw new IllegalStateException(emptyRefusal)
       post.groupBy(col("tbucket"), col("term")).agg(count(lit(1)).as("df"))
         .select(col("term"), col("df"), col("tbucket"))
         .write.mode("overwrite").option("partitionOverwriteMode", "static")
@@ -487,19 +497,15 @@ object SparseSim {
     }
 
   /** [[publishGeneration]] of merged live postings; an all-tombstoned
-    * merge would commit an empty partitioned postings table (unreadable),
-    * so it refuses, like VersionedNearDup.consolidate: rebuild instead.
+    * merge refuses, like VersionedNearDup.consolidate: rebuild instead.
     */
   private def publishMerged(
       spark: SparkSession, path: String, live: DataFrame, numBuckets: Int,
-      streamBatches: Seq[Long] = Nil): Unit = {
-    val post = graft.CacheScope.persist(live)
-    if (post.isEmpty) throw new IllegalStateException(
+      streamBatches: Seq[Long] = Nil): Unit =
+    publishGeneration(spark, path, graft.CacheScope.persist(live), numBuckets,
       s"consolidateBm25Index($path): every posting is tombstoned; an " +
         "empty partitioned postings table is unreadable — rebuild with " +
-        "writeBm25Index instead of consolidating to nothing.")
-    publishGeneration(spark, path, post, numBuckets, streamBatches)
-  }
+        "writeBm25Index instead of consolidating to nothing.", streamBatches)
 
   /** [[consolidateBm25Index]] of a segment-log root (see there). */
   private def upgradeSegmentLogRoot(spark: SparkSession, path: String): Unit = {

@@ -1,9 +1,11 @@
 package graft
 package queries
 
-import graft.operators.{Dedup, GenerationLog, Linkage, PageRank, Similarity, SparseSim, TextClassifier, TextOps, VersionedIvf, VersionedNearDup, VersionedSubstring}
+import graft.operators.{Dedup, GenerationLog, Linkage, PageRank, Similarity, SparseSim, TextOps, VersionedIvf, VersionedNearDup, VersionedSubstring}
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.streaming.ComposedGate
 
 import QueryFixtures._
 import Role._
@@ -19,6 +21,58 @@ private[graft] object DedupQueries {
     */
   private val DupClusterClosureSql: String =
     """WITH RECURSIVE sh AS (SELECT doc_id, list_distinct(list_transform(generate_series(1, greatest(len(toks) - 2, 0)), i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS sh FROM (SELECT doc_id, list_transform(regexp_extract_all(text, '\S+'), t -> lower(t)) AS toks FROM documents) WHERE len(toks) >= 3), pairs AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b FROM sh a JOIN sh b ON a.doc_id < b.doc_id WHERE len(list_intersect(a.sh, b.sh)) * 2 >= (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))) * 1), edges AS (SELECT doc_a AS a, doc_b AS b FROM pairs UNION SELECT doc_b, doc_a FROM pairs), reach(src, dst) AS (SELECT a, a FROM edges UNION SELECT r.src, e.b FROM reach r JOIN edges e ON r.dst = e.a) SELECT src AS doc, min(dst) AS cluster FROM reach GROUP BY 1"""
+
+  /** The bench face and `_contract` of the composed ingest gate over the
+    * stage `kinds` (see [[QueryFixtures.ComposedChain]]), with arrival
+    * batches 0 until `batches` streamed by the fixture. Timed body: a
+    * replay of the last streamed batch through every stage (replay-
+    * idempotent: each stage rewrites its own partitions or skips its
+    * markers).
+    */
+  private def composedGate(name: String, kinds: Seq[String], batches: Int): Query = {
+    val last = batches - 1
+    def arrivals(s: SparkSession, d: String) =
+      composedArrivals(s, d, junk = kinds.contains("quality"))
+    def replayLast(s: SparkSession, d: String, stages: Seq[ComposedGate.Stage]): Unit =
+      ComposedGate.ingestBatch(gateSubBatch(arrivals(s, d), last),
+        "text", "embedding", "doc_id", stages, last.toLong)
+    Query(name, (s, d) => fixtureSerialized(name, d) {
+      val stages = composedFixture(s, d, kinds, batches)
+      replayLast(s, d, stages)
+      // the replay just overwrote partitions the fixture's stream wrote —
+      // drop any cached listing before reading the result back
+      s.catalog.refreshByPath(stages.last.outDir)
+      s.read.parquet(stages.last.outDir).filter(col("ingest_batch") === last.toLong)
+        .select(col("doc_id"))
+    },
+      // composition contract: the streamed final kept-set ≡ the stages'
+      // sequential references stacked, plus replay identity across every
+      // output table (the last batch re-driven here), plus, with a Quality
+      // stage, non-vacuity: every planted junk arrival must be absent from
+      // its ledger (otherwise the classifier silently passed everything).
+      // Violations frame provably empty
+      BenchOnly(Query(s"${name}_contract", (s, d) => fixtureSerialized(name, d) {
+        val stages = composedFixture(s, d, kinds, batches)
+        val beforeReplay = composedOutputsHash(s, stages)
+        replayLast(s, d, stages)
+        val replayOk = composedOutputsHash(s, stages) == beforeReplay
+        val refKept = composedReferenceKept(s, d, stages,
+          (0 to last).map(gateSubBatch(arrivals(s, d), _)))
+        val leaked = stages.collect { case q: ComposedGate.Stage.Quality =>
+          s.read.parquet(q.keptDir).select(col("doc_id"))
+            .join(arrivals(s, d).filter(pmod(col("doc_id"), lit(16)) === 4),
+              Seq("doc_id"), "left_semi")
+            .select(col("doc_id").cast("bigint").as("doc"),
+              lit("planted junk doc survived the quality gate").as("violation"))
+        }
+        (keptVerdict(s.read.parquet(stages.last.outDir).select(col("doc_id")),
+          refKept, "doc_id", "doc",
+          "kept by composition, not by reference",
+          "kept by reference, not by composition",
+          "replay changed composed outputs" -> replayOk) +: leaked).reduce(_ union _)
+      },
+        Contract("SELECT CAST(doc_id AS BIGINT) AS doc, '' AS violation FROM documents WHERE 1 = 0"))))
+  }
 
   val all: Seq[Query] = Seq(
     // --- dedup --------------------------------------------------------------
@@ -131,108 +185,10 @@ private[graft] object DedupQueries {
       settledHealthViolations(s, root)
     },
       Contract(settledHealthOracle("documents"))),
-    // THREE-stage composed ingest (substring → near-dup → semantic), the
-    // full crawl-pipeline shape in one foreachBatch: timed body = replay
-    // of batch 0 through all three stages
-    Query("d_composed3_gate", (s, d) => fixtureSerialized("composed3", d) {
-      val (substrIdx, textIdx, annIdx, cleanDir, textKept, kept, cents) =
-        Fixtures.memo("composed3Gate", d)(buildComposed3GateFixture(s, d))
-      graft.streaming.ComposedGate.ingestBatch3(
-        gateSubBatch(composedArrivals(s, d), 0), "text", "embedding", "doc_id",
-        substrIdx, textIdx, annIdx, cents, cleanDir, textKept, kept, 0L,
-        SemGateTau, SemGateNprobe)
-      // the replay just overwrote partitions the fixture's stream wrote —
-      // drop any cached listing before reading the result back
-      s.catalog.refreshByPath(kept)
-      s.read.parquet(kept).filter(col("ingest_batch") === 0L)
-        .select(col("doc_id"))
-    },
-      // three-stage composition contract: streamed final kept-set ≡ the
-      // THREE sequential reference pipelines stacked (substring manifest
-      // fold → exact-Jaccard text fold → in-memory semantic fold), plus
-      // replay identity across all SIX output tables (batch 1 re-driven
-      // through ingestBatch3 here). Violations frame provably empty
-      BenchOnly(Query("d_composed3_gate_contract", (s, d) => fixtureSerialized("composed3", d) {
-        val (substrIdx, textIdx, annIdx, cleanDir, textKept, kept, cents) =
-          Fixtures.memo("composed3Gate", d)(buildComposed3GateFixture(s, d))
-        val beforeReplay =
-          composed3OutputsHash(s, substrIdx, textIdx, annIdx, cleanDir, textKept, kept)
-        graft.streaming.ComposedGate.ingestBatch3(
-          gateSubBatch(composedArrivals(s, d), 0), "text", "embedding", "doc_id",
-          substrIdx, textIdx, annIdx, cents, cleanDir, textKept, kept, 0L,
-          SemGateTau, SemGateNprobe)
-        val replayOk = composed3OutputsHash(
-          s, substrIdx, textIdx, annIdx, cleanDir, textKept, kept) == beforeReplay
-        val refKept = composed3ReferenceKept(s, d,
-          Seq(gateSubBatch(composedArrivals(s, d), 0)), cents)
-        keptVerdict(s.read.parquet(kept).select(col("doc_id")), refKept, "doc_id", "doc",
-          "kept by composition, not by reference",
-          "kept by reference, not by composition",
-          "replay changed composed outputs" -> replayOk)
-      },
-        Contract("SELECT CAST(doc_id AS BIGINT) AS doc, '' AS violation FROM documents WHERE 1 = 0")))),
-    // FOUR-stage composed ingest (classifier score gate → substring →
-    // near-dup → semantic) — the full CCNet-style production crawl
-    // pipeline in one foreachBatch: timed body = replay of batch 0 through
-    // all four stages (stateless stage -1 re-scores identically; the
-    // stateful stages rewrite their own partitions / skip their markers)
-    Query("d_composed4_gate", (s, d) => fixtureSerialized("composed4", d) {
-      val (substrIdx, textIdx, annIdx, qualityKept, cleanDir, textKept, kept, cents) =
-        Fixtures.memo("composed4Gate", d)(buildComposed4GateFixture(s, d))
-      graft.streaming.ComposedGate.ingestBatch4(
-        gateSubBatch(composed4Arrivals(s, d), 0), "text", "embedding", "doc_id",
-        composed4Model(s, d), ClsGateBuckets,
-        substrIdx, textIdx, annIdx, cents, qualityKept, cleanDir, textKept,
-        kept, 0L, SemGateTau, SemGateNprobe)
-      s.catalog.refreshByPath(kept)
-      s.read.parquet(kept).filter(col("ingest_batch") === 0L)
-        .select(col("doc_id"))
-    },
-      // four-stage composition contract: streamed final kept-set ≡ the
-      // quality filter (scored with the SAME frozen model — stateless)
-      // stacked on the THREE sequential reference pipelines, plus replay
-      // identity across all SEVEN output tables, plus non-vacuity (the
-      // planted junk docs must actually have been dropped at stage -1).
-      // Violations frame provably empty
-      BenchOnly(Query("d_composed4_gate_contract", (s, d) => fixtureSerialized("composed4", d) {
-        val (substrIdx, textIdx, annIdx, qualityKept, cleanDir, textKept, kept, cents) =
-          Fixtures.memo("composed4Gate", d)(buildComposed4GateFixture(s, d))
-        val model = composed4Model(s, d)
-        val beforeReplay = composed4OutputsHash(
-          s, substrIdx, textIdx, annIdx, qualityKept, cleanDir, textKept, kept)
-        graft.streaming.ComposedGate.ingestBatch4(
-          gateSubBatch(composed4Arrivals(s, d), 0), "text", "embedding", "doc_id",
-          model, ClsGateBuckets,
-          substrIdx, textIdx, annIdx, cents, qualityKept, cleanDir, textKept,
-          kept, 0L, SemGateTau, SemGateNprobe)
-        val replayOk = composed4OutputsHash(
-          s, substrIdx, textIdx, annIdx, qualityKept, cleanDir, textKept,
-          kept) == beforeReplay
-        val b0 = gateSubBatch(composed4Arrivals(s, d), 0)
-        val qualityRef = graft.CacheScope.localCheckpoint(b0.join(
-          TextClassifier.scoreDocs(b0, "text", "doc_id", model, ClsGateBuckets)
-            .filter(col("quality") === 1L).select(col("doc").as("doc_id")),
-          Seq("doc_id")))
-        val refKept = composed3ReferenceKept(s, d, Seq(qualityRef), cents)
-        // non-vacuity: every planted junk arrival of batch 0 must be absent
-        // from the quality ledger (stage -1 dropped it) — otherwise the
-        // classifier stage silently passed everything
-        val planted = gateSubBatch(composed4Arrivals(s, d), 0)
-          .filter(pmod(col("doc_id"), lit(16)) === 4).select(col("doc_id"))
-        val leaked = s.read.parquet(qualityKept).select(col("doc_id"))
-          .join(planted, Seq("doc_id"), "left_semi")
-          .select(col("doc_id").cast("bigint").as("doc"),
-            lit("planted junk doc survived the quality gate").as("violation"))
-        keptVerdict(s.read.parquet(kept).select(col("doc_id")), refKept, "doc_id", "doc",
-          "kept by composition, not by reference",
-          "kept by reference, not by composition",
-          "replay changed composed4 outputs" -> replayOk)
-          .union(leaked)
-      },
-        // four-stage (classifier → substring → near-dup → semantic): streamed
-        // ≡ quality-filtered stacked references + replay identity + the
-        // planted junk docs dropped at stage -1 — all provably empty
-        Contract("SELECT CAST(doc_id AS BIGINT) AS doc, '' AS violation FROM documents WHERE 1 = 0")))),
+    // the THREE-stage (substring → near-dup → semantic) and the full
+    // FOUR-stage CCNet chain (classifier score gate first) composed ingest
+    composedGate("d_composed3_gate", ComposedChain.drop(1), batches = 1),
+    composedGate("d_composed4_gate", ComposedChain, batches = 1),
     Query("d_stream_gate", (s, d) => fixtureSerialized("streamgate", d) {
       val (idx, kept, _) =
         Fixtures.memo("nearDupGate", d)(buildNearDupGateFixture(s, d))
@@ -350,7 +306,7 @@ private[graft] object DedupQueries {
         .filter(pmod(col("vec_id"), lit(4)) === 0)
         .select(col("vec_id"), col("embedding"))
       Similarity.semanticGateBatch(semSubBatch(arrivals, 2), "embedding",
-        "vec_id", idx, kept, cents, 2L, SemGateTau, SemGateNprobe)
+        "vec_id", idx, kept, 2L, SemGateTau, SemGateNprobe)
       s.read.parquet(kept).filter(col("ingest_batch") === 2L)
         .select(col("vec_id"))
     },
@@ -389,58 +345,8 @@ private[graft] object DedupQueries {
         // replay identity, tombstone release — one provably-empty frame
         Contract("SELECT CAST(vec_id AS BIGINT) AS vec, '' AS violation FROM embeddings WHERE 1 = 0")))),
     // the COMPOSED ingest pipeline — text near-dup gate → semantic gate in
-    // one foreachBatch over one stream (the production stacking). Timing
-    // face: one full composed batch (re-running batch 1 is replay-
-    // idempotent through BOTH stages)
-    Query("d_composed_gate", (s, d) => fixtureSerialized("composed", d) {
-      val (textIdx, annIdx, textKept, kept, cents) =
-        Fixtures.memo("composedGate", d)(buildComposedGateFixture(s, d))
-      graft.streaming.ComposedGate.ingestBatch(
-        gateSubBatch(composedArrivals(s, d), 1), "text", "embedding", "doc_id",
-        textIdx, annIdx, cents, textKept, kept, 1L,
-        SemGateTau, SemGateNprobe)
-      s.read.parquet(kept).filter(col("ingest_batch") === 1L)
-        .select(col("doc_id"))
-    },
-      // composed-gate lifecycle contract: the streamed composition's kept-set
-      // must equal the two SEQUENTIAL reference pipelines stacked — the text
-      // gate's exact-Jaccard fold feeding the semantic gate's in-memory
-      // ivfTopK fold — plus replay identity across the whole composition
-      // (batch 1 re-driven through ComposedGate.ingestBatch HERE, all four
-      // output tables hash-compared). Violations frame provably empty,
-      // hash-gated
-      BenchOnly(Query("d_composed_gate_contract", (s, d) => fixtureSerialized("composed", d) {
-        import s.implicits._
-        val (textIdx, annIdx, textKept, kept, cents) =
-          Fixtures.memo("composedGate", d)(buildComposedGateFixture(s, d))
-        val beforeReplay = composedOutputsHash(s, textIdx, annIdx, textKept, kept)
-        graft.streaming.ComposedGate.ingestBatch(
-          gateSubBatch(composedArrivals(s, d), 1), "text", "embedding", "doc_id",
-          textIdx, annIdx, cents, textKept, kept, 1L,
-          SemGateTau, SemGateNprobe)
-        val replayOk =
-          composedOutputsHash(s, textIdx, annIdx, textKept, kept) == beforeReplay
-        val arrivals = composedArrivals(s, d)
-        // the composed3 fold minus its substring stage
-        val start = (
-          graft.CacheScope.localCheckpoint(
-            gateManifest(gateIndexBase(tb(s, d, "documents")))),
-          graft.CacheScope.localCheckpoint(
-            gateEmbBase(tb(s, d, "embeddings")).toDF("doc_id", "embedding")),
-          s.emptyDataset[Long].toDF("doc_id"))
-        val refKept = (0 to 1).foldLeft(start) { case ((man, corpus, acc), k) =>
-          val (keptT, grownMan) = textGateStep(gateSubBatch(arrivals, k), man)
-          val (keptS, grownCorpus) = semanticGateStep(keptT, corpus, "doc_id", cents)
-          (grownMan, grownCorpus, acc.union(keptS.select(col("doc_id"))))
-        }._3
-        keptVerdict(s.read.parquet(kept).select(col("doc_id")), refKept, "doc_id", "doc",
-          "kept by composition, not by reference",
-          "kept by reference, not by composition",
-          "replay changed composed outputs" -> replayOk)
-      },
-        // composed text→semantic gate: streamed composition ≡ the two stacked
-        // sequential references + whole-composition replay identity
-        Contract("SELECT CAST(doc_id AS BIGINT) AS doc, '' AS violation FROM documents WHERE 1 = 0")))),
+    // one foreachBatch over one stream (the production stacking)
+    composedGate("d_composed_gate", ComposedChain.drop(2), batches = 2),
     // Bloom-manifest soundness: batch rows kept by the memory-resident
     // Bloom dedup gate that exact digests prove were in the corpus — the
     // no-false-negative property as a provably-empty frame

@@ -2,6 +2,7 @@ package graft
 package queries
 
 import graft.operators.{Dedup, GenerationLog, Similarity, SparseSim, TextClassifier, VersionedIvf, VersionedNearDup, VersionedSubstring}
+import graft.streaming.ComposedGate
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import scala.concurrent.{Await, Future}
@@ -143,13 +144,13 @@ private[graft] object QueryFixtures {
         Seq("vec_id", "cluster", "ingest_batch")))
     val beforeReplay = outputsHash()
     Similarity.semanticGateBatch(semSubBatch(arrivals, 1), "embedding", "vec_id",
-      idx.toString, kept.toString, cents, 1L, SemGateTau, SemGateNprobe)
+      idx.toString, kept.toString, 1L, SemGateTau, SemGateNprobe)
     val replayOk = outputsHash() == beforeReplay
     VersionedIvf.delete(s, idx.toString,
       base.filter(pmod(col("vec_id"), lit(20)) === 2).select(col("vec_id")),
       "vec_id")
     Similarity.semanticGateBatch(semSubBatch(arrivals, 2), "embedding", "vec_id",
-      idx.toString, kept.toString, cents, 2L, SemGateTau, SemGateNprobe)
+      idx.toString, kept.toString, 2L, SemGateTau, SemGateNprobe)
     (idx.toString, kept.toString, replayOk, cents)
   }
 
@@ -235,103 +236,182 @@ private[graft] object QueryFixtures {
     (root.toString, clean.toString, replayOk, compactOk)
   }
 
-  /** Three-stage composed fixture (d_composed3_gate / _contract): substring
-    * index + near-dup index on the ≡2 mod 4 doc quarter, ANN index on the
-    * matching embedding quarter; ONE arrival batch streamed through
-    * [[streaming.ComposedGate.stream3]] (one foreachBatch, one
-    * checkpoint) — the smoke gate's 20 s bound prices every composed
-    * execution, so the driver fixture runs the minimum and CROSS-batch
-    * composition is pinned by ComposedGateSpec's planted two-batch case
-    * (and the two-stage d_composed_gate still streams two batches here).
-    * Replay probe lives in the contract; the bench face replays batch 0.
-    * Value: (substrIdx, textIdx, annIdx, cleanDir, textKeptDir, keptDir,
-    * centroids)
+  /** The composed gate's stage kinds, in CCNet chain order. */
+  val ComposedChain: Seq[String] = Seq("quality", "substring", "neardup", "semantic")
+
+  val ClsGateBuckets = 1 << 12
+
+  /** Arrival rows for the composed gates: the ≡0 mod 4 quarter with text
+    * AND embedding (documents ⋈ embeddings share the 0..n-1 id space).
+    * With `junk`, every ≡4 mod 16 doc's text is replaced by vocabulary the
+    * quality classifier was trained to reject, so a Quality stage must
+    * drop exactly these before the later stages ever see them.
     */
-  def buildComposed3GateFixture(
-      s: SparkSession, d: String)
-      : (String, String, String, String, String, String, Seq[Seq[Float]]) = {
-    val arrivals = composedArrivals(s, d)
-    val dirs = Seq("c3s", "c3t", "c3a", "c3cl", "c3tk", "c3k", "c3l", "c3c")
-      .map(Fixtures.dir)
-    val Seq(substrIdx, textIdx, annIdx, cleanDir, textKept, kept, landing, ckpt) = dirs
-    val cents = Await.result(writeComposedBaseIndexes(
-      s, d, substrIdx.toString, textIdx.toString, annIdx.toString), Duration.Inf)
-    landBatch(gateSubBatch(arrivals, 0), landing, 0)
-    graft.streaming.ComposedGate.stream3(
-      s.readStream.schema(arrivals.schema).option("maxFilesPerTrigger", 1)
-        .parquet(landing.toString),
-      "text", "embedding", "doc_id",
-      substrIdx.toString, textIdx.toString, annIdx.toString,
-      cleanDir.toString, textKept.toString, kept.toString, ckpt.toString,
-      SemGateTau, SemGateNprobe)
-      .awaitTermination()
-    (substrIdx.toString, textIdx.toString, annIdx.toString,
-      cleanDir.toString, textKept.toString, kept.toString, cents)
+  def composedArrivals(s: SparkSession, d: String, junk: Boolean): DataFrame = {
+    val docs = tb(s, d, "documents")
+    val embs = tb(s, d, "embeddings")
+    val arrivals = docs.join(embs, docs("doc_id") === embs("vec_id"))
+      .select(docs("doc_id"), col("text"), col("embedding"))
+      .filter(pmod(col("doc_id"), lit(4)) === 0)
+    if (!junk) arrivals
+    else arrivals.withColumn("text",
+      when(pmod(col("doc_id"), lit(16)) === 4, junkText(col("doc_id")))
+        .otherwise(col("text")))
   }
 
-  /** Write the composed gates' three base indexes — substring windows and
-    * near-dup signatures on the ≡2 mod 4 doc quarter, IVF on the matching
-    * embedding quarter. They are independent, so they build on concurrent
+  /** Train the gate's quality classifier once per sf dir: base-corpus text
+    * as the reference class vs junk-vocabulary docs, integer-exact LR.
+    */
+  def composedModel(s: SparkSession, d: String): DataFrame = {
+    import s.implicits._
+    Fixtures.memo("composedModel", d) {
+      val labeled = junkLabeled(gateIndexBase(tb(s, d, "documents")), 2000000L)
+      // 5 iterations: the classes have DISJOINT vocabularies, so the sign
+      // structure converges in the first couple of passes — the contract's
+      // non-vacuity probe (planted junk must be dropped) guards the margin
+      TextClassifier.train(labeled, "text", "doc_id", "label",
+        numBuckets = ClsGateBuckets, iterations = 5)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    }.toDF("bucket", "w_micro")
+  }
+
+  /** One stage per kind in `kinds` (see [[ComposedChain]]), each with the
+    * base state it needs: substring windows and near-dup signatures on the
+    * ≡2 mod 4 doc quarter, IVF on the matching embedding quarter, the
+    * quality classifier. They are independent, so they build on concurrent
     * futures (Spark actions are thread-safe; local[32] has slack) to keep
     * the whole fixture + one composed execution inside the smoke gate's
     * 20 s single-shot bound. One Lloyd round: the contracts compare the
     * stream against a reference sharing the SAME frozen centroids, so
     * centroid quality is not under test here (the recall contracts are).
-    * Value: the frozen centroids, once all three indexes are written.
     */
   private def writeComposedBaseIndexes(
-      s: SparkSession, d: String, substrIdx: String, textIdx: String,
-      annIdx: String): Future[Seq[Seq[Float]]] = {
+      s: SparkSession, d: String, kinds: Seq[String]): Seq[ComposedGate.Stage] = {
+    import ComposedGate.Stage._
     val baseDocs = gateIndexBase(tb(s, d, "documents"))
     val baseEmb = gateEmbBase(tb(s, d, "embeddings"))
-    val fSub = Future(VersionedSubstring.write(
-      baseDocs, "text", "doc_id", substrIdx, n = SubstrGateN))
-    val fText = Future(VersionedNearDup.write(baseDocs, "text", "doc_id",
-      textIdx, GateShingle, GateNumer, GateDenom, GateBands, GateRows))
-    val fAnn = Future {
-      val c = Similarity.trainIvfCentroids(baseEmb, "embedding", "vec_id",
-        k = 8, iterations = 1)
-      VersionedIvf.write(baseEmb, "embedding", "vec_id", c, annIdx)
-      c
+    def dir(prefix: String): String = Fixtures.dir(prefix).toString
+    val built = kinds.map {
+      case "quality" =>
+        Future(Quality(composedModel(s, d), ClsGateBuckets, dir("cmpq")))
+      case "substring" =>
+        val st = Substring(dir("cmps"), dir("cmpcl"))
+        Future { VersionedSubstring.write(baseDocs, "text", "doc_id", st.indexPath,
+          n = SubstrGateN); st }
+      case "neardup" =>
+        val st = NearDup(dir("cmpt"), dir("cmptk"))
+        Future { VersionedNearDup.write(baseDocs, "text", "doc_id", st.indexPath,
+          GateShingle, GateNumer, GateDenom, GateBands, GateRows); st }
+      case "semantic" =>
+        val st = Semantic(dir("cmpa"), dir("cmpk"), SemGateTau, SemGateNprobe)
+        Future {
+          VersionedIvf.write(baseEmb, "embedding", "vec_id",
+            Similarity.trainIvfCentroids(baseEmb, "embedding", "vec_id",
+              k = 8, iterations = 1), st.indexPath)
+          st
+        }
     }
-    for (_ <- fSub; _ <- fText; c <- fAnn) yield c
+    built.map(Await.result(_, Duration.Inf))
   }
 
-  /** The stacked THREE-stage sequential reference (substring manifest fold
-    * → [[textGateStep]] → [[semanticGateStep]]) — pure batch ops, no
-    * index/stream machinery, base state from the ≡2 mod 4 corpus. Shared
-    * by d_composed3_gate_contract and the 4-stage contract (which feeds it
-    * quality-filtered batches).
+  /** The composed gate over `kinds`, built once per sf dir: each stage's
+    * base state from [[writeComposedBaseIndexes]], then arrival batches
+    * 0 until `batches` streamed through [[streaming.ComposedGate.stream]]
+    * (ONE foreachBatch, one checkpoint). Deliberately no further composed
+    * executions: the smoke gate's 20 s bound prices every one, so the
+    * replay probe lives in the contract and the bench face replays the
+    * last streamed batch itself. Cross-batch composition of the longer
+    * chains is pinned by ComposedGateSpec's planted two-batch cases.
+    * Value: the stages, whose dirs hold the streamed outputs.
     */
-  def composed3ReferenceKept(
-      s: SparkSession, d: String, batches: Seq[DataFrame],
-      cents: Seq[Seq[Float]]): DataFrame = {
+  def composedFixture(s: SparkSession, d: String, kinds: Seq[String],
+      batches: Int): Seq[ComposedGate.Stage] =
+    Fixtures.memo(s"composedGate:${kinds.mkString(",")}:$batches", d) {
+      val stages = writeComposedBaseIndexes(s, d, kinds)
+      val arrivals = composedArrivals(s, d, kinds.contains("quality"))
+      val landing = Fixtures.dir("cmpl")
+      (0 until batches).foreach(k => landBatch(gateSubBatch(arrivals, k), landing, k))
+      ComposedGate.stream(
+        s.readStream.schema(arrivals.schema).option("maxFilesPerTrigger", 1)
+          .parquet(landing.toString),
+        "text", "embedding", "doc_id", stages, Fixtures.dir("cmpc").toString)
+        .awaitTermination()
+      stages
+    }
+
+  /** Content hashes of a composed gate's output tables: every stage's kept
+    * (or cleaned) table in stage order, then every index view in stage
+    * order — the replay-identity currency of the composed contracts, the
+    * Stress receipts and ComposedGateSpec.
+    */
+  private[graft] def composedOutputsHash(
+      s: SparkSession, stages: Seq[ComposedGate.Stage]): Seq[(Long, Long)] = {
+    import ComposedGate.Stage._
+    // a replay rewrites the batch's own partitions BETWEEN two hashes of the
+    // same path — drop the session's cached file listings first, or the
+    // second read can chase the pre-replay part files. Index views need no
+    // refresh: they list committed dirs per call
+    val outs = stages.map { st =>
+      s.catalog.refreshByPath(st.outDir)
+      s.read.parquet(st.outDir)
+    }
+    val views = stages.collect {
+      case Substring(idx, _) => VersionedSubstring.manifest(s, idx)
+      case NearDup(idx, _) => VersionedNearDup.liveManifest(s, idx)
+      case Semantic(idx, _, _, _) => VersionedIvf.corpusView(s, idx)
+    }
+    (outs ++ views).map(df => contentHash(df, df.columns.toSeq))
+  }
+
+  /** The sequential reference of a composed gate: each of `batches` through
+    * one pure-batch step per stage, stacked in stage order, with no index
+    * or stream machinery and base state from the ≡2 mod 4 corpus — the
+    * same-model quality filter, the substring manifest fold,
+    * [[textGateStep]] and [[semanticGateStep]] over the Semantic index's
+    * frozen centroids. Value: the final kept doc ids.
+    */
+  def composedReferenceKept(s: SparkSession, d: String,
+      stages: Seq[ComposedGate.Stage], batches: Seq[DataFrame]): DataFrame = {
     import s.implicits._
+    import ComposedGate.Stage._
+    def cp(df: DataFrame): DataFrame = graft.CacheScope.localCheckpoint(df)
     val baseDocs = gateIndexBase(tb(s, d, "documents"))
-    val start = (
-      graft.CacheScope.localCheckpoint(
-        Dedup.substringWindowManifest(baseDocs, "text", "doc_id", SubstrGateN)),
-      graft.CacheScope.localCheckpoint(gateManifest(baseDocs)),
-      graft.CacheScope.localCheckpoint(
-        gateEmbBase(tb(s, d, "embeddings")).toDF("doc_id", "embedding")),
-      s.emptyDataset[Long].toDF("doc_id"))
-    batches.foldLeft(start) { case ((subMan, man, corpus, acc), bk) =>
-      // stage 0 reference: the batch-incremental substring face (pure
-      // batch ops) — cleaned text, fully-duplicated docs dropped,
-      // manifest grown by the batch's ORIGINAL windows
-      val spans = Dedup.substringSpansAgainstManifest(
-        bk, subMan, "text", "doc_id", SubstrGateN)
-      val cleaned = graft.CacheScope.localCheckpoint(
-        Dedup.applyRemovedSpans(bk, spans, "text", "doc_id")
-          .select(col("doc").as("doc_id"), col("cleaned_text").as("text"))
-          .join(bk.select(col("doc_id"), col("embedding")), Seq("doc_id")))
-      val (keptT, grownMan) = textGateStep(cleaned, man)
-      val (keptS, grownCorpus) = semanticGateStep(keptT, corpus, "doc_id", cents)
-      (graft.CacheScope.localCheckpoint(subMan.unionByName(
-        Dedup.substringWindowManifest(bk, "text", "doc_id", SubstrGateN))
-        .distinct()),
-        grownMan, grownCorpus, acc.union(keptS.select(col("doc_id"))))
-    }._4
+    val start: Seq[DataFrame] = stages.map {
+      case _: Quality => s.emptyDataFrame
+      case _: Substring =>
+        cp(Dedup.substringWindowManifest(baseDocs, "text", "doc_id", SubstrGateN))
+      case _: NearDup => cp(gateManifest(baseDocs))
+      case _: Semantic => cp(gateEmbBase(tb(s, d, "embeddings")).toDF("doc_id", "embedding"))
+    }
+    // one (kept, grown state) step of stage `st` over its input `in`
+    def step(st: ComposedGate.Stage, in: DataFrame, state: DataFrame): (DataFrame, DataFrame) =
+      st match {
+        case Quality(model, buckets, _) => (cp(in.join(
+          TextClassifier.scoreDocs(in, "text", "doc_id", model, buckets)
+            .filter(col("quality") === 1L).select(col("doc").as("doc_id")),
+          Seq("doc_id"))), state)
+        case _: Substring =>
+          // cleaned text, fully-duplicated docs dropped, manifest grown by
+          // the input's ORIGINAL windows
+          val spans = Dedup.substringSpansAgainstManifest(
+            in, state, "text", "doc_id", SubstrGateN)
+          (cp(Dedup.applyRemovedSpans(in, spans, "text", "doc_id")
+            .select(col("doc").as("doc_id"), col("cleaned_text").as("text"))
+            .join(in.select(col("doc_id"), col("embedding")), Seq("doc_id"))),
+            cp(state.unionByName(
+              Dedup.substringWindowManifest(in, "text", "doc_id", SubstrGateN)).distinct()))
+        case _: NearDup => textGateStep(in, state)
+        case Semantic(idx, _, _, _) =>
+          semanticGateStep(in, state, "doc_id", VersionedIvf.frozenCentroids(s, idx)._2)
+      }
+    batches.foldLeft((start, s.emptyDataset[Long].toDF("doc_id"))) { case ((states, acc), bk) =>
+      val (kept, grown) = stages.zip(states).foldLeft((bk, Seq.empty[DataFrame])) {
+        case ((in, done), (st, state)) =>
+          val (k, g) = step(st, in, state)
+          (k, done :+ g)
+      }
+      (grown, acc.union(kept.select(col("doc_id"))))
+    }._2
   }
 
   /** The text gate's signature manifest at the gate's LSH shape. */
@@ -431,98 +511,6 @@ private[graft] object QueryFixtures {
     pos.withColumn("label", lit(1L)).unionByName(
       pos.select((col("doc_id") + lit(offset)).as("doc_id"),
         junkText(col("doc_id")).as("text"), lit(0L).as("label")))
-  }
-
-  val ClsGateBuckets = 1 << 12
-
-  /** Arrivals for the FOUR-stage gate: [[composedArrivals]] with a planted
-    * low-quality slice — every ≡4 mod 16 doc's text replaced by junk
-    * vocabulary the classifier was trained to reject (stage -1 must drop
-    * exactly these before the text/semantic stages ever see them).
-    */
-  def composed4Arrivals(s: SparkSession, d: String): DataFrame =
-    composedArrivals(s, d).withColumn("text",
-      when(pmod(col("doc_id"), lit(16)) === 4, junkText(col("doc_id")))
-        .otherwise(col("text")))
-
-  /** Train the gate's quality classifier once per sf dir: base-corpus text
-    * as the reference class vs junk-vocabulary docs, integer-exact LR.
-    */
-  def composed4Model(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    Fixtures.memo("composed4Model", d) {
-      val labeled = junkLabeled(gateIndexBase(tb(s, d, "documents")), 2000000L)
-      // 5 iterations: the classes have DISJOINT vocabularies, so the sign
-      // structure converges in the first couple of passes — the contract's
-      // non-vacuity probe (planted junk must be dropped) guards the margin
-      TextClassifier.train(labeled, "text", "doc_id", "label",
-        numBuckets = ClsGateBuckets, iterations = 5)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    }.toDF("bucket", "w_micro")
-  }
-
-  /** Build the FOUR-stage gate fixture once per sf dir: the composed3
-    * indexes plus the trained classifier, batch 0 of the junk-planted
-    * arrivals driven through [[streaming.ComposedGate.stream4]] (ONE
-    * foreachBatch, one checkpoint, quality ledger + the six downstream
-    * tables).
-    */
-  def buildComposed4GateFixture(
-      s: SparkSession, d: String)
-      : (String, String, String, String, String, String, String, Seq[Seq[Float]]) = {
-    val arrivals = composed4Arrivals(s, d)
-    val dirs = Seq("c4s", "c4t", "c4a", "c4q", "c4cl", "c4tk", "c4k", "c4l", "c4c")
-      .map(Fixtures.dir)
-    val Seq(substrIdx, textIdx, annIdx, qualityKept, cleanDir, textKept,
-      kept, landing, ckpt) = dirs
-    val indexes = writeComposedBaseIndexes(
-      s, d, substrIdx.toString, textIdx.toString, annIdx.toString)
-    val model = composed4Model(s, d) // trains while the indexes build
-    val cents = Await.result(indexes, Duration.Inf)
-    landBatch(gateSubBatch(arrivals, 0), landing, 0)
-    graft.streaming.ComposedGate.stream4(
-      s.readStream.schema(arrivals.schema).option("maxFilesPerTrigger", 1)
-        .parquet(landing.toString),
-      "text", "embedding", "doc_id", model, ClsGateBuckets,
-      substrIdx.toString, textIdx.toString, annIdx.toString,
-      qualityKept.toString, cleanDir.toString, textKept.toString,
-      kept.toString, ckpt.toString, SemGateTau, SemGateNprobe)
-      .awaitTermination()
-    (substrIdx.toString, textIdx.toString, annIdx.toString,
-      qualityKept.toString, cleanDir.toString, textKept.toString,
-      kept.toString, cents)
-  }
-
-  /** Content hashes of the four-stage composition's SEVEN output tables —
-    * the replay-identity currency of d_composed4_gate_contract.
-    */
-  def composed4OutputsHash(
-      s: SparkSession, substrIdx: String, textIdx: String, annIdx: String,
-      qualityKept: String, cleanDir: String, textKept: String,
-      kept: String): Seq[(Long, Long)] = {
-    Seq(qualityKept).foreach(s.catalog.refreshByPath)
-    contentHash(s.read.parquet(qualityKept),
-      Seq("doc_id", "ingest_batch")) +:
-      composed3OutputsHash(s, substrIdx, textIdx, annIdx, cleanDir, textKept, kept)
-  }
-
-  /** Content hashes of the three-stage composition's six output tables —
-    * the replay-identity currency of d_composed3_gate_contract.
-    */
-  def composed3OutputsHash(
-      s: SparkSession, substrIdx: String, textIdx: String, annIdx: String,
-      cleanDir: String, textKept: String, kept: String): Seq[(Long, Long)] = {
-    // the replay probe rewrites the batch's own kept/clean partitions
-    // BETWEEN two hashes of the same path — drop the session's cached file
-    // listings first, or the second read can chase the pre-replay part
-    // files. Index state needs no refresh: replays skip index appends via
-    // the segment markers, and the views list committed dirs per call
-    Seq(cleanDir, textKept, kept).foreach(s.catalog.refreshByPath)
-    contentHash(s.read.parquet(cleanDir),
-      Seq("doc", "cleaned_text", "ingest_batch")) +:
-      contentHash(VersionedSubstring.manifest(s, substrIdx),
-        Seq("h1", "h2")) +:
-      composedOutputsHash(s, textIdx, annIdx, textKept, kept)
   }
 
   /** Build the streaming near-dup gate fixture once per sf dir:
@@ -687,67 +675,6 @@ private[graft] object QueryFixtures {
     VersionedIvf.append(half2, "embedding", "vec_id", dir.toString)
     VersionedIvf.retrain(s, dir.toString, k = Some(8))
     dir.toString
-  }
-
-  /** Arrival rows for the composed gate: the ≡0 mod 4 quarter with text
-    * AND embedding (documents ⋈ embeddings share the 0..n-1 id space).
-    */
-  def composedArrivals(s: SparkSession, d: String): DataFrame = {
-    val docs = tb(s, d, "documents")
-    val embs = tb(s, d, "embeddings")
-    docs.join(embs, docs("doc_id") === embs("vec_id"))
-      .select(docs("doc_id"), col("text"), col("embedding"))
-      .filter(pmod(col("doc_id"), lit(4)) === 0)
-  }
-
-  /** Content hashes of the composed gate's four output tables — the
-    * replay-identity currency shared by the contract query and the Stress
-    * receipt.
-    */
-  private[graft] def composedOutputsHash(
-      s: SparkSession, textIdx: String, annIdx: String,
-      textKept: String, kept: String): Seq[(Long, Long)] = Seq(
-    contentHash(s.read.parquet(textKept), Seq("doc_id", "text", "ingest_batch")),
-    contentHash(s.read.parquet(kept), Seq("doc_id", "ingest_batch")),
-    contentHash(VersionedIvf.corpusView(s, annIdx),
-      Seq("vec_id", "cluster", "ingest_batch")),
-    contentHash(VersionedNearDup.liveManifest(s, textIdx),
-      Seq("doc", "keys", "shh")))
-
-  /** Build the composed text→semantic gate fixture once per sf dir: both
-    * indexes on the ≡2 mod 4 quarter, arrival batches 0-1 streamed through
-    * [[streaming.ComposedGate.stream]] (ONE foreachBatch, one checkpoint).
-    * Deliberately NO further composed executions here — the smoke gate's
-    * 20 s bound must hold with the whole build billed to one query, so the
-    * replay probe lives in the contract query and the bench face replays
-    * batch 1 itself. Value: (textIdx, annIdx, textKept, kept, frozen
-    * centroids).
-    */
-  def buildComposedGateFixture(
-      s: SparkSession, d: String)
-      : (String, String, String, String, Seq[Seq[Float]]) = {
-    val baseDocs = gateIndexBase(tb(s, d, "documents"))
-    val baseEmb = gateEmbBase(tb(s, d, "embeddings"))
-    val arrivals = composedArrivals(s, d)
-    val textIdx = Fixtures.dir("cmpt")
-    val annIdx = Fixtures.dir("cmpa")
-    val textKept = Fixtures.dir("cmptk")
-    val kept = Fixtures.dir("cmpk")
-    val landing = Fixtures.dir("cmpl")
-    val ckpt = Fixtures.dir("cmpc")
-    VersionedNearDup.write(baseDocs, "text", "doc_id", textIdx.toString,
-      GateShingle, GateNumer, GateDenom, GateBands, GateRows)
-    val cents = Similarity.trainIvfCentroids(baseEmb, "embedding", "vec_id", k = 8)
-    VersionedIvf.write(baseEmb, "embedding", "vec_id", cents, annIdx.toString)
-    (0 to 1).foreach(k => landBatch(gateSubBatch(arrivals, k), landing, k))
-    graft.streaming.ComposedGate.stream(
-      s.readStream.schema(arrivals.schema).option("maxFilesPerTrigger", 1)
-        .parquet(landing.toString),
-      "text", "embedding", "doc_id", textIdx.toString, annIdx.toString,
-      textKept.toString, kept.toString, ckpt.toString,
-      SemGateTau, SemGateNprobe)
-      .awaitTermination()
-    (textIdx.toString, annIdx.toString, textKept.toString, kept.toString, cents)
   }
 
   /** The persisted full-corpus IVF index (s_knn_indexed / s_hybrid_indexed). */

@@ -29,7 +29,7 @@ class CacheLifecycleSpec extends AnyFunSuite with SparkTestBase {
     */
   private def cacheManagerEmpty: Boolean = CacheScope.cacheManagerEmpty(spark)
 
-  test("withScope frees persistReuse frames: no net growth over 100 invocations") {
+  test("withScope frees CacheScope.persist frames: no net growth over 100 invocations") {
     spark.catalog.clearCache()
     val d = docs
     val before = persistentRddCount

@@ -84,7 +84,7 @@ class EntryInventorySpec extends AnyFunSuite {
     assert(e.getMessage.contains("no_such_query, q1_agg_typo"), e.getMessage)
     // Verify resolves its name arguments the same way, before any session
     // starts or any output is written
-    val out = java.nio.file.Files.createTempDirectory("verify-names")
+    val out = graft.Fixtures.dir("verify-names")
     try {
       intercept[IllegalArgumentException](
         Verify.main(Array("/nonexistent-sf", out.resolve("o").toString, "q1_agg", "q1_agg_typo")))

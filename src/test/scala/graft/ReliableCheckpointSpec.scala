@@ -21,7 +21,7 @@ class ReliableCheckpointSpec extends AnyFunSuite with SparkTestBase {
   import spark.implicits._
 
   private def withReliable[T](body: => T): T = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-reliable-cp").toString
+    val dir = graft.Fixtures.dir("graft-reliable-cp").toString
     val hadCpDir = spark.sparkContext.getCheckpointDir
     spark.sparkContext.setCheckpointDir(dir)
     spark.conf.set(CacheScope.ReliableCheckpointKey, "true")
@@ -79,7 +79,7 @@ class ReliableCheckpointSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("reliable mode actually writes checkpoint files (flag is honored)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-reliable-probe").toString
+    val dir = graft.Fixtures.dir("graft-reliable-probe").toString
     val hadCpDir = spark.sparkContext.getCheckpointDir
     spark.sparkContext.setCheckpointDir(dir)
     spark.conf.set(CacheScope.ReliableCheckpointKey, "true")

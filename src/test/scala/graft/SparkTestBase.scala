@@ -7,6 +7,11 @@ import org.apache.spark.sql.SparkSession
   */
 trait SparkTestBase {
   lazy val spark: SparkSession = SparkTestBase.session
+
+  /** A fresh scratch dir under the per-JVM [[Fixtures]] root, which is
+    * deleted with everything under it when the test JVM exits.
+    */
+  def tmpDir(prefix: String): String = Fixtures.dir(prefix).toString
 }
 
 object SparkTestBase {

@@ -44,7 +44,7 @@ class ApiSourceSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("file transport: URL-derived cache names round-trip") {
-    val dir = java.nio.file.Files.createTempDirectory("apicache")
+    val dir = graft.Fixtures.dir("apicache")
     val url = "https://api.example.org/rest/surveys?f=json&perPage=100"
     val name = ApiSource.cacheFileName(url)
     assert(name == "api.example.org_rest_surveys_f_json_perPage_100.json")

@@ -29,7 +29,7 @@ class CharsetAndSpecWriterSpec extends AnyFunSuite with SparkTestBase {
 
   test("CSV readWithFallback detects cp1252 by sniffing, not by catch") {
     // Spark never throws on bad UTF-8, so only detection can catch this
-    val dir = java.nio.file.Files.createTempDirectory("cp1252csv")
+    val dir = graft.Fixtures.dir("cp1252csv")
     val f = dir.resolve("data.csv")
     java.nio.file.Files.write(f, "name\ncafé-résumé\n".getBytes("windows-1252"))
     val df = graft.load.CsvIO.readWithFallback(spark, f.toString)
@@ -45,7 +45,7 @@ class CharsetAndSpecWriterSpec extends AnyFunSuite with SparkTestBase {
     // without an explicit lineSep Spark splits on raw 0x0A bytes, which
     // misaligns 2-/4-byte code units (every line after the first starts with
     // a stray NUL under UTF-16LE) — these files must decode cleanly
-    val dir = java.nio.file.Files.createTempDirectory("utf16csv")
+    val dir = graft.Fixtures.dir("utf16csv")
     for ((enc, fname) <- Seq(("UTF-16LE", "u16le.csv"), ("UTF-16BE", "u16be.csv"),
                              ("UTF-32LE", "u32le.csv"), ("UTF-32BE", "u32be.csv"))) {
       val f = dir.resolve(fname)
@@ -65,7 +65,7 @@ class CharsetAndSpecWriterSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("UTF-16 CSV edge shapes: CRLF endings, headerless BOM, generic charset refused") {
-    val dir = java.nio.file.Files.createTempDirectory("utf16edge")
+    val dir = graft.Fixtures.dir("utf16edge")
     val bomLE = Array(0xFF, 0xFE).map(_.toByte)
     // Windows-origin CRLF: explicit lineSep splits at \n, the stray \r on
     // the last field must be stripped
@@ -139,7 +139,7 @@ class CharsetAndSpecWriterSpec extends AnyFunSuite with SparkTestBase {
     assert(rel.getAs[String]("SecondaryLink") == "HVIDX")
 
     // CSV round trip preserves the contract
-    val tmp = java.nio.file.Files.createTempDirectory("specs").toString
+    val tmp = graft.Fixtures.dir("specs").toString
     SpecWriter.writeAll(spark, r, "BJHR71", tmp)
     val back = graft.load.CsvIO.readAllString(spark, s"$tmp/BJHR71.FlatRecordSpec")
     assert(back.columns.toSeq == SpecWriter.RecordSpecCols)

@@ -53,7 +53,7 @@ class DatReaderSpec extends AnyFunSuite with SparkTestBase {
     // charsets only. UTF-16's '\n' is 0A 00, so every split would land
     // mid-character and decode to garbage SILENTLY; the reader must refuse
     // and point at the fixedwidth DSv2 source instead.
-    val dir = java.nio.file.Files.createTempDirectory("datmb")
+    val dir = graft.Fixtures.dir("datmb")
     val f = dir.resolve("x.DAT")
     java.nio.file.Files.write(f, "       1   9   H00BJ7\n".getBytes("UTF-16LE"))
     val e = intercept[IllegalArgumentException] {
@@ -71,7 +71,7 @@ class DatReaderSpec extends AnyFunSuite with SparkTestBase {
     // IBM037 is single-byte (passes the width guard) but encodes '\n' as
     // 0x25 — raw-0x0A splitting would chop records mid-byte-stream
     // silently. The reader must probe the newline byte and refuse.
-    val dir = java.nio.file.Files.createTempDirectory("datebcdic")
+    val dir = graft.Fixtures.dir("datebcdic")
     val f = dir.resolve("x.DAT")
     java.nio.file.Files.write(f, "       1   9   H00BJ7\n".getBytes("IBM037"))
     val e = intercept[IllegalArgumentException] {
@@ -138,7 +138,7 @@ class DatReaderSpec extends AnyFunSuite with SparkTestBase {
     // field i of row r holds (7r + i) % 100 right-aligned in 2 characters
     val value = (r: Int, i: Int) => (7 * r + i) % 100
     val rows = 0 until 20
-    val dir = java.nio.file.Files.createTempDirectory("datwide")
+    val dir = graft.Fixtures.dir("datwide")
     val dat = dir.resolve("wide.DAT")
     java.nio.file.Files.writeString(dat, rows.map { r =>
       f"$r%12d" + "   HCS" + items.indices.map(i => f"${value(r, i)}%2d").mkString + "\n"

@@ -33,7 +33,7 @@ class DcfSourceSpec extends AnyFunSuite with SparkTestBase {
        |""".stripMargin
 
   test("parseFiles: one task per file, executor-side parse, fileCode from name") {
-    val dir = Files.createTempDirectory("dcfs")
+    val dir = graft.Fixtures.dir("dcfs")
     Files.writeString(dir.resolve("511.BJHR71.DCF"), dcf(3))
     Files.writeString(dir.resolve("522.TDHR61.DCF"), dcf(6))
     val parsed = DcfSource.parseFiles(spark, s"$dir/*.DCF")
@@ -69,7 +69,7 @@ class DcfSourceSpec extends AnyFunSuite with SparkTestBase {
         |Secondary=RECH1
         |SecondaryLink=HVIDX
         |""".stripMargin
-    val dir = Files.createTempDirectory("dcfs_vr")
+    val dir = graft.Fixtures.dir("dcfs_vr")
     Files.writeString(dir.resolve("511.BJHR71.DCF"), withExtras)
     Files.writeString(dir.resolve("522.TDHR61.DCF"), dcf(6))
     val parsed = DcfSource.parseFiles(spark, s"$dir/*.DCF")
@@ -86,7 +86,7 @@ class DcfSourceSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("schema merge over distributed parse: max width wins across surveys") {
-    val dir = Files.createTempDirectory("dcfs2")
+    val dir = graft.Fixtures.dir("dcfs2")
     Files.writeString(dir.resolve("511.BJHR71.DCF"), dcf(3))
     Files.writeString(dir.resolve("522.TDHR61.DCF"), dcf(6))
     val items = DcfSource.allItems(DcfSource.parseFiles(spark, s"$dir/*.DCF"))
@@ -97,7 +97,7 @@ class DcfSourceSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("UTF-8 BOM is stripped: [Dictionary] header still recognized") {
-    val dir = Files.createTempDirectory("dcfs_bom")
+    val dir = graft.Fixtures.dir("dcfs_bom")
     val bom = Array(0xEF, 0xBB, 0xBF).map(_.toByte)
     Files.write(dir.resolve("544.GHHR82.DCF"), bom ++ dcf(3).getBytes("UTF-8"))
     val parsed = DcfSource.parseFiles(spark, s"$dir/*.DCF").collect().head
@@ -108,7 +108,7 @@ class DcfSourceSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("non-UTF-8 DCF is sniffed and decoded (cp1252 é in a label)") {
-    val dir = Files.createTempDirectory("dcfs3")
+    val dir = graft.Fixtures.dir("dcfs3")
     val content = dcf(3, label = "Numéro de grappe")
     Files.write(dir.resolve("533.SNHR81.DCF"), content.getBytes("windows-1252"))
     // the cp1252 é (0xE9) is malformed UTF-8, so an unsniffed read would mangle it
@@ -129,7 +129,7 @@ class DcfSourceSpec extends AnyFunSuite with SparkTestBase {
       "     100   7   H01 1 ",
       "     100   7   H01 2 ",
       "     100   7   X99junk").toDF("value")
-    val out = Files.createTempDirectory("routed").toString
+    val out = graft.Fixtures.dir("routed").toString
     DatReader.routeToStorage(lines, specs, out)
 
     val dirs = new java.io.File(out).listFiles().filter(_.isDirectory).map(_.getName).sorted

@@ -76,7 +76,7 @@ class PipelineSpec extends AnyFunSuite with SparkTestBase {
     assert(rows.map(_.getAs[String]("hhid")).toSet == Set("     100   7", "     100   8"))
     assert(rows.map(_.getAs[String]("hv001")).toSeq == Seq("42", "7")) // trimmed, string sort
 
-    val tmp = java.nio.file.Files.createTempDirectory("pipe").toString
+    val tmp = graft.Fixtures.dir("pipe").toString
     CsvIO.writeRecordTables(tables, s"$tmp/tables")
     val back = CsvIO.readAllString(spark, s"$tmp/tables/RECH0")
     // all columns read back as strings, no sniffed ints
@@ -94,7 +94,7 @@ class PipelineSpec extends AnyFunSuite with SparkTestBase {
     // the Spark-managed-storage analog of the reference's ALTER ADD COLUMN:
     // each survey writes its own column set; the warehouse read is the
     // union of columns with nulls where a survey lacks one
-    val tmp = java.nio.file.Files.createTempDirectory("wh").toString
+    val tmp = graft.Fixtures.dir("wh").toString
     Seq(("  1 0 10    ", "BJ7", "511")).toDF("hhid", "hv000", "surveyid")
       .write.parquet(s"$tmp/rech0/sv=511")
     Seq(("  2 0 20    ", "42", "522")).toDF("hhid", "hv001", "surveyid")

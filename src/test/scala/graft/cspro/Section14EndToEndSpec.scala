@@ -141,7 +141,7 @@ class Section14EndToEndSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("traps 1-8 hold through one multi-record multi-survey zip->parse->read->catalog->load pass") {
-    val root = java.nio.file.Files.createTempDirectory("sec14").toString
+    val root = graft.Fixtures.dir("sec14").toString
     val ascii = java.nio.charset.StandardCharsets.US_ASCII
     val cp1252 = java.nio.charset.Charset.forName("windows-1252")
 

@@ -58,7 +58,7 @@ class WarehouseSpec extends AnyFunSuite with SparkTestBase {
 
   test("range-layout write produces files with disjoint key ranges") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("rangelayout").toString + "/t"
+    val dir = graft.Fixtures.dir("rangelayout").toString + "/t"
     // shuffled insert order — the layout, not the input order, must sort it
     val df = scala.util.Random.shuffle((1 to 2000).toList)
       .map(i => (i.toLong, s"payload$i")).toDF("k", "v")
@@ -144,9 +144,9 @@ class WarehouseSpec extends AnyFunSuite with SparkTestBase {
 
   test("compactSmallFiles bin-packs debris without content loss; sorted variant restores disjoint ranges") {
     import org.apache.spark.sql.functions.{min, max, input_file_name}
-    val in = java.nio.file.Files.createTempDirectory("cmp_in").toString + "/t"
-    val out = java.nio.file.Files.createTempDirectory("cmp_out").toString + "/t"
-    val outSorted = java.nio.file.Files.createTempDirectory("cmp_outs").toString + "/t"
+    val in = graft.Fixtures.dir("cmp_in").toString + "/t"
+    val out = graft.Fixtures.dir("cmp_out").toString + "/t"
+    val outSorted = graft.Fixtures.dir("cmp_outs").toString + "/t"
     val df = scala.util.Random.shuffle((1 to 5000).toList)
       .map(i => (i.toLong, s"payload-$i")).toDF("k", "v")
     df.repartition(40).write.parquet(in) // ingest debris: 40 tiny files
@@ -177,7 +177,7 @@ class WarehouseSpec extends AnyFunSuite with SparkTestBase {
 
   test("stats manifest plans a pruned scan: non-overlapping files never opened, result exact") {
     import org.apache.spark.sql.functions.col
-    val dir = java.nio.file.Files.createTempDirectory("statsprune").toString + "/t"
+    val dir = graft.Fixtures.dir("statsprune").toString + "/t"
     val df = scala.util.Random.shuffle((0 until 4000).toList)
       .map(i => (i.toLong, i % 7)).toDF("k", "grp")
     Warehouse.writeRangeLayout(df, dir, Seq("k"), partitions = 8)
@@ -212,7 +212,7 @@ class WarehouseSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("snapshots: reader isolation, immutability, crash-safety, vacuum") {
-    val root = java.nio.file.Files.createTempDirectory("snap").toString + "/t"
+    val root = graft.Fixtures.dir("snap").toString + "/t"
     val v1 = (1 to 100).map(i => (i.toLong, s"v1-$i")).toDF("k", "v")
     val v2 = (1 to 100).map(i => (i.toLong, s"v2-$i")).toDF("k", "v")
     Warehouse.commitSnapshot(v1, root, 1)
@@ -246,8 +246,8 @@ class WarehouseSpec extends AnyFunSuite with SparkTestBase {
     val grid = scala.util.Random.shuffle(
       (for (x <- 0 until 64; y <- 0 until 64) yield (x.toLong, y.toLong)).toList)
       .toDF("x", "y")
-    val zDir = java.nio.file.Files.createTempDirectory("zorder").toString + "/t"
-    val linDir = java.nio.file.Files.createTempDirectory("linear").toString + "/t"
+    val zDir = graft.Fixtures.dir("zorder").toString + "/t"
+    val linDir = graft.Fixtures.dir("linear").toString + "/t"
     Warehouse.writeZOrderLayout(grid, zDir, Seq("x", "y"), partitions = 16, bitsPerDim = 6)
     Warehouse.writeRangeLayout(grid, linDir, Seq("x"), partitions = 16)
 
@@ -486,7 +486,7 @@ class WarehouseSpec extends AnyFunSuite with SparkTestBase {
 
   test("overwritePartitionsDynamic replaces only the written partitions") {
     import org.apache.spark.sql.functions.col
-    val dir = java.nio.file.Files.createTempDirectory("dynow").toString
+    val dir = graft.Fixtures.dir("dynow").toString
     (1 to 300).map(i => (i.toLong, s"p${i % 3}", i * 1.0))
       .toDF("id", "part", "v")
       .write.partitionBy("part").mode("overwrite").parquet(dir)

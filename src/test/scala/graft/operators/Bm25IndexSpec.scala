@@ -44,12 +44,6 @@ object NoDirRenameFileSystem {
 class Bm25IndexSpec extends AnyFunSuite with SparkTestBase {
   import spark.implicits._
 
-  private def tmpDir(prefix: String): String = {
-    val d = java.nio.file.Files.createTempDirectory(prefix)
-    d.toFile.deleteOnExit()
-    d.toString
-  }
-
   // a small deterministic corpus with shared and rare vocabulary: doc i
   // repeats token "t<i mod 7>" i mod 3 + 1 times plus common filler, so
   // tf, df and dl all vary
@@ -200,6 +194,23 @@ class Bm25IndexSpec extends AnyFunSuite with SparkTestBase {
     assert(health(idx)._2 === 1L)
     assert(SegmentLog.streamBatchCommitted(spark,
       GenerationLog.requireCurrentDir(spark, idx), 0L))
+  }
+
+  test("a build over a corpus with no tokens refuses and commits no generation") {
+    val empty = Seq((900L, ""), (901L, " ")).toDF("doc_id", "text")
+    val idx = tmpDir("bm25nobuild")
+    val e = intercept[IllegalStateException](
+      SparseSim.writeBm25Index(empty, "text", "doc_id", idx, numBuckets = 8))
+    assert(e.getMessage.contains("no tokens"))
+    assert(GenerationLog.committedGenerations(spark, idx).isEmpty)
+    // over a built root the refused rebuild leaves the current generation serving
+    SparseSim.writeBm25Index(corpus, "text", "doc_id", idx, numBuckets = 8)
+    val gens = GenerationLog.committedGenerations(spark, idx)
+    intercept[IllegalStateException](
+      SparseSim.writeBm25Index(empty, "text", "doc_id", idx, numBuckets = 8))
+    assert(GenerationLog.committedGenerations(spark, idx) === gens)
+    assert(probe(idx) === bruteRef(corpus))
+    assert(health(idx) === ((1L, 0L, 0L, 0L)))
   }
 
   test("consolidation merges the generation into one fresh base ≡ a from-scratch full build") {

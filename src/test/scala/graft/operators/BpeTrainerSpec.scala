@@ -204,7 +204,7 @@ class BpeTrainerSpec extends AnyFunSuite with SparkTestBase {
     val trained = BpeTrainer.trainFast(docs, "text", numMerges = 6)
     val inMemory = trained.orderBy("rank").collect()
       .map(r => (r.getString(1), r.getString(2))).toSeq
-    val dir = java.nio.file.Files.createTempDirectory("bpemodel")
+    val dir = graft.Fixtures.dir("bpemodel")
     dir.toFile.deleteOnExit()
     BpeTrainer.writeModel(trained, dir.toString)
     val loaded = BpeTrainer.readModel(spark, dir.toString)

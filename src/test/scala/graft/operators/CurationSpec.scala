@@ -371,7 +371,7 @@ class CurationSpec extends AnyFunSuite with SparkTestBase {
       assert(pos.last - pos.head + 1 == pos.length, s"shard $k not contiguous")
     }
     // the writer materializes one dir per shard with the full corpus
-    val dir = java.nio.file.Files.createTempDirectory("shards").toString
+    val dir = graft.Fixtures.dir("shards").toString
     Curation.writeShards(df, "doc_id", numShards = 4, path = dir, buckets = 8)
     val back = spark.read.parquet(dir)
     assert(back.count() == 103L)

@@ -20,12 +20,6 @@ class GateResilienceSpec extends AnyFunSuite with SparkTestBase {
   private val baseText = "the quick brown fox jumps over the lazy dog again and again today"
   private val otherText = "completely different content about spark catalyst expressions and shuffles here"
 
-  private def tmpDir(prefix: String): String = {
-    val d = java.nio.file.Files.createTempDirectory(prefix)
-    d.toFile.deleteOnExit()
-    d.toString
-  }
-
   private def fsOf(path: String) = new org.apache.hadoop.fs.Path(path)
     .getFileSystem(spark.sparkContext.hadoopConfiguration)
 
@@ -124,7 +118,6 @@ class GateResilienceSpec extends AnyFunSuite with SparkTestBase {
       .unionByName(Seq((99L, axis6)).toDF("vec_id", "embedding"))
     VersionedIvf.write(base, "embedding", "vec_id",
       Similarity.trainIvfCentroids(base, "embedding", "vec_id", k = 2), root)
-    val cents = VersionedIvf.readCentroids(spark, root)
     // arrival 100 ≈ base vec 99 (suppressed by it ALONE); arrival 101 on a
     // fresh axis (kept)
     val near0 = axis6
@@ -133,12 +126,12 @@ class GateResilienceSpec extends AnyFunSuite with SparkTestBase {
     }
     val b0 = Seq((100L, near0), (101L, fresh)).toDF("vec_id", "embedding")
     Similarity.semanticGateBatch(b0, "embedding", "vec_id", root, kept,
-      cents, 0L, threshold = 0.9, nprobe = 2)
+      0L, threshold = 0.9, nprobe = 2)
     assert(spark.read.parquet(kept).select("vec_id").as[Long].collect().toSet === Set(101L))
     // delete the suppressor, then replay batch 0
     VersionedIvf.delete(spark, root, Seq(99L).toDF("vec_id"), "vec_id")
     Similarity.semanticGateBatch(b0, "embedding", "vec_id", root, kept,
-      cents, 0L, threshold = 0.9, nprobe = 2)
+      0L, threshold = 0.9, nprobe = 2)
     assert(spark.read.parquet(kept).select("vec_id").as[Long].collect().toSet === Set(100L, 101L))
     val stored = VersionedIvf.corpusView(spark, root)
       .filter(col("vec_id") >= 100L).select("vec_id").as[Long].collect().toList.sorted
@@ -147,7 +140,7 @@ class GateResilienceSpec extends AnyFunSuite with SparkTestBase {
     // and the healed vector suppresses a later near-dup
     Similarity.semanticGateBatch(
       Seq((200L, near0)).toDF("vec_id", "embedding"), "embedding", "vec_id",
-      root, kept, cents, 1L, threshold = 0.9, nprobe = 2)
+      root, kept, 1L, threshold = 0.9, nprobe = 2)
     assert(!spark.read.parquet(kept).select("vec_id").as[Long].collect().contains(200L),
       "healed vector failed to suppress a later semantic near-dup")
   }

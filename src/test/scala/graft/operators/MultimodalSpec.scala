@@ -209,7 +209,7 @@ class MultimodalSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("binaryFile source round-trip: real extensions map to canonical kinds, payload intact") {
-    val dir = java.nio.file.Files.createTempDirectory("media")
+    val dir = graft.Fixtures.dir("media")
     val payload = Array.tabulate(64)(_.toByte)
     java.nio.file.Files.write(dir.resolve("a.jpg"), payload)
     java.nio.file.Files.write(dir.resolve("b.mp3"), payload.map(b => (b + 1).toByte))

@@ -16,12 +16,6 @@ class NearDupIndexSpec extends AnyFunSuite with SparkTestBase {
   private val otherText = "completely different content about spark catalyst expressions and shuffles here"
   private val thirdText = "yet another unrelated document mentioning minhash banding and bucket joins now"
 
-  private def tmpDir(prefix: String): String = {
-    val d = java.nio.file.Files.createTempDirectory(prefix)
-    d.toFile.deleteOnExit()
-    d.toString
-  }
-
   private def writeIndex(docs: DataFrame, path: String): Unit =
     VersionedNearDup.write(docs, "text", "doc_id", path,
       shingleSize = 3, numer = 1, denom = 2, bands = 32, rowsPerBand = 2)
@@ -235,15 +229,7 @@ class NearDupIndexSpec extends AnyFunSuite with SparkTestBase {
       Seq((30L, thirdText), (31L, baseText), (32L, "fresh totally novel words appear in this last one")))
       .map(_.toDF("doc_id", "text"))
     batches.zipWithIndex.foreach { case (b, k) =>
-      val tmp = java.nio.file.Files.createTempDirectory(s"ndb$k")
-      b.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      import scala.jdk.CollectionConverters._
-      val part = java.nio.file.Files.list(tmp).iterator().asScala
-        .filter(_.getFileName.toString.endsWith(".parquet")).toSeq.head
-      val dst = java.nio.file.Paths.get(landing, s"b$k.parquet")
-      java.nio.file.Files.move(part, dst)
-      java.nio.file.Files.setLastModifiedTime(dst,
-        java.nio.file.attribute.FileTime.fromMillis(1700000000000L + k * 60000L))
+      graft.queries.QueryFixtures.landBatch(b, java.nio.file.Paths.get(landing), k)
     }
     VersionedNearDup.streamGate(
       spark.readStream.schema(batches.head.schema)

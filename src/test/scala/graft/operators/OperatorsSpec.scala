@@ -766,7 +766,7 @@ class OperatorsSpec extends AnyFunSuite with SparkTestBase {
     val all = (0 until 40).map(i => (i.toLong, vec(i))).toDF("vec_id", "embedding")
     val half1 = all.filter(col("vec_id") < 20)
     val half2 = all.filter(col("vec_id") >= 20)
-    val path = java.nio.file.Files.createTempDirectory("ivfidx").toString
+    val path = graft.Fixtures.dir("ivfidx").toString
     val centroids = Similarity.trainIvfCentroids(half1, "embedding", "vec_id", k = 4)
     VersionedIvf.write(half1, "embedding", "vec_id", centroids, path)
     // stored centroids round-trip exactly
@@ -791,7 +791,7 @@ class OperatorsSpec extends AnyFunSuite with SparkTestBase {
     def vec(seed: Int) = Array.tabulate(8)(j =>
       (math.sin(seed * 7.0 + j) * 0.5 + (seed % 4) * 2.0).toFloat)
     val all = (0 until 40).map(i => (i.toLong, vec(i))).toDF("vec_id", "embedding")
-    val path = java.nio.file.Files.createTempDirectory("ivfdel").toString
+    val path = graft.Fixtures.dir("ivfdel").toString
     val centroids = Similarity.trainIvfCentroids(all, "embedding", "vec_id", k = 4)
     VersionedIvf.write(all, "embedding", "vec_id", centroids, path)
     def corpusFiles(): Set[String] = {
@@ -861,7 +861,7 @@ class OperatorsSpec extends AnyFunSuite with SparkTestBase {
     def vec(seed: Int) = Array.tabulate(8)(j =>
       (math.sin(seed * 7.0 + j) * 0.5 + (seed % 4) * 2.0).toFloat)
     val all = (0 until 40).map(i => (i.toLong, vec(i))).toDF("vec_id", "embedding")
-    val path = java.nio.file.Files.createTempDirectory("ivfpqdel").toString
+    val path = graft.Fixtures.dir("ivfpqdel").toString
     val centroids = Similarity.trainIvfCentroids(all, "embedding", "vec_id", k = 4)
     val books = Similarity.trainIvfPqBooks(all, "embedding", "vec_id", centroids, m = 4, ksub = 4)
     VersionedIvfPq.write(all, "embedding", "vec_id", centroids, books, path)
@@ -889,9 +889,9 @@ class OperatorsSpec extends AnyFunSuite with SparkTestBase {
     val all = (0 until 40).map(i => (i.toLong, vec(i))).toDF("vec_id", "embedding")
     val half1 = all.filter(col("vec_id") < 20)
     val half2 = all.filter(col("vec_id") >= 20)
-    val path = java.nio.file.Files.createTempDirectory("ivfstream").toString
-    val landing = java.nio.file.Files.createTempDirectory("ivflanding").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("ivfckpt").toString
+    val path = graft.Fixtures.dir("ivfstream").toString
+    val landing = graft.Fixtures.dir("ivflanding").toString
+    val ckpt = graft.Fixtures.dir("ivfckpt").toString
     val centroids = Similarity.trainIvfCentroids(half1, "embedding", "vec_id", k = 4)
     VersionedIvf.write(half1, "embedding", "vec_id", centroids, path)
     // arrivals land as 4 files → maxFilesPerTrigger=1 forces 4 micro-batches
@@ -932,7 +932,7 @@ class OperatorsSpec extends AnyFunSuite with SparkTestBase {
     val all = (0 until 40).map(i => (i.toLong, vec(i))).toDF("vec_id", "embedding")
     val base = all.filter(col("vec_id") < 20)
     val batch = all.filter(col("vec_id") >= 20)
-    val path = java.nio.file.Files.createTempDirectory("ivftomb").toString
+    val path = graft.Fixtures.dir("ivftomb").toString
     val centroids = Similarity.trainIvfCentroids(base, "embedding", "vec_id", k = 4)
     VersionedIvf.write(base, "embedding", "vec_id", centroids, path)
     // batch 0 ingested (written AND committed in the happy path)
@@ -964,7 +964,7 @@ class OperatorsSpec extends AnyFunSuite with SparkTestBase {
     val all = (0 until 40).map(i => (i.toLong, vec(i))).toDF("vec_id", "embedding")
     val half1 = all.filter(col("vec_id") < 20)
     val half2 = all.filter(col("vec_id") >= 20)
-    val path = java.nio.file.Files.createTempDirectory("ivfpqidx").toString
+    val path = graft.Fixtures.dir("ivfpqidx").toString
     val centroids = Similarity.trainIvfCentroids(half1, "embedding", "vec_id", k = 4)
     val books = Similarity.trainIvfPqBooks(half1, "embedding", "vec_id",
       centroids, m = 4, ksub = 4)

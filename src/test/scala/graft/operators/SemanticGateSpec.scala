@@ -25,41 +25,34 @@ class SemanticGateSpec extends AnyFunSuite with SparkTestBase {
     cents
   }
 
-  private def tmp(prefix: String): String = {
-    val d = java.nio.file.Files.createTempDirectory(prefix)
-    d.toFile.deleteOnExit()
-    d.toString
-  }
-
-  private def gate(batch: DataFrame, idx: String, kept: String,
-      cents: Seq[Seq[Float]], id: Long): Unit =
+  private def gate(batch: DataFrame, idx: String, kept: String, id: Long): Unit =
     Similarity.semanticGateBatch(batch, "embedding", "vec_id", idx, kept,
-      cents, id, Tau, nprobe = 2)
+      id, Tau, nprobe = 2)
 
   private def keptIds(kept: String): Set[Long] =
     spark.read.parquet(kept).select("vec_id").as[Long].collect().toSet
 
   test("gate drops cosine-near arrivals of the index and earlier batches; self-dedups the batch") {
-    val idx = tmp("sgidx"); val kept = tmp("sgkept")
-    val cents = buildIndex(idx)
+    val idx = tmpDir("sgidx"); val kept = tmpDir("sgkept")
+    buildIndex(idx)
     // 10 ~ index vec 1 (suppressed); 11 novel (kept); 12/13 exact duplicates
     // of each other (batch-internal: keeper = lower id)
     gate(vecs(10L -> v(0.999f, 0.01f, 0, 0), 11L -> v(0, 0, 1, 0),
-      12L -> v(0, 0, 0, 1), 13L -> v(0, 0, 0, 1)), idx, kept, cents, 0L)
+      12L -> v(0, 0, 0, 1), 13L -> v(0, 0, 0, 1)), idx, kept, 0L)
     assert(keptIds(kept) === Set(11L, 12L))
     // 20 ~ batch 0's kept vec 11 (suppressed via the grown index); 21 novel
     gate(vecs(20L -> v(0, 0.01f, 0.999f, 0), 21L -> v(0.6f, 0.6f, 0.5f, 0)),
-      idx, kept, cents, 1L)
+      idx, kept, 1L)
     assert(keptIds(kept) === Set(11L, 12L, 21L))
   }
 
   test("replaying an earlier gate batch leaves kept table and index content-identical") {
-    val idx = tmp("sgidx"); val kept = tmp("sgkept")
-    val cents = buildIndex(idx)
+    val idx = tmpDir("sgidx"); val kept = tmpDir("sgkept")
+    buildIndex(idx)
     val b0 = vecs(10L -> v(0, 0, 1, 0), 11L -> v(0.999f, 0.02f, 0, 0))
     val b1 = vecs(20L -> v(0, 0, 0, 1), 21L -> v(0, 0.01f, 0.999f, 0))
-    gate(b0, idx, kept, cents, 0L)
-    gate(b1, idx, kept, cents, 1L)
+    gate(b0, idx, kept, 0L)
+    gate(b1, idx, kept, 1L)
     def snap(): (Set[Long], Long) = {
       val m = VersionedIvf.corpusView(spark, idx)
         .agg(sum(hash(col("vec_id"), col("cluster"), col("ingest_batch"))
@@ -67,25 +60,25 @@ class SemanticGateSpec extends AnyFunSuite with SparkTestBase {
       (keptIds(kept), m)
     }
     val before = snap()
-    gate(b0, idx, kept, cents, 0L) // replay after a later batch ran
+    gate(b0, idx, kept, 0L) // replay after a later batch ran
     assert(snap() === before)
   }
 
   test("deleted index vectors stop suppressing arrivals") {
-    val idx = tmp("sgidx"); val kept = tmp("sgkept")
-    val cents = buildIndex(idx)
-    gate(vecs(10L -> v(0.999f, 0.01f, 0, 0)), idx, kept, cents, 0L)
+    val idx = tmpDir("sgidx"); val kept = tmpDir("sgkept")
+    buildIndex(idx)
+    gate(vecs(10L -> v(0.999f, 0.01f, 0, 0)), idx, kept, 0L)
     assert(keptIds(kept).isEmpty) // all suppressed
     VersionedIvf.delete(spark, idx, Seq(1L).toDF("vec_id"), "vec_id")
-    gate(vecs(20L -> v(0.999f, 0.01f, 0, 0)), idx, kept, cents, 1L)
+    gate(vecs(20L -> v(0.999f, 0.01f, 0, 0)), idx, kept, 1L)
     assert(keptIds(kept) === Set(20L)) // vec 1 forgotten: no longer suppresses
   }
 
   test("VersionedIvf.consolidate folds batch partitions into the base; probes and gates unchanged") {
-    val idx = tmp("sgidx"); val kept = tmp("sgkept")
-    val cents = buildIndex(idx)
-    gate(vecs(10L -> v(0, 0, 1, 0)), idx, kept, cents, 0L)
-    gate(vecs(20L -> v(0, 0, 0, 1)), idx, kept, cents, 1L)
+    val idx = tmpDir("sgidx"); val kept = tmpDir("sgkept")
+    buildIndex(idx)
+    gate(vecs(10L -> v(0, 0, 1, 0)), idx, kept, 0L)
+    gate(vecs(20L -> v(0, 0, 0, 1)), idx, kept, 1L)
     def corpusIds() = VersionedIvf.corpusView(spark, idx)
       .select("vec_id").as[Long].collect().toSet
     val before = corpusIds()
@@ -100,7 +93,7 @@ class SemanticGateSpec extends AnyFunSuite with SparkTestBase {
     assert(corpusIds() === before)
     // consolidated vectors still suppress (read as strictly-earlier)
     gate(vecs(30L -> v(0, 0, 0.01f, 0.999f), 31L -> v(0.5f, 0.5f, 0.5f, 0.5f)),
-      idx, kept, cents, 2L)
+      idx, kept, 2L)
     assert(keptIds(kept) === Set(10L, 20L, 31L)) // 30 ~ consolidated vec 20
     // re-running folds the new batch too and is otherwise a no-op
     VersionedIvf.consolidate(spark, idx)
@@ -110,9 +103,9 @@ class SemanticGateSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("streaming gate over mod-time-ordered files equals sequential gate batches") {
-    val idx = tmp("sgidx"); val idxSeq = tmp("sgidxq")
-    val keptS = tmp("sgkepts"); val keptQ = tmp("sgkeptq")
-    val landing = tmp("sgland"); val ckpt = tmp("sgckpt")
+    val idx = tmpDir("sgidx"); val idxSeq = tmpDir("sgidxq")
+    val keptS = tmpDir("sgkepts"); val keptQ = tmpDir("sgkeptq")
+    val landing = tmpDir("sgland"); val ckpt = tmpDir("sgckpt")
     val cents = buildIndex(idx)
     val centsSeq = buildIndex(idxSeq)
     assert(cents === centsSeq)
@@ -120,22 +113,14 @@ class SemanticGateSpec extends AnyFunSuite with SparkTestBase {
       vecs(10L -> v(0.999f, 0.01f, 0, 0), 11L -> v(0, 0, 1, 0)),
       vecs(20L -> v(0, 0.01f, 0.999f, 0), 21L -> v(0, 0, 0, 1)))
     batches.zipWithIndex.foreach { case (b, k) =>
-      val t = java.nio.file.Files.createTempDirectory(s"sgb$k")
-      b.coalesce(1).write.mode("overwrite").parquet(t.toString)
-      import scala.jdk.CollectionConverters._
-      val part = java.nio.file.Files.list(t).iterator().asScala
-        .filter(_.getFileName.toString.endsWith(".parquet")).toSeq.head
-      val dst = java.nio.file.Paths.get(landing, s"b$k.parquet")
-      java.nio.file.Files.move(part, dst)
-      java.nio.file.Files.setLastModifiedTime(dst,
-        java.nio.file.attribute.FileTime.fromMillis(1700000000000L + k * 60000L))
+      graft.queries.QueryFixtures.landBatch(b, java.nio.file.Paths.get(landing), k)
     }
     Similarity.streamSemanticGate(
       spark.readStream.schema(batches.head.schema)
         .option("maxFilesPerTrigger", 1).parquet(landing),
       "embedding", "vec_id", idx, keptS, ckpt, Tau, nprobe = 2)
       .awaitTermination()
-    batches.zipWithIndex.foreach { case (b, k) => gate(b, idxSeq, keptQ, cents, k.toLong) }
+    batches.zipWithIndex.foreach { case (b, k) => gate(b, idxSeq, keptQ, k.toLong) }
     assert(keptIds(keptS) === keptIds(keptQ))
     assert(keptIds(keptS) === Set(11L, 21L))
   }

@@ -108,12 +108,6 @@ class SubstringDedupSpec extends AnyFunSuite with SparkTestBase {
     assert(replayed.count() === grown.count())
   }
 
-  private def tmpDir(prefix: String): String = {
-    val d = java.nio.file.Files.createTempDirectory(prefix)
-    d.toFile.deleteOnExit()
-    d.toString
-  }
-
   private def gate(batch: DataFrame, idx: String, clean: String, id: Long): Unit =
     VersionedSubstring.gateBatch(batch, "text", "doc_id", idx, clean, id)
 
@@ -186,15 +180,7 @@ class SubstringDedupSpec extends AnyFunSuite with SparkTestBase {
       Seq((20L, s"${toks(0 until 9, "w")} tailA tailB tailC tailD"), (21L, toks(0 until 5, "r"))))
       .map(_.toDF("doc_id", "text"))
     batches.zipWithIndex.foreach { case (b, k) =>
-      val tmp = java.nio.file.Files.createTempDirectory(s"ssb$k")
-      b.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      import scala.jdk.CollectionConverters._
-      val part = java.nio.file.Files.list(tmp).iterator().asScala
-        .filter(_.getFileName.toString.endsWith(".parquet")).toSeq.head
-      val dst = java.nio.file.Paths.get(landing, s"b$k.parquet")
-      java.nio.file.Files.move(part, dst)
-      java.nio.file.Files.setLastModifiedTime(dst,
-        java.nio.file.attribute.FileTime.fromMillis(1700000000000L + k * 60000L))
+      graft.queries.QueryFixtures.landBatch(b, java.nio.file.Paths.get(landing), k)
     }
     VersionedSubstring.streamGate(
       spark.readStream.schema(batches.head.schema)

@@ -13,12 +13,6 @@ import org.scalatest.funsuite.AnyFunSuite
 class VersionedIndexSpec extends AnyFunSuite with SparkTestBase {
   import spark.implicits._
 
-  private def tmpDir(prefix: String): String = {
-    val d = java.nio.file.Files.createTempDirectory(prefix)
-    d.toFile.deleteOnExit()
-    d.toString
-  }
-
   private def fsOf(path: String) = new org.apache.hadoop.fs.Path(path)
     .getFileSystem(spark.sparkContext.hadoopConfiguration)
 

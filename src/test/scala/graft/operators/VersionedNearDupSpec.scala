@@ -18,12 +18,6 @@ class VersionedNearDupSpec extends AnyFunSuite with SparkTestBase {
   private val otherText = "completely different content about spark catalyst expressions and shuffles here"
   private val thirdText = "yet another unrelated document mentioning minhash banding and bucket joins now"
 
-  private def tmpDir(prefix: String): String = {
-    val d = java.nio.file.Files.createTempDirectory(prefix)
-    d.toFile.deleteOnExit()
-    d.toString
-  }
-
   private def fsOf(path: String) = new org.apache.hadoop.fs.Path(path)
     .getFileSystem(spark.sparkContext.hadoopConfiguration)
 

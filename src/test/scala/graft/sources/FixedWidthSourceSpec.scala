@@ -46,7 +46,7 @@ class FixedWidthSourceSpec extends AnyFunSuite with SparkTestBase {
       |""".stripMargin
 
   private def writeFixture(): (String, String) = {
-    val dir = Files.createTempDirectory("fw")
+    val dir = graft.Fixtures.dir("fw")
     val dcfPath = dir.resolve("511.BJHR71.DCF")
     Files.writeString(dcfPath, dcf)
     val datPath = dir.resolve("511.BJHR71.DAT")
@@ -100,7 +100,7 @@ class FixedWidthSourceSpec extends AnyFunSuite with SparkTestBase {
     // line's HV000 ends in " \u2028": U+2028 is not in the trim set, so
     // the space before it stays (a `\s+$` regex would drop it, since Java's
     // `$` matches before a final line terminator)
-    val dir = Files.createTempDirectory("fwtrim")
+    val dir = graft.Fixtures.dir("fwtrim")
     val dcfPath = dir.resolve("511.BJHR71.DCF")
     Files.writeString(dcfPath, dcf)
     val datPath = dir.resolve("511.BJHR71.DAT")
@@ -129,7 +129,7 @@ class FixedWidthSourceSpec extends AnyFunSuite with SparkTestBase {
     // BufferedReader), never buffering the whole file. Non-UTF8 byte (0xE9,
     // é in cp1252) beyond the record tag checks sniff-from-head semantics;
     // a UTF-8 BOM variant checks first-line tag recovery.
-    val dir = Files.createTempDirectory("fwbig")
+    val dir = graft.Fixtures.dir("fwbig")
     val dcfPath = dir.resolve("511.BJHR71.DCF")
     Files.writeString(dcfPath, dcf)
     val datPath = dir.resolve("511.BJHR71.DAT")
@@ -165,7 +165,7 @@ class FixedWidthSourceSpec extends AnyFunSuite with SparkTestBase {
     // would corrupt them) and points at this source; drive that route with
     // real multi-byte data. Reference charset behavior: DCF_Parser.py:34-42,
     // DAT_Parser.py:62-68 (BOM sniff, decode, parse decoded text).
-    val dir = Files.createTempDirectory("fwutf16")
+    val dir = graft.Fixtures.dir("fwutf16")
     val dcfPath = dir.resolve("511.BJHR71.DCF")
     Files.writeString(dcfPath, dcf)
     val lines = Seq(
@@ -199,7 +199,7 @@ class FixedWidthSourceSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("a DCF-declared SURVEYID item wins over the injected surveyid option") {
-    val dir = Files.createTempDirectory("fwsid")
+    val dir = graft.Fixtures.dir("fwsid")
     val dcfSid = dcf.replace(
       "[Item]\nLabel=Cluster\nName=HV001\nStart=22\nLen=3",
       "[Item]\nLabel=Declared survey id field\nName=SURVEYID\nStart=22\nLen=3\nDataType=Alpha")

@@ -21,7 +21,7 @@ class OrganizeSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("unzipAndSort: members land as <survey>/<survey>.<MEMBER>, uppercased, idempotent") {
-    val tmp = java.nio.file.Files.createTempDirectory("org").toFile
+    val tmp = graft.Fixtures.dir("org").toFile
     val zip = mkZip(tmp, "bj.zip", Map("bjhr71.dcf" -> "[Dictionary]", "BJHR71.dat" -> "data"))
     val out1 = Organize.unzipAndSort(zip, "511", new File(tmp, "staging").getPath).sorted
     assert(out1.map(new File(_).getName) == Seq("511.BJHR71.DAT", "511.BJHR71.DCF"))
@@ -33,7 +33,7 @@ class OrganizeSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("manifest parse extracts (filename, surveyid) from URL query strings") {
-    val tmp = java.nio.file.Files.createTempDirectory("org2")
+    val tmp = graft.Fixtures.dir("org2")
     val manifest = tmp.resolve("manifest.txt")
     java.nio.file.Files.writeString(manifest,
       """https://dhsprogram.com/data/dl?Filename=BJHR71DT.zip&Tp=1&SurveyId=511
@@ -59,7 +59,7 @@ class OrganizeSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("listDir lists plain files only, feeds routing, and a missing dir is empty") {
-    val tmp = java.nio.file.Files.createTempDirectory("org3").toFile
+    val tmp = graft.Fixtures.dir("org3").toFile
     java.nio.file.Files.writeString(new File(tmp, "511.BJHR71.DCF").toPath, "x")
     java.nio.file.Files.writeString(new File(tmp, "511.BJHR71.DAT").toPath, "x")
     new File(tmp, "staging").mkdir() // a subdirectory is not a landed file

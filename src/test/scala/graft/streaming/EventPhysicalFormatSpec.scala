@@ -18,8 +18,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class EventPhysicalFormatSpec extends AnyFunSuite with SparkTestBase {
   import EventStream._
 
-  private def tmpDir(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft-evt-$tag").toString + "/events.parquet"
+  private def eventsPath(tag: String): String = s"${tmpDir(s"evt-$tag")}/events.parquet"
 
   /** Fixture spanning 3 hours with µs offsets — wide enough that windowing,
     * interval-join lag, and session gaps all have non-degenerate answers.
@@ -41,7 +40,7 @@ class EventPhysicalFormatSpec extends AnyFunSuite with SparkTestBase {
     */
   private lazy val ntzPath: String = {
     import spark.implicits._
-    val path = tmpDir("ntz")
+    val path = eventsPath("ntz")
     rows.map { case (id, t, u, ty, v) =>
       (id, java.time.LocalDateTime.parse(t), u, ty, v, """{"k":1}""")
     }.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
@@ -55,7 +54,7 @@ class EventPhysicalFormatSpec extends AnyFunSuite with SparkTestBase {
     */
   private lazy val nanosPath: String = {
     import spark.implicits._
-    val path = tmpDir("nanos")
+    val path = eventsPath("nanos")
     rows.map { case (id, t, u, ty, v) =>
       val ldt = java.time.LocalDateTime.parse(t)
       val nanos = ldt.toEpochSecond(java.time.ZoneOffset.UTC) * 1000000000L + ldt.getNano

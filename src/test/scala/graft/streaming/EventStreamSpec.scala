@@ -255,7 +255,7 @@ class EventStreamSpec extends AnyFunSuite with SparkTestBase {
   test("incremental corpus ingest: per-batch dedup against an accumulating digest manifest") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val tmp = java.nio.file.Files.createTempDirectory("inc_ingest").toString
+    val tmp = graft.Fixtures.dir("inc_ingest").toString
     val (corpusDir, manifestDir) = (s"$tmp/corpus", s"$tmp/manifest")
     // bootstrap an empty manifest so per-batch reads never hit a missing path
     Seq.empty[String].toDF("text_hash").write.parquet(manifestDir)
@@ -298,7 +298,7 @@ class EventStreamSpec extends AnyFunSuite with SparkTestBase {
   test("foreachBatch ingest reuses a batch writer with batchId dedup handle") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val tmp = java.nio.file.Files.createTempDirectory("ingest").toString
+    val tmp = graft.Fixtures.dir("ingest").toString
     val mem = MemoryStream[Event]
     mem.addData(fixture: _*)
     val seen = scala.collection.mutable.ArrayBuffer.empty[Long]
@@ -314,7 +314,7 @@ class EventStreamSpec extends AnyFunSuite with SparkTestBase {
 
   test("streaming latest-state upsert: multi-batch merge equals the batch latest-per-user") {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("supsert").toString
+    val tmp = graft.Fixtures.dir("supsert").toString
     // 4 separate parquet files + maxFilesPerTrigger=1 → 4 micro-batches.
     // Deliberately adversarial ordering: user 3's LATEST event lands in an
     // early file with older events arriving later (the merge must not let
@@ -346,7 +346,7 @@ class EventStreamSpec extends AnyFunSuite with SparkTestBase {
   test("streaming constraint audit: multi-batch sums equal the whole-table batch report") {
     import spark.implicits._
     import org.apache.spark.sql.functions.col
-    val tmp = java.nio.file.Files.createTempDirectory("saudit").toString
+    val tmp = graft.Fixtures.dir("saudit").toString
     // violations spread ACROSS batches so only correct summation passes:
     // file 1 has a negative value, file 3 a null user and a bad type
     val files = Seq(
@@ -382,7 +382,7 @@ class EventStreamSpec extends AnyFunSuite with SparkTestBase {
 
   test("streaming CDC: a retained tombstone blocks resurrection by a later-arriving OLDER update") {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("scdc").toString
+    val tmp = graft.Fixtures.dir("scdc").toString
     // op rides through state; batch order is arrival order, version order is
     // event time — the adversarial case is a tombstone followed by a LATE
     // (older-ts) update for the same key
@@ -410,7 +410,7 @@ class EventStreamSpec extends AnyFunSuite with SparkTestBase {
   test("streaming PIT enrichment converges to the batch join across forced micro-batches") {
     import spark.implicits._
     import org.apache.spark.sql.functions.col
-    val tmp = java.nio.file.Files.createTempDirectory("spit").toString
+    val tmp = graft.Fixtures.dir("spit").toString
     // dim history: user 1 changes value at 10:00 and 11:00
     val dim = graft.load.Warehouse.scd2History(
       Seq((1L, ts("2024-01-01 10:00:00"), 100L, 1.0),
@@ -437,7 +437,7 @@ class EventStreamSpec extends AnyFunSuite with SparkTestBase {
   test("streaming CMS sketch: multi-batch fold equals the whole-table batch sketch exactly") {
     import spark.implicits._
     import org.apache.spark.sql.functions.col
-    val tmp = java.nio.file.Files.createTempDirectory("scms").toString
+    val tmp = graft.Fixtures.dir("scms").toString
     // the same item split ACROSS batches — only correct bucket summation
     // reproduces its total count
     val files = Seq(
