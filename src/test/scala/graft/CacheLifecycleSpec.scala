@@ -29,7 +29,9 @@ class CacheLifecycleSpec extends AnyFunSuite with SparkTestBase {
     */
   private def cacheManagerEmpty: Boolean = CacheScope.cacheManagerEmpty(spark)
 
-  test("withScope frees CacheScope.persist frames: no net growth over 100 invocations") {
+  // "persistReuse frames": the frames the reuseShingles path persists for
+  // reuse through CacheScope.persist
+  test("withScope frees persistReuse frames: no net growth over 100 invocations") {
     spark.catalog.clearCache()
     val d = docs
     val before = persistentRddCount
