@@ -23,16 +23,18 @@ import org.apache.spark.storage.StorageLevel
   *
   * {{{
   * CacheScope.withScope {
-  *   val pairs = Dedup.jaccardDuplicatePairs(docs, "text", "doc_id", reuseShingles = true)
+  *   val pairs = Dedup.jaccardDuplicatePairs(docs, "text", "doc_id")
   *   pairs.count()   // consumers run INSIDE the scope
   * }                  // persisted frames + checkpoints freed here
   * }}}
   *
-  * Outside any scope, behavior is unchanged (entries live until
-  * `spark.catalog.clearCache()` / session end) — existing callers that
-  * manage their own lifecycle keep working. Registration binds to the scope
-  * open on the REGISTERING thread at plan-build time, so concurrent queries
-  * on separate threads (the Verify harness shape) get independent scopes.
+  * Outside any scope, [[persist]] returns its frame unchanged: an
+  * operator-internal frame persisted there would be a CacheManager entry
+  * its caller can never free, so a scope-less caller gets plan-level
+  * re-evaluation instead, and may persist the operator's OUTPUT itself.
+  * Registration binds to the scope open on the REGISTERING thread at
+  * plan-build time, so concurrent queries on separate threads (the Verify
+  * harness shape) get independent scopes.
   *
   * Checkpoint caveat: a `localCheckpoint` truncates lineage, so freeing it
   * is only safe once every consumer job has finished — which is precisely
@@ -62,13 +64,13 @@ object CacheScope {
   /** Number of cleanups registered in the innermost open scope (test hook). */
   def registeredCount: Int = scopes.get.headOption.map(_.count).getOrElse(0)
 
-  /** Persist `ds` (MEMORY_AND_DISK — recomputable lineage, NOT a
-    * checkpoint: a lost executor recomputes a partition instead of killing
-    * the query) and register its unpersist with the innermost open scope.
-    * Without a scope this is exactly the legacy `persist` call.
+  /** Inside an open scope: persist `ds` (MEMORY_AND_DISK — recomputable
+    * lineage, NOT a checkpoint: a lost executor recomputes a partition
+    * instead of killing the query) and register its unpersist with the
+    * innermost scope. Outside any scope: `ds` unchanged, un-persisted.
     */
   def persist[T](ds: Dataset[T]): Dataset[T] =
-    track(ds.persist(StorageLevel.MEMORY_AND_DISK))
+    if (active) track(ds.persist(StorageLevel.MEMORY_AND_DISK)) else ds
 
   /** Register an already-persisted Dataset for unpersist at scope close.
     * `unpersist` removes the CacheManager ENTRY (not just the blocks), so a
@@ -155,15 +157,6 @@ object CacheScope {
     */
   def unpersistCheckpoint(df: DataFrame): Unit =
     checkpointRdd(df).foreach(r => { r.unpersist(blocking = false); () })
-
-  /** [[Dataset.persist]] + scope-track only when a scope is OPEN; outside
-    * any scope the frame is returned un-persisted. For operators that want
-    * single-scan behavior under harness/service scopes without changing
-    * their legacy (scope-less) footprint — a scope-less caller gets plan-
-    * level re-evaluation, never an unreclaimed cache entry.
-    */
-  def persistIfScoped(df: DataFrame): DataFrame =
-    if (active) persist(df) else df
 
   /** Is the session's CacheManager entry table empty? The accessor is
     * `private[sql]`, so this goes through reflection (bytecode access is

@@ -171,9 +171,9 @@ object Stress {
       time(s"exact_dedup_x$mult")(operators.Dedup.exactDuplicateGroups(docs, "text", "doc_id")
         .filter(col("n_copies") > 1).count()),
       time(s"minhash_lsh_x$mult")(operators.Dedup.minhashCandidatePairs(
-        docs, "text", "doc_id", shingleSize = 3, bands = 32, rowsPerBand = 2, reuseShingles = true).count()),
+        docs, "text", "doc_id", shingleSize = 3, bands = 32, rowsPerBand = 2).count()),
       time(s"simhash_x$mult")(operators.Dedup.simhashDuplicatePairs(
-        docs, "text", "doc_id", maxDist = 3, reuseSketches = true).count()),
+        docs, "text", "doc_id", maxDist = 3).count()),
       // exact substring dedup under replication: every "variant" replica's
       // whole prefix duplicates the original, so cut content grows with
       // mult — the occurrence agg (map-side combined two-hash key) and the
@@ -371,10 +371,10 @@ object Stress {
         docs.withColumn("text",
           concat(lit("shared boilerplate page body number "),
             pmod(col("doc_id"), lit(2000)))),
-        "text", "doc_id", maxDist = 3, reuseSketches = true).count()),
+        "text", "doc_id", maxDist = 3).count()),
       time(s"clusters_lsh_x$mult")(operators.Dedup.duplicateClusters(
         operators.Dedup.jaccardDuplicatePairs(docs, "text", "doc_id",
-          shingleSize = 3, numer = 1, denom = 2, bands = 32, rowsPerBand = 2, reuseShingles = true)
+          shingleSize = 3, numer = 1, denom = 2, bands = 32, rowsPerBand = 2)
           .select(col("doc_a"), col("doc_b"))).count()),
       time(s"knn_x$mult")(operators.Similarity.lshTopK(
         embs.filter(col("vec_id") < 10), embs, "embedding", "vec_id", k = 5, planes = 8).count()),
@@ -383,7 +383,7 @@ object Stress {
       // no matter the corpus size
       time(s"pack_seq_x$mult")(operators.Curation.packSequences(
         docs.select(col("doc_id"), operators.TextOps.tokenCount(col("text")).as("nt")),
-        "doc_id", col("nt"), seqLen = 2048L, blockSize = 1000000L, reuseBase = true).count()),
+        "doc_id", col("nt"), seqLen = 2048L, blockSize = 1000000L).count()),
       time(s"contamination_x$mult")(operators.Curation.contamination(
         docs.filter(pmod(col("doc_id"), lit(50)) =!= 0),
         docs.filter(pmod(col("doc_id"), lit(50)) === 0),
@@ -409,7 +409,7 @@ object Stress {
       // clique-like dup graph (its win case — long chains — can't occur here)
       time(s"cc_altstar_x$mult")(operators.Dedup.connectedComponentsAltStar(
         operators.Dedup.jaccardDuplicatePairs(docs, "text", "doc_id",
-          shingleSize = 3, numer = 1, denom = 2, bands = 32, rowsPerBand = 2, reuseShingles = true)
+          shingleSize = 3, numer = 1, denom = 2, bands = 32, rowsPerBand = 2)
           .select(col("doc_a"), col("doc_b"))).count()),
       // pure chain graph (worst case for label propagation: diameter = n).
       // alt-star must close it in O(log n) ROUNDS regardless of the
@@ -493,7 +493,7 @@ object Stress {
         embs, "embedding", "vec_id")
         .agg(sum(size(col("qvec")))).collect().head.getLong(0)),
       time(s"oov_rate_x$mult")(operators.TextOps.oovRate(
-        docs, "text", "doc_id", vocabSize = 1000, reuseTokens = true).count()),
+        docs, "text", "doc_id", vocabSize = 1000).count()),
       // memory-resident Bloom dedup gate: build over 3/4 of the corpus,
       // gate the other 1/4 — the filter build is one treeAggregate, the
       // gate a scan-stage test (no join anywhere)

@@ -20,7 +20,8 @@ import org.apache.spark.sql.types.{StringType, StructType}
   * SURVEY §1.4-4; ref lib04:432-434). The same writer runs in two places: on
   * the driver, over one connection, for a frame whose rows are already in
   * driver memory; and inside `foreachPartition`, one connection per
-  * partition, for a distributed frame.
+  * partition, for a distributed frame. [[JdbcSink.append]] is the one
+  * append verb: it creates the table when missing and picks the face.
   *
   * pgjdbc is not a compile-time dependency — the `CopyManager` is reached by
   * reflection from the live connection, so this compiles and tests against
@@ -238,24 +239,6 @@ object CopySink {
       writeRows(conn, table, columns, nullTypes(df.schema, url),
         rows.iterator.map(_.toSeq), batchSize)
   }
-
-  /** Append `df` by COPY (Postgres) or batched INSERT (anything else). The
-    * table must already exist — pair with [[DdlManager]] plans, which is
-    * also how the reference sequences it (DDL strictly before data,
-    * lib04:85-121 then 407-443).
-    *
-    * A driver-resident frame is written on the driver over one connection
-    * ([[appendLocal]]); any other frame is written per partition, each
-    * partition over its own connection.
-    */
-  def append(
-      df: DataFrame, url: String, table: String, props: Properties,
-      batchSize: Int = 10000, maxWriters: Int = 8): Unit =
-    if (df.isLocal) {
-      val conn = DriverManager.getConnection(url, props)
-      try appendLocal(conn, df, url, table, df.columns.toSeq, batchSize)
-      finally conn.close()
-    } else appendPartitions(df, url, table, props, df.columns.toSeq, batchSize, maxWriters)
 
   /** Append a distributed frame per partition, each partition over its own
     * connection, into `columns` (the target names in frame order).

@@ -249,7 +249,7 @@ object Curation {
     requireIntegralKey(df, keyCol, "shuffleOrder")
     // referenced by both the rank window and the offsets aggregate — under
     // a CacheScope the persist pins the source scan + hash to one pass
-    val withB = graft.CacheScope.persistIfScoped(df
+    val withB = graft.CacheScope.persist(df
       .withColumn("__mix", portableHash(col(keyCol)))
       .withColumn("__b", pmod(col("__mix"), lit(buckets.toLong))))
     val w = Window.partitionBy(col("__b")).orderBy(col("__mix"), col(keyCol))
@@ -359,31 +359,27 @@ object Curation {
       idCol: String,
       tokenCountCol: Column,
       seqLen: Long,
-      blockSize: Long = 1000000L,
-      reuseBase: Boolean = false
+      blockSize: Long = 1000000L
   ): DataFrame = {
     require(seqLen > 0 && blockSize > 0)
     // NULL counts (e.g. a NULL text under a size()-based counter) pack as 0
     // tokens; a NEGATIVE count would silently shift every later document's
     // offset, so it fails the job instead
     val nt = coalesce(tokenCountCol.cast("long"), lit(0L))
-    val base0 = df.select(
-      col(idCol).cast("long").as(idCol),
-      when(nt < 0L, raise_error(concat(
-        lit("packSequences: negative token count for id "), col(idCol).cast("string"))))
-        .otherwise(nt).as("n_tokens"))
-      .withColumn("__blk", expr(s"`$idCol` div $blockSize"))
     // the base frame feeds both the intra-block window and the block-total
     // aggregate; when tokenCountCol is expensive (a tokenizer over the raw
-    // text), reuseBase pins the 24-byte/doc projection once instead of
-    // re-scanning and re-tokenizing the corpus per branch.
+    // text), the scoped persist pins the 24-byte/doc projection once
+    // instead of re-scanning and re-tokenizing the corpus per branch.
     // persist (recomputable lineage), NOT localCheckpoint: lazy local
     // checkpoints live only on executors with no replication, so one lost
     // executor mid-job kills the whole query — unacceptable as the default
     // on clusters where executor churn is routine
-    val base =
-      if (reuseBase) graft.CacheScope.persist(base0)
-      else base0
+    val base = graft.CacheScope.persist(df.select(
+      col(idCol).cast("long").as(idCol),
+      when(nt < 0L, raise_error(concat(
+        lit("packSequences: negative token count for id "), col(idCol).cast("string"))))
+        .otherwise(nt).as("n_tokens"))
+      .withColumn("__blk", expr(s"`$idCol` div $blockSize")))
     val intraW = Window.partitionBy(col("__blk")).orderBy(col(idCol))
       .rowsBetween(Window.unboundedPreceding, -1)
     val intra = base.withColumn("__intra",
@@ -414,10 +410,9 @@ object Curation {
       idCol: String,
       tokenCountCol: Column,
       seqLen: Long,
-      blockSize: Long = 1000000L,
-      reuseBase: Boolean = false
+      blockSize: Long = 1000000L
   ): DataFrame = {
-    val packed = packSequences(df, idCol, tokenCountCol, seqLen, blockSize, reuseBase)
+    val packed = packSequences(df, idCol, tokenCountCol, seqLen, blockSize)
       .filter(col("n_tokens") > 0L)
     packed
       .select(col(idCol), col("n_tokens"), col("token_offset"),
@@ -623,16 +618,17 @@ object Curation {
     * corpora — see the MinHash decontamination practice the dedup papers in
     * PAPERS.md describe).
     *
-    * Shape: cross-frame MinHash LSH, not a self-join — each side is banded
-    * once, candidates come from the (band, key) equi-join, and only
-    * candidates are verified with exact integer set math (`denom·I ≥
-    * numer·U`, engine-portable). With the benchmark side broadcast
-    * (benchmark suites are MB-scale; the default) the corpus never
-    * shuffles: banding is a projection, the candidate join is map-side,
-    * and the verify join against benchmark shingle sets is again broadcast
-    * — a 100 TB corpus pays two scan-side passes and zero exchanges.
-    * Recall is the banding curve's: 32×2 bands at J ≥ 1/2 is the
-    * recall-1.0 regime the d_jaccard_lsh ≡ brute-force gate pins.
+    * Shape: cross-frame MinHash LSH, not a self-join — each side is
+    * condensed to its [[Dedup.nearDupManifest]] once, candidates come from
+    * the (band, key) equi-join, and only candidates are verified with
+    * exact integer set math (`denom·I ≥ numer·U`, engine-portable). With
+    * the benchmark side broadcast (benchmark suites are MB-scale; the
+    * default) the corpus never shuffles: banding is a projection, the
+    * candidate join is map-side, and the verify join against benchmark
+    * shingle sets is again broadcast — a 100 TB corpus pays two scan-side
+    * passes and zero exchanges. Recall is the banding curve's: 32×2 bands
+    * at J ≥ 1/2 is the recall-1.0 regime the d_jaccard_lsh ≡ brute-force
+    * gate pins.
     *
     * Returns (`idCol`, bench_id, inter_sz, union_sz) — one row per
     * (contaminated doc, offending benchmark item) pair, sizes exact.
@@ -649,53 +645,24 @@ object Curation {
       rowsPerBand: Int = 2,
       broadcastBenchmark: Boolean = true
   ): DataFrame = {
-    val k = bands * rowsPerBand
-    // one frame per side carrying everything downstream needs: hashed
-    // shingles (verify) + signature (banding). Staged projections — the
-    // shingle array is referenced k times by the signature and once by the
-    // hash transform, so it must be its own select (the CollapseProject
-    // lesson: inlining multiplies the regexp work per reference).
-    def sideFrame(side: DataFrame): DataFrame =
-      Dedup.shingleFrame(side, textCol, idCol, shingleSize)
-        .select(col("doc"), col("sh"),
-          Dedup.minhashSignature(col("sh"), k).as("sig"))
-        .select(col("doc"),
-          transform(col("sh"), s => xxhash64(s)).as("shh"), col("sig"))
-    def bandKeys(f: DataFrame, as: String): DataFrame =
-      f.select(col("doc").as(as),
-        posexplode(Dedup.lshBandKeys(col("sig"), bands, rowsPerBand))
-          .as(Seq("band", "key")))
-
+    def manifest(side: DataFrame): DataFrame =
+      Dedup.nearDupManifest(side, textCol, idCol, shingleSize, bands, rowsPerBand)
     // benchmark side is referenced twice (banding + verify): materialize
-    // it — MB-scale, shingle hashes + signature, never text. Local
+    // it — MB-scale, band keys + shingle hashes, never text. Local
     // CHECKPOINT, not persist: two concurrent queries can build canonically
     // identical benchmark plans, and CacheManager dedupes persisted entries
     // by canonical plan across threads — one scope's close would unpersist
     // the shared entry out from under the other mid-query (the observed
     // ANN-trainer failure class; see Similarity's trainScratch note).
     // Checkpoint RDDs are per-call, never shared.
-    val benchF = graft.CacheScope.localCheckpoint(sideFrame(benchmark))
-    val benchBanded =
-      if (broadcastBenchmark) broadcast(bandKeys(benchF, "bench"))
-      else bandKeys(benchF, "bench")
-    // the corpus side is deliberately NOT persisted: at 100 TB the two
+    // The corpus side is deliberately NOT persisted: at 100 TB the two
     // references (banding, verify) are two scan-side passes — recompute is
     // the scale answer, caching the corpus is not
-    val corpusF = sideFrame(corpus)
-
-    val cands = bandKeys(corpusF, "c_doc")
-      .join(benchBanded, Seq("band", "key"))
-      .select(col("c_doc"), col("bench")).distinct()
-    val a = corpusF.alias("ca")
-    val b = benchF.alias("cb")
-    val (inter, union) = Dedup.setOverlap(col("ca.shh"), col("cb.shh"))
-    cands
-      .join(a, col("c_doc") === col("ca.doc"))
-      .join(if (broadcastBenchmark) broadcast(b) else b,
-        col("bench") === col("cb.doc"))
-      .select(col("c_doc").as(idCol), col("bench").as("bench_id"),
-        inter.cast("bigint").as("inter_sz"), union.cast("bigint").as("union_sz"))
-      .filter(col("inter_sz") * denom >= col("union_sz") * numer)
+    Dedup.manifestCrossPairs(manifest(corpus),
+        graft.CacheScope.localCheckpoint(manifest(benchmark)), numer, denom,
+        broadcastRight = broadcastBenchmark)
+      .select(col("left").as(idCol), col("right").as("bench_id"),
+        col("inter_sz"), col("union_sz"))
   }
 
   /** Leak-free train/holdout split: a per-document hash split leaks when two

@@ -162,21 +162,8 @@ object Dedup {
   def nearDupPairsFromManifest(manifest0: DataFrame, numer: Int, denom: Int): DataFrame = {
     // both the self-join sides and the two verify joins read the manifest —
     // under a CacheScope it materializes once (it is small by construction)
-    val manifest = graft.CacheScope.persistIfScoped(manifest0)
-    val banded = manifest.select(col("doc"), posexplode(col("keys")).as(Seq("band", "key")))
-    val a = banded.alias("a")
-    val b = banded.alias("b")
-    val cands = a.join(b,
-        col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
-          col("a.doc") < col("b.doc"))
-      .select(col("a.doc").as("doc_a"), col("b.doc").as("doc_b")).distinct()
-    val (inter, union) = setOverlap(col("sa.shh"), col("sb.shh"))
-    cands
-      .join(manifest.select(col("doc"), col("shh")).alias("sa"), col("doc_a") === col("sa.doc"))
-      .join(manifest.select(col("doc"), col("shh")).alias("sb"), col("doc_b") === col("sb.doc"))
-      .select(col("doc_a"), col("doc_b"),
-        inter.cast("bigint").as("inter_sz"), union.cast("bigint").as("union_sz"))
-      .filter(col("inter_sz") * denom >= col("union_sz") * numer)
+    val manifest = graft.CacheScope.persist(manifest0)
+    verifiedPairs(bandSelfJoin(manifest), "doc_a", "doc_b", manifest, manifest, numer, denom)
   }
 
   /** Incremental near-dup dedup: rows of `batch` with NO near-duplicate
@@ -220,19 +207,64 @@ object Dedup {
     * [[nearDupPairsFromManifest]]).
     */
   private[operators] def seenDocsAgainstManifest(
-      bm: DataFrame, manifest: DataFrame, numer: Int, denom: Int): DataFrame = {
-    val bBand = bm.select(col("doc").as("b_doc"),
-      posexplode(col("keys")).as(Seq("band", "key")))
-    val cBand = manifest.select(col("doc").as("c_doc"),
-      posexplode(col("keys")).as(Seq("band", "key")))
-    val cands = bBand.join(cBand, Seq("band", "key"))
-      .select(col("b_doc"), col("c_doc")).distinct()
-    val (inter, union) = setOverlap(col("bb.shh"), col("cc.shh"))
+      bm: DataFrame, manifest: DataFrame, numer: Int, denom: Int): DataFrame =
+    manifestCrossPairs(bm, manifest, numer, denom)
+      .select(col("left").as("b_doc")).distinct()
+
+  /** Verified near-dup pairs ACROSS two [[nearDupManifest]]s built with the
+    * same parameters: candidates from the (band, key) equi-join of `left`
+    * against `right` — never a cross product — exact-verified on the
+    * hashed shingle sets. Output: (left, right, inter_sz, union_sz), one
+    * row per verified (left doc, right doc) pair. `broadcastRight` ships
+    * the right side into both joins when it is small (a benchmark suite),
+    * so the left side never shuffles.
+    */
+  private[operators] def manifestCrossPairs(
+      left: DataFrame, right: DataFrame, numer: Int, denom: Int,
+      broadcastRight: Boolean = false): DataFrame = {
+    val rb = bandRows(right, "right")
+    val cands = bandRows(left, "left")
+      .join(if (broadcastRight) broadcast(rb) else rb, Seq("band", "key"))
+      .select(col("left"), col("right")).distinct()
+    verifiedPairs(cands, "left", "right", left, right, numer, denom, broadcastRight)
+  }
+
+  /** One (`as`, band, key) row per band key of each manifest doc. */
+  private def bandRows(manifest: DataFrame, as: String): DataFrame =
+    manifest.select(col("doc").as(as), posexplode(col("keys")).as(Seq("band", "key")))
+
+  /** Unverified candidate pairs of one manifest: the band-key SELF-join,
+    * distinct (doc_a < doc_b). Equi-join on the band-bucket key, so
+    * Catalyst plans a shuffled join keyed by tiny longs; candidate volume
+    * is bounded by bucket sizes, not n².
+    */
+  private def bandSelfJoin(manifest: DataFrame): DataFrame = {
+    val banded = bandRows(manifest, "doc")
+    banded.alias("a").join(banded.alias("b"),
+        col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
+          col("a.doc") < col("b.doc"))
+      .select(col("a.doc").as("doc_a"), col("b.doc").as("doc_b")).distinct()
+  }
+
+  /** Exact verify of candidate pairs (`a` from `left`, `b` from `right`) on
+    * the manifests' 64-bit shingle HASHES, in integer math (denom·I ≥
+    * numer·U, engine-portable). Intersecting long arrays is several times
+    * cheaper than UTF8 string arrays at millions of candidate pairs, and
+    * the counts are identical short of an xxhash64 collision within a
+    * candidate pair (~|sh|²/2^64 — negligible, and the DuckDB oracle on
+    * raw strings would catch a systematic error).
+    */
+  private def verifiedPairs(
+      cands: DataFrame, a: String, b: String, left: DataFrame, right: DataFrame,
+      numer: Int, denom: Int, broadcastRight: Boolean = false): DataFrame = {
+    val r = right.select(col("doc"), col("shh")).alias("vr")
+    val (inter, union) = setOverlap(col("vl.shh"), col("vr.shh"))
     cands
-      .join(bm.select(col("doc"), col("shh")).alias("bb"), col("b_doc") === col("bb.doc"))
-      .join(manifest.select(col("doc"), col("shh")).alias("cc"), col("c_doc") === col("cc.doc"))
-      .filter(inter * denom >= union * numer)
-      .select(col("b_doc")).distinct()
+      .join(left.select(col("doc"), col("shh")).alias("vl"), col(a) === col("vl.doc"))
+      .join(if (broadcastRight) broadcast(r) else r, col(b) === col("vr.doc"))
+      .select(col(a), col(b),
+        inter.cast("bigint").as("inter_sz"), union.cast("bigint").as("union_sz"))
+      .filter(col("inter_sz") * denom >= col("union_sz") * numer)
   }
 
   // ---------------------------------------------------------------- minhash
@@ -254,13 +286,11 @@ object Dedup {
   def lshBandKeys(signature: Column, bands: Int, rowsPerBand: Int): Column =
     graft.functions.VectorHash.lshBandKeys(signature, bands, rowsPerBand)
 
-  /** Candidate near-duplicate pairs via MinHash+LSH.
+  /** Candidate near-duplicate pairs via MinHash+LSH, unverified.
     *
     * Pipeline: tokens → `shingleSize`-gram shingles → k=bands·rowsPerBand
-    * MinHash signature → explode band keys → self-join per (band, key)
-    * bucket → distinct (a < b) pairs. The self-join is equi-join on the
-    * band-bucket key, so Catalyst plans a shuffled hash/sort-merge join keyed
-    * by tiny longs; candidate volume is bounded by bucket sizes, not n².
+    * MinHash signature → band keys ([[nearDupManifest]]) → self-join per
+    * (band, key) bucket → distinct (a < b) pairs.
     */
   def minhashCandidatePairs(
       docs: DataFrame,
@@ -268,15 +298,9 @@ object Dedup {
       idCol: String,
       shingleSize: Int = 3,
       bands: Int = 16,
-      rowsPerBand: Int = 4,
-      reuseShingles: Boolean = false
-  ): DataFrame = {
-    // both sides of the band self-join re-evaluate the shingle projection;
-    // see jaccardDuplicatePairs for the reuse trade-off
-    val plan = shingleFrame(docs, textCol, idCol, shingleSize)
-    val sh = if (reuseShingles) graft.CacheScope.persist(plan) else plan
-    minhashCandidatePairsFromShingles(sh, bands, rowsPerBand, reuseBanded = reuseShingles)
-  }
+      rowsPerBand: Int = 4
+  ): DataFrame =
+    bandSelfJoin(nearDupManifest(docs, textCol, idCol, shingleSize, bands, rowsPerBand))
 
   /** The (doc, sh) projection every near-dup path starts from — computed
     * once and shared so tokenize+shingle (the dominant narrow-stage cost)
@@ -296,37 +320,6 @@ object Dedup {
       graft.functions.VectorHash.wordShingles(col(textCol), shingleSize).as("sh"))
       .filter(size(col("sh")) > 0)
 
-  /** Candidate pairs from a precomputed [[shingleFrame]]. */
-  def minhashCandidatePairsFromShingles(
-      shingled: DataFrame,
-      bands: Int,
-      rowsPerBand: Int,
-      reuseBanded: Boolean = false
-  ): DataFrame = {
-    // Materialize each stage as its own projection: the shingle array (a
-    // regexp over the full text) is referenced k times by the signature, and
-    // the signature 'bands' times by the band keys. Staged projections pin
-    // each to one evaluation per row (CollapseProject keeps multi-referenced
-    // non-trivial aliases separate); inlining them instead multiplies the
-    // regexp work ~k*bands times per row.
-    val signed = shingled.select(
-      col("doc"), minhashSignature(col("sh"), bands * rowsPerBand).as("sig"))
-    val banded0 = signed
-      .select(col("doc"),
-        posexplode(lshBandKeys(col("sig"), bands, rowsPerBand)).as(Seq("band", "key")))
-    // both sides of the self-join re-evaluate shingle+signature math;
-    // `reuseBanded` materializes the (doc, band, key) frame — ~1 KB per doc,
-    // orders of magnitude smaller than the text it derives from
-    val banded = if (reuseBanded) graft.CacheScope.persist(banded0) else banded0
-    val a = banded.alias("a")
-    val b = banded.alias("b")
-    a.join(b,
-        col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
-          col("a.doc") < col("b.doc"))
-      .select(col("a.doc").as("doc_a"), col("b.doc").as("doc_b"))
-      .distinct()
-  }
-
   // ---------------------------------------------------------------- jaccard
 
   /** Exact Jaccard similarity of two (distinct-element) arrays, as integer-
@@ -339,8 +332,9 @@ object Dedup {
   }
 
   /** Near-duplicate pairs at Jaccard ≥ numer/denom over word n-gram shingle
-    * sets, verified exactly on LSH candidates. The threshold is compared in
-    * integer math (denom·I ≥ numer·U) so results are engine-portable.
+    * sets, verified exactly on LSH candidates: [[nearDupPairsFromManifest]]
+    * over the corpus' [[nearDupManifest]], so one tokenize+shingle+minhash
+    * pass feeds both the candidate self-join and the verify joins.
     */
   def jaccardDuplicatePairs(
       docs: DataFrame,
@@ -350,36 +344,10 @@ object Dedup {
       numer: Int = 7,
       denom: Int = 10,
       bands: Int = 16,
-      rowsPerBand: Int = 4,
-      reuseShingles: Boolean = false
-  ): DataFrame = {
-    // one shingle pass feeds both the candidate generation and the exact
-    // verify joins — tokenize+shingle is the dominant narrow-stage cost.
-    // The PLAN references it four times (both sides of the band self-join +
-    // both verify joins); `reuseShingles` materializes it once (a scoped
-    // persist, recomputable under executor loss) — measured ~1.9× on
-    // pair generation at 100k docs. Leave off when the corpus dwarfs
-    // executor storage and recompute is cheaper.
-    val plan = shingleFrame(docs, textCol, idCol, shingleSize)
-    val withShingles = if (reuseShingles) graft.CacheScope.persist(plan) else plan
-    val cands = minhashCandidatePairsFromShingles(withShingles, bands, rowsPerBand, reuseBanded = reuseShingles)
-    // exact verify runs on 64-bit shingle HASHES: intersecting long arrays
-    // is several times cheaper than UTF8 string arrays at millions of
-    // candidate pairs, and the counts are identical short of an xxhash64
-    // collision within a candidate pair (~|sh|²/2^64 — negligible, and the
-    // DuckDB oracle on raw strings would catch a systematic error)
-    val hashed = withShingles.select(
-      col("doc"), transform(col("sh"), s => xxhash64(s)).as("shh"))
-    val a = hashed.alias("sa")
-    val b = hashed.alias("sb")
-    val (inter, union) = setOverlap(col("sa.shh"), col("sb.shh"))
-    cands
-      .join(a, col("doc_a") === col("sa.doc"))
-      .join(b, col("doc_b") === col("sb.doc"))
-      .select(col("doc_a"), col("doc_b"),
-        inter.cast("bigint").as("inter_sz"), union.cast("bigint").as("union_sz"))
-      .filter(col("inter_sz") * denom >= col("union_sz") * numer)
-  }
+      rowsPerBand: Int = 4
+  ): DataFrame =
+    nearDupPairsFromManifest(
+      nearDupManifest(docs, textCol, idCol, shingleSize, bands, rowsPerBand), numer, denom)
 
   /** Brute-force exact-Jaccard pairs (the small-data oracle for the LSH
     * path): all id<id pairs with Jaccard ≥ numer/denom. O(n²) — only for
@@ -392,12 +360,14 @@ object Dedup {
       shingleSize: Int,
       numer: Int,
       denom: Int
-  ): DataFrame = {
+  ): DataFrame =
     // same short-doc exclusion as shingleFrame: empty sets must not pair
-    val withShingles = docs.select(
-      col(idCol).as("doc"),
-      graft.functions.VectorHash.wordShingles(col(textCol), shingleSize).as("sh"))
-      .filter(size(col("sh")) > 0)
+    brutePairs(shingleFrame(docs, textCol, idCol, shingleSize), numer, denom)
+
+  /** Every (doc_a < doc_b) pair of a (doc, sh) frame whose exact set
+    * Jaccard reaches numer/denom — the O(n²) oracle shape of both brutes.
+    */
+  private def brutePairs(withShingles: DataFrame, numer: Int, denom: Int): DataFrame = {
     val a = withShingles.alias("sa")
     val b = withShingles.alias("sb")
     val (inter, union) = setOverlap(col("sa.sh"), col("sb.sh"))
@@ -448,8 +418,8 @@ object Dedup {
     * oracle for char-level near-dup). Character shingles are the right unit
     * when whitespace tokenization fails (CJK text, no-space boilerplate,
     * aggressive minification); at scale the same MinHash/LSH machinery
-    * applies — feed [[minhashCandidatePairsFromShingles]] a char-shingle
-    * frame instead of a word-shingle one.
+    * applies, with signatures and band keys over the char-shingle set
+    * instead of the word-shingle one.
     */
   def jaccardCharPairsBruteForce(
       docs: DataFrame,
@@ -458,19 +428,11 @@ object Dedup {
       n: Int,
       numer: Int,
       denom: Int
-  ): DataFrame = {
-    val withShingles = docs.select(
+  ): DataFrame =
+    brutePairs(docs.select(
       col(idCol).as("doc"),
       array_distinct(TextOps.charNgrams(lower(col(textCol)), n)).as("sh"))
-      .filter(size(col("sh")) > 0)
-    val a = withShingles.alias("sa")
-    val b = withShingles.alias("sb")
-    val (inter, union) = setOverlap(col("sa.sh"), col("sb.sh"))
-    a.join(b, col("sa.doc") < col("sb.doc"))
-      .select(col("sa.doc").as("doc_a"), col("sb.doc").as("doc_b"),
-        inter.cast("bigint").as("inter_sz"), union.cast("bigint").as("union_sz"))
-      .filter(col("inter_sz") * denom >= col("union_sz") * numer)
-  }
+      .filter(size(col("sh")) > 0), numer, denom)
 
   // ---------------------------------------------------------------- simhash
 
@@ -509,19 +471,18 @@ object Dedup {
     * scheme's (asserted vs brute force in OperatorsSpec).
     */
   def simhashDuplicatePairs(
-      docs: DataFrame, textCol: String, idCol: String, maxDist: Int = 3,
-      reuseSketches: Boolean = false): DataFrame =
-    simhashPairsFromSketches(simhashSketches(docs, textCol, idCol), maxDist, reuseSketches)
+      docs: DataFrame, textCol: String, idCol: String, maxDist: Int = 3): DataFrame =
+    // the sketch frame is referenced three times (distinct values + the two
+    // doc-expansion joins); under a CacheScope it materializes once — two
+    // longs per document, so storage is a non-issue at any scale; the
+    // tokenize+sketch passes it saves are not
+    simhashPairsFromSketches(
+      graft.CacheScope.persist(simhashSketches(docs, textCol, idCol)), maxDist)
 
-  /** [[simhashDuplicatePairs]] from a precomputed (doc, simhash) frame. The
-    * sketch frame is referenced three times (distinct values + the two doc-
-    * expansion joins); `reuseSketches` materializes it once — two longs per
-    * document, so storage is a non-issue at any scale; the tokenize+sketch
-    * passes it saves are not.
+  /** [[simhashDuplicatePairs]] from a precomputed (doc, simhash) frame,
+    * read three times: persist it first when it is costly to recompute.
     */
-  def simhashPairsFromSketches(
-      sk0: DataFrame, maxDist: Int, reuseSketches: Boolean = false): DataFrame = {
-    val sk = if (reuseSketches) graft.CacheScope.persist(sk0) else sk0
+  def simhashPairsFromSketches(sk: DataFrame, maxDist: Int): DataFrame = {
     val valuePairs = simhashValuePairs(sk.select(col("simhash")).distinct(), maxDist)
     // identical sketches: expand within each value group, dist = 0
     val x = sk.alias("x")

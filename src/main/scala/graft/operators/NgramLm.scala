@@ -53,7 +53,7 @@ object NgramLm {
     // persist the tokenized frame for the pass: the bigram counts and the
     // vocabulary size otherwise each re-run the corpus tokenize
     trainFromToks(
-      graft.CacheScope.persistIfScoped(tokenized(docs, textCol, idCol)), idCol)
+      graft.CacheScope.persist(tokenized(docs, textCol, idCol)), idCol)
 
   /** [[train]] over an already-tokenized (idCol, tk) frame — callers that
     * also score from the same tokens pass ONE persisted frame through both.
@@ -64,7 +64,7 @@ object NgramLm {
     // and read twice (as the model AND as the context totals' input) plus
     // once per scoring join — persist it for the pass (scope-reclaimed)
     // so the tokenize+explode+agg runs once
-    val bg = graft.CacheScope.persistIfScoped(bigramsFromToks(toks, idCol)
+    val bg = graft.CacheScope.persist(bigramsFromToks(toks, idCol)
       .groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c")))
     val ctx = bg.groupBy(col("w1")).agg(sum(col("c")).as("c1"))
     val vocab = toks.select(explode(col("tk")).as("t"))
@@ -104,7 +104,7 @@ object NgramLm {
     * pass feeds both the trainer and the scorer.
     */
   def selfScore(docs: DataFrame, textCol: String, idCol: String): DataFrame = {
-    val toks = graft.CacheScope.persistIfScoped(tokenized(docs, textCol, idCol))
+    val toks = graft.CacheScope.persist(tokenized(docs, textCol, idCol))
     scoreFromToks(toks, trainFromToks(toks, idCol), idCol)
   }
 
@@ -150,17 +150,21 @@ object NgramLm {
     *    score carries 30% of all docs no longer sorts those docs in a
     *    single task (the r10 tie-heavy flag).
     *
-    * The scored frame is persisted for the pass (it feeds the histogram,
-    * the block stats and the ranked output; its LM-join subplan would
-    * otherwise re-run three times). The row count and score/doc ranges
-    * and the block prefixes are two driver collects, so the ranked plan
-    * carries them as literals and broadcasts only the block prefixes.
+    * The scored frame is checkpointed for the pass (it feeds the
+    * histogram, the block stats and the ranked output; its LM-join subplan
+    * would otherwise re-run three times). A checkpoint, not a scoped
+    * persist: the driver-collected ranges below are baked into the plan,
+    * so every reference must read the same scores, and a re-evaluated
+    * double-sum score is not bit-stable across runs. The row count and
+    * score/doc ranges and the block prefixes are two driver collects, so
+    * the ranked plan carries them as literals and broadcasts only the
+    * block prefixes.
     */
   def bucketsFromScores(
       scored: DataFrame, idCol: String, scoreCol: String, nBuckets: Int): DataFrame = {
     require(nBuckets >= 1, s"need at least one bucket, got $nBuckets")
     import org.apache.spark.sql.expressions.Window
-    val s = graft.CacheScope.persist(scored
+    val s = graft.CacheScope.localCheckpoint(scored
       .select(col(idCol).cast("long").as("doc"),
         floor(col(scoreCol) * lit(1000000.0)).cast("long").as("score_x1e6")))
     // every scalar the block math needs, in one pass (one driver row)
@@ -230,7 +234,7 @@ object NgramLm {
     * never on documents).
     */
   def trainTrigram(docs: DataFrame, textCol: String, idCol: String): TrigramModel =
-    trainTrigramFromToks(graft.CacheScope.persistIfScoped(
+    trainTrigramFromToks(graft.CacheScope.persist(
       tokenized(docs, textCol, idCol)), idCol)
 
   /** [[trainTrigram]] over an already-tokenized (idCol, tk) frame. Callers
@@ -245,7 +249,7 @@ object NgramLm {
     // they are answer-sized (distinct n-grams) and the scorer joins the
     // bigram table twice (c12/c23) and the unigram table twice (c2/c3) —
     // un-persisted, each join side re-ran its full training aggregation
-    def p(df: DataFrame) = graft.CacheScope.persistIfScoped(df)
+    def p(df: DataFrame) = graft.CacheScope.persist(df)
     val tg = p(toks.filter(size(col("tk")) >= 3)
       .select(col(idCol), explode(transform(sequence(lit(1), size(col("tk")) - 2),
         i => struct(element_at(col("tk"), i).as("w1"),

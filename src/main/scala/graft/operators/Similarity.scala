@@ -24,7 +24,7 @@ object Similarity {
   /** Scope-private single materialization for DERIVED training inputs
     * (today: the IVF-PQ residual frame): an eager localCheckpoint, which is
     * a per-call RDD a scope frees only if it created it. Deliberately NOT
-    * `persistIfScoped`: CacheManager dedupes persisted entries by canonical
+    * `CacheScope.persist`: CacheManager dedupes persisted entries by canonical
     * plan ACROSS threads, so two concurrent queries training over identical
     * plans (the Verify harness shape — s_knn_ivf_exact vs s_knn_indexed
     * etc.) would share one entry, and one scope's close unpersists it out
@@ -455,7 +455,7 @@ object Similarity {
       // batch-bounded, two consumers (the semantic-keeper pair pipeline and
       // the final anti-join in the kept write) — persist for the scope or
       // the suppression probe executes twice per batch
-      val unseen = graft.CacheScope.persistIfScoped(batch.join(suppressed,
+      val unseen = graft.CacheScope.persist(batch.join(suppressed,
         batch(idCol) === suppressed("query_id"), "left_anti"))
       val kept = graft.Trace.t("semgate.keepers-plan")(
         Dedup.semanticKeepers(unseen, vecCol, idCol, threshold))
@@ -712,7 +712,7 @@ object Similarity {
     // checkpoint the residual frame under a scope: codebook training runs
     // iterations+2 actions over it, and each would otherwise re-evaluate
     // nearestCentroid (k cosines/row) + the residual subtraction on top of
-    // the scan (see the trainScratch note for why not persistIfScoped).
+    // the scan (see the trainScratch note for why not CacheScope.persist).
     // Sampling applies BEFORE the residual computation, so the expensive
     // k-cosine assignment also runs only on the training sample.
     val residuals = trainScratch(

@@ -88,7 +88,7 @@ object Sketches {
     // corpus token size and makes every gram build read an attribute, which
     // projection collapse cannot inline (see [[ngramOccurrences]]).
     val (top, total) = graft.CacheScope.withScope {
-      val toks = graft.CacheScope.persistIfScoped(
+      val toks = graft.CacheScope.persist(
         docs.select(TextOps.tokens(col(textCol)).as("toks")))
       val grams = toks.select(ngramOccurrences(col("toks"), n).as("grams"))
       val candidates = grams.as[Seq[String]]
@@ -278,7 +278,7 @@ object Sketches {
     * unreclaimable cache entry — never a leak.
     */
   private def itemExactCounts(df: DataFrame, itemCol: Column): DataFrame =
-    graft.CacheScope.persistIfScoped(
+    graft.CacheScope.persist(
       df.select(itemCol.cast("string").as("item"))
         .groupBy(col("item")).agg(count(lit(1)).as("exact_n")))
 

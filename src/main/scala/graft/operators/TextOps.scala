@@ -311,13 +311,12 @@ object TextOps {
     * engine-exact.
     */
   def oovRate(
-      docs: DataFrame, textCol: String, idCol: String, vocabSize: Int,
-      reuseTokens: Boolean = false): DataFrame = {
+      docs: DataFrame, textCol: String, idCol: String, vocabSize: Int): DataFrame = {
     require(vocabSize >= 1)
-    val tok0 = docs.select(col(idCol).as("doc"), explode(tokens(col(textCol))).as("tok"))
     // the token table feeds both the vocabulary count and the per-doc
-    // probe; reuse pins the tokenize pass to once (scope-managed)
-    val tok = if (reuseTokens) graft.CacheScope.persist(tok0) else tok0
+    // probe; under a CacheScope the tokenize pass runs once
+    val tok = graft.CacheScope.persist(
+      docs.select(col(idCol).as("doc"), explode(tokens(col(textCol))).as("tok")))
     val vocab = tok.groupBy(col("tok")).agg(count(lit(1)).as("n"))
       .orderBy(col("n").desc, col("tok").asc).limit(vocabSize)
       .select(col("tok").as("vtok"))

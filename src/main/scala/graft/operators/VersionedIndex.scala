@@ -1039,14 +1039,13 @@ object VersionedNearDup {
     // ONE tokenize+shingle+minhash pass over the batch (the dominant
     // narrow-stage cost): the batch manifest feeds the seen-screen AND the
     // in-batch self-dedup pair generation (nearDupPairsFromManifest over
-    // the unseen docs' manifest rows — identical pair set to re-deriving
-    // jaccardDuplicatePairs from text: same band keys, same hashed-shingle
-    // verify, same integer threshold). All intermediates are batch-bounded
+    // the unseen docs' manifest rows — jaccardDuplicatePairs is that same
+    // call over a manifest built from text). All intermediates are batch-bounded
     // and scope-persisted: seen/unseen each have two consumers.
-    val bm = graft.CacheScope.persistIfScoped(
+    val bm = graft.CacheScope.persist(
       Dedup.nearDupManifest(batch, textCol, idCol, ss, bands, rpb))
     val seen = Dedup.seenDocsAgainstManifest(bm, manifest, numer, denom)
-    val unseen = graft.CacheScope.persistIfScoped(
+    val unseen = graft.CacheScope.persist(
       batch.join(seen, batch(idCol) === seen("b_doc"), "left_anti"))
     // unseen docs' manifest rows from the persisted frames (bm semi
     // unseen-ids) — `seen` stays single-consumer, so the corpus-manifest
@@ -1423,7 +1422,7 @@ object VersionedSubstring {
     // ONE tokenize+shingle pass over the batch text, shared (persisted for
     // the scope) by the span computation AND the new-window-key append —
     // previously each re-derived its own occurrence frame
-    val occ = graft.CacheScope.persistIfScoped(
+    val occ = graft.CacheScope.persist(
       Dedup.cutOccurrenceKeys(batch, textCol, idCol, n))
     val spans = Dedup.substringSpansFromOccurrences(occ, man, n)
     graft.Trace.t("substr.clean-write")(

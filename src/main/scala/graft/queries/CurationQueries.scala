@@ -20,13 +20,13 @@ private[graft] object CurationQueries {
     Query("t_pack_sequences", (s, d) =>
       Curation.packSequences(
         tb(s, d, "documents").select(col("doc_id"), TextOps.tokenCount(col("text")).as("nt")),
-        "doc_id", col("nt"), seqLen = 2048L, blockSize = 64L, reuseBase = true),
+        "doc_id", col("nt"), seqLen = 2048L, blockSize = 64L),
       Timed("""SELECT doc_id, n_tokens, token_offset, token_offset // 2048 AS seq_start, CASE WHEN n_tokens = 0 THEN token_offset // 2048 ELSE (token_offset + n_tokens - 1) // 2048 END AS seq_end FROM (SELECT doc_id, n_tokens, CAST(COALESCE(sum(n_tokens) OVER (ORDER BY doc_id ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS token_offset FROM (SELECT doc_id, CAST(len(regexp_extract_all(text, '\S+')) AS BIGINT) AS n_tokens FROM documents))""")),
     // writer contract of the packing: per-(doc, sequence) token slices
     Query("t_pack_slices", (s, d) =>
       Curation.packedSliceManifest(
         tb(s, d, "documents").select(col("doc_id"), TextOps.tokenCount(col("text")).as("nt")),
-        "doc_id", col("nt"), seqLen = 2048L, blockSize = 64L, reuseBase = true),
+        "doc_id", col("nt"), seqLen = 2048L, blockSize = 64L),
       Timed("""WITH packed AS (SELECT doc_id, n_tokens, token_offset, token_offset // 2048 AS seq_start, (token_offset + n_tokens - 1) // 2048 AS seq_end FROM (SELECT doc_id, n_tokens, CAST(COALESCE(sum(n_tokens) OVER (ORDER BY doc_id ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS token_offset FROM (SELECT doc_id, CAST(len(regexp_extract_all(text, '\S+')) AS BIGINT) AS n_tokens FROM documents)) WHERE n_tokens > 0) SELECT seq_id, doc_id, greatest(seq_id * 2048 - token_offset, 0) AS doc_from, least((seq_id + 1) * 2048, token_offset + n_tokens) - greatest(seq_id * 2048, token_offset) AS n_take FROM (SELECT p.*, unnest(generate_series(seq_start, seq_end)) AS seq_id FROM packed p)""")),
     // top-3 characteristic terms per doc by tf-idf
     Query("t_tfidf_top", (s, d) =>
@@ -85,7 +85,7 @@ private[graft] object CurationQueries {
       // even-doc slice of it (filter commutes with per-doc tokenization),
       // the scorer the whole frame
       val docs = tb(s, d, "documents")
-      val toks = graft.CacheScope.persistIfScoped(
+      val toks = graft.CacheScope.persist(
         graft.operators.NgramLm.tokenized(docs, "text", "doc_id"))
       graft.operators.NgramLm.scoreTrigramFromToks(toks,
         graft.operators.NgramLm.trainTrigramFromToks(
@@ -102,7 +102,7 @@ private[graft] object CurationQueries {
       // same shared-tokenize shape as t_lm_trigram (one corpus tokenize
       // feeds the even-slice trainer and the full-corpus scorer)
       val docs = tb(s, d, "documents")
-      val toks = graft.CacheScope.persistIfScoped(
+      val toks = graft.CacheScope.persist(
         graft.operators.NgramLm.tokenized(docs, "text", "doc_id"))
       graft.operators.NgramLm.bucketsFromScores(
         graft.operators.NgramLm.scoreTrigramFromToks(toks,
@@ -426,7 +426,7 @@ private[graft] object CurationQueries {
     // corpus' own top-20 tokens (integer thousandths — engine-exact)
     Query("t_oov_rate", (s, d) =>
       TextOps.oovRate(tb(s, d, "documents"), "text", "doc_id",
-        vocabSize = 20, reuseTokens = true),
+        vocabSize = 20),
       Timed("""WITH tok AS (SELECT doc_id, unnest(list_transform(regexp_extract_all(text, '\S+'), t -> lower(t))) AS tok FROM documents), vocab AS (SELECT tok FROM (SELECT tok, count(*) AS n FROM tok GROUP BY 1 ORDER BY n DESC, tok ASC LIMIT 20)), pd AS (SELECT t.doc_id, CAST(count(*) AS BIGINT) AS n_tokens, CAST(sum(CASE WHEN v.tok IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_oov FROM tok t LEFT JOIN vocab v ON t.tok = v.tok GROUP BY 1) SELECT d.doc_id, COALESCE(pd.n_tokens, CAST(0 AS BIGINT)) AS n_tokens, COALESCE(pd.n_oov, CAST(0 AS BIGINT)) AS n_oov, CAST(CASE WHEN COALESCE(pd.n_tokens, 0) > 0 THEN (pd.n_oov * 1000) // pd.n_tokens ELSE 0 END AS BIGINT) AS oov_x1000 FROM documents d LEFT JOIN pd ON d.doc_id = pd.doc_id""")),
     // per-vector int8 scalar quantization (the ANN memory/IO lever);
     // binary64-staged arithmetic → codes are engine-replayable

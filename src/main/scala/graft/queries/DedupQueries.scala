@@ -381,7 +381,7 @@ private[graft] object DedupQueries {
       ValidationOnly("""WITH s AS (SELECT doc_id, list_distinct(list_transform(generate_series(1, greatest(length(t) - 4, 0)), i -> substr(t, i, 5))) AS sh FROM (SELECT doc_id, lower(text) AS t FROM documents) WHERE length(t) >= 5) SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, CAST(len(list_intersect(a.sh, b.sh)) AS BIGINT) AS inter_sz, CAST(len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh)) AS BIGINT) AS union_sz FROM s a JOIN s b ON a.doc_id < b.doc_id WHERE len(list_intersect(a.sh, b.sh)) * 4 >= (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))) * 3""")),
     Query("d_jaccard_lsh", (s, d) =>
       Dedup.jaccardDuplicatePairs(tb(s, d, "documents"), "text", "doc_id",
-        shingleSize = 3, numer = 1, denom = 2, bands = 32, rowsPerBand = 2, reuseShingles = true),
+        shingleSize = 3, numer = 1, denom = 2, bands = 32, rowsPerBand = 2),
       // LSH recall is 1.0 at J ≥ 1/2 with 32×2 bands on this corpus (identical
       // signatures always collide; the spec asserts LSH ≡ brute), so the LSH
       // path shares the brute-force oracle — a hash mismatch here would mean
@@ -458,7 +458,7 @@ private[graft] object DedupQueries {
       // 32×2 bands here, anchored by the d_jaccard_lsh ≡ brute spec test
       Dedup.duplicateClusters(
         Dedup.jaccardDuplicatePairs(tb(s, d, "documents"), "text", "doc_id",
-          shingleSize = 3, numer = 1, denom = 2, bands = 32, rowsPerBand = 2, reuseShingles = true)
+          shingleSize = 3, numer = 1, denom = 2, bands = 32, rowsPerBand = 2)
           .select(col("doc_a"), col("doc_b"))),
       // the LSH-fed composition converges to the same clusters (recall 1.0
       // at this threshold/banding), so it shares the closure oracle
@@ -469,7 +469,7 @@ private[graft] object DedupQueries {
     Query("d_cc_altstar", (s, d) =>
       Dedup.connectedComponentsAltStar(
         Dedup.jaccardDuplicatePairs(tb(s, d, "documents"), "text", "doc_id",
-          shingleSize = 3, numer = 1, denom = 2, bands = 32, rowsPerBand = 2, reuseShingles = true)
+          shingleSize = 3, numer = 1, denom = 2, bands = 32, rowsPerBand = 2)
           .select(col("doc_a"), col("doc_b"))),
       // alternating-star components are exactly the same min-label closure
       Timed(DupClusterClosureSql)),
@@ -479,7 +479,7 @@ private[graft] object DedupQueries {
       graft.operators.Curation.leakFreeSplit(
         tb(s, d, "documents"),
         Dedup.jaccardDuplicatePairs(tb(s, d, "documents"), "text", "doc_id",
-          shingleSize = 3, numer = 1, denom = 2, bands = 32, rowsPerBand = 2, reuseShingles = true)
+          shingleSize = 3, numer = 1, denom = 2, bands = 32, rowsPerBand = 2)
           .select(col("doc_a"), col("doc_b")),
         "doc_id", numer = 4, denom = 5)
         .select(col("doc_id"), col("split")),
@@ -490,7 +490,7 @@ private[graft] object DedupQueries {
     // = _contract sibling, recall ≡ brute pinned in OperatorsSpec)
     Query("d_simhash_pairs", (s, d) =>
       Dedup.simhashDuplicatePairs(tb(s, d, "documents"), "text", "doc_id",
-        maxDist = 3, reuseSketches = true),
+        maxDist = 3),
       // SimHash pair contract (VERDICT r4 #2): every returned pair must
       // (a) be canonically ordered (doc_a < doc_b), (b) carry the TRUE
       // Hamming distance of the two docs' sketches — recomputed here from the
@@ -500,7 +500,7 @@ private[graft] object DedupQueries {
       // the hash gate.
       BenchOnly(Query("d_simhash_pairs_contract", (s, d) => {
         val docs = tb(s, d, "documents")
-        val pairs = Dedup.simhashDuplicatePairs(docs, "text", "doc_id", maxDist = 3, reuseSketches = true)
+        val pairs = Dedup.simhashDuplicatePairs(docs, "text", "doc_id", maxDist = 3)
         val sk = Dedup.simhashSketches(docs, "text", "doc_id")
         pairs
           .join(sk.select(col("doc").as("doc_a"), col("simhash").as("sk_a")), Seq("doc_a"))
@@ -530,7 +530,7 @@ private[graft] object DedupQueries {
       Dedup.dropNearDuplicates(
         tb(s, d, "documents"),
         Dedup.jaccardDuplicatePairs(tb(s, d, "documents"), "text", "doc_id",
-          shingleSize = 3, numer = 1, denom = 2, bands = 32, rowsPerBand = 2, reuseShingles = true)
+          shingleSize = 3, numer = 1, denom = 2, bands = 32, rowsPerBand = 2)
           .select(col("doc_a"), col("doc_b")),
         "doc_id")
         .select(col("doc_id")),
@@ -545,7 +545,7 @@ private[graft] object DedupQueries {
       Dedup.dropNearDuplicatesByQuality(
         docs,
         Dedup.jaccardDuplicatePairs(docs, "text", "doc_id",
-          shingleSize = 3, numer = 1, denom = 2, bands = 32, rowsPerBand = 2, reuseShingles = true)
+          shingleSize = 3, numer = 1, denom = 2, bands = 32, rowsPerBand = 2)
           .select(col("doc_a"), col("doc_b")),
         "doc_id", length(col("text")))
         .select(col("doc_id"))

@@ -56,11 +56,6 @@ class FixedWidthSource extends TableProvider
 
 object FixedWidthSource {
 
-  // schema resolution calls fieldsFor more than once per read (inferSchema,
-  // then the table constructor) — cache the parse per (path, record, mtime)
-  private val specCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String, Long), Seq[ColumnSpec]]()
-
   /** Parse the DCF (driver-side; pure Scala parser) and select the record
     * type's fields in (RecordTypeValue, Start) order.
     */
@@ -69,11 +64,9 @@ object FixedWidthSource {
       throw new IllegalArgumentException("fixedwidth source requires option 'dcf'"))
     val record = Option(options.get("record")).getOrElse(
       throw new IllegalArgumentException("fixedwidth source requires option 'record'"))
-    val mtime = new java.io.File(dcfPath).lastModified()
-    specCache.computeIfAbsent((dcfPath, record, mtime), _ => parseFields(dcfPath, record))
-  }
-
-  private def parseFields(dcfPath: String, record: String): Seq[ColumnSpec] = {
+    // parsed on every call (a DCF is a few KB): a memo keyed on the file's
+    // mtime would serve a stale field list for a DCF rewritten within the
+    // same millisecond or restored with its old mtime
     val bytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(dcfPath))
     val parsed = DcfParser.parse(CharsetSniffer.decode(bytes), fileCode = record)
     val locator = parsed.items.filter(_.itemType == "RecordDesciption")

@@ -29,17 +29,16 @@ class CacheLifecycleSpec extends AnyFunSuite with SparkTestBase {
     */
   private def cacheManagerEmpty: Boolean = CacheScope.cacheManagerEmpty(spark)
 
-  // "persistReuse frames": the frames the reuseShingles path persists for
-  // reuse through CacheScope.persist
+  // "persistReuse frames": the frames an operator persists for reuse
+  // through CacheScope.persist (here the near-dup manifest)
   test("withScope frees persistReuse frames: no net growth over 100 invocations") {
     spark.catalog.clearCache()
     val d = docs
     val before = persistentRddCount
     (1 to 100).foreach { _ =>
       CacheScope.withScope {
-        // reuseShingles = the persist-heavy path (shingles + banded frames)
         val n = Dedup.jaccardDuplicatePairs(d, "text", "doc_id",
-          numer = 1, denom = 2, reuseShingles = true).count()
+          numer = 1, denom = 2).count()
         assert(n > 0)
       }
       // the invariant: EVERY scope close returns the session to baseline —
@@ -57,7 +56,7 @@ class CacheLifecycleSpec extends AnyFunSuite with SparkTestBase {
     (1 to 10).foreach { _ =>
       CacheScope.withScope {
         val pairs = Dedup.jaccardDuplicatePairs(d, "text", "doc_id",
-          numer = 1, denom = 2, reuseShingles = true)
+          numer = 1, denom = 2)
           .select(col("doc_a"), col("doc_b"))
         assert(Dedup.duplicateClusters(pairs).count() > 0)
         assert(Dedup.connectedComponentsAltStar(pairs).count() > 0)
@@ -70,12 +69,35 @@ class CacheLifecycleSpec extends AnyFunSuite with SparkTestBase {
 
   test("no scope = legacy behavior (caller-managed lifecycle still works)") {
     spark.catalog.clearCache()
-    val d = docs
-    val n = Dedup.jaccardDuplicatePairs(d, "text", "doc_id",
-      numer = 1, denom = 2, reuseShingles = true).count()
-    assert(n > 0)
-    assert(!cacheManagerEmpty, "outside a scope the reuse frames stay cached")
+    val pairs = Dedup.jaccardDuplicatePairs(docs, "text", "doc_id", numer = 1, denom = 2)
+    assert(pairs.count() > 0)
+    assert(cacheManagerEmpty, "outside a scope an operator leaves no cache entry")
+    // the caller's own persist of the OUTPUT is the caller's to manage
+    val held = pairs.persist()
+    val n = held.count()
+    assert(!cacheManagerEmpty && held.storageLevel.useMemory)
+    assert(held.count() == n)
+    held.unpersist(blocking = true)
+    assert(cacheManagerEmpty)
+  }
+
+  test("outside any scope the persisting operators return rows and leave no cache entry") {
+    import graft.operators.{Curation, TextOps}
     spark.catalog.clearCache()
+    val d = docs
+    val counts = Seq(
+      Dedup.jaccardDuplicatePairs(d, "text", "doc_id", numer = 1, denom = 2),
+      Dedup.minhashCandidatePairs(d, "text", "doc_id"),
+      Dedup.simhashDuplicatePairs(d, "text", "doc_id"),
+      Curation.packSequences(d.select(col("doc_id"), TextOps.tokenCount(col("text")).as("nt")),
+        "doc_id", col("nt"), seqLen = 16L, blockSize = 8L),
+      TextOps.oovRate(d, "text", "doc_id", vocabSize = 5),
+      Dedup.containmentPairs(d, "text", "doc_id",
+        shingleSize = 3, thresholdPpm = 500000L, maxDf = 1000L)
+    ).map(_.count())
+    assert(counts.forall(_ > 0), s"an operator returned no rows: $counts")
+    assert(CacheScope.registeredCount == 0)
+    assert(cacheManagerEmpty, "an operator left a CacheManager entry outside any scope")
   }
 
   test("scopes are thread-confined: concurrent scopes free only their own frames") {
@@ -88,7 +110,7 @@ class CacheLifecycleSpec extends AnyFunSuite with SparkTestBase {
       scala.concurrent.Future {
         CacheScope.withScope {
           Dedup.jaccardDuplicatePairs(d, "text", "doc_id",
-            numer = 1, denom = 2, reuseShingles = true).count()
+            numer = 1, denom = 2).count()
         }
       }
     }

@@ -200,8 +200,8 @@ class JdbcSinkSpec extends AnyFunSuite with SparkTestBase {
     val local = spark.createDataFrame(nullableRows.asJava, nullableSchema)
     val distributed = spark.createDataFrame(spark.sparkContext.parallelize(nullableRows, 2), nullableSchema)
     assert(local.isLocal && !distributed.isLocal)
-    CopySink.append(local, url, t, props, batchSize = 2)
-    CopySink.append(distributed, url, t, props, batchSize = 2)
+    JdbcSink.append(local, url, t, props, batchSize = 2)
+    JdbcSink.append(distributed, url, t, props, batchSize = 2)
     val back = spark.read.jdbc(url, t, props).collect().toSeq.map(_.toSeq)
     assert(back.groupBy(identity).map { case (r, copies) => r -> copies.size } ==
       nullableRows.map(r => r.toSeq -> 2).toMap)

@@ -214,6 +214,20 @@ class FixedWidthSourceSpec extends AnyFunSuite with SparkTestBase {
     assert(df.select("surveyid").collect().map(_.getString(0)).toSeq == Seq("abc"))
   }
 
+  test("a DCF rewritten under its old mtime serves the new item set") {
+    val (dcfPath, datPath) = writeFixture()
+    def columns = spark.read.format("fixedwidth")
+      .option("dcf", dcfPath).option("record", "RECH0").load(datPath).columns.toSeq
+    assert(columns == Seq("hhid", "hv000", "hv001"))
+    val f = new java.io.File(dcfPath)
+    val mtimeA = f.lastModified()
+    // DCF B: HV001 is gone, HV002 takes its place
+    Files.writeString(f.toPath,
+      dcf.replace("Label=Cluster\nName=HV001", "Label=Household\nName=HV002"))
+    assert(f.setLastModified(mtimeA) && f.lastModified() == mtimeA)
+    assert(columns == Seq("hhid", "hv000", "hv002"))
+  }
+
   test("missing record type is a clear error") {
     val (dcfPath, datPath) = writeFixture()
     val e = intercept[Exception] {
